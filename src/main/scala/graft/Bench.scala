@@ -19,6 +19,10 @@ import org.apache.spark.sql.SparkSession
   * The JSON line is printed AFTER spark.stop() with the log level raised to
   * ERROR, so it is the last line of process output — the driver's parser
   * keys on that.
+  *
+  * A query that throws is not timed: it is named in the `failed` list
+  * (and its exception on stderr), left out of every total, and the run
+  * exits 1 after the JSON line.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -66,10 +70,16 @@ object Bench {
       case None => SparkEntry.queries
         .filter { case (n, _) => !groundTruthTwins(n) }
     }
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // first exception per query (see the object doc)
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def time(name: String): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+      try { selected(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch {
+        case e: Throwable =>
+          failed.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
+          Double.NaN
+      }
     }
     // Shared-pass setup (VERDICT r11 #6): materialize the two heaviest
     // Memo-shared corpus passes BEFORE the timed suite — whoever ran
@@ -119,11 +129,11 @@ object Bench {
     // materialized, so the end-of-suite retry can release exactly those
     // and re-run genuinely cold (VERDICT r6 #1)
     val memoKeys = scala.collection.mutable.Map.empty[String, Set[String]]
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { case (name, _) =>
       val isFullMemo = fullMemoQueries(name)
       val recordCold = isFullMemo || coldRetryQueries(name)
       if (recordCold) graft.queries.Memo.startRecording()
-      var t1 = time(fn)
+      var t1 = time(name)
       if (recordCold) {
         val (misses, hits) = graft.queries.Memo.stopRecordingWithHits()
         memoKeys(name) = misses
@@ -137,11 +147,11 @@ object Bench {
         if (isFullMemo && misses.isEmpty && hits.nonEmpty) {
           graft.queries.Memo.release(hits)
           graft.queries.Memo.startRecording()
-          t1 = time(fn)
+          t1 = time(name)
           memoKeys(name) = graft.queries.Memo.stopRecording()
         }
       }
-      val t2 = time(fn)
+      val t2 = if (failed.contains(name)) Double.NaN else time(name)
       val steady = if (isFullMemo) t1 else math.min(t1, t2)
       // suite clock: entries untouched for a window of queries are dead
       // (Memo families are registry-adjacent) — release them so peak
@@ -162,16 +172,17 @@ object Bench {
     // one contended hour turned a 4.76 s dedup_span_pairs into an
     // official 25.71 s with no recourse (VERDICT r6 #1).
     val retried = results.map { case (name, (steady, cold)) =>
-      if (coldRetryQueries(name) && cold > 2 * steady) {
+      if (failed.contains(name)) name -> (steady, cold)
+      else if (coldRetryQueries(name) && cold > 2 * steady) {
         // decorrelated second cold: release only the entries THIS
         // query's cold run materialized (miss-only recording), rebuild
         graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
-        val t3 = time(selected(name))
+        val t3 = time(name)
         name -> (math.min(steady, t3), math.min(cold, t3))
       } else if (steady <= 1.0) name -> (steady, cold)
       else if (fullMemoQueries(name)) {
         graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
-        val t3 = time(selected(name))
+        val t3 = time(name)
         name -> (math.min(steady, t3), math.min(cold, t3))
       } else {
         // Steady-regime retry (ADVICE r9 #1 generalized): mid-suite
@@ -184,11 +195,12 @@ object Bench {
         // family sum then read as grown when nothing regressed). One
         // untimed warmup rebuilds whatever was released; the timed run
         // re-measures the same warm regime as the original pair.
-        time(selected(name))
-        name -> (math.min(steady, time(selected(name))), cold)
+        time(name)
+        name -> (math.min(steady, time(name)), cold)
       }
     }
-    val (harnessRaw, headline) = retried.partition { case (n, _) => harnessQueries(n) }
+    val passed = retried -- failed.keys
+    val (harnessRaw, headline) = passed.partition { case (n, _) => harnessQueries(n) }
     // shared-pass SETUP (VERDICT r11 #6) joins the harness section:
     // timed before the suite (see below), ingest-time cost, not query
     // cost — cold totals then grade queries
@@ -271,7 +283,7 @@ object Bench {
       s"families names unknown queries: " +
         s"${families.values.flatten.toSet -- SparkEntry.queries.keySet}")
     val familySums = families.map { case (fam, members) =>
-      val present = members.flatMap(retried.get)
+      val present = members.flatMap(passed.get)
       fam -> (present.map(_._1).sum, present.map(_._2).sum)
     }
     val totalMin = headline.values.map(_._1).sum
@@ -298,8 +310,9 @@ object Bench {
     }.mkString("{\n", ",\n", "\n  }")
     val twinsJson = groundTruthTwins.toSeq.sorted
       .map(n => s""""$n"""").mkString("[", ", ", "]")
+    val failedJson = failed.keys.map(n => s""""$n"""").mkString("[", ",", "]")
     val fullJson =
-      s"""{\n  "metric": "total", "value": ${f(totalMin)}, "value_cold": ${f(totalCold)},\n  "unit": "sec", "timing": "min_of_2_consecutive_runs", "sf": "$sfDir",\n  "harness_sec": ${f(harnessSec)}, "memo_evictions": $memoEvictions,\n  "verify_only_ground_truth_twins": $twinsJson,\n  "families": $famFull,\n  "queries": $full,\n  "harness": $harnessFull\n}\n"""
+      s"""{\n  "metric": "total", "value": ${f(totalMin)}, "value_cold": ${f(totalCold)},\n  "unit": "sec", "timing": "min_of_2_consecutive_runs", "sf": "$sfDir",\n  "harness_sec": ${f(harnessSec)}, "memo_evictions": $memoEvictions,\n  "failed": $failedJson,\n  "verify_only_ground_truth_twins": $twinsJson,\n  "families": $famFull,\n  "queries": $full,\n  "harness": $harnessFull\n}\n"""
     // only a FULL-suite run overwrites the detail file — a filtered
     // local iteration must not clobber the last complete picture
     if (only.isEmpty)
@@ -313,7 +326,7 @@ object Bench {
       .mkString("{", ",", "}")
     val famStr = familySums.map { case (k, (mn, cold)) =>
       s""""$k":{"min":${f(mn)},"cold":${f(cold)}}""" }.mkString("{", ",", "}")
-    val header = s"""{"metric":"total","value":${f(totalMin)},"value_cold":${f(totalCold)},"unit":"sec","timing":"min_of_2","harness":$harnessStr,"families":$famStr,"memo_evictions":$memoEvictions,"sf":"${new java.io.File(sfDir).getName}","queries":"""
+    val header = s"""{"metric":"total","value":${f(totalMin)},"value_cold":${f(totalCold)},"unit":"sec","timing":"min_of_2","harness":$harnessStr,"families":$famStr,"memo_evictions":$memoEvictions,"failed":$failedJson,"sf":"${new java.io.File(sfDir).getName}","queries":"""
     val budget = 1700 - header.length - 60
     val sb = new StringBuilder
     var used = 0
@@ -339,8 +352,10 @@ object Bench {
     // flush stderr, THEN print
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
+    failed.foreach { case (n, e) => System.err.println(s"[bench] FAILED $n: $e") }
     System.err.flush()
     println(line)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

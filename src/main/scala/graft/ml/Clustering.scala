@@ -3,8 +3,10 @@ package graft.ml
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** C1/C4/A5 clustering built-ins (reference: app.py:704-720, 790-808).
   *
@@ -24,25 +26,26 @@ object Clustering {
     * its result depends on partitioning even with a fixed seed);
     * larger inputs use the distributed MLlib fit.
     *
-    * No bare cache of the caller's plan: the gate is a column-pruned
-    * limited count (the repo's probe idiom — unpersisting a
-    * caller-visible plan can evict a cache entry the caller shares,
-    * since Spark's cache manager matches canonicalized plans). The
-    * distributed path caches only the DERIVED `__f` plan and releases
-    * it after an eager materialize, like Ivf.topK. */
+    * Output: `emb`'s columns (series_id first, as the using-join of the
+    * distributed path orders them) with `cluster` appended. The driver
+    * path returns its collected rows plus labels as a local frame, so
+    * no job joins the labels back (`emb` has one row per series_id, as
+    * every embedding emits). The distributed path caches only the
+    * DERIVED `__f` plan and releases it after an eager materialize, like
+    * Ivf.topK. */
   def kmeans(emb: DataFrame, k: Int, seed: Long = 10,
       gate: Long = 100000L): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
-    if (gate > 0 && emb.limit(gate.toInt).count() < gate) {
-      val rows = emb
-        .select(col("series_id").cast("long"), col("x").cast("double"),
-          col("y").cast("double"))
-        .orderBy(col("series_id"))
-        .as[(Long, Double, Double)].collect()
-      val labels = Local.kmeans(rows.map(r => (r._2, r._3)), k, seed)
-      val labelDf = rows.map(_._1).zip(labels).toSeq.toDF("series_id", "cluster")
-      return emb.join(broadcast(labelDf), "series_id")
+    val cols = "series_id" +: emb.columns.filter(_ != "series_id")
+    val local = Gate.collectBelow(emb.select(Seq(col("series_id").cast("long"),
+      col("x").cast("double"), col("y").cast("double")) ++ cols.map(emb.col): _*),
+      gate)(_.getLong(0))
+    if (local.isDefined) {
+      val rows = local.get
+      val labels = Local.kmeans(rows.map(r => (r.getDouble(1), r.getDouble(2))), k, seed)
+      return spark.createDataFrame(
+        rows.indices.map(i => Row.fromSeq(rows(i).toSeq.drop(3) :+ labels(i))).asJava,
+        StructType(cols.map(emb.schema(_))).add("cluster", IntegerType, nullable = false))
     }
     // distributed: MLlib's iterative fit re-reads its input every
     // iteration — persist the derived plan, materialize the (small)
@@ -76,15 +79,14 @@ object Clustering {
   def silhouetteScan(emb: DataFrame, maxK: Int, keep: Int = 5): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // gate probe, not a bare cache of the caller's plan (see kmeans)
-    val gate = 100000
+    // id-sorted collect: the seeded k-means++ init indexes into this
+    // array, so partitioning must not leak into results
+    val local = Gate.collectBelow(emb.select(col("series_id").cast("long"),
+      col("x").cast("double"), col("y").cast("double"))
+      .as[(Long, Double, Double)], 100000L)(_._1)
     val scores =
-      if (emb.limit(gate).count() < gate) {
-        // deterministic collect order: the seeded k-means++ init indexes
-        // into this array, so partitioning must not leak into results
-        val pts = emb.select(col("x").cast("double"), col("y").cast("double"))
-          .orderBy(col("series_id"))
-          .as[(Double, Double)].collect()
+      if (local.isDefined) {
+        val pts = local.get.map(r => (r._2, r._3))
         (2 to maxK).map { k =>
           val labels = Local.kmeans(pts, k, seed = 10)
           (k, math.rint(Local.silhouette(pts, labels, k) * 100 * 100) / 100)

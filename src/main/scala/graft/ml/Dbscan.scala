@@ -37,17 +37,17 @@ object Dbscan {
   def run(points: DataFrame, eps: Double, minPts: Int,
       maxDriverEdges: Long = 5000000L,
       maxDriverPoints: Long = 100000L): DataFrame = {
-    if (maxDriverPoints > 0) {
-      val probe = math.min(maxDriverPoints, (Int.MaxValue - 8).toLong).toInt
-      val rows = points.select(col("series_id").cast("long"),
-          col("x").cast("double"), col("y").cast("double"))
-        .limit(probe + 1).collect()
-      if (rows.length <= probe &&
-          rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) &&
-          rows.iterator.map(_.getLong(0)).toSet.size == rows.length)
-        return runLocal(points.sparkSession, rows.map(r =>
-          (r.getLong(0), r.getDouble(1), r.getDouble(2))), eps, minPts)
-    }
+    // n <= maxDriverPoints runs on the driver
+    val gate =
+      if (maxDriverPoints > 0) math.min(maxDriverPoints, (Int.MaxValue - 8).toLong) + 1 else 0L
+    val local = Gate.collectBelow(points.select(col("series_id").cast("long"),
+        col("x").cast("double"), col("y").cast("double")), gate)(
+      r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+    if (local.exists(rows =>
+        rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) &&
+        rows.indices.drop(1).forall(i => rows(i).getLong(0) != rows(i - 1).getLong(0))))
+      return runLocal(points.sparkSession, local.get.map(r =>
+        (r.getLong(0), r.getDouble(1), r.getDouble(2))), eps, minPts)
     runFrom(neighborhood(points, eps, minPts), minPts, maxDriverEdges,
       unpersistAfter = true)
   }

@@ -36,14 +36,9 @@ object Embedding {
     * near-degenerate eigenpairs rotate between partitionings on tiny
     * inputs, which flips downstream model selection). Sign rule:
     * max-|·| loading positive. Returns (ids, scores, varRatio). */
-  private def pcaLocal(series: DataFrame, k: Int):
+  private def pcaLocal(data: Array[(Long, Array[Double])], k: Int):
       (Array[Long], Array[Array[Double]], Array[Double]) = {
     import breeze.linalg.{eigSym, DenseMatrix}
-    val spark = series.sparkSession
-    import spark.implicits._
-    val data = series.select(col("series_id").cast("long"), col("values"))
-      .orderBy(col("series_id"))
-      .as[(Long, Array[Double])].collect()
     val n = data.length
     require(n >= 2, s"PCA needs at least 2 series, got $n")
     val m = data.head._2.length
@@ -82,16 +77,14 @@ object Embedding {
   def pcaEmbed(series: DataFrame, k: Int, gate: Long = 100000L): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    // gate probe via a limited count — no cache()+unpersist() on the
-    // caller-visible plan (see mds2d). The distributed path's cache
-    // (input reused by the mean pass, the fit, and the transform) goes
-    // through the bounded Memo LRU so repeated large-input calls can't
-    // accumulate executor storage.
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    if (gate > 0 && series.limit(probe).count() < gate) {
-      val (ids, scores, _) = pcaLocal(series, k)
+    val local = Gate.seriesBelow(series, gate)
+    if (local.isDefined) {
+      val (ids, scores, _) = pcaLocal(local.get, k)
       return ids.zip(scores).toSeq.toDF("series_id", "emb")
     }
+    // the distributed path's cache (input reused by the mean pass, the
+    // fit, and the transform) goes through the bounded Memo LRU so
+    // repeated large-input calls can't accumulate executor storage
     val cached = graft.queries.Memo.cached(spark,
       s"pcaembed|${series.queryExecution.logical.semanticHash()}")(series)
     val c = centered(cached).withColumn("__fv", array_to_vector(col("values")))
@@ -162,22 +155,18 @@ object Embedding {
     * (parity-tested in ClusteringSpec). */
   def mds2d(series: DataFrame, gate: Long = 100000L,
       numLandmarks: Int = 1000): DataFrame = {
-    // gate probe via a limited count — no cache()+unpersist() on the
-    // caller-visible plan (that would evict a cache entry the caller
-    // may share; Spark's cache manager matches by plan, not reference)
-    val probe = math.min(gate, Int.MaxValue.toLong).toInt
-    val below = gate > 0 && series.limit(probe).count() < gate
-    if (below) mdsLocal(series) else landmarkMds(series, numLandmarks)
-  }
-
-  /** Exact classical MDS on the driver (reference regime, n < gate). */
-  private def mdsLocal(series: DataFrame): DataFrame = {
-    import breeze.linalg.{DenseMatrix}
     val spark = series.sparkSession
     import spark.implicits._
-    val data = series.select(col("series_id").cast("long"), col("values"))
-      .orderBy(col("series_id")) // partition-order-independent float sums
-      .as[(Long, Array[Double])].collect()
+    Gate.seriesBelow(series, gate) match {
+      case Some(data) => mdsLocal(data).toSeq.toDF("series_id", "x", "y")
+      case None => landmarkMds(series, numLandmarks)
+    }
+  }
+
+  /** Exact classical MDS on the driver (reference regime, n < gate)
+    * over the id-sorted rows: (series_id, x, y). */
+  private def mdsLocal(data: Array[(Long, Array[Double])]): Array[(Long, Double, Double)] = {
+    import breeze.linalg.{DenseMatrix}
     val n = data.length
     // squared distances via one BLAS gemm: d²(i,j) = q_i + q_j − 2·(XXᵀ)_ij
     val x = DenseMatrix(data.map(_._2).toIndexedSeq: _*)
@@ -226,8 +215,7 @@ object Embedding {
     val (l1, v1raw) = topComponent(Seq(v0))
     val c0 = v0raw.map(_ * math.sqrt(l0))
     val c1 = v1raw.map(_ * math.sqrt(l1))
-    data.indices.map(i => (data(i)._1, c0(i), c1(i)))
-      .toDF("series_id", "x", "y")
+    data.indices.map(i => (data(i)._1, c0(i), c1(i))).toArray
   }
 
   private def sqdist(a: Array[Double], b: Array[Double]): Double = {
@@ -333,12 +321,12 @@ object Embedding {
       gate: Long = 20000L, cfg: ConvAE.Config = ConvAE.Config()): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    if (!(gate > 0 && series.limit(probe).count() < gate))
-      return aeDistributed(series, imaging, imgSize, cfg)
-    val (ids, z, _) = aeFit(series, imaging, imgSize, cfg)
-    ids.zip(z).map { case (id, e) => (id, e(0), e(1)) }
-      .toSeq.toDF("series_id", "x", "y")
+    aeFit(series, imaging, imgSize, gate, cfg) match {
+      case Some((ids, z, _)) =>
+        ids.zip(z).map { case (id, e) => (id, e(0), e(1)) }
+          .toSeq.toDF("series_id", "x", "y")
+      case None => aeDistributed(series, imaging, imgSize, cfg)
+    }
   }
 
   /** Above-gate conv path: bounded seeded fit (xxhash64-ranked sample,
@@ -443,11 +431,8 @@ object Embedding {
       gate: Long = 20000L, cfg: ConvAE.Config = ConvAE.Config()): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    val hist =
-      if (!(gate > 0 && series.limit(probe).count() < gate))
-        aeDistFit(series, imaging, imgSize, cfg.copy(imgSize = imgSize))._3
-      else aeFit(series, imaging, imgSize, cfg)._3
+    val hist = aeFit(series, imaging, imgSize, gate, cfg).map(_._3).getOrElse(
+      aeDistFit(series, imaging, imgSize, cfg.copy(imgSize = imgSize))._3)
     hist.zipWithIndex.map { case (l, i) => (i + 1L, l) }
       .toSeq.toDF("epoch", "loss")
   }
@@ -464,30 +449,30 @@ object Embedding {
         size() > 4
     }
 
-  /** Shared gated-path body: collect images in id order, global-max
-    * normalize (app.py:531-533), bounded seeded fit sample, train.
-    * Memoized driver-side (see [[aeFitCache]]). */
-  private def aeFit(series: DataFrame, imaging: String, imgSize: Int,
-      cfg: ConvAE.Config): (Array[Long], Array[Array[Double]], Array[Double]) = {
+  /** Shared gated-path body: the driver fit, or None at/above `gate`.
+    * The series are collected in id order through [[Gate]] and imaged
+    * on the driver (so an input at/above the gate images nothing before
+    * the distributed path), global-max normalized (app.py:531-533),
+    * then a bounded seeded fit sample is trained. Memoized driver-side (see [[aeFitCache]]): a cached fit
+    * of the same input answers the gate by its own row count, so a
+    * repeated call (the history after the embedding) runs no job. */
+  private def aeFit(series: DataFrame, imaging: String, imgSize: Int, gate: Long,
+      cfg: ConvAE.Config): Option[(Array[Long], Array[Array[Double]], Array[Double])] = {
+    if (gate <= 0) return None
     val key = s"${System.identityHashCode(series.sparkSession)}|$imaging|" +
       s"$imgSize|$cfg|${series.queryExecution.logical.semanticHash()}"
-    aeFitCache.synchronized {
-      val hit = aeFitCache.get(key)
-      if (hit != null) return hit
+    val hit = aeFitCache.synchronized(aeFitCache.get(key))
+    if (hit != null) return Some(hit).filter(_._1.length < gate)
+    val image = graft.ops.Imaging.fusedImage(imaging, imgSize)
+    Gate.seriesBelow(series, gate).map { rows =>
+      val out = aeFitRows(rows.map { case (id, v) => (id, image(v)) }, imgSize, cfg)
+      aeFitCache.synchronized { aeFitCache.put(key, out) }
+      out
     }
-    val out = aeFitUncached(series, imaging, imgSize, cfg)
-    aeFitCache.synchronized { aeFitCache.put(key, out) }
-    out
   }
 
-  private def aeFitUncached(series: DataFrame, imaging: String, imgSize: Int,
+  private def aeFitRows(imgs: Array[(Long, Array[Double])], imgSize: Int,
       cfg: ConvAE.Config): (Array[Long], Array[Array[Double]], Array[Double]) = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    val imgs = series.select(col("series_id").cast("long"),
-        graft.ops.Imaging.fusedImageUdf(imaging, imgSize)(col("values")))
-      .orderBy(col("series_id"))
-      .as[(Long, Array[Double])].collect()
     require(imgs.nonEmpty, "aeEmbed: empty input")
     var mx = 0.0
     imgs.foreach { r => val m = r._2.max; if (m > mx) mx = m }
@@ -516,10 +501,9 @@ object Embedding {
   def pcaVariancePct(series: DataFrame, n: Int): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    // gate probe via a limited count — no cache()+unpersist() on the
-    // caller-visible plan (see mds2d)
-    if (series.limit(100000).count() < 100000) {
-      val (_, _, ratio) = pcaLocal(series, n)
+    val local = Gate.seriesBelow(series, 100000L)
+    if (local.isDefined) {
+      val (_, _, ratio) = pcaLocal(local.get, n)
       return ratio.zipWithIndex
         .map { case (v, i) => (i + 1, math.rint(v * 1000) / 10) }
         .toSeq.toDF("component", "var_pct")

@@ -220,19 +220,10 @@ object KShape {
   def fit(series: DataFrame, k: Int, maxIter: Int = 10): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    // gate probe via a limited COUNT (column-pruned — no series arrays
-    // move for the probe; a limit+collect probe would ship gate+1 full
-    // arrays to the driver on large inputs). No cache()+unpersist()
-    // here — unpersisting a caller-visible plan evicts the cache entry
-    // a caller may share (Spark's cache manager matches by plan, not
-    // by reference).
-    val gate = 100000
-    if (series.limit(gate).count() < gate) { // strict: n == gate goes distributed, like the sibling gates
-      val data = series.select(col("series_id").cast("long"), col("values"))
-        .orderBy(col("series_id")) // partition-order-independent results
-        .as[(Long, Array[Double])].collect()
-      return localFit(data, k, maxIter).toSeq.toDF("series_id", "cluster")
-    }
+    // strict gate: n == 10⁵ goes distributed, like the sibling gates
+    val local = Gate.seriesBelow(series, 100000L)
+    if (local.isDefined)
+      return localFit(local.get, k, maxIter).toSeq.toDF("series_id", "cluster")
     fitDistributed(series, k, maxIter)
   }
 

@@ -215,14 +215,9 @@ object Umap {
       numLandmarks: Int = 1024): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    val below = gate > 0 && series.limit(probe).count() < gate
-    val collected0 = if (below) {
-      series.select(col("series_id").cast("long"), col("values"))
-        .orderBy("series_id").as[(Long, Array[Double])].collect()
-    } else Array.empty[(Long, Array[Double])]
-    if (below) {
-      val out = fitLocal(collected0.map(_._1), collected0.map(_._2),
+    val local = Gate.seriesBelow(series, gate)
+    if (local.isDefined) {
+      val out = fitLocal(local.get.map(_._1), local.get.map(_._2),
         nNeighbors, epochs, seed)
       return out.toSeq.toDF("series_id", "x", "y")
     }

@@ -105,7 +105,10 @@ object Imaging {
     * boxed matrix — the HOF form is kept for the oracle-checked
     * single-series matrix queries, this for the 10⁴+-series path).
     * Returns the flattened size×size image. */
-  def fusedImageUdf(imaging: String, size: Int) = udf((values: Array[Double]) => {
+  def fusedImageUdf(imaging: String, size: Int) = udf(fusedImage(imaging, size))
+
+  /** The [[fusedImageUdf]] kernel as a function, for driver-side rows. */
+  def fusedImage(imaging: String, size: Int): Array[Double] => Array[Double] = { values =>
     val v = values
     val n = v.length
     val mn = v.min; val mx = v.max
@@ -162,5 +165,5 @@ object Imaging {
       }
     }
     out
-  })
+  }
 }

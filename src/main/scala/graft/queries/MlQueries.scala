@@ -56,7 +56,7 @@ object MlQueries {
     }
 
   /** W1-truncated normalized series (memoized — the K-Shape fit runs
-    * twice under the bench's min-of-2 timing and its input, gate probe
+    * twice under the bench's min-of-2 timing and its input, gate collect
     * included, should come from cache on the second pass). */
   private def truncatedSeries(s: SparkSession, dir: String): DataFrame =
     memoized(s, s"trunc|$dir") {

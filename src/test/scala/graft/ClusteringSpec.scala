@@ -50,6 +50,81 @@ class ClusteringSpec extends SparkSpec {
     assert(reps == Map(0 -> 3L, 1 -> 4L))
   }
 
+  test("centroid representatives: driver path == Window plan, and every representative is an argmin") {
+    // blobs with noise (−1), an exact four-way distance tie (cluster 2:
+    // mean (1, 0), every member at distance exactly 1), a singleton
+    // cluster, ids scattered over partitions out of id order
+    val rows =
+      (0 until 30).map(i => (100L + (i * 7) % 30, 0.3 * (i % 5) + 0.01 * i, 0.2 * (i / 5), 0)) ++
+      (0 until 25).map(i => (200L + (i * 3) % 25, 8.0 + 0.17 * (i % 4), -3.0 + 0.29 * (i / 4), 1)) ++
+      Seq((304L, 1.0, -1.0, 2), (301L, 2.0, 0.0, 2), (303L, 1.0, 1.0, 2), (302L, 0.0, 0.0, 2)) ++
+      Seq((400L, 50.0, 50.0, 3)) ++
+      Seq((500L, -90.0, 7.0, -1), (501L, 1.0, 0.0, -1))
+    val asInt = rows.toDF("series_id", "x", "y", "cluster").repartition(3)
+    val asLong = asInt.withColumn("cluster", col("cluster").cast("long"))
+    for (assigned <- Seq(asInt, asLong)) {
+      val driver = TraceBack.centroidRepresentatives(assigned)
+      val plan = TraceBack.centroidRepresentatives(assigned, 0L)
+      assert(driver.schema == plan.schema)
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.collect().sortBy(_.get(0).toString.toLong)
+      val (d, p) = (sorted(driver), sorted(plan))
+      assert(d.map(r => (r.get(0), r.get(1))).toSeq == p.map(r => (r.get(0), r.get(1))).toSeq)
+      d.zip(p).foreach { case (a, b) =>
+        for (c <- Seq(2, 3)) {
+          val (u, v) = (a.getDouble(c), b.getDouble(c))
+          assert(math.abs(u - v) <= 1e-12 * math.max(math.abs(v), 1e-300), s"$u vs $v")
+        }
+      }
+      val reps = d.map(r => r.get(0).toString.toInt -> r.getLong(1)).toMap
+      assert(reps.keySet == Set(0, 1, 2, 3))
+      assert(reps(2) == 301L && reps(3) == 400L)
+      // data-derived invariant: the representative is a member whose
+      // distance to the member mean no member beats; ties go to the
+      // lowest id
+      rows.filter(_._4 != -1).groupBy(_._4).foreach { case (c, ms) =>
+        val (mx, my) = (ms.map(_._2).sum / ms.size, ms.map(_._3).sum / ms.size)
+        def dist(m: (Long, Double, Double, Int)) = math.hypot(m._2 - mx, m._3 - my)
+        val rep = ms.find(_._1 == reps(c)).get
+        assert(ms.forall(m => dist(rep) <= dist(m) + 1e-12))
+        assert(ms.filter(m => dist(m) <= dist(rep) + 1e-12).map(_._1).min == rep._1)
+      }
+    }
+  }
+
+  test("centroid representatives: decimal coordinates and null ids/coordinates keep the Window plan's answer") {
+    val base = Seq((1L, 0.0, 0.0, 0), (2L, 2.0, 0.0, 0), (3L, 0.9, 0.1, 0), (4L, 5.0, 5.0, 1))
+      .toDF("series_id", "x", "y", "cluster")
+    // avg of a decimal column is decimal: the plan's decimal centroids
+    val dec = base.withColumn("x", col("x").cast("decimal(10,4)"))
+      .withColumn("y", col("y").cast("decimal(10,4)"))
+    val decOut = TraceBack.centroidRepresentatives(dec)
+    assert(decOut.schema("cx").dataType == org.apache.spark.sql.types.DecimalType(14, 8))
+    assert(decOut.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(0 -> 3L, 1 -> 4L))
+    // a null coordinate has a null distance, which the plan orders first;
+    // a null id sorts first among equal distances
+    val withNulls = base.union(Seq(
+      (Some(5L), None, Some(1.0), 1), (None, Some(5.0), Some(5.0), 1))
+      .toDF("series_id", "x", "y", "cluster"))
+    for (assigned <- Seq(withNulls, withNulls.filter(col("x").isNotNull))) {
+      val driver = TraceBack.centroidRepresentatives(assigned).collect().sortBy(_.getInt(0))
+      val plan = TraceBack.centroidRepresentatives(assigned, 0L).collect().sortBy(_.getInt(0))
+      assert(driver.toSeq == plan.toSeq)
+    }
+    assert(TraceBack.centroidRepresentatives(withNulls).collect()
+      .map(r => r.getInt(0) -> r.get(1)).toMap == Map(0 -> 3L, 1 -> 5L))
+  }
+
+  test("K-Means driver path returns emb's columns and types with cluster appended") {
+    val emb = Seq((2, 0.0, 0.0, "a"), (1, 0.1, 0.0, "b"), (3, 9.0, 9.0, "c"))
+      .toDF("series_id", "x", "y", "tag")
+    val out = Clustering.kmeans(emb, 2)
+    assert(out.schema == emb.schema.add("cluster", "int", nullable = false))
+    val got = out.collect().map(r => r.getInt(0) -> (r.getString(3), r.getInt(4))).toMap
+    assert(got.keySet == Set(1, 2, 3) && got(1)._1 == "b" && got(3)._1 == "c")
+    assert(got(1)._2 == got(2)._2 && got(1)._2 != got(3)._2)
+  }
+
   test("DBSCAN labels far points −1 and separates the blobs (C2+C7)") {
     val pts = (
       (0 until 20).map(i => (i.toLong, 0.0 + (i % 5) * 0.1, 0.0 + (i / 5) * 0.1)) ++

@@ -99,9 +99,8 @@ object Bpe {
     import spark.implicits._
     // the train is the family's shared pass: the merge-table query and
     // the fertility audit both consume it — pay it once per corpus
-    graft.queries.Memo.cached(spark,
-      s"bpe|$idCol|$textCol|$numMerges|$maxDriverWords|" +
-        df.queryExecution.logical.semanticHash()) {
+    graft.queries.Memo.cached(spark, "bpe", Seq(df),
+        idCol, textCol, numMerges, maxDriverWords) {
       val wf = wordFreq(df, idCol, textCol)
       val nWords = wf.count()
       val rows: Seq[(Int, String, String, String, Long)] =

@@ -61,21 +61,6 @@ object Dedup {
     override def initialValue(): SpanScratch = new SpanScratch
   }
 
-  /** LSH prep frame (min, max) dimension rows, keyed by the SAME
-    * internal key as the Memo'd `coslsh|…` prep entry and dropped in
-    * lockstep with it (ADVICE r17): when the Memo releases the prep
-    * frame the dim row goes too, so changed underlying data is
-    * re-validated with the rebuilt frame instead of reusing a stale
-    * dimension, and the cache shares Memo's session lifecycle instead
-    * of accumulating forever. Lock-free; a racing double aggregate is
-    * benign (deterministic input). */
-  private val dimCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.Row]
-  graft.queries.Memo.onRelease { internalKey =>
-    val raw = internalKey.substring(internalKey.indexOf('|') + 1)
-    if (raw.startsWith("coslsh|")) dimCache.remove(internalKey)
-  }
-
   /** Exact duplicate groups keyed by md5 of the raw text. */
   def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.groupBy(md5(col(textCol).cast("binary")).as("h"))
@@ -110,8 +95,7 @@ object Dedup {
     * the same docs. */
   private def memoShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
-    graft.queries.Memo.cached(docs.sparkSession,
-      s"shingles|$n|$idCol|$textCol|${docs.queryExecution.logical.semanticHash()}")(
+    graft.queries.Memo.cached(docs.sparkSession, "shingles", Seq(docs), n, idCol, textCol)(
       TextOps.shingles(docs, idCol, textCol, n))
 
   /** [[jaccardPairs]] over a precomputed (ideally cached/memoized)
@@ -169,8 +153,7 @@ object Dedup {
       k: Int = 8, w: Int = 4, minSpan: Int = 30, maxDf: Int = 100,
       maxBroadcastBytes: Long = 256L << 20): DataFrame = {
     val spark = docs.sparkSession
-    val base = graft.queries.Memo.cached(spark,
-      s"spanh|$k|$w|$idCol|$textCol|${docs.queryExecution.logical.semanticHash()}")(
+    val base = graft.queries.Memo.cached(spark, "spanh", Seq(docs), k, w, idCol, textCol)(
       docs.select(col(idCol).as("id"),
         TextOps.spanHashUdf(k, w)(TextOps.canonCol(textCol)).as("z"))
         .filter(col("z").isNotNull))
@@ -258,9 +241,8 @@ object Dedup {
     // (text_trim_spans) pay for candidate join + kernel + agg once.
     // The size-gate probe lives inside the block: on a memo hit no
     // action runs at all.
-    graft.queries.Memo.cached(spark,
-      s"spans|$k|$w|$minSpan|$maxDf|$maxBroadcastBytes|$idCol|$textCol|" +
-        s"${docs.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(spark, "spans", Seq(docs),
+        k, w, minSpan, maxDf, maxBroadcastBytes, idCol, textCol) {
       val estBytes = 8L * base.agg(coalesce(sum(size(col("z.hs"))), lit(0L)))
         .head().getLong(0)
       val joined =
@@ -351,8 +333,7 @@ object Dedup {
     * the inverted-index self-join once. */
   private def candidateIntersections(sh: DataFrame, idCol: String,
       maxDf: Int): DataFrame =
-    graft.queries.Memo.cached(sh.sparkSession,
-      s"candint|$idCol|$maxDf|${sh.queryExecution.logical.semanticHash()}")(
+    graft.queries.Memo.cached(sh.sparkSession, "candint", Seq(sh), idCol, maxDf)(
       candidateIntersectionsUncached(sh, idCol, maxDf))
 
   private def candidateIntersectionsUncached(sh: DataFrame, idCol: String,
@@ -706,8 +687,7 @@ object Dedup {
     * corpus once, not three times. */
   private def tokenNibbles(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    graft.queries.Memo.cached(docs.sparkSession,
-      s"simhashnibs|$idCol|$textCol|${docs.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(docs.sparkSession, "simhashnibs", Seq(docs), idCol, textCol) {
       val toks = TextOps.tokens(docs, idCol, textCol)
         .withColumn("hx", md5(col("w").cast("binary")))
       val nibCols = (0 until 16).map(i =>
@@ -736,8 +716,7 @@ object Dedup {
     }.reduce(_ + _)
     // one row per doc — Memo-cached so the fingerprint query and the
     // pairs query over the same docs share a single signature pass
-    graft.queries.Memo.cached(docs.sparkSession,
-      s"simhash$nBits|$idCol|$textCol|${docs.queryExecution.logical.semanticHash()}")(
+    graft.queries.Memo.cached(docs.sparkSession, "simhash", Seq(docs), nBits, idCol, textCol)(
       votes.select(col(idCol), assemble.as("simhash")))
   }
 
@@ -880,26 +859,19 @@ object Dedup {
       s"nBits must be a multiple of rowsPerBand and <= 63, got $nBits/$rowsPerBand")
     val spark = emb.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val e = graft.queries.Memo.cached(spark,
-      s"coslsh|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}")(
-      emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("nrm", sqrt(call_function("array_dot", col("v"), col("v")))))
     // derive + validate the vector dimension in one tiny aggregate: an
     // empty table yields an empty pair frame (not a head() crash), and
     // ragged dimensions fail loudly instead of silently mis-projecting.
-    // r17: the (min, max) row is cached per (session, corpus) beside
-    // the Memo'd prep frame — deterministic input makes it a constant,
-    // and re-deriving it cost one aggregate job per invocation.
-    // keyed by the prep entry's INTERNAL Memo key so the onRelease hook
-    // above drops this row exactly when the prep frame leaves the Memo
-    val dimKey = s"${System.identityHashCode(spark)}|coslsh|$idCol|$vecCol|" +
-      s"${emb.queryExecution.logical.semanticHash()}"
-    val dimRow = dimCache.get(dimKey) match {
-      case Some(r) => r
-      case None => // the aggregate job runs outside any map lock
-        val r = e.agg(min(size(col("v"))).as("mn"),
-          max(size(col("v"))).as("mx")).head()
-        dimCache.putIfAbsent(dimKey, r); r
+    // r17: the (min, max) row is paired with the Memo'd prep frame —
+    // deterministic input makes it a constant, and re-deriving it cost
+    // one aggregate job per invocation. The aggregate reads the cached
+    // frame, so its job also fills the cache.
+    val (e, dimRow) = graft.queries.Memo.cachedWith(spark, "coslsh", Seq(emb),
+        idCol, vecCol) {
+      val prep = emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
+        .withColumn("nrm", sqrt(call_function("array_dot", col("v"), col("v"))))
+        .cache()
+      (prep, prep.agg(min(size(col("v"))).as("mn"), max(size(col("v"))).as("mx")).head())
     }
     if (dimRow.isNullAt(0))
       return e.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
@@ -914,8 +886,7 @@ object Dedup {
     // Memo'd (r17): the nBits-hyperplane signature pass is an index
     // artifact (built once per corpus, like the ANN code tables) that
     // both band-join sides — and every re-run — otherwise recompute
-    val sig = graft.queries.Memo.cached(spark, s"coslshsig|$idCol|$vecCol|" +
-      s"$nBits|${emb.queryExecution.logical.semanticHash()}")(
+    val sig = graft.queries.Memo.cached(spark, "coslshsig", Seq(emb), idCol, vecCol, nBits)(
       e.withColumn("sig", sigBits))
     val numBands = nBits / rowsPerBand
     val mask = (1L << rowsPerBand) - 1

@@ -106,13 +106,8 @@ object Similarity {
       .select(col("q_id"), col("n_id"),
         round(call_function("array_dot", col("qv"), col("v"))
           / (col("qn") * col("nrm")) * lit(1e5)).cast("long").as("c5"))
-    // key includes the column choices too: the same frames queried
-    // with different id/vec/lang columns are different pair tables
-    // (ADVICE r10 — the other Memo keys already carry their columns)
-    graft.queries.Memo.cached(emb.sparkSession, s"bitext|" +
-      s"${emb.queryExecution.logical.semanticHash()}|" +
-      s"${langOf.queryExecution.logical.semanticHash()}|" +
-      s"$idCol|$vecCol|$langCol|$srcLang|$tgtLang")(
+    graft.queries.Memo.cached(emb.sparkSession, "bitext", Seq(emb, langOf),
+        idCol, vecCol, langCol, srcLang, tgtLang)(
       scored0)
   }
 
@@ -190,10 +185,9 @@ object Similarity {
     * (r17 §5). Canonical key column is q_id; callers rename. */
   private def sideAvgs(scored: DataFrame, k: Int): (DataFrame, DataFrame) = {
     val spark = scored.sparkSession
-    val h = scored.queryExecution.logical.semanticHash()
-    val src = graft.queries.Memo.cached(spark, s"bitextavg|f|$h|$k")(
+    val src = graft.queries.Memo.cached(spark, "bitextavg", Seq(scored), "f", k)(
       kNearestAvg(scored, k, "q_id"))
-    val tgt = graft.queries.Memo.cached(spark, s"bitextavg|b|$h|$k")(
+    val tgt = graft.queries.Memo.cached(spark, "bitextavg", Seq(scored), "b", k)(
       kNearestAvg(scored.select(col("n_id").as("q_id"),
         col("q_id").as("n_id"), col("c5")), k, "q_id"))
     (src, tgt)
@@ -267,10 +261,8 @@ object Similarity {
     // Memo'd like the exact tier's pair table: the forward and mutual
     // IVF miners (and the agreement gates) share ONE probe pool per
     // (inputs, params) — the fit + probe runs once, not per consumer.
-    graft.queries.Memo.cached(emb.sparkSession, s"bitextivf|" +
-      s"${emb.queryExecution.logical.semanticHash()}|" +
-      s"${langOf.queryExecution.logical.semanticHash()}|" +
-      s"$idCol|$vecCol|$langCol|$srcLang|$tgtLang|$cand|$nlist|$nprobe|$seed")(
+    graft.queries.Memo.cached(emb.sparkSession, "bitextivf", Seq(emb, langOf),
+        idCol, vecCol, langCol, srcLang, tgtLang, cand, nlist, nprobe, seed)(
       pool.select(col("q_id"), col("n_id"),
         round(col("cosine") * lit(1e5)).cast("long").as("c5")))
   }
@@ -515,9 +507,8 @@ object Similarity {
     // the candidate pool feeds three DAG branches (the collapse, both
     // sides of the pairwise join) — Memo'd so the |Q|·n candidate scan
     // runs once, not once per branch; the cached frame is |Q|·pool rows
-    val cand = graft.queries.Memo.cached(spark, s"mmrcand|" +
-      s"${System.identityHashCode(spark)}|$idCol|$vecCol|$queryPred|$pool|" +
-      s"${emb.queryExecution.logical.semanticHash()}")(
+    val cand = graft.queries.Memo.cached(spark, "mmrcand", Seq(emb),
+        idCol, vecCol, queryPred, pool)(
       bruteForceTopK(emb, idCol, vecCol, queryPred, pool)
         .select(col("q_id"), col("n_id"), col("cosine").as("rel")))
     val e = prep(emb, idCol, vecCol)
@@ -670,9 +661,7 @@ object Similarity {
     // it into the post-join cosine and re-evaluates it once PER QUERY
     // per row — measured 10× (=|Q|) slower than brute force at a 200k
     // corpus in the round-10 stress before this barrier
-    val e = graft.queries.Memo.cached(spark, s"int8codes|" +
-        s"${System.identityHashCode(spark)}|$idCol|$vecCol|" +
-        s"${emb.queryExecution.logical.semanticHash()}")(
+    val e = graft.queries.Memo.cached(spark, "int8codes", Seq(emb), idCol, vecCol)(
       eq.drop("v").withColumnRenamed("__qv", "v")
         .withColumn("nrm", sqrt(call_function("array_dot", col("v"), col("v")))))
     val q = e.filter(expr(queryPred))
@@ -1088,9 +1077,7 @@ object Similarity {
     * stress. */
   private def cachedCodes(emb: DataFrame, idCol: String,
       vecCol: String): DataFrame =
-    graft.queries.Memo.cached(emb.sparkSession, s"signcodes|" +
-      s"${System.identityHashCode(emb.sparkSession)}|$idCol|$vecCol|" +
-      s"${emb.queryExecution.logical.semanticHash()}")(
+    graft.queries.Memo.cached(emb.sparkSession, "signcodes", Seq(emb), idCol, vecCol)(
       withSignCode(withDim(prep(emb, idCol, vecCol))))
 
   def binaryHammingTopK(emb: DataFrame, idCol: String, vecCol: String,
@@ -1211,8 +1198,8 @@ object Similarity {
     // the band self-join + popcount verify. Build once per
     // (corpus, radius); the id-join for cosine and the components
     // closure stay per-run work.
-    val verified = graft.queries.Memo.cached(emb.sparkSession, s"bandham|" +
-      s"$idCol|$vecCol|$radius|${emb.queryExecution.logical.semanticHash()}") {
+    val verified = graft.queries.Memo.cached(emb.sparkSession, "bandham", Seq(emb),
+        idCol, vecCol, radius) {
       bnd.as("x").join(bnd.as("y"),
           col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
             col("x.id") < col("y.id"))

@@ -124,8 +124,7 @@ object TextOps {
     // label (quality_classifier + classifier_lift), and the curation
     // replan — each used to re-tokenize the corpus for the stopword
     // fold. One per-row pass per corpus, the tokenCounts discipline.
-    graft.queries.Memo.cached(df.sparkSession,
-      s"qual|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(df.sparkSession, "qual", Seq(df), idCol, textCol) {
       val t = col(textCol)
       val toks = tokensCol(t)
       val chars = length(t)
@@ -204,9 +203,7 @@ object TextOps {
     // table) — each used to re-run train + score (four passes over the
     // Memo'd tf table). The model fit is ingest-shaped work: pay it
     // once per (corpus, labels), like the LM score frame.
-    graft.queries.Memo.cached(df.sparkSession,
-      s"nbq|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}|" +
-        s"${labels.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(df.sparkSession, "nbq", Seq(df, labels), idCol, textCol) {
       nbQualityBuild(df, idCol, textCol, labels)
     }
 
@@ -518,8 +515,7 @@ object TextOps {
     * is the dominant cost — pay it once per corpus, like the other
     * shared-pass families. */
   def tokenCounts(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.queries.Memo.cached(df.sparkSession,
-      s"tokcnt|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(df.sparkSession, "tokcnt", Seq(df), idCol, textCol) {
       df.select(col(idCol),
         size(tokensCol(col(textCol))).cast("long").as("n_ws"),
         size(expr(s"regexp_extract_all(lower($textCol), '[a-z0-9]+', 0)")).cast("long").as("n_alnum"),
@@ -1026,8 +1022,7 @@ object TextOps {
     // unit: the scorer (text_dsir_weights) builds it, the selector
     // (text_dsir_select) reuses it — scoring pays for the ngram pass
     // once per corpus, like every other shared-pass family
-    graft.queries.Memo.cached(df.sparkSession,
-      s"dsir|$m|$targetPred|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(df.sparkSession, "dsir", Seq(df), m, targetPred, idCol, textCol) {
       dsirScoreWith(df, idCol, textCol, targetPred,
         dsirRatioTable(df, idCol, textCol, targetPred, m), m)
     }
@@ -1054,8 +1049,8 @@ object TextOps {
     * featurization once. */
   private def dsirFeatures(df: DataFrame, idCol: String, textCol: String,
       targetPred: Column, m: Int): DataFrame =
-    graft.queries.Memo.cached(df.sparkSession,
-      s"dsirb2|$m|$targetPred|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(df.sparkSession, "dsirb2", Seq(df),
+        m, targetPred, idCol, textCol) {
       val bucketCounts = udf((text: String) =>
         if (text == null) null
         else {
@@ -1278,8 +1273,7 @@ object TextOps {
     * per-doc-term count shuffle, so a suite running both pays once. */
   private[graft] def termFrequencies(df: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    graft.queries.Memo.cached(df.sparkSession,
-      s"tf|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}")(
+    graft.queries.Memo.cached(df.sparkSession, "tf", Seq(df), idCol, textCol)(
       tokens(df, idCol, textCol)
         .groupBy(col(idCol), col("w")).agg(count(lit(1)).as("tf")))
 
@@ -1289,8 +1283,7 @@ object TextOps {
     * for that reduce once. */
   private[graft] def docFrequencies(df: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    graft.queries.Memo.cached(df.sparkSession,
-      s"dfreq|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}")(
+    graft.queries.Memo.cached(df.sparkSession, "dfreq", Seq(df), idCol, textCol)(
       termFrequencies(df, idCol, textCol)
         .groupBy(col("w")).agg(count(lit(1)).as("df")))
 
@@ -1805,9 +1798,7 @@ object TextOps {
   /** The Memo'd (word, freq) table every vocabulary statistic shares —
     * one token pass per corpus per session, |vocab| rows (≪ corpus). */
   private def tokenFreq(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.queries.Memo.cached(df.sparkSession, s"tokfreq|" +
-      s"${System.identityHashCode(df.sparkSession)}|$idCol|$textCol|" +
-      s"${df.queryExecution.logical.semanticHash()}")(
+    graft.queries.Memo.cached(df.sparkSession, "tokfreq", Seq(df), idCol, textCol)(
       df.select(explode(tokensCol(col(textCol))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("f")))
 
@@ -2107,8 +2098,7 @@ object TextOps {
     val tf = termFrequencies(df, idCol, textCol)
     // doc-length table: corpus-sized but one row per doc — Memo'd so
     // the per-run cost is the probe-side work, not this 10M-row reduce
-    val dl = graft.queries.Memo.cached(spark,
-      s"dl|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}")(
+    val dl = graft.queries.Memo.cached(spark, "dl", Seq(df), idCol, textCol)(
       tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl")))
     val avgdl = dl.agg(avg(col("dl"))).head().getDouble(0)
     val dfreq = docFrequencies(df, idCol, textCol)
@@ -2265,8 +2255,7 @@ object TextOps {
     * ([[pplBuckets]], text_ppl_buckets) reuses it — the LM pass runs
     * once per corpus, like the other shared-pass families. */
   def lmScore(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.queries.Memo.cached(df.sparkSession,
-      s"lmscore|$idCol|$textCol|${df.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(df.sparkSession, "lmscore", Seq(df), idCol, textCol) {
       lmScoreUncached(df, idCol, textCol)
     }
 

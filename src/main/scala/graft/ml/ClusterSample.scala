@@ -27,8 +27,8 @@ object ClusterSample {
     * clustering — re-fit nothing. */
   def clusterBalancedSample(emb: DataFrame, idCol: String, vecCol: String,
       nClusters: Int, cap: Int, seed: Long = 42): DataFrame = {
-    val assigned = graft.queries.Memo.cached(emb.sparkSession,
-      s"cbs|$nClusters|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}") {
+    val assigned = graft.queries.Memo.cached(emb.sparkSession, "cbs", Seq(emb),
+        nClusters, seed, idCol, vecCol) {
       val e = graft.ext.Similarity.prep(emb, idCol, vecCol)
         .withColumn("vn", transform(col("v"), x => x / col("nrm")))
         .withColumn("__f", array_to_vector(col("vn")))

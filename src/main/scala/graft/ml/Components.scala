@@ -17,6 +17,23 @@ import org.apache.spark.sql.functions._
   * paths produce identical output regardless of partitioning. */
 private[graft] object Components {
 
+  /** Driver union-find whose root is always the smallest id joined so
+    * far, so `find` returns the canonical min-id label directly. */
+  final class MinIdUnionFind {
+    private val parent = mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+  }
+
   /** edges: first two columns are (id, id2) castable to long. Returns
     * (id, label) for every id that appears in `edges`; label = min id
     * of the component. `maxDriverEdges` gates the driver union-find
@@ -38,23 +55,13 @@ private[graft] object Components {
     val result =
       if (effEdges <= maxDriverEdges) {
         import spark.implicits._
-        val parent = mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
+        val uf = new MinIdUnionFind
         // union-find treats every edge as undirected, so the directed
         // list is collected as-is — no symmetrization pass needed
         val collected = dir.as[(Long, Long)].collect()
-        collected.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
+        collected.foreach { case (a, b) => uf.union(a, b) }
         val ids = collected.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-        ids.toSeq.map(id => (id, find(id))).toDF("id", "label")
+        ids.toSeq.map(id => (id, uf.find(id))).toDF("id", "label")
           .localCheckpoint()
       } else {
         // min-label propagation DOES need both directions — symmetrize

@@ -94,30 +94,18 @@ object Dbscan {
     }
     val core = nbrs.map(_.length >= minPts)
     // min-id union-find over core-core edges (the Components engine)
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
+    val uf = new Components.MinIdUnionFind
     i = 0
     while (i < n) {
-      if (core(i)) nbrs(i).foreach { j =>
-        if (core(j)) {
-          val (ra, rb) = (find(pts(i)._1), find(pts(j)._1))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-      }
+      if (core(i)) nbrs(i).foreach { j => if (core(j)) uf.union(pts(i)._1, pts(j)._1) }
       i += 1
     }
     val out = (0 until n).map { k =>
       val id = pts(k)._1
-      if (core(k)) (id, find(id))
+      if (core(k)) (id, uf.find(id))
       else {
         var best = Long.MaxValue
-        nbrs(k).foreach { j => if (core(j)) best = math.min(best, find(pts(j)._1)) }
+        nbrs(k).foreach { j => if (core(j)) best = math.min(best, uf.find(pts(j)._1)) }
         (id, if (best == Long.MaxValue) -1L else best)
       }
     }

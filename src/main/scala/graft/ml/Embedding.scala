@@ -85,8 +85,7 @@ object Embedding {
     // the distributed path's cache (input reused by the mean pass, the
     // fit, and the transform) goes through the bounded Memo LRU so
     // repeated large-input calls can't accumulate executor storage
-    val cached = graft.queries.Memo.cached(spark,
-      s"pcaembed|${series.queryExecution.logical.semanticHash()}")(series)
+    val cached = graft.queries.Memo.cached(spark, "pcaembed", Seq(series))(series)
     val c = centered(cached).withColumn("__fv", array_to_vector(col("values")))
     try {
       val model = new PCA().setK(k).setInputCol("__fv").setOutputCol("__pca").fit(c)

@@ -19,21 +19,6 @@ import graft.functions.GraftFunctions
   */
 object Ivf {
 
-  /** Driver-side centroid cache paired with the Memo'd bucketed table
-    * (same key): nlist × dim doubles — a few KB each. Lifetime is tied
-    * to the paired Memo entry: the release listener below drops the
-    * centroids whenever the Memo entry leaves (eviction, staleness, or
-    * explicit release), so a long-lived JVM touching many sessions or
-    * inputs cannot accumulate centroid arrays unboundedly. If the Memo
-    * entry is released and rebuilt, the build block overwrites this
-    * entry consistently. */
-  private val centersCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  /** PQ codebooks paired with the Memo'd coded table (same key):
-    * mSub × ksub × dsub doubles — a few KB. Same lifetime discipline
-    * as centersCache. */
-  private val pqBooks =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
   /** Dedicated bounded daemon pool for the PQ sub-fits: the build runs
     * while holding the global Memo monitor, so a wedged fit on the
     * shared global ExecutionContext could starve every other
@@ -45,13 +30,6 @@ object Ivf {
         (r: Runnable) => {
           val t = new Thread(r, "pq-subfit"); t.setDaemon(true); t
         }))
-  graft.queries.Memo.onRelease { internalKey =>
-    // internal keys are "sessionHash|callerKey"; our callerKeys start
-    // with "ivf|" / "pq|" and are exactly the driver-cache keys
-    val raw = internalKey.substring(internalKey.indexOf('|') + 1)
-    if (raw.startsWith("ivf|")) centersCache.remove(raw)
-    if (raw.startsWith("pq|")) pqBooks.remove(raw)
-  }
 
   /** NOTE on `queryPred`'s column contract: the predicate is resolved
     * against the memoized IVF index frame, which carries ONLY
@@ -65,32 +43,27 @@ object Ivf {
     * built once and probed by every subsequent search (that is the
     * production shape: index build is offline, probes are the query
     * path). Memoized per (session, input plan, nlist, seed) like the
-    * other ML fits; the repeated-search cost is the bucket-pruned
-    * join only, never a re-fit.
-    * Session identity in the key: Memo scopes its entries per session
-    * internally, but centersCache must not serve centroids fitted
-    * under a stopped session to a new one. */
+    * other ML fits, with the centroids (nlist × dim doubles) paired
+    * with the entry; the repeated-search cost is the bucket-pruned
+    * join only, never a re-fit. */
   private def indexed(emb: DataFrame, idCol: String, vecCol: String,
       nlist: Int, seed: Long): (DataFrame, Array[Array[Double]]) = {
     val spark = emb.sparkSession
-    val key = s"ivf|${System.identityHashCode(spark)}|$nlist|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
-    val bucketed = graft.queries.Memo.cached(spark, key) {
+    graft.queries.Memo.cachedWith(spark, "ivf", Seq(emb), nlist, seed, idCol, vecCol) {
       val e = graft.ext.Similarity.prep(emb, idCol, vecCol)
         .withColumn("vn", transform(col("v"), x => x / col("nrm")))
       val withVec = e.withColumn("__f", array_to_vector(col("vn")))
       val model = new KMeans().setK(nlist).setSeed(seed)
         .setFeaturesCol("__f").setPredictionCol("centroid_id").fit(withVec)
       val centers = model.clusterCenters.map(_.toArray)
-      centersCache(key) = centers
       // assignment goes through assignWith's argmin — the SAME kernel
       // the streaming ingest uses (VERDICT r9 #3d) — not MLlib's
       // model.transform distance path, whose norm-trick rounding can
       // diverge from the plain squared-distance fold on near-ties. One
       // argmin means the batch index and the streamed state are
       // row-identical BY CONSTRUCTION, not just on non-tied inputs.
-      assignWith(emb, idCol, vecCol, centers)
+      (assignWith(emb, idCol, vecCol, centers), centers)
     }
-    (bucketed, centersCache(key))
   }
 
   /** nprobe-nearest-centroid prober over the broadcast centroids. */
@@ -260,8 +233,7 @@ object Ivf {
 
     // int8 codes for the index frame, memoized beside it (same build
     // discipline: codes are part of the offline index, not query work)
-    val keyQ = s"ivfq|${System.identityHashCode(spark)}|$nlist|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
-    val coded = graft.queries.Memo.cached(spark, keyQ) {
+    val coded = graft.queries.Memo.cached(spark, "ivfq", Seq(emb), nlist, seed, idCol, vecCol) {
       val scales = bucketed.select(posexplode(col("vn")).as(Seq("i", "x")))
         .groupBy("i").agg(max(abs(col("x"))).as("s"))
         .orderBy("i").select("s").collect().map(_.getDouble(0))
@@ -402,9 +374,8 @@ object Ivf {
       nlist: Int, seed: Long): (DataFrame, Array[Array[Double]]) = {
     val (bucketed, centers) = indexed(emb, idCol, vecCol, nlist, seed)
     val spark = emb.sparkSession
-    val key = s"ivfattr|${System.identityHashCode(spark)}|$nlist|$seed|" +
-      s"$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
-    val attributed = graft.queries.Memo.cached(spark, key)(
+    val attributed = graft.queries.Memo.cached(spark, "ivfattr", Seq(emb),
+        nlist, seed, idCol, vecCol)(
       bucketed.join(emb.drop(vecCol), Seq(idCol)))
     (attributed, centers)
   }
@@ -492,9 +463,10 @@ object Ivf {
     val probe = probeUdf(spark, centers, nprobe)
 
     // offline index artifact: per-subspace codebooks + per-vector codes,
-    // memoized beside the IVF index (same build discipline)
-    val keyP = s"pq|${System.identityHashCode(spark)}|$nlist|$mSub|$ksub|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
-    val coded = graft.queries.Memo.cached(spark, keyP) {
+    // memoized beside the IVF index (same build discipline), the
+    // codebooks (mSub × ksub × dsub doubles) paired with the codes
+    val (coded, books) = graft.queries.Memo.cachedWith(spark, "pq", Seq(emb),
+        nlist, mSub, ksub, seed, idCol, vecCol) {
       val dimRow = bucketed.agg(min(size(col("vn"))).as("mn"),
         max(size(col("vn"))).as("mx")).head()
       // empty input aggregates min/max to null — fail with a named
@@ -541,7 +513,6 @@ object Ivf {
           // holding the Memo monitor if a fit job wedges
           scala.concurrent.duration.Duration(10, "min")).toArray
         finally fitIn.unpersist()
-      pqBooks(keyP) = books
       val bc = spark.sparkContext.broadcast(books)
       // the offline ENCODER: per-row per-subspace argmin against the
       // broadcast codebooks; strict < ties to the smaller centroid id
@@ -560,9 +531,8 @@ object Ivf {
           best
         }
       })
-      bucketed.withColumn("pq_code", enc(col("vn")))
+      (bucketed.withColumn("pq_code", enc(col("vn"))), books)
     }
-    val books = pqBooks(keyP)
     val dsub = books(0)(0).length
     // flattened codebook literal: entry m·ksub + c = centroid subvector
     val bookLit = typedLit(books.flatMap(_.map(_.toSeq)).toSeq)

@@ -62,8 +62,8 @@ object SemDedup {
     require(nClusters > 0, s"nClusters must be positive, got $nClusters")
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.queries.Memo.cached(spark,
-      s"semdedup2|$nClusters|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}") {
+    graft.queries.Memo.cached(spark, "semdedup2", Seq(emb),
+        nClusters, seed, idCol, vecCol) {
       val e = graft.ext.Similarity.prep(emb, idCol, vecCol)
         .withColumn("vn", transform(col("v"), x => x / col("nrm")))
         .withColumn("__f", array_to_vector(col("vn")))

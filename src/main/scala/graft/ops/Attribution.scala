@@ -59,10 +59,9 @@ object Attribution {
     // per-conversion aggregate, the credit join, and the unattributed
     // anti-join), so it materializes once instead of re-running the
     // join per consumer (the bitextMine shared-pass idiom)
-    val pairs = graft.queries.Memo.cached(events.sparkSession, "attrib|" +
-      s"${events.queryExecution.logical.semanticHash()}|$userCol|$typeCol|" +
-      s"$tsCol|$idCol|$valueCol|${touchTypes.mkString(",")}|$convType|" +
-      s"$maxTouches")(
+    val pairs = graft.queries.Memo.cached(events.sparkSession, "attrib",
+      Seq(events), userCol, typeCol, tsCol, idCol, valueCol, touchTypes,
+      convType, maxTouches)(
       okConvs.join(
           touches.select(col("u"), col("t"), col("us"), col("eid")), Seq("u"))
         .filter(col("us") < col("cus")

@@ -33,11 +33,8 @@ object Basket {
     // Window subtrees / ~14 Exchanges in the r17 before-plan). One
     // build per (items, maxBasket); the cached partitioning (__b, from
     // the window) feeds the self-join without a new Exchange.
-    // ADVICE r17: the key must carry basketCol/itemCol — two calls on the
-    // same items frame with swapped column roles must not share a build.
-    val sized = graft.queries.Memo.cached(items.sparkSession, s"basket|" +
-      s"$basketCol|$itemCol|" +
-      s"${items.queryExecution.logical.semanticHash()}|$maxBasket") {
+    val sized = graft.queries.Memo.cached(items.sparkSession, "basket",
+        Seq(items), basketCol, itemCol, maxBasket) {
       items
         .select(col(basketCol).as("__b"), col(itemCol).cast("long").as("__i"))
         .na.drop().distinct()

@@ -43,22 +43,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Int64-safety gate counts, keyed by the SAME internal key as the
-    * Memo'd predge frame ("sessionHash|predge|…") and dropped in
-    * lockstep with it (ADVICE r17): if the Memo releases the edge
-    * frame (staleness, eviction, explicit release) the scalar goes
-    * too, so a node source that grows within a session is recounted
-    * with the rebuilt frame instead of validating a stale gate, and
-    * entries for dead sessions cannot accumulate past Memo's own
-    * lifecycle. Reads/writes are lock-free; a racing double count is
-    * benign (deterministic sources). */
-  private val gateCounts =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  graft.queries.Memo.onRelease { internalKey =>
-    val raw = internalKey.substring(internalKey.indexOf('|') + 1)
-    if (raw.startsWith("predge|")) gateCounts.remove(internalKey)
-  }
-
   /** PageRank over `edges` (src, dst BIGINT) restricted to `nodes`
     * (node BIGINT): `iters` integer-exact damped iterations. Output:
     * (node, rank_nano BIGINT, n_in BIGINT) — rank in per-node
@@ -72,28 +56,6 @@ object Graph {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be 0..100, got $dampingPct")
     val nd = nodes.select(col("node").cast("long").as("node"))
-    // Enforce the scaladoc's int64-safety bound (ADVICE r11): past
-    // ~9e8 nodes the nano-unit contribution sums can wrap 2^63 under
-    // Spark's non-ANSI long sum() while the DuckDB oracle sums in
-    // HUGEINT — the engines would diverge SILENTLY. Fail loudly at
-    // the contract edge instead. r17: the gate count is cached per
-    // (session, node-plan) — deterministic sources make it a constant,
-    // and re-counting cost one full scan job on every invocation.
-    val predgeKey = s"predge|" +
-      s"${nodes.queryExecution.logical.semanticHash()}|" +
-      s"${edges.queryExecution.logical.semanticHash()}"
-    val gateKey =
-      s"${System.identityHashCode(nodes.sparkSession)}|$predgeKey"
-    val nNodes = gateCounts.get(gateKey) match {
-      case Some(n) => n
-      case None =>
-        val n = nd.count() // outside any lock: a full Spark job
-        n
-    }
-    require(nNodes <= 900000000L,
-      s"pageRank int64-safety bound exceeded: $nNodes nodes > 9e8 — " +
-        "nano-unit rank sums can wrap past 2^63 (silent divergence vs " +
-        "a HUGEINT oracle); shrink the rank unit before raising this")
     // outdeg over the node-restricted edge list: contributions divide
     // by the SAME degree the oracle computes
     val e = edges.select(col("src").cast("long").as("src"),
@@ -102,13 +64,24 @@ object Graph {
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
     // the edge-with-degree frame is consumed once PER ITERATION —
     // Memo-materialize it (the coded-ANN-table barrier pattern) so the
-    // upstream scan + degree aggregation runs once, not `iters` times
-    val e2 = graft.queries.Memo.cached(nodes.sparkSession, predgeKey)(
-      e.join(outdeg, Seq("src"))
-        .select(col("src"), col("dst"), col("__deg")))
-    // cache the gate count only once its paired Memo entry exists, so
-    // the onRelease hook above is guaranteed to see it leave
-    gateCounts.putIfAbsent(gateKey, nNodes)
+    // upstream scan + degree aggregation runs once, not `iters` times.
+    // r17: the node count is paired with it — deterministic sources
+    // make it a constant, and re-counting cost one full scan job on
+    // every invocation.
+    val (e2, nNodes) = graft.queries.Memo.cachedWith(nodes.sparkSession, "predge",
+        Seq(nodes, edges)) {
+      (e.join(outdeg, Seq("src")).select(col("src"), col("dst"), col("__deg")),
+        nd.count())
+    }
+    // Enforce the scaladoc's int64-safety bound (ADVICE r11): past
+    // ~9e8 nodes the nano-unit contribution sums can wrap 2^63 under
+    // Spark's non-ANSI long sum() while the DuckDB oracle sums in
+    // HUGEINT — the engines would diverge SILENTLY. Fail loudly at
+    // the contract edge instead.
+    require(nNodes <= 900000000L,
+      s"pageRank int64-safety bound exceeded: $nNodes nodes > 9e8 — " +
+        "nano-unit rank sums can wrap past 2^63 (silent divergence vs " +
+        "a HUGEINT oracle); shrink the rank unit before raising this")
     // teleport base, shared by both paths below
     val base = (100L - dampingPct) * 1000000000L / 100L
     // Driver fast path (r18, the Components.minLabel gate idiom): the

@@ -767,9 +767,8 @@ object SeriesOps extends Serializable {
       .withColumn("__den", call_function("array_dot", col("__qc"), col("__qc")))
       .filter(col("__den") > 0.0)
       .select(col("series_id"), col("__qc"), col("__den"))
-    val stats = graft.queries.Memo.cached(series.sparkSession, s"crosscorrstats|" +
-      s"${System.identityHashCode(series.sparkSession)}|" +
-      s"${series.queryExecution.logical.semanticHash()}")(stats0)
+    val stats = graft.queries.Memo.cached(series.sparkSession, "crosscorrstats",
+      Seq(series))(stats0)
     val a = stats.select(col("series_id").as("s_a"), col("__qc").as("__qa"),
       col("__den").as("__da"))
     val b = stats.select(col("series_id").as("s_b"), col("__qc").as("__qb"),

@@ -23,7 +23,7 @@ object CoreQueries {
     * pays the build is arbitrable as the family sum. */
   private[graft] def eventSeries(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Memo.cached(s, s"evser|$dir") {
+    Memo.cached(s, "evser", Nil, dir) {
       SeriesOps.collectSeries(Tables.events(s, dir), "user_id", "value", "event_id")
     }
 
@@ -1434,7 +1434,7 @@ object CoreQueries {
       // that each scan their input once — uncached, the second scan
       // would re-run the whole events collect_list aggregation
       // (review r12)
-      (s, dir) => SeriesOps.theilSen(Memo.cached(s, s"theilser|$dir") {
+      (s, dir) => SeriesOps.theilSen(Memo.cached(s, "theilser", Nil, dir) {
           SeriesOps.collectSeries(
             Tables.events(s, dir), "user_id", "value", "event_id")
         }, lengthGate = 1000000)

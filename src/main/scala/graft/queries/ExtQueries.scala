@@ -140,13 +140,13 @@ object ExtQueries {
   /** One shingling pass per (session, dir), shared by the Jaccard and
     * MinHash-LSH queries (S3 memoization, bounded LRU). */
   private def docShingles(s: SparkSession, dir: String): DataFrame =
-    Memo.cached(s, s"sh3|$dir")(
+    Memo.cached(s, "sh3", Nil, dir)(
       TextOps.shingles(Tables.documents(s, dir), "doc_id", "text", 3))
 
   /** One (source, lang)-keyed shingling pass per (session, dir),
     * shared by the HLL overlap matrix and the sketch-rollup audit. */
   private def srcShingles(s: SparkSession, dir: String): DataFrame =
-    Memo.cached(s, s"shsl3|$dir")(
+    Memo.cached(s, "shsl3", Nil, dir)(
       TextOps.shinglesKeyed(Tables.documents(s, dir),
         Seq("source", "lang"), "text", 3))
 
@@ -156,7 +156,7 @@ object ExtQueries {
     * pipeline. Returns (doc_id, status, text) where text is the NEW
     * snapshot's text (null for removed docs). */
   private def snapshotDiff(s: SparkSession, dir: String): DataFrame =
-    Memo.cached(s, s"snapdiff|$dir") {
+    Memo.cached(s, "snapdiff", Nil, dir) {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val d = col("doc_id")
       val newSnap = docs.filter(d % 13 =!= 0)
@@ -175,13 +175,13 @@ object ExtQueries {
     * the source-overlap matrix, which would otherwise each run the
     * whole signature + band-join + verify pipeline. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    Memo.cached(s, s"mhp|$dir")(
+    Memo.cached(s, "mhp", Nil, dir)(
       Dedup.minhashLshPairsFrom(docShingles(s, dir), "doc_id", 8, 0.5))
 
   /** One cosine-LSH pair pass per (session, dir) — shared by the pair
     * query and the semantic group-closure query. */
   private def cosinePairs(s: SparkSession, dir: String): DataFrame =
-    Memo.cached(s, s"coslshp|$dir")(
+    Memo.cached(s, "coslshp", Nil, dir)(
       Dedup.cosineLshPairs(Tables.embeddings(s, dir), "vec_id", "embedding",
         0.45, nBits = 30, rowsPerBand = 5))
 

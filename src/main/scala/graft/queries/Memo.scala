@@ -1,9 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** S3 scan memoization (app.py:156-178 → df.cache()), shared by the ML
-  * and [EXT] query families: one cached DataFrame per (session, key).
+  * and [EXT] query families: one cached DataFrame per (session, op,
+  * inputs, params). Memo alone derives the key from those parts (see
+  * [[cachedWith]]), so no caller can forget an input or a parameter.
   * The key includes the session identity so a cached plan bound to a
   * stopped session is never replayed into a new one.
   *
@@ -37,27 +40,20 @@ private[graft] object Memo {
     * and warns; MemoSpec pins the derivation. */
   @volatile var evictionCount: Long = 0L
 
+  /** A cached frame and the driver-side value built with it. The value
+    * lives in the entry, so it leaves with it by every path (capacity
+    * eviction, staleness release, explicit release) and a rebuilt
+    * entry never pairs with a value derived from an older frame. */
+  private final class Entry(val df: DataFrame, val paired: Any)
+
   private var tick: Long = 0L
   private val lastTouch = new java.util.HashMap[String, Long]
-  private val memo = new java.util.LinkedHashMap[String, DataFrame](32, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
+  private val memo = new java.util.LinkedHashMap[String, Entry](32, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
       if (size() > MaxEntries) {
-        e.getValue.unpersist(); lastTouch.remove(e.getKey); evictionCount += 1
-        protectedKeys.remove(e.getKey)
-        fireRelease(e.getKey); true
+        e.getValue.df.unpersist(); lastTouch.remove(e.getKey); evictionCount += 1
+        protectedKeys.remove(e.getKey); true
       } else false
-  }
-
-  /** Listeners fired (inside the monitor) with the INTERNAL key
-    * (`sessionHash|callerKey`) whenever an entry leaves the memo by any
-    * path — capacity eviction, staleness release, or explicit release.
-    * Lets driver-side caches paired with a memo entry (e.g. the IVF
-    * centroid cache) drop their half in lockstep instead of leaking. */
-  private val releaseListeners =
-    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]
-  def onRelease(f: String => Unit): Unit = releaseListeners.add(f)
-  private def fireRelease(k: String): Unit = {
-    val it = releaseListeners.iterator(); while (it.hasNext) it.next()(k)
   }
 
   /** Bench-retry support: while recording, every internal key whose
@@ -98,22 +94,40 @@ private[graft] object Memo {
   def release(keys: Set[String]): Int = memo.synchronized {
     var n = 0
     keys.foreach { k =>
-      val df = memo.remove(k)
+      val e = memo.remove(k)
       protectedKeys.remove(k)
-      if (df != null) { df.unpersist(); lastTouch.remove(k); fireRelease(k); n += 1 }
+      if (e != null) { e.df.unpersist(); lastTouch.remove(k); n += 1 }
     }
     n
   }
 
-  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = s"${System.identityHashCode(s)}|$key"
+  /** The memoized frame for `op` over `inputs` with `params`, built by
+    * `build` on a miss. */
+  def cached(s: SparkSession, op: String, inputs: Seq[Dataset[_]], params: Any*)(
+      build: => DataFrame): DataFrame =
+    cachedWith(s, op, inputs, params: _*)((build, ()))._1
+
+  /** [[cached]] for a frame paired with a driver-side value (fitted
+    * centroids, a validated count): `build` returns both, and a hit
+    * returns the pair the entry was built with. A build whose value
+    * reads the frame may cache the frame itself first.
+    *
+    * The key is the session identity, `op`, each input's logical-plan
+    * `semanticHash` (so separately built but equal plans share one
+    * entry) and every parameter by value — arrays and collections by
+    * content — each quoted so no two parameter lists render alike. */
+  def cachedWith[V](s: SparkSession, op: String, inputs: Seq[Dataset[_]], params: Any*)(
+      build: => (DataFrame, V)): (DataFrame, V) = {
+    val k = (Seq(System.identityHashCode(s).toString, op,
+        inputs.map(_.queryExecution.logical.semanticHash()).mkString(",")) ++
+      params.map(render)).mkString("|")
     memo.synchronized {
       val hit = memo.get(k)
       if (hit != null) {
         if (recordOn) recordingHits.add(k)
         protectedKeys.remove(k) // first consumer arrived: normal windowing
         lastTouch.put(k, tick)
-        return hit
+        return (hit.df, hit.paired.asInstanceOf[V])
       }
     }
     // Build OUTSIDE the monitor (round 12): a memoized build that
@@ -124,22 +138,30 @@ private[graft] object Memo {
     // misses on one key both build; the key's build is deterministic,
     // so both plans canonicalize identically and Spark's CacheManager
     // dedupes the cache() — the loser's copy IS the winner's entry,
-    // nothing leaks and nothing must be unpersisted.
-    val df = build.cache()
+    // nothing leaks and nothing must be unpersisted. The loser's
+    // paired value is dropped with it.
+    val (frame, value) = build
+    val df = if (frame.storageLevel == StorageLevel.NONE) frame.cache() else frame
     memo.synchronized {
       val winner = memo.get(k)
       if (winner != null) {
         if (recordOn) recordingHits.add(k)
         protectedKeys.remove(k) // a consumer arrived via the race too
         lastTouch.put(k, tick)
-        winner
+        (winner.df, winner.paired.asInstanceOf[V])
       } else {
         // misses only: a hit means some earlier query owns this entry;
         // recording it would let the bench retry release a shared pass
         if (recordOn) recording.add(k)
-        memo.put(k, df); lastTouch.put(k, tick); df
+        memo.put(k, new Entry(df, value)); lastTouch.put(k, tick); (df, value)
       }
     }
+  }
+
+  private def render(p: Any): String = p match {
+    case a: Array[_] => a.iterator.map(render).mkString("[", ",", "]")
+    case c: Iterable[_] => c.iterator.map(render).mkString("[", ",", "]")
+    case v => "\"" + String.valueOf(v).replace("\\", "\\\\").replace("\"", "\\\"") + "\""
   }
 
   /** Advance the suite clock — the bench/verify loop calls this once
@@ -167,8 +189,8 @@ private[graft] object Memo {
       // first consumer, round 13) are exempt until touched.
       if (!protectedKeys.contains(e.getKey) &&
           lastTouch.getOrDefault(e.getKey, Long.MinValue) < cutoff) {
-        e.getValue.unpersist(); lastTouch.remove(e.getKey); it.remove()
-        fireRelease(e.getKey); n += 1
+        e.getValue.df.unpersist(); lastTouch.remove(e.getKey); it.remove()
+        n += 1
       }
     }
     n

@@ -13,15 +13,10 @@ import graft.ml.{Clustering, Dbscan, Embedding, KShape, Silhouette, TraceBack}
   * matrices (I1/I2) — carry full DuckDB oracles. */
 object MlQueries {
 
-  /** S3 scan memoization: the ML queries share the series pipeline —
-    * cache it once per (session, dir) via the bounded [[Memo]]. */
-  private def memoized(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    Memo.cached(s, key)(build)
-
   /** The reference's working dataset: whole-column min-max normalized
     * values, grouped into per-user series (SURVEY.md §1.4). */
   private def normalizedSeries(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"ns|$dir") {
+    Memo.cached(s, "ns", Nil, dir) {
       SeriesOps.collectSeries(
         SeriesOps.withNormalized(Tables.events(s, dir), "value"),
         "user_id", "min_max", "event_id")
@@ -33,13 +28,13 @@ object MlQueries {
     * queries so the suite pays for the iteration once. The clusters
     * query is therefore fully Memo'd and reports cold in the bench. */
   private def dbscanLabels(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"dbs|$dir")(Dbscan.run(featureEmbedding(s, dir), 3.0, 4))
+    Memo.cached(s, "dbs", Nil, dir)(Dbscan.run(featureEmbedding(s, dir), 3.0, 4))
 
   /** Deterministic 2-D feature embedding used by the oracle-checkable
     * trace-back and DBSCAN queries: x = avg(value), y = stddev_pop,
     * inputs rounded so both engines see identical doubles. */
   private def featureEmbedding(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"fe|$dir") {
+    Memo.cached(s, "fe", Nil, dir) {
       Tables.events(s, dir).na.drop(Seq("value"))
         .groupBy(col("user_id").as("series_id"))
         .agg(round(avg(col("value")), 6).as("x"),
@@ -51,7 +46,7 @@ object MlQueries {
     * consume the same fit; without sharing each ran its own series
     * collect + covariance + eigendecomposition). */
   private[graft] def pcaEmb(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"pca2d|$dir") {
+    Memo.cached(s, "pca2d", Nil, dir) {
       Embedding.pca2d(SeriesOps.pad(normalizedSeries(s, dir)))
     }
 
@@ -59,14 +54,14 @@ object MlQueries {
     * twice under the bench's min-of-2 timing and its input, gate collect
     * included, should come from cache on the second pass). */
   private def truncatedSeries(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"trunc|$dir") {
+    Memo.cached(s, "trunc", Nil, dir) {
       SeriesOps.truncate(normalizedSeries(s, dir))
     }
 
   /** W4 DTW alignment of every series to the longest one (memoized —
     * shared by the stretch query and the DTW combination pipeline). */
   private def dtwAligned(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"dtw|$dir") {
+    Memo.cached(s, "dtw", Nil, dir) {
       val ser = SeriesOps.collectSeries(
         Tables.events(s, dir), "user_id", "value", "event_id").cache()
       val longest = ser.withColumn("__n", size(col("values")))
@@ -447,7 +442,7 @@ object MlQueries {
     //    well-separated local optima, so 2× is the honest wiring
     //    bound, and 1.25 was inside init noise.
     Q("ml_dist_path_parity",
-      (s, dir) => memoized(s, s"parity|$dir") {
+      (s, dir) => Memo.cached(s, "parity", Nil, dir) {
         val spark = s
         import spark.implicits._
         import scala.concurrent.{Await, Future}

@@ -21,7 +21,7 @@ object MultimodalQueries {
     * over the hash rows is cheap enough to run per query). */
   private def phashHashes(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Memo.cached(s, s"phash|$dir") {
+    Memo.cached(s, "phash", Nil, dir) {
       import s.implicits._
       Tables.documents(s, dir).select(col("doc_id")).as[Long].flatMap { id =>
         val base = (id, Multimodal.dHash64(Multimodal.syntheticBmp(id, 18, 16)).get)
@@ -38,7 +38,7 @@ object MultimodalQueries {
     * (fullMemoQueries). */
   private def phashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Memo.cached(s, s"phashp|$dir")(
+    Memo.cached(s, "phashp", Nil, dir)(
       graft.ext.Dedup.hamming64Pairs(phashHashes(s, dir), "img_id", "h", 3))
 
   /** Chroma-aware decode+dHash pass (round 16, VERDICT r15 #6): one
@@ -46,7 +46,7 @@ object MultimodalQueries {
     * hash is bit-identical to [[phashHashes]]' by construction. */
   private def phashYuvHashes(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Memo.cached(s, s"phashyuv|$dir") {
+    Memo.cached(s, "phashyuv", Nil, dir) {
       import s.implicits._
       Tables.documents(s, dir).select(col("doc_id")).as[Long].flatMap { id =>
         def row(imgId: Long, noisy: Boolean) = {
@@ -66,7 +66,7 @@ object MultimodalQueries {
     * (fullMemoQueries). */
   private def audioEnergy(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Memo.cached(s, s"aen|$dir") {
+    Memo.cached(s, "aen", Nil, dir) {
       import s.implicits._
       val ids = Tables.documents(s, dir).select(col("doc_id")).as[Long]
       val media = ids.mapPartitions(_.map(id =>

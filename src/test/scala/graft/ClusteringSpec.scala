@@ -174,6 +174,71 @@ class ClusteringSpec extends SparkSpec {
     }
   }
 
+  test("DBSCAN labels satisfy the definition on both the driver kernel and the distributed build") {
+    // data-derived oracle: every label is checked against an O(n²)
+    // reading of the definition, not against the other path
+    val rnd = new scala.util.Random(7)
+    val blobs = (0 until 160).map { i =>
+      val (cx, cy, sd) = Seq((0.0, 0.0, 0.3), (4.0, 1.0, 0.5), (1.5, 5.0, 0.9), (3.0, 3.0, 3.0))(i % 4)
+      (i.toLong * 3 + 5, cx + sd * rnd.nextGaussian(), cy + sd * rnd.nextGaussian())
+    }
+    for ((eps, minPts) <- Seq((0.5, 4), (0.3, 3), (0.8, 6))) {
+      // two rows of minPts core points, 1.9·eps apart, and one point
+      // between them within eps of one core of each: a border point
+      // (for minPts > 3) whose core neighbours carry two labels; the
+      // left row, met first by the grid walk, has the larger ids
+      val bridge = (0 until minPts).flatMap { j => Seq(
+          (9000L + j, 100.0 - 0.1 * eps * j, 100.0),
+          (8000L + j, 100.0 + 1.9 * eps + 0.1 * eps * j, 100.0))
+        } :+ ((8500L, 100.0 + 0.95 * eps, 100.0))
+      val raw = blobs ++ bridge
+      val pts = raw.toDF("series_id", "x", "y")
+      val within = raw.map { case (_, x, y) =>
+        raw.indices.filter { j =>
+          math.pow(x - raw(j)._2, 2) + math.pow(y - raw(j)._3, 2) <= eps * eps
+        }
+      }
+      val core = within.map(_.size >= minPts)
+      // core-connected components by graph search, labelled by min id
+      val comp = Array.fill(raw.size)(-1L)
+      raw.indices.filter(core).foreach { s0 =>
+        if (comp(s0) < 0) {
+          val seen = scala.collection.mutable.LinkedHashSet(s0)
+          var frontier = Seq(s0)
+          while (frontier.nonEmpty) {
+            frontier = frontier.flatMap(within).filter(j => core(j) && seen.add(j))
+          }
+          val label = seen.map(raw(_)._1).min
+          seen.foreach(comp(_) = label)
+        }
+      }
+      val border = raw.indices.filter(i => !core(i) && within(i).exists(core))
+      val noise = raw.indices.filter(i => !core(i) && !within(i).exists(core))
+      assert(border.nonEmpty && noise.nonEmpty && comp.distinct.size > 2,
+        s"eps=$eps minPts=$minPts: the data must exercise every rule")
+      assert(minPts <= 3 || border.exists(i => within(i).filter(core).map(comp).distinct.size > 1),
+        s"eps=$eps minPts=$minPts: no border point between two clusters")
+      for ((path, out) <- Seq(
+          "driver" -> Dbscan.run(pts, eps, minPts),
+          "distributed" -> Dbscan.run(pts, eps, minPts, maxDriverEdges = 0, maxDriverPoints = 0))) {
+        val label = out.as[(Long, Long)].collect().toMap
+        val at = s"$path eps=$eps minPts=$minPts"
+        assert(label.size == raw.size, at)
+        raw.indices.foreach { i =>
+          val id = raw(i)._1
+          if (core(i)) assert(label(id) == comp(i), s"$at: core $id")
+          else if (border.contains(i))
+            assert(label(id) == within(i).filter(core).map(comp).min, s"$at: border $id")
+          else assert(label(id) == -1L, s"$at: noise $id")
+        }
+        // read from the output side: no point labelled noise has a
+        // core point (minPts within eps, itself included) within eps
+        assert(raw.indices.filter(i => label(raw(i)._1) == -1L)
+          .forall(i => !within(i).exists(core)), s"$at: noise next to a core point")
+      }
+    }
+  }
+
   test("K-Shape distributed path matches the driver-local path") {
     val base = (0 until 64).map(t => math.sin(2 * math.Pi * t / 16.0)).toArray
     val saw = (0 until 64).map(t => (t % 32) / 16.0 - 1.0).toArray

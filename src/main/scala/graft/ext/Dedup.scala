@@ -1,7 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for training-data pipelines ([EXT]).
   *
@@ -654,8 +660,50 @@ object Dedup {
     wide.select(col(idCol), explode(array(bandCols: _*)).as("bk"))
   }
 
-  /** [[minhashLshPairs]] over a precomputed shingle table. */
+  /** [[minhashLshPairs]] over a precomputed (id, s) shingle table.
+    *
+    * Below 10⁵ shingle rows (the constant the series gates use) the
+    * whole pass runs on one [[graft.ml.Gate]] collect of the
+    * `(id, s)` rows, and the pairs come back as a local frame with the
+    * plan's schema: the plan's signatures (per hash h, the min
+    * lowercase-hex md5 of `h|s`), its r=2 band keys, the same distinct
+    * `id_a < id_b` candidates, the same multiplicity-weighted shingle
+    * intersection and double Jaccard, rounded HALF_UP as Spark's
+    * `round` does. At reference corpus sizes the plan's ~20 Spark jobs
+    * cost more than the hashing. The plan stays the scale path: it
+    * serves every input at or above the gate, and any input the driver
+    * does not replicate — non-integral ids, a non-string `s`, a null id
+    * or shingle, or a pair whose Jaccard denominator is zero. */
   def minhashLshPairsFrom(sh: DataFrame, idCol: String,
+      numHashes: Int, threshold: Double): DataFrame =
+    minhashLshPairsFrom(sh, idCol, numHashes, threshold, 100000L)
+
+  /** [[minhashLshPairsFrom]] under an explicit gate in shingle rows;
+    * `gate = 0` forces the plan (the parity spec's lever). */
+  private[graft] def minhashLshPairsFrom(sh: DataFrame, idCol: String,
+      numHashes: Int, threshold: Double, gate: Long): DataFrame = {
+    val plan = minhashLshPlan(sh, idCol, numHashes, threshold)
+    val idType = plan.schema("id_a").dataType
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    if (!integral(idType) || sh.select(col("s")).schema.head.dataType != StringType)
+      return plan
+    def typed(v: Long): Any = idType match {
+      case ByteType => v.toByte
+      case ShortType => v.toShort
+      case IntegerType => v.toInt
+      case _ => v
+    }
+    graft.ml.Gate.collectBelow(
+        sh.select(col(idCol).cast("long"), col("s").cast("binary")), gate)(
+        r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      .flatMap(rows => minhashLshLocal(rows, numHashes, threshold))
+      .map(pairs => sh.sparkSession.createDataFrame(
+        pairs.map { case (a, b, j) => Row(typed(a), typed(b), j) }.asJava, plan.schema))
+      .getOrElse(plan)
+  }
+
+  private def minhashLshPlan(sh: DataFrame, idCol: String,
       numHashes: Int, threshold: Double): DataFrame = {
     val banded = minhashBanded(sh, idCol, numHashes)
     val cand = banded.as("a").join(banded.as("b"),
@@ -675,6 +723,74 @@ object Dedup {
       .withColumn("jaccard", col("i") / (col("na") + col("nb") - col("i")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** The driver body of [[minhashLshPairsFrom]] over id-sorted
+    * (id, UTF-8 shingle bytes) rows: the plan's (id_a, id_b, jaccard)
+    * rows in (id_a, id_b) order, or None when a candidate's Jaccard
+    * denominator is zero (duplicated rows can make i = na + nb), which
+    * the plan's division decides. */
+  private def minhashLshLocal(rows: Array[Row], numHashes: Int,
+      threshold: Double): Option[Seq[(Long, Long, Double)]] = {
+    // per doc: its id, row count and shingle multiplicities
+    val ids = mutable.ArrayBuffer.empty[Long]
+    val rowCounts = mutable.ArrayBuffer.empty[Long]
+    val mults = mutable.ArrayBuffer.empty[mutable.HashMap[ByteBuffer, Long]]
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      if (ids.isEmpty || ids.last != id) {
+        ids += id; rowCounts += 0L; mults += mutable.HashMap.empty
+      }
+      rowCounts(ids.length - 1) += 1
+      val m = mults.last
+      val k = ByteBuffer.wrap(r.getAs[Array[Byte]](1))
+      m(k) = m.getOrElse(k, 0L) + 1
+    }
+    // signatures: the min md5 per hash, held as its two big-endian
+    // halves, whose unsigned order is the order of the lowercase hex
+    val md = MessageDigest.getInstance("MD5")
+    val prefixes = (0 until numHashes).map(h => s"$h|".getBytes(UTF_8))
+    val sigHi = Array.ofDim[Long](ids.length, numHashes)
+    val sigLo = Array.ofDim[Long](ids.length, numHashes)
+    for (d <- ids.indices; h <- 0 until numHashes) {
+      var hi = -1L; var lo = -1L
+      mults(d).keysIterator.foreach { k =>
+        md.update(prefixes(h)); md.update(k.array())
+        val dg = ByteBuffer.wrap(md.digest())
+        val (dh, dl) = (dg.getLong(0), dg.getLong(8))
+        val c = java.lang.Long.compareUnsigned(dh, hi)
+        if (c < 0 || (c == 0 && java.lang.Long.compareUnsigned(dl, lo) < 0)) { hi = dh; lo = dl }
+      }
+      sigHi(d)(h) = hi; sigLo(d)(h) = lo
+    }
+    // candidates: docs sharing a band's two minima; docs are in id
+    // order, so each bucket lists ids ascending
+    val buckets = mutable.HashMap.empty[(Int, Long, Long, Long, Long), mutable.ArrayBuffer[Int]]
+    for (d <- ids.indices; b <- 0 until numHashes / 2)
+      buckets.getOrElseUpdate(
+        (b, sigHi(d)(2 * b), sigLo(d)(2 * b), sigHi(d)(2 * b + 1), sigLo(d)(2 * b + 1)),
+        mutable.ArrayBuffer.empty) += d
+    val n = ids.length.toLong
+    val cand = mutable.HashSet.empty[Long]
+    buckets.valuesIterator.foreach { ds =>
+      for (x <- ds.indices; y <- x + 1 until ds.length) cand += ds(x) * n + ds(y)
+    }
+    // (id_a, id_b, i, na + nb - i): i sums, over the shared shingles,
+    // the product of their multiplicities, as the plan's (id_b, s) join
+    val scored = cand.toArray.sorted.map { key =>
+      val (a, b) = ((key / n).toInt, (key % n).toInt)
+      val (small, large) =
+        if (mults(a).size <= mults(b).size) (mults(a), mults(b)) else (mults(b), mults(a))
+      var i = 0L
+      small.foreach { case (k, c) => i += c * large.getOrElse(k, 0L) }
+      (ids(a), ids(b), i, rowCounts(a) + rowCounts(b) - i)
+    }
+    if (scored.exists(_._4 == 0)) None
+    else Some(scored.toSeq.collect {
+      case (a, b, i, denom) if i.toDouble / denom.toDouble >= threshold =>
+        (a, b, BigDecimal(i.toDouble / denom.toDouble)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    })
   }
 
   /** Per-token md5 nibbles (id, __nib0..__nib15), Memo-cached per doc

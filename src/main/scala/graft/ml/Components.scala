@@ -37,33 +37,41 @@ private[graft] object Components {
   /** edges: first two columns are (id, id2) castable to long. Returns
     * (id, label) for every id that appears in `edges`; label = min id
     * of the component. `maxDriverEdges` gates the driver union-find
-    * path; 0 forces the distributed path (parity-tested in
-    * ClusteringSpec). Set `alreadySymmetric = true` when the edge list
+    * path, counted in edge rows: the list stays on the driver while its
+    * effective edge count is at most `maxDriverEdges`, so `0` forces
+    * the distributed path for any non-empty list (parity-tested in
+    * ClusteringSpec and TextDedupSpec) and still leaves an empty one on
+    * the driver. Set `alreadySymmetric = true` when the edge list
     * carries both directions (DBSCAN's cell join does) — propagation
     * then skips the symmetrizing union, and the gate compares the raw
     * edge count (the caller's historical semantics); with false, the
-    * gate accounts for the doubling the symmetrize adds. */
+    * gate accounts for the doubling the symmetrize adds.
+    *
+    * The decision is one [[Gate]] collect of the `(id, id2)` long
+    * projection: below the gate the collected edges are the union-find's
+    * input, and the labels come back as a local frame, so an in-memory
+    * edge list is decided and labelled by one limited collect. */
   def minLabel(edges0: DataFrame, maxDriverEdges: Long = 5000000L,
       alreadySymmetric: Boolean = false): DataFrame = {
     val spark = edges0.sparkSession
+    import spark.implicits._
     val c0 = edges0.columns(0)
     val c1 = edges0.columns(1)
-    val dir = edges0.select(col(c0).cast("long").as("id"),
-      col(c1).cast("long").as("id2")).cache()
-    val nEdges = dir.count()
-    val effEdges = if (alreadySymmetric) nEdges else 2 * nEdges
-    val result =
-      if (effEdges <= maxDriverEdges) {
-        import spark.implicits._
-        val uf = new MinIdUnionFind
+    val proj = edges0.select(col(c0).cast("long").as("id"),
+      col(c1).cast("long").as("id2"))
+    // n < gate ⇔ effEdges <= maxDriverEdges, effEdges = 2n unless symmetric
+    val gate = (if (alreadySymmetric) maxDriverEdges else maxDriverEdges / 2) + 1
+    Gate.collectBelow(proj.as[(Long, Long)], gate)(_._1) match {
+      case Some(collected) =>
         // union-find treats every edge as undirected, so the directed
-        // list is collected as-is — no symmetrization pass needed
-        val collected = dir.as[(Long, Long)].collect()
+        // list is used as-is — no symmetrization pass needed
+        val uf = new MinIdUnionFind
         collected.foreach { case (a, b) => uf.union(a, b) }
         val ids = collected.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
         ids.toSeq.map(id => (id, uf.find(id))).toDF("id", "label")
-          .localCheckpoint()
-      } else {
+      case None =>
+        val dir = proj.cache()
+        val nEdges = dir.count()
         // min-label propagation DOES need both directions — symmetrize
         // only when the caller's list is one-directional
         val edges =
@@ -124,16 +132,13 @@ private[graft] object Components {
         // the cap covers diameter ~2^200 — it remains as a defensive
         // infinite-loop guard, no longer a real-graph limitation.
         work.unpersist()
-        if (changed != 0) {
-          dir.unpersist()
+        dir.unpersist()
+        if (changed != 0)
           throw new IllegalStateException(
             s"min-label propagation did not converge in $iter rounds " +
               "(component diameter exceeds the cap) — raise the round cap " +
               "or use a contraction-based CC for this graph")
-        }
         labels
-      }
-    dir.unpersist()
-    result
+    }
   }
 }

@@ -5,9 +5,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
 
-/** The driver/distributed size gate of the reference-regime operators
-  * (one series or one embedding point per row, so the gate counts
-  * series, however many raw events they were aligned from).
+/** The driver/distributed size gate of the reference-regime operators.
+  * A row is one item of the driver kernel's input: one series or one
+  * embedding point for the series kernels and [[TraceBack]] (so the
+  * gate counts series, however many raw events they were aligned
+  * from), one `(id, id2)` edge for [[Components]], one `(id, shingle)`
+  * row for graft.ext.Dedup's MinHash-LSH pair pass.
   *
   * When the input is held in memory (every leaf of its plan is a cached
   * plan or local rows — what an interactive session keeps between its

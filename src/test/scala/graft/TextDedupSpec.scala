@@ -153,6 +153,153 @@ class TextDedupSpec extends SparkSpec {
     assert(driver == Map(7L -> 3L, 3L -> 3L, 9L -> 3L, 12L -> 11L, 11L -> 11L, 20L -> 20L))
   }
 
+  /** The frame optimizes to local rows (a driver path's result). */
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Spark jobs `body` submits, and its result. */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      (jobs.get, out)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** minhashLshPairsFrom's driver path and its forced plan: equal
+    * schema, equal rows; returns the rows. */
+  private def minhashParity(sh: org.apache.spark.sql.DataFrame,
+      threshold: Double = 0.5): Seq[org.apache.spark.sql.Row] = {
+    val driver = Dedup.minhashLshPairsFrom(sh, "doc_id", 8, threshold)
+    val plan = Dedup.minhashLshPairsFrom(sh, "doc_id", 8, threshold, 0L)
+    assert(isLocal(driver), "the driver path did not run")
+    assert(!isLocal(plan))
+    assert(driver.schema == plan.schema)
+    val got = driver.orderBy("id_a", "id_b").collect().toSeq
+    assert(got == plan.orderBy("id_a", "id_b").collect().toSeq)
+    got
+  }
+
+  /** Seeded corpus with planted near-duplicates: exact copies (every
+    * band shared), one-word edits, 5-token pairs whose 3-shingle
+    * Jaccard is exactly 2/4 = 0.5, and documents of fewer than 3
+    * tokens (no shingles). */
+  private lazy val planted = {
+    val rnd = new scala.util.Random(20260518L)
+    def words(k: Int) = Seq.fill(k)(s"w${rnd.nextInt(300)}")
+    val base = (0 until 40).map(i => i.toLong -> words(8 + rnd.nextInt(12)))
+    val copies = (0 until 5).map(i => (100L + i) -> base(i)._2)
+    val edits = (5 until 15).map { i =>
+      val ws = base(i)._2
+      (200L + i) -> ws.updated(rnd.nextInt(ws.length), s"edit$i")
+    }
+    val halves = (0 until 12).flatMap { k =>
+      val ws = (0 until 5).map(j => s"h${k}t$j")
+      Seq((300L + 2 * k) -> ws, (301L + 2 * k) -> ws.updated(4, s"h${k}x"))
+    }
+    val short = Seq(400L -> Seq("lone"), 401L -> Seq("two", "words"), 402L -> Seq(""))
+    (base ++ copies ++ edits ++ halves ++ short)
+      .map { case (id, ws) => (id, ws.mkString(" ")) }.toDF("doc_id", "text")
+  }
+
+  test("minhashLshPairsFrom: driver path == forced plan on the fixture, sf0.001 and a planted corpus") {
+    assert(minhashParity(TextOps.shingles(docs, "doc_id", "text", 3))
+      .exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
+    val sf001 = Tables.documents(spark, sf).select("doc_id", "text")
+    minhashParity(TextOps.shingles(sf001, "doc_id", "text", 3))
+    val sh = TextOps.shingles(planted, "doc_id", "text", 3).cache()
+    try {
+      val rows = minhashParity(sh)
+      // the planted cases are really exercised
+      assert(rows.exists(_.getDouble(2) == 0.5), "no pair at exactly Jaccard 0.5")
+      assert(rows.exists(r => r.getLong(0) == 0L && r.getLong(1) == 100L))
+      val bands = Dedup.minhashBandedFlat(sh, "doc_id", 8)
+        .as[(Long, Int, String)].collect().toSeq.groupBy(r => (r._2, r._3)).values.toSeq
+        .flatMap(g => for (a <- g; b <- g if a._1 < b._1) yield (a._1, b._1))
+        .groupBy(identity).map { case (p, hits) => p -> hits.size }
+      assert(rows.exists(r => bands.getOrElse((r.getLong(0), r.getLong(1)), 0) >= 2))
+      assert(sh.filter($"doc_id" >= 400L).count() == 0) // < 3 tokens: no shingles
+      minhashParity(sh, threshold = 0.3)
+    } finally sh.unpersist()
+  }
+
+  test("minhashLshPairsFrom: duplicated rows and int ids match the plan; null ids or shingles take it") {
+    val sh = TextOps.shingles(planted, "doc_id", "text", 3)
+    // multiplicities weight the intersection: a doubled doc can pass 1.0
+    val doubled = sh.union(sh.filter($"doc_id" % 3 === 0 || $"doc_id" === 1L))
+    minhashParity(doubled)
+    minhashParity(TextOps.shingles(docs, "doc_id", "text", 3)
+      .union(TextOps.shingles(docs.filter($"doc_id" === 1L), "doc_id", "text", 3)))
+    val asInt = sh.select($"doc_id".cast("int").as("doc_id"), $"s")
+    val intRows = minhashParity(asInt)
+    assert(intRows.nonEmpty && intRows.head.get(0).isInstanceOf[Int])
+    import org.apache.spark.sql.functions.lit
+    for (extra <- Seq(
+        Seq((999L, "a b c")).toDF("doc_id", "s").select(lit(null).cast("long").as("doc_id"), $"s"),
+        Seq((999L, "a b c")).toDF("doc_id", "s").select($"doc_id", lit(null).cast("string").as("s")))) {
+      val withNull = sh.union(extra)
+      val got = Dedup.minhashLshPairsFrom(withNull, "doc_id", 8, 0.5)
+      assert(!isLocal(got), "a null id or shingle must take the plan")
+      assert(got.orderBy("id_a", "id_b").collect().toSeq ==
+        Dedup.minhashLshPairsFrom(withNull, "doc_id", 8, 0.5, 0L)
+          .orderBy("id_a", "id_b").collect().toSeq)
+    }
+  }
+
+  test("Components.minLabel: an in-memory edge list below the gate is one job and a local frame") {
+    // one partition: a limited collect scans partitions incrementally
+    // (one job per scale-up step), so one partition is one job
+    val edges = Seq((7L, 3L), (3L, 9L), (12L, 11L), (20L, 20L)).toDF("id_a", "id_b")
+      .coalesce(1).cache()
+    try {
+      edges.count()
+      val (jobs, labels) = jobsOf {
+        val l = graft.ml.Components.minLabel(edges)
+        (l, l.as[(Long, Long)].collect().toMap)
+      }
+      assert(jobs == 1)
+      assert(isLocal(labels._1))
+      assert(labels._2 == Map(7L -> 3L, 3L -> 3L, 9L -> 3L, 12L -> 11L, 11L -> 11L, 20L -> 20L))
+    } finally edges.unpersist()
+  }
+
+  test("Components.minLabel: the gate keeps effEdges == maxDriverEdges on the driver, one more goes distributed") {
+    // a chain 0-1-…-n, plus its reversed copy when symmetric
+    def chain(n: Int, symmetric: Boolean) = {
+      val one = (0 until n).map(i => (i.toLong, i + 1L))
+      (if (symmetric) one ++ one.map(_.swap) else one).toDF("id", "id2")
+    }
+    def loop(id: Long) = Seq((id, id)).toDF("id", "id2") // its own reverse
+    for (symmetric <- Seq(false, true); maxEdges <- Seq(12L, 13L)) {
+      // the largest list whose effective count (2n, or n symmetric) fits
+      val rows = if (symmetric) maxEdges.toInt else (maxEdges / 2).toInt
+      val (fits, over) =
+        if (!symmetric) (chain(rows, false), chain(rows + 1, false))
+        else {
+          val f = if (rows % 2 == 0) chain(rows / 2, true) else chain(rows / 2, true).union(loop(50L))
+          (f, f.union(loop(100L)))
+        }
+      assert(fits.count() == rows && over.count() == rows + 1)
+      val atGate = graft.ml.Components.minLabel(fits, maxEdges, symmetric)
+      val past = graft.ml.Components.minLabel(over, maxEdges, symmetric)
+      assert(isLocal(atGate), s"symmetric=$symmetric max=$maxEdges: $rows edges left the driver")
+      assert(!isLocal(past), s"symmetric=$symmetric max=$maxEdges: ${rows + 1} edges stayed on the driver")
+      def labels(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toMap
+      assert(labels(atGate) == labels(graft.ml.Components.minLabel(fits, 0L, symmetric)))
+      assert(labels(past) == labels(graft.ml.Components.minLabel(over, 1000L, symmetric)))
+    }
+    // 0 still leaves an empty edge list on the driver
+    assert(isLocal(graft.ml.Components.minLabel(chain(0, false), 0L)))
+  }
+
   test("jaccardPairs df cap prunes candidate generation, not scoring") {
     // default cap: no shingle in the fixture is hot, identical result
     val capped = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3)

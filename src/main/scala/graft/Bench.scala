@@ -1,20 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main. Prints ONE compact JSON line (kept under ~1700 chars so it
   * survives log-tail truncation) and writes the complete per-query detail to
   * BENCH_FULL_local.json in the working directory.
   *
-  * Timing: each query runs twice back-to-back; the per-query number is the
-  * min of the two (steady-state, resistant to ambient-load spikes on a shared
-  * box). Both totals are reported: "value" = sum of per-query mins,
-  * "value_cold" = sum of first-run times (comparable to rounds 1-3, which
-  * timed a single cold run).
+  * One timing rule for every query: it runs twice, back to back, and each
+  * run writes its result to Spark's `noop` sink ([[sink]]), so every row and
+  * every column is computed — unlike `count()`, whose plan Catalyst prunes
+  * to what the count needs. `cold_sec` is the first run (the first request
+  * of an interactive session) and `min_sec` the lower of the two. For a
+  * query whose result is Memo'd, the second run is a re-request served from
+  * the cache, so its `min_sec` is its re-request cost. The first consumer
+  * of a Memo-shared pass pays for that pass in its own `cold_sec`; the
+  * family sums show the pass's total. "value" sums `min_sec` and
+  * "value_cold" sums `cold_sec` over the headline queries.
   *
-  * Queries whose ENTIRE result is Memo-cached (second run = a cache read,
-  * ~0s) are listed in [[fullMemoQueries]] and report their cold time as the
-  * per-query number, so "value" never quotes cache-hit latency as
-  * steady-state cost.
+  * Each run also reads the process CPU clock (`getProcessCpuTime`, all JVM
+  * threads: tasks, JIT, GC). The detail file gives `cpu_cold_sec` (first
+  * run) and `cpu_sec` (second run); the line gives their totals as
+  * "cpu_cold" and "cpu". CPU is less sensitive than wall time to ambient
+  * load on a shared box.
   *
   * The JSON line is printed AFTER spark.stop() with the log level raised to
   * ERROR, so it is the last line of process output — the driver's parser
@@ -22,9 +28,14 @@ import org.apache.spark.sql.SparkSession
   *
   * A query that throws is not timed: it is named in the `failed` list
   * (and its exception on stderr), left out of every total, and the run
-  * exits 1 after the JSON line.
+  * exits 1 after the JSON line. A detail file that cannot be written also
+  * exits 1, with the error on stderr.
   */
 object Bench {
+  /** Materialize every row and column of `df` and discard them. */
+  private[graft] def sink(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -39,12 +50,16 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT/codegen + parquet footer reads, so the first
-    // timed query doesn't absorb session start-up cost
+    // timed query doesn't absorb session start-up cost. A failure is
+    // reported and the suite still runs: a missing table fails its
+    // queries there.
     try {
       spark.range(1000).selectExpr("sum(id)").collect()
       Tables.lineitem(spark, sfDir).limit(1).count()
       Tables.events(spark, sfDir).limit(1).count()
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable => System.err.println(s"[bench] warm-up failed: $e")
+    }
     // GROUND-TRUTH TWINS (VERDICT r10 #6): correctness instruments
     // whose contract REQUIRES the exact |src|·|tgt| pair table — the
     // all-pairs bitext tiers and the agreement gates that grade the
@@ -72,146 +87,46 @@ object Bench {
     }
     // first exception per query (see the object doc)
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def time(name: String): Double = {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    /** One run's (wall, cpu) seconds, or None if it threw. */
+    def run(name: String, query: (SparkSession, String) => DataFrame): Option[(Double, Double)] = {
       val t0 = System.nanoTime()
-      try { selected(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch {
+      val c0 = os.getProcessCpuTime
+      try {
+        sink(query(spark, sfDir))
+        Some(((System.nanoTime() - t0) / 1e9, (os.getProcessCpuTime - c0) / 1e9))
+      } catch {
         case e: Throwable =>
           failed.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
-          Double.NaN
+          None
       }
     }
-    // Shared-pass setup (VERDICT r11 #6): materialize the two heaviest
-    // Memo-shared corpus passes BEFORE the timed suite — whoever ran
-    // first after an eviction was absorbing a 45-70 s ingest-shaped
-    // build into its own "cold" number (text_split_leakage 45 s cold /
-    // 0.2 s steady at r11). Timed and reported in the harness section;
-    // skipped under a BENCH_ONLY filter so local single-query
-    // iteration still measures a genuine cold build when asked.
-    val setupTimes: Seq[(String, Double)] =
-      if (only.isEmpty) graft.queries.ExtQueries.warmSharedPasses(spark, sfDir)
-      else Seq.empty
-    // queries that Memo the whole result: min-of-2 would measure a cache
-    // read, so their reported steady-state number is the cold run.
-    // dedup_span_pairs qualifies since the aggregated span frame became
-    // the Memo'd unit shared with text_trim_spans (which still reports
-    // min-of-2: its surgery joins are real per-run work); likewise
-    // multimodal_audio_energy, whose decode+window frame is the Memo'd
-    // unit shared with the silence-trim intervention.
-    // text_dsir_weights Memos the whole weight frame (the selector
-    // query reuses it), so it too reports its cold run; likewise
-    // text_token_counts (count frame reused by the mixture/yield/pack
-    // family). text_lm_score LEFT this set in round 13 (VERDICT r12
-    // #1a): its score-frame build is now a warmSharedPasses setup
-    // entry (setup_lm_pass, harness section) — the ingest-time cost is
-    // accounted there once, and the query reports the steady serving
-    // cost of the warm frame like every other shared-pass consumer.
-    val fullMemoQueries = Set("ml_dist_path_parity", "dedup_span_pairs",
-      "multimodal_audio_energy", "ml_dbscan_clusters", "multimodal_phash_pairs",
-      "text_corpus_diff", "text_dsir_weights",
-      "text_token_counts")
-    // family leaders whose COLD run materializes a big shared pass
-    // (pipeline_refresh: snapshot diff; sem_dedup_kmeans: canonical
-    // k-means fit).
-    // Their steady number is a real min-of-2, but the 10-15 s cold
-    // reading is a single sample — give it the same decorrelated
-    // second-cold defense as fullMemo queries so one contended hour
-    // can't inflate the official cold record (VERDICT r7 #4b/#8).
-    val coldRetryQueries = Set("pipeline_refresh", "sem_dedup_kmeans",
-      "sim_ivf_pq_topk")
     // test HARNESSES, not operators: ml_dist_path_parity runs five
     // algorithms down BOTH their driver and distributed paths to pin
     // zero mismatches — a deliberate 2× workload. Reported separately
     // ("harness" section) so the headline total measures the operator
     // suite, not the parity rig.
     val harnessQueries = Set("ml_dist_path_parity")
-    // per-fullMemo-query record of the Memo entries its COLD run
-    // materialized, so the end-of-suite retry can release exactly those
-    // and re-run genuinely cold (VERDICT r6 #1)
-    val memoKeys = scala.collection.mutable.Map.empty[String, Set[String]]
-    val results = selected.map { case (name, _) =>
-      val isFullMemo = fullMemoQueries(name)
-      val recordCold = isFullMemo || coldRetryQueries(name)
-      if (recordCold) graft.queries.Memo.startRecording()
-      var t1 = time(name)
-      if (recordCold) {
-        val (misses, hits) = graft.queries.Memo.stopRecordingWithHits()
-        memoKeys(name) = misses
-        // fake-cold guard (ADVICE r8): a fullMemo query whose timed
-        // "cold" run had ZERO misses found its entire result already in
-        // the Memo (an earlier query built it and the stale window
-        // happened not to evict it) — the official cold reading would be
-        // a ~0 s cache hit with no retry recourse, since miss-only
-        // recording recorded nothing. Release the hit entries and
-        // re-time: a genuine build, now recorded as this query's own.
-        if (isFullMemo && misses.isEmpty && hits.nonEmpty) {
-          graft.queries.Memo.release(hits)
-          graft.queries.Memo.startRecording()
-          t1 = time(name)
-          memoKeys(name) = graft.queries.Memo.stopRecording()
-        }
-      }
-      val t2 = if (failed.contains(name)) Double.NaN else time(name)
-      val steady = if (isFullMemo) t1 else math.min(t1, t2)
+    val passed = selected.flatMap { case (name, query) =>
+      val timing = for {
+        (cold, cpuCold) <- run(name, query)
+        (warm, cpu) <- run(name, query)
+      } yield Timing(cold, math.min(cold, warm), cpuCold, cpu)
       // suite clock: entries untouched for a window of queries are dead
       // (Memo families are registry-adjacent) — release them so peak
       // storage tracks the recent families, not the whole 127-query run
       graft.queries.Memo.advance()
       graft.queries.Memo.releaseStale(24)
-      name -> (steady, t1)
+      timing.map(name -> _)
     }
-    // ambient-stall defense: a host-level pause spanning a query's two
-    // ADJACENT runs inflates its min-of-2 (observed: random queries
-    // spiking 0.3 s → 3-8 s, a different one each full run). Re-time
-    // slow-looking queries once more at the END of the suite —
-    // decorrelated in time from the original stall — and keep the min.
-    // Full-Memo queries (whose number IS their cold run, by honest
-    // convention) get the same defense via a decorrelated SECOND COLD
-    // run: release the Memo entries their first run materialized, re-run
-    // (a genuine rebuild), keep the min of the two colds. Without this,
-    // one contended hour turned a 4.76 s dedup_span_pairs into an
-    // official 25.71 s with no recourse (VERDICT r6 #1).
-    val retried = results.map { case (name, (steady, cold)) =>
-      if (failed.contains(name)) name -> (steady, cold)
-      else if (coldRetryQueries(name) && cold > 2 * steady) {
-        // decorrelated second cold: release only the entries THIS
-        // query's cold run materialized (miss-only recording), rebuild
-        graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
-        val t3 = time(name)
-        name -> (math.min(steady, t3), math.min(cold, t3))
-      } else if (steady <= 1.0) name -> (steady, cold)
-      else if (fullMemoQueries(name)) {
-        graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
-        val t3 = time(name)
-        name -> (math.min(steady, t3), math.min(cold, t3))
-      } else {
-        // Steady-regime retry (ADVICE r9 #1 generalized): mid-suite
-        // this query ran with its family's shared Memo passes warm;
-        // ~100 queries later the stale window has released them, so a
-        // direct end-of-suite re-time measures a shared-pass REBUILD,
-        // not the steady regime the min-of-2 convention reports
-        // (observed: text_split_leakage floored at ~1.7 s — the
-        // minhash-pass rebuild — while its steady cost is ~0.3 s; the
-        // family sum then read as grown when nothing regressed). One
-        // untimed warmup rebuilds whatever was released; the timed run
-        // re-measures the same warm regime as the original pair.
-        time(name)
-        name -> (math.min(steady, time(name)), cold)
-      }
-    }
-    val passed = retried -- failed.keys
-    val (harnessRaw, headline) = passed.partition { case (n, _) => harnessQueries(n) }
-    // shared-pass SETUP (VERDICT r11 #6) joins the harness section:
-    // timed before the suite (see below), ingest-time cost, not query
-    // cost — cold totals then grade queries
-    val harness = harnessRaw ++ setupTimes.map { case (n, t) => n -> (t, t) }
+    val (harness, headline) = passed.partition { case (n, _) => harnessQueries(n) }
     // shared-pass FAMILIES (VERDICT r8 #3): consumers of one Memo'd
     // pass. WHO pays the pass's cold build moves between members across
-    // rounds (miss-only recording: whoever runs first after an eviction
-    // pays), so a member-level swing is unarbitrable alone — the family
-    // SUM is the conserved quantity. Reported so "member A 0.9→2.4 s
-    // while member B 5.6→2.0 s" reads as cost MOVED (sum flat/down),
-    // not grew.
+    // rounds (whoever runs first after an eviction pays), so a
+    // member-level swing is unarbitrable alone — the family SUM is the
+    // conserved quantity. Reported so "member A 0.9→2.4 s while member
+    // B 5.6→2.0 s" reads as cost MOVED (sum flat/down), not grew.
     val families = Map(
       "minhash_family" -> Seq("dedup_lsh_recall", "text_dedup_yield",
         "dedup_edit_distance", "text_split_leakage", "dedup_source_matrix",
@@ -257,8 +172,8 @@ object Bench {
       "coslsh_family" -> Seq("dedup_cosine_lsh", "dedup_cosine_groups",
         "sem_dedup"),
       // round 13 (VERDICT r12 #1b): the ts tier shares the Memo'd
-      // events collect pass (CoreQueries.eventSeries, warmed by
-      // setup_series_pass) — all 17 consumers used to rebuild it
+      // events collect pass (CoreQueries.eventSeries) — all 17
+      // consumers used to rebuild it
       // independently, so their solo numbers swung with ambient load
       // and suite order; the family sum is the conserved quantity
       "ts_family" -> Seq("ts_series_arrays", "ts_truncate", "ts_pad",
@@ -276,19 +191,17 @@ object Bench {
       "profile_family" -> Seq("sim_procrustes_align",
         "profile_compaction_execute", "profile_partition_prune"))
     // Mirror the groundTruthTwins guard (ADVICE r11): a renamed member
-    // would otherwise be SILENTLY dropped by members.flatMap(retried
+    // would otherwise be SILENTLY dropped by members.flatMap(passed
     // .get) and the family sum would drift without anyone noticing —
     // the exact failure mode the twins require was added for.
     require(families.values.flatten.toSet.subsetOf(SparkEntry.queries.keySet),
       s"families names unknown queries: " +
         s"${families.values.flatten.toSet -- SparkEntry.queries.keySet}")
     val familySums = families.map { case (fam, members) =>
-      val present = members.flatMap(passed.get)
-      fam -> (present.map(_._1).sum, present.map(_._2).sum)
+      fam -> Timing.sum(members.flatMap(passed.get))
     }
-    val totalMin = headline.values.map(_._1).sum
-    val totalCold = headline.values.map(_._2).sum
-    val harnessSec = harness.values.map(_._1).sum
+    val total = Timing.sum(headline.values)
+    val harnessSec = harness.values.map(_.min).sum
     // canary (VERDICT r5 #1): ANY capacity eviction during a suite run
     // means the derived Memo capacity is undersized again — surface it
     // loudly in the record instead of letting shared passes silently
@@ -299,35 +212,31 @@ object Bench {
         "mid-suite — shared passes recomputed; capacity derivation is broken")
     def f(v: Double): String = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     // full detail to a file (driver tail keeps only the last ~2000 chars)
-    val full = headline.map { case (k, (mn, cold)) =>
-      s"""    "$k": {"min_sec": ${f(mn)}, "cold_sec": ${f(cold)}}"""
-    }.mkString("{\n", ",\n", "\n  }")
-    val harnessFull = harness.map { case (k, (mn, cold)) =>
-      s"""    "$k": {"min_sec": ${f(mn)}, "cold_sec": ${f(cold)}}"""
-    }.mkString("{\n", ",\n", "\n  }")
-    val famFull = familySums.map { case (k, (mn, cold)) =>
-      s"""    "$k": {"min_sec": ${f(mn)}, "cold_sec": ${f(cold)}}"""
+    def detail(m: Iterable[(String, Timing)]): String = m.map { case (k, t) =>
+      s"""    "$k": {"min_sec": ${f(t.min)}, "cold_sec": ${f(t.cold)}, """ +
+        s""""cpu_cold_sec": ${f(t.cpuCold)}, "cpu_sec": ${f(t.cpu)}}"""
     }.mkString("{\n", ",\n", "\n  }")
     val twinsJson = groundTruthTwins.toSeq.sorted
       .map(n => s""""$n"""").mkString("[", ", ", "]")
     val failedJson = failed.keys.map(n => s""""$n"""").mkString("[", ",", "]")
     val fullJson =
-      s"""{\n  "metric": "total", "value": ${f(totalMin)}, "value_cold": ${f(totalCold)},\n  "unit": "sec", "timing": "min_of_2_consecutive_runs", "sf": "$sfDir",\n  "harness_sec": ${f(harnessSec)}, "memo_evictions": $memoEvictions,\n  "failed": $failedJson,\n  "verify_only_ground_truth_twins": $twinsJson,\n  "families": $famFull,\n  "queries": $full,\n  "harness": $harnessFull\n}\n"""
+      s"""{\n  "metric": "total", "value": ${f(total.min)}, "value_cold": ${f(total.cold)},\n  "cpu": ${f(total.cpu)}, "cpu_cold": ${f(total.cpuCold)},\n  "unit": "sec", "timing": "min_of_2_consecutive_runs", "sink": "noop", "sf": "$sfDir",\n  "harness_sec": ${f(harnessSec)}, "memo_evictions": $memoEvictions,\n  "failed": $failedJson,\n  "verify_only_ground_truth_twins": $twinsJson,\n  "families": ${detail(familySums)},\n  "queries": ${detail(headline)},\n  "harness": ${detail(harness)}\n}\n"""
     // only a FULL-suite run overwrites the detail file — a filtered
     // local iteration must not clobber the last complete picture
-    if (only.isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL_local.json"),
-        fullJson.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+    val detailError =
+      if (only.isEmpty) scala.util.Try(java.nio.file.Files.write(
+        java.nio.file.Paths.get("BENCH_FULL_local.json"), fullJson.getBytes("UTF-8"))).failed.toOption
+      else None
     // compact one-liner: largest queries first, aggregate the tail into "rest"
     // so the line stays under ~1700 chars
-    val sorted = headline.toSeq.sortBy { case (_, (mn, _)) => -mn }
-    val harnessStr = harness.map { case (k, (mn, _)) => s""""$k":${f(mn)}""" }
+    val sorted = headline.toSeq.sortBy { case (_, t) => -t.min }
+    val harnessStr = harness.map { case (k, t) => s""""$k":${f(t.min)}""" }
       .mkString("{", ",", "}")
-    val famStr = familySums.map { case (k, (mn, cold)) =>
-      s""""$k":{"min":${f(mn)},"cold":${f(cold)}}""" }.mkString("{", ",", "}")
-    val header = s"""{"metric":"total","value":${f(totalMin)},"value_cold":${f(totalCold)},"unit":"sec","timing":"min_of_2","harness":$harnessStr,"families":$famStr,"memo_evictions":$memoEvictions,"failed":$failedJson,"sf":"${new java.io.File(sfDir).getName}","queries":"""
-    val budget = 1700 - header.length - 60
+    val famStr = familySums.map { case (k, t) =>
+      s""""$k":{"min":${f(t.min)},"cold":${f(t.cold)}}""" }.mkString("{", ",", "}")
+    val header = s"""{"metric":"total","value":${f(total.min)},"value_cold":${f(total.cold)},"cpu":${f(total.cpu)},"cpu_cold":${f(total.cpuCold)},"unit":"sec","timing":"min_of_2","sink":"noop","harness":$harnessStr,"families":$famStr,"memo_evictions":$memoEvictions,"failed":$failedJson,"sf":"${new java.io.File(sfDir).getName}","queries":"""
+    // 70 = the braces, the longest rest_n/rest_sec pair and the detail field
+    val budget = 1700 - header.length - 70
     val sb = new StringBuilder
     var used = 0
     var kept = 0
@@ -335,8 +244,8 @@ object Bench {
     // the tail is then exactly sorted.drop(kept) and the printed parts +
     // rest_sec always sum to "value"
     var fits = true
-    sorted.foreach { case (k, (mn, _)) =>
-      val ent = s""""$k":${f(mn)}"""
+    sorted.foreach { case (k, t) =>
+      val ent = s""""$k":${f(t.min)}"""
       if (fits && used + ent.length + 1 <= budget) {
         if (kept > 0) sb.append(',')
         sb.append(ent); used += ent.length + 1; kept += 1
@@ -345,7 +254,7 @@ object Bench {
     val rest = sorted.drop(kept)
     val restStr =
       if (rest.isEmpty) ""
-      else s""","rest_n":${rest.size},"rest_sec":${f(rest.map(_._2._1).sum)}"""
+      else s""","rest_n":${rest.size},"rest_sec":${f(rest.map(_._2.min).sum)}"""
     val line = header + "{" + sb.toString + "}" + restStr +
       s""","detail":"BENCH_FULL_local.json"}"""
     // nothing may trail the JSON line: silence Spark, stop the session,
@@ -353,9 +262,17 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     failed.foreach { case (n, e) => System.err.println(s"[bench] FAILED $n: $e") }
+    detailError.foreach(e => System.err.println(s"[bench] BENCH_FULL_local.json not written: $e"))
     System.err.flush()
     println(line)
     System.out.flush()
-    if (failed.nonEmpty) sys.exit(1)
+    if (failed.nonEmpty || detailError.nonEmpty) sys.exit(1)
+  }
+
+  /** Wall and process-CPU seconds of two runs: one query's, or summed. */
+  private final case class Timing(cold: Double, min: Double, cpuCold: Double, cpu: Double)
+  private object Timing {
+    def sum(ts: Iterable[Timing]): Timing = Timing(ts.map(_.cold).sum, ts.map(_.min).sum,
+      ts.map(_.cpuCold).sum, ts.map(_.cpu).sum)
   }
 }

@@ -21,7 +21,7 @@ object CoreQueries {
     * corpus now, same shared-pass discipline as the token/minhash
     * tiers; Bench reports the consumers as `ts_family` so whoever
     * pays the build is arbitrable as the family sum. */
-  private[graft] def eventSeries(s: org.apache.spark.sql.SparkSession,
+  private def eventSeries(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Memo.cached(s, "evser", Nil, dir) {
       SeriesOps.collectSeries(Tables.events(s, dir), "user_id", "value", "event_id")

@@ -185,86 +185,6 @@ object ExtQueries {
       Dedup.cosineLshPairs(Tables.embeddings(s, dir), "vec_id", "embedding",
         0.45, nBits = 30, rowsPerBand = 5))
 
-  /** Bench setup hook (VERDICT r11 #6): materialize the two heaviest
-    * Memo-shared corpus passes up front — the MinHash signature +
-    * band-join pass (six dedup/leakage consumers; whoever ran first
-    * was paying its ~45-70 s build inside its own "cold" number) and
-    * the per-doc token-count pass (six mixture/yield/pack consumers).
-    * In a production pipeline these are ingest-time materializations,
-    * not query cost; the bench times each and reports them in the
-    * HARNESS section so cold totals grade queries, not shared ingest.
-    * Returns (pass name, seconds). */
-  def warmSharedPasses(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(body: => Unit): (String, Double) = {
-      // min-of-2 (VERDICT r14 #4): setup passes were single-sample,
-      // so one burst of box contention (the r14 driver record's
-      // setup_token_pass 11 s -> 36 s with unchanged code) landed
-      // unfiltered in the round-over-round comparison. Build twice:
-      // the first build's memo entries (build-MISSES only — hits on
-      // passes built earlier stay untouched) are released so the
-      // second is a genuine rebuild, then the second build's entries
-      // are PROTECTED from staleness release until their first
-      // consumer (round 13, VERDICT r12 #6) and the reported time is
-      // the min of the two samples.
-      Memo.startRecording()
-      val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      val d0 = (System.nanoTime() - t0) / 1e9
-      Memo.release(Memo.stopRecording())
-      Memo.startRecording()
-      val t1 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      val d1 = (System.nanoTime() - t1) / 1e9
-      Memo.protect(Memo.stopRecording())
-      (name, math.min(d0, d1))
-    }
-    Seq(
-      timed("setup_minhash_pass") { minhashPairs(s, dir).count(); () },
-      timed("setup_token_pass") {
-        graft.ext.TextOps.tokenCounts(
-          Tables.documents(s, dir), "doc_id", "text").count()
-        ()
-      },
-      // VERDICT r12 #1a: the bigram-LM score frame is the third
-      // ingest-shaped shared build (7.5 s at sf0.1); before this it
-      // landed on text_lm_score's "cold" number and dominated
-      // round-over-round comparison noise
-      timed("setup_lm_pass") {
-        graft.ext.TextOps.lmScore(
-          Tables.documents(s, dir), "doc_id", "text").count()
-        ()
-      },
-      // VERDICT r12 #1b: the ts tier's shared collect pass (round 13,
-      // CoreQueries.eventSeries) — warmed here so the first ts_*
-      // query doesn't absorb the whole-events group-collect
-      timed("setup_series_pass") {
-        graft.queries.CoreQueries.eventSeries(s, dir).count()
-        ()
-      },
-      // r17: the quality frame (stopword fold over every doc) and the
-      // NB classifier train+score frame are now Memo'd shared passes —
-      // five and two registry consumers respectively; built here so
-      // their consumers report the steady serving cost and the
-      // ingest-shaped builds are harness-accounted (the lm-pass rule,
-      // VERDICT r12 #1a). The NB build consumes the quality frame (its
-      // weak label) and the Memo'd tf pass, so the order matters.
-      timed("setup_quality_pass") {
-        graft.ext.TextOps.quality(
-          Tables.documents(s, dir), "doc_id", "text").count()
-        ()
-      },
-      // the (id, w, tf) pass is the lexical tier's ingest artifact
-      // (termFrequencies Memo) — warmed in its OWN entry so the NB
-      // setup below (and the first bm25-family query) measures its
-      // own build, not the tf build it rides on
-      timed("setup_tf_pass") {
-        graft.ext.TextOps.termFrequencies(
-          Tables.documents(s, dir), "doc_id", "text").count()
-        ()
-      },
-      timed("setup_nb_pass") { nbScored(s, dir).count(); () })
-  }
-
   /** The NB classifier score frame both classifier queries consume —
     * ONE definition so their Memo keys coincide by construction. */
   private def nbScored(s: SparkSession, dir: String): DataFrame = {
@@ -4292,8 +4212,8 @@ object ExtQueries {
     // +1000000 docs. Per-id added/removed/changed/unchanged status
     // from canonical fingerprints; tells an incremental pipeline what
     // to re-embed/re-dedup instead of rebuilding. Registered BEFORE
-    // pipeline_refresh: the fullMemo builder must run first so its
-    // reported cold time is the real snapshot-diff cost.
+    // pipeline_refresh: this Memo'd builder runs first, so its cold
+    // time is the real snapshot-diff cost.
     // Per-source stats drift between snapshots (the text twin of
     // sim_dim_drift): snapshot B deterministically perturbs the
     // corpus — %13 ids dropped, %17 texts doubled (length shift),

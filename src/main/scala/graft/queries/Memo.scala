@@ -51,21 +51,15 @@ private[graft] object Memo {
   private val memo = new java.util.LinkedHashMap[String, Entry](32, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
       if (size() > MaxEntries) {
-        e.getValue.df.unpersist(); lastTouch.remove(e.getKey); evictionCount += 1
-        protectedKeys.remove(e.getKey); true
+        e.getValue.df.unpersist(); lastTouch.remove(e.getKey); evictionCount += 1; true
       } else false
   }
 
-  /** Bench-retry support: while recording, every internal key whose
-    * entry [[cached]] MATERIALIZED (build-misses only — hits on
-    * pre-existing entries are NOT recorded) is collected, so the bench
-    * can later [[release]] exactly the entries a full-Memo query's cold
-    * run built and re-run it genuinely cold without evicting passes
-    * shared with other queries. (Recording hits too was VERDICT r7 #1:
-    * the fullMemo retry released shared passes, sabotaging the
-    * decorrelated-retry defense for every later sharing query.) Bench
-    * runs queries sequentially; this is not meant for concurrent
-    * recorders. */
+  /** Per-operation hit/miss recording, for `perfbench --trace` and
+    * MemoSpec: while recording, every internal key whose entry
+    * [[cached]] MATERIALIZED (a build-miss) is collected, and so is
+    * every key that HIT. [[release]] drops recorded entries. Not meant
+    * for concurrent recorders. */
   private val recording = new java.util.HashSet[String]
   private val recordingHits = new java.util.HashSet[String]
   private var recordOn = false
@@ -75,10 +69,7 @@ private[graft] object Memo {
   def stopRecording(): Set[String] = stopRecordingWithHits()._1
 
   /** Like [[stopRecording]] but also returns the keys that HIT during
-    * the window — the bench's fake-cold guard: a fullMemo query whose
-    * timed "cold" run had zero misses found its whole result
-    * pre-existing in the Memo, and the hit set names exactly the
-    * entries to release for a genuine rebuild (ADVICE r8 #1). */
+    * the window. */
   def stopRecordingWithHits(): (Set[String], Set[String]) = memo.synchronized {
     recordOn = false
     val miss = Set.newBuilder[String]
@@ -95,7 +86,6 @@ private[graft] object Memo {
     var n = 0
     keys.foreach { k =>
       val e = memo.remove(k)
-      protectedKeys.remove(k)
       if (e != null) { e.df.unpersist(); lastTouch.remove(k); n += 1 }
     }
     n
@@ -125,7 +115,6 @@ private[graft] object Memo {
       val hit = memo.get(k)
       if (hit != null) {
         if (recordOn) recordingHits.add(k)
-        protectedKeys.remove(k) // first consumer arrived: normal windowing
         lastTouch.put(k, tick)
         return (hit.df, hit.paired.asInstanceOf[V])
       }
@@ -146,12 +135,9 @@ private[graft] object Memo {
       val winner = memo.get(k)
       if (winner != null) {
         if (recordOn) recordingHits.add(k)
-        protectedKeys.remove(k) // a consumer arrived via the race too
         lastTouch.put(k, tick)
         (winner.df, winner.paired.asInstanceOf[V])
       } else {
-        // misses only: a hit means some earlier query owns this entry;
-        // recording it would let the bench retry release a shared pass
         if (recordOn) recording.add(k)
         memo.put(k, new Entry(df, value)); lastTouch.put(k, tick); (df, value)
       }
@@ -184,31 +170,13 @@ private[graft] object Memo {
     while (it.hasNext) {
       val e = it.next()
       // getOrDefault: an entry the touch map somehow lost is treated as
-      // maximally stale (released), never an NPE mid-suite.
-      // Protected entries (setup-warmed shared passes awaiting their
-      // first consumer, round 13) are exempt until touched.
-      if (!protectedKeys.contains(e.getKey) &&
-          lastTouch.getOrDefault(e.getKey, Long.MinValue) < cutoff) {
+      // maximally stale (released), never an NPE mid-suite
+      if (lastTouch.getOrDefault(e.getKey, Long.MinValue) < cutoff) {
         e.getValue.df.unpersist(); lastTouch.remove(e.getKey); it.remove()
         n += 1
       }
     }
     n
-  }
-
-  /** Round 13 (VERDICT r12 #6): warmSharedPasses builds the heavy
-    * shared passes BEFORE the suite, but their first consumers run
-    * 100+ queries later — far outside [[releaseStale]]'s window — so
-    * the setup-built entries were released as stale and the consumers
-    * paid full cold rebuilds anyway (minhash_family 12.2 s cold at
-    * r12). A protected key is exempt from staleness release until its
-    * FIRST HIT (the consumer has arrived; normal windowing resumes).
-    * Explicit [[release]] and capacity eviction still apply — this is
-    * a staleness exemption, not a leak: the protected set is bounded
-    * by warmSharedPasses' entry count (~4 passes). */
-  private val protectedKeys = new java.util.HashSet[String]
-  def protect(keys: Set[String]): Unit = memo.synchronized {
-    keys.foreach(protectedKeys.add)
   }
 
   /** Current entry count (bench reporting). */

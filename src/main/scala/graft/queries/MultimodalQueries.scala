@@ -34,8 +34,8 @@ object MultimodalQueries {
 
   /** Banded Hamming pairs over the Memo'd hashes — itself Memo'd (the
     * pair frame is dup-sized) so the pair query and the group closure
-    * pay for the banded join once; the pair query reports cold
-    * (fullMemoQueries). */
+    * pay for the banded join once; the pair query's bench `min_sec` is
+    * therefore its re-request. */
   private def phashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Memo.cached(s, "phashp", Nil, dir)(
@@ -62,8 +62,7 @@ object MultimodalQueries {
   /** One synth+decode+window pass per (session, dir) — Memo-shared by
     * the energy diagnosis and the silence-trim intervention (the ~5k
     * WAV decodes dominate both at sf0.1). The energy query itself is
-    * therefore fully Memo'd and reports cold in the bench
-    * (fullMemoQueries). */
+    * therefore fully Memo'd: its bench `min_sec` is its re-request. */
   private def audioEnergy(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Memo.cached(s, "aen", Nil, dir) {

@@ -27,7 +27,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * keys on that.
   *
   * A query that throws is not timed: it is named in the `failed` list
-  * (and its exception on stderr), left out of every total, and the run
+  * (and its exception on stderr; the line keeps as many names as fit and
+  * counts all of them in `failed_n`), left out of every total, and the run
   * exits 1 after the JSON line. A detail file that cannot be written also
   * exits 1, with the error on stderr.
   */
@@ -35,6 +36,76 @@ object Bench {
   /** Materialize every row and column of `df` and discard them. */
   private[graft] def sink(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  // shared-pass FAMILIES (VERDICT r8 #3): consumers of one Memo'd
+  // pass. WHO pays the pass's cold build moves between members across
+  // rounds (whoever runs first after an eviction pays), so a
+  // member-level swing is unarbitrable alone — the family SUM is the
+  // conserved quantity. Reported so "member A 0.9→2.4 s while member
+  // B 5.6→2.0 s" reads as cost MOVED (sum flat/down), not grew.
+  private[graft] val families = Map(
+    "minhash_family" -> Seq("dedup_lsh_recall", "text_dedup_yield",
+      "dedup_edit_distance", "text_split_leakage", "dedup_source_matrix",
+      "dedup_chain_audit"),
+    // the lexical-retrieval tier shares the Memo'd tf/df/doc-length
+    // passes. All SIX members (the NB classifier pair + tfidf + the
+    // bm25 trio) run adjacently in the registry so the 24-query
+    // stale window can't release the pass between them — the suite
+    // pays ONE token pass for the tier (VERDICT r10 #8; it used to
+    // build twice, then three times as the classifier pair drifted)
+    "bm25_family" -> Seq("text_quality_classifier", "text_classifier_lift",
+      "text_tfidf", "text_bm25_topk", "sim_hybrid_rrf",
+      "text_rank_metrics"),
+    "dsir_family" -> Seq("text_dsir_weights", "text_dsir_select"),
+    // VERDICT r9 #2: the audio queries share the Memo'd decode+window
+    // pass (whoever runs first after an eviction pays its build), and
+    // the spans tier shares the winnowed-minhash pair pass — member
+    // swings in either are only arbitrable as the family sum
+    "audio_family" -> Seq("multimodal_audio_decode", "multimodal_audio_energy",
+      "multimodal_audio_trim", "multimodal_audio_fingerprint"),
+    "spans_family" -> Seq("text_trim_spans", "dedup_span_pairs",
+      "dedup_containment_pairs", "dedup_cosine_lsh_prod"),
+    // VERDICT r10 #3: the DBSCAN tier shares the Memo'd feature
+    // embedding (fe|dir) and label (dbs|dir) passes — whoever runs
+    // first after an eviction pays the iterative grid-join + CC
+    // build, so ml_dbscan_clusters' solo warm number swings with
+    // suite order; the family sum is the conserved quantity
+    "dbscan_family" -> Seq("ml_dbscan_clusters", "ml_dbscan_outliers",
+      "ml_cluster_agreement", "ml_centroid_representatives",
+      "ml_silhouette_samples"),
+    // the CCNet-style LM tier shares the Memo'd per-doc score frame
+    // (text_lm_score builds it cold; the tercile bucketer reads it)
+    "lm_family" -> Seq("text_lm_score", "text_ppl_buckets"),
+    // the IVF bitext headliners share the Memo'd probe pool
+    // (bitextScoredIvf) — whoever runs first after an eviction pays
+    // the IVF fit + probe
+    "bitext_ivf_family" -> Seq("sim_bitext_mine_ivf",
+      "sim_bitext_mutual_ivf"),
+    // round 12: the conv-AE pair shares one seeded fit (a Memo value
+    // in Embedding); the cosine-LSH tier shares the Memo'd
+    // coslshp pair pass, which sem_dedup now also consumes
+    "ae_family" -> Seq("ml_ae_embedding", "ml_ae_history"),
+    "coslsh_family" -> Seq("dedup_cosine_lsh", "dedup_cosine_groups",
+      "sem_dedup"),
+    // round 13 (VERDICT r12 #1b): the ts tier shares the Memo'd
+    // events collect pass (CoreQueries.eventSeries) — all 17
+    // consumers used to rebuild it
+    // independently, so their solo numbers swung with ambient load
+    // and suite order; the family sum is the conserved quantity
+    "ts_family" -> Seq("ts_series_arrays", "ts_truncate", "ts_pad",
+      "ts_sliding_window", "ts_ewma", "ts_holt", "ts_periodogram",
+      "ts_acf", "ts_anomaly", "ts_crosscorr", "ts_cusum",
+      "ts_decompose", "ts_matrix_profile", "ts_paa", "ts_sax",
+      "ts_sax_motifs", "ts_stl_strength"),
+    // round 14 (VERDICT r13 #4): the artifact tier — each member
+    // WRITES a scratch parquet fixture (compaction rewrite,
+    // month-partitioned prune artifact) or runs two full joins over
+    // the embeddings (Procrustes fit + audit); per-query numbers
+    // ride local-disk and page-cache state, which ambient suite
+    // order shifts by ±0.3-0.5 s on unchanged code (the r13
+    // profile-tier drift). The family sum is the conserved quantity.
+    "profile_family" -> Seq("sim_procrustes_align",
+      "profile_compaction_execute", "profile_partition_prune"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -121,75 +192,6 @@ object Bench {
       timing.map(name -> _)
     }
     val (harness, headline) = passed.partition { case (n, _) => harnessQueries(n) }
-    // shared-pass FAMILIES (VERDICT r8 #3): consumers of one Memo'd
-    // pass. WHO pays the pass's cold build moves between members across
-    // rounds (whoever runs first after an eviction pays), so a
-    // member-level swing is unarbitrable alone — the family SUM is the
-    // conserved quantity. Reported so "member A 0.9→2.4 s while member
-    // B 5.6→2.0 s" reads as cost MOVED (sum flat/down), not grew.
-    val families = Map(
-      "minhash_family" -> Seq("dedup_lsh_recall", "text_dedup_yield",
-        "dedup_edit_distance", "text_split_leakage", "dedup_source_matrix",
-        "dedup_chain_audit"),
-      // the lexical-retrieval tier shares the Memo'd tf/df/doc-length
-      // passes. All SIX members (the NB classifier pair + tfidf + the
-      // bm25 trio) run adjacently in the registry so the 24-query
-      // stale window can't release the pass between them — the suite
-      // pays ONE token pass for the tier (VERDICT r10 #8; it used to
-      // build twice, then three times as the classifier pair drifted)
-      "bm25_family" -> Seq("text_quality_classifier", "text_classifier_lift",
-        "text_tfidf", "text_bm25_topk", "sim_hybrid_rrf",
-        "text_rank_metrics"),
-      "dsir_family" -> Seq("text_dsir_weights", "text_dsir_select"),
-      // VERDICT r9 #2: the audio queries share the Memo'd decode+window
-      // pass (whoever runs first after an eviction pays its build), and
-      // the spans tier shares the winnowed-minhash pair pass — member
-      // swings in either are only arbitrable as the family sum
-      "audio_family" -> Seq("multimodal_audio_decode", "multimodal_audio_energy",
-        "multimodal_audio_trim", "multimodal_audio_fingerprint"),
-      "spans_family" -> Seq("text_trim_spans", "dedup_span_pairs",
-        "dedup_containment_pairs", "dedup_cosine_lsh_prod"),
-      // VERDICT r10 #3: the DBSCAN tier shares the Memo'd feature
-      // embedding (fe|dir) and label (dbs|dir) passes — whoever runs
-      // first after an eviction pays the iterative grid-join + CC
-      // build, so ml_dbscan_clusters' solo warm number swings with
-      // suite order; the family sum is the conserved quantity
-      "dbscan_family" -> Seq("ml_dbscan_clusters", "ml_dbscan_outliers",
-        "ml_cluster_agreement", "ml_centroid_representatives",
-        "ml_silhouette_samples"),
-      // the CCNet-style LM tier shares the Memo'd per-doc score frame
-      // (text_lm_score builds it cold; the tercile bucketer reads it)
-      "lm_family" -> Seq("text_lm_score", "text_ppl_buckets"),
-      // the IVF bitext headliners share the Memo'd probe pool
-      // (bitextScoredIvf) — whoever runs first after an eviction pays
-      // the IVF fit + probe
-      "bitext_ivf_family" -> Seq("sim_bitext_mine_ivf",
-        "sim_bitext_mutual_ivf"),
-      // round 12: the conv-AE pair shares one driver-side seeded fit
-      // (Embedding.aeFitCache); the cosine-LSH tier shares the Memo'd
-      // coslshp pair pass, which sem_dedup now also consumes
-      "ae_family" -> Seq("ml_ae_embedding", "ml_ae_history"),
-      "coslsh_family" -> Seq("dedup_cosine_lsh", "dedup_cosine_groups",
-        "sem_dedup"),
-      // round 13 (VERDICT r12 #1b): the ts tier shares the Memo'd
-      // events collect pass (CoreQueries.eventSeries) — all 17
-      // consumers used to rebuild it
-      // independently, so their solo numbers swung with ambient load
-      // and suite order; the family sum is the conserved quantity
-      "ts_family" -> Seq("ts_series_arrays", "ts_truncate", "ts_pad",
-        "ts_sliding_window", "ts_ewma", "ts_holt", "ts_periodogram",
-        "ts_acf", "ts_anomaly", "ts_crosscorr", "ts_cusum",
-        "ts_decompose", "ts_matrix_profile", "ts_paa", "ts_sax",
-        "ts_sax_motifs", "ts_stl_strength"),
-      // round 14 (VERDICT r13 #4): the artifact tier — each member
-      // WRITES a scratch parquet fixture (compaction rewrite,
-      // month-partitioned prune artifact) or runs two full joins over
-      // the embeddings (Procrustes fit + audit); per-query numbers
-      // ride local-disk and page-cache state, which ambient suite
-      // order shifts by ±0.3-0.5 s on unchanged code (the r13
-      // profile-tier drift). The family sum is the conserved quantity.
-      "profile_family" -> Seq("sim_procrustes_align",
-        "profile_compaction_execute", "profile_partition_prune"))
     // Mirror the groundTruthTwins guard (ADVICE r11): a renamed member
     // would otherwise be SILENTLY dropped by members.flatMap(passed
     // .get) and the family sum would drift without anyone noticing —
@@ -210,7 +212,6 @@ object Bench {
     if (memoEvictions > 0)
       System.err.println(s"[bench] CANARY: $memoEvictions Memo capacity evictions " +
         "mid-suite — shared passes recomputed; capacity derivation is broken")
-    def f(v: Double): String = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     // full detail to a file (driver tail keeps only the last ~2000 chars)
     def detail(m: Iterable[(String, Timing)]): String = m.map { case (k, t) =>
       s"""    "$k": {"min_sec": ${f(t.min)}, "cold_sec": ${f(t.cold)}, """ +
@@ -227,36 +228,8 @@ object Bench {
       if (only.isEmpty) scala.util.Try(java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_FULL_local.json"), fullJson.getBytes("UTF-8"))).failed.toOption
       else None
-    // compact one-liner: largest queries first, aggregate the tail into "rest"
-    // so the line stays under ~1700 chars
-    val sorted = headline.toSeq.sortBy { case (_, t) => -t.min }
-    val harnessStr = harness.map { case (k, t) => s""""$k":${f(t.min)}""" }
-      .mkString("{", ",", "}")
-    val famStr = familySums.map { case (k, t) =>
-      s""""$k":{"min":${f(t.min)},"cold":${f(t.cold)}}""" }.mkString("{", ",", "}")
-    val header = s"""{"metric":"total","value":${f(total.min)},"value_cold":${f(total.cold)},"cpu":${f(total.cpu)},"cpu_cold":${f(total.cpuCold)},"unit":"sec","timing":"min_of_2","sink":"noop","harness":$harnessStr,"families":$famStr,"memo_evictions":$memoEvictions,"failed":$failedJson,"sf":"${new java.io.File(sfDir).getName}","queries":"""
-    // 70 = the braces, the longest rest_n/rest_sec pair and the detail field
-    val budget = 1700 - header.length - 70
-    val sb = new StringBuilder
-    var used = 0
-    var kept = 0
-    // stop at the FIRST entry that doesn't fit: entries are sorted desc, so
-    // the tail is then exactly sorted.drop(kept) and the printed parts +
-    // rest_sec always sum to "value"
-    var fits = true
-    sorted.foreach { case (k, t) =>
-      val ent = s""""$k":${f(t.min)}"""
-      if (fits && used + ent.length + 1 <= budget) {
-        if (kept > 0) sb.append(',')
-        sb.append(ent); used += ent.length + 1; kept += 1
-      } else fits = false
-    }
-    val rest = sorted.drop(kept)
-    val restStr =
-      if (rest.isEmpty) ""
-      else s""","rest_n":${rest.size},"rest_sec":${f(rest.map(_._2.min).sum)}"""
-    val line = header + "{" + sb.toString + "}" + restStr +
-      s""","detail":"BENCH_FULL_local.json"}"""
+    val line = jsonLine(total, harness, familySums, memoEvictions, failed.keys.toSeq,
+      new java.io.File(sfDir).getName, headline)
     // nothing may trail the JSON line: silence Spark, stop the session,
     // flush stderr, THEN print
     spark.sparkContext.setLogLevel("ERROR")
@@ -269,9 +242,42 @@ object Bench {
     if (failed.nonEmpty || detailError.nonEmpty) sys.exit(1)
   }
 
+  /** The JSON line, at most 1,700 chars so it survives log-tail
+    * truncation. Failed names come first, as many as fit in 600 chars
+    * ("failed_n" counts all of them; stderr and the detail file list
+    * every one). Then the largest queries that fit; the tail is summed
+    * into "rest_n"/"rest_sec", so the printed parts always sum to
+    * "value". */
+  private[graft] def jsonLine(total: Timing, harness: Iterable[(String, Timing)],
+      familySums: Iterable[(String, Timing)], memoEvictions: Long, failed: Seq[String],
+      sf: String, headline: Iterable[(String, Timing)]): String = {
+    val harnessStr = harness.map { case (k, t) => s""""$k":${f(t.min)}""" }
+      .mkString("{", ",", "}")
+    val famStr = familySums.map { case (k, t) =>
+      s""""$k":{"min":${f(t.min)},"cold":${f(t.cold)}}""" }.mkString("{", ",", "}")
+    val failedStr = within(failed.map(n => s""""$n""""), 600).mkString("[", ",", "]")
+    val header = s"""{"metric":"total","value":${f(total.min)},"value_cold":${f(total.cold)},"cpu":${f(total.cpu)},"cpu_cold":${f(total.cpuCold)},"unit":"sec","timing":"min_of_2","sink":"noop","harness":$harnessStr,"families":$famStr,"memo_evictions":$memoEvictions,"failed":$failedStr,"failed_n":${failed.size},"sf":"$sf","queries":"""
+    val sorted = headline.toSeq.sortBy { case (_, t) => -t.min }
+    // 70 = the braces, the longest rest_n/rest_sec pair and the detail field
+    val kept = within(sorted.map { case (k, t) => s""""$k":${f(t.min)}""" },
+      1700 - header.length - 70)
+    val rest = sorted.drop(kept.size)
+    val restStr =
+      if (rest.isEmpty) ""
+      else s""","rest_n":${rest.size},"rest_sec":${f(rest.map(_._2.min).sum)}"""
+    header + kept.mkString("{", ",", "}") + restStr + s""","detail":"BENCH_FULL_local.json"}"""
+  }
+
+  /** The longest prefix of `entries` whose comma-joined length is
+    * within `budget`. */
+  private def within(entries: Seq[String], budget: Int): Seq[String] =
+    entries.zip(entries.scanLeft(0)(_ + _.length + 1).tail).takeWhile(_._2 <= budget).map(_._1)
+
+  private def f(v: Double): String = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
+
   /** Wall and process-CPU seconds of two runs: one query's, or summed. */
-  private final case class Timing(cold: Double, min: Double, cpuCold: Double, cpu: Double)
-  private object Timing {
+  private[graft] final case class Timing(cold: Double, min: Double, cpuCold: Double, cpu: Double)
+  private[graft] object Timing {
     def sum(ts: Iterable[Timing]): Timing = Timing(ts.map(_.cold).sum, ts.map(_.min).sum,
       ts.map(_.cpuCold).sum, ts.map(_.cpu).sum)
   }

@@ -17,23 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Per-(session, eval-plan) cache of the eval-side size estimate for
-    * [[evalContamination]]'s broadcast gate — values are single Longs.
-    * DOCUMENTED STALENESS (accepted, ADVICE r8): the key is the eval
-    * plan's semantic hash, so an eval set REWRITTEN at the same path
-    * (same logical plan, new files) keeps the old estimate for the
-    * session. The consequence is bounded — the estimate only routes
-    * between two spec-equal plans, so a stale reading can at worst
-    * pick the broadcast path for an eval set that outgrew the gate
-    * (mitigation for long-lived sessions: [[clearEvalSizeCache]]);
-    * correctness is never affected. */
-  private val evalSizeCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** Drop all cached eval-size estimates (long-lived session hygiene
-    * after rewriting an eval set in place). */
-  def clearEvalSizeCache(): Unit = evalSizeCache.clear()
-
   /** Normalize to (id, v: array<double>, nrm) using the native
     * codegen'd dot-product expression. */
   private[graft] def prep(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
@@ -697,7 +680,11 @@ object Similarity {
     * all B buckets — so a large eval set degrades to a shuffle
     * instead of driving itself through the driver. Both paths feed
     * the identical scoring/argmax tail (spec-equal by construction +
-    * SimilaritySpec pins it). */
+    * SimilaritySpec pins it). The estimate is a Memo value keyed by
+    * the eval plan, so a second call against the same eval frame runs
+    * no probe job. The key is the plan, not the files: an eval set
+    * rewritten in place keeps its old estimate until the entry leaves
+    * Memo, which can only pick the other, equal-result path. */
   def evalContamination(train: DataFrame, evalSet: DataFrame, idCol: String,
       vecCol: String, tau: Double,
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
@@ -706,17 +693,15 @@ object Similarity {
       .select(col(idCol).as("__eid"), col("v").as("__ev"),
         col("nrm").as("__en"))
     // ~8 bytes per vector element + id/norm/struct overhead per row.
-    // The measurement is cached per (session, eval plan): a streaming
-    // sink scoring epochs against a FROZEN eval set pays the probe
-    // once, not one extra Spark job per micro-batch. (Cache values are
-    // single Longs; growth is bounded by distinct eval plans per JVM.)
-    val estKey = s"${System.identityHashCode(evalSet.sparkSession)}|$idCol|$vecCol|" +
-      s"${evalSet.queryExecution.logical.semanticHash()}"
-    val estBytes = evalSizeCache.getOrElseUpdate(estKey, {
+    // A Memo value per (eval plan, columns): a streaming sink scoring
+    // epochs against a FROZEN eval set pays the probe once, not one
+    // extra Spark job per micro-batch
+    val estBytes = graft.queries.Memo.value(evalSet.sparkSession, "evalsize",
+        Seq(evalSet), idCol, vecCol) {
       val est = ev.agg(coalesce(sum(size(col("__ev"))), lit(0L)).as("e"),
         count(lit(1)).as("n")).head()
       8L * est.getLong(0) + 32L * est.getLong(1)
-    })
+    }
     val paired =
       if (estBytes <= maxBroadcastBytes) t.crossJoin(broadcast(ev))
       else {

@@ -78,9 +78,9 @@ private[graft] object Components {
           if (alreadySymmetric) dir
           else dir.union(dir.select(col("id2").as("id"), col("id").as("id2")))
         // Small edge lists compact to one partition before iterating —
-        // per-round task-scheduling overhead otherwise dominates (the
-        // Clustering.compactIfSmall pattern). Big graphs stay
-        // distributed; the propagation logic is identical either way.
+        // per-round task-scheduling overhead otherwise dominates. Big
+        // graphs stay distributed; the propagation logic is identical
+        // either way.
         val small = nEdges < 50000
         val work = if (small) edges.coalesce(1).cache() else edges.cache()
         // under the small gate the label table is tiny too: broadcast

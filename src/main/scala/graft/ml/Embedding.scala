@@ -82,10 +82,10 @@ object Embedding {
       val (ids, scores, _) = pcaLocal(local.get, k)
       return ids.zip(scores).toSeq.toDF("series_id", "emb")
     }
-    // the distributed path's cache (input reused by the mean pass, the
-    // fit, and the transform) goes through the bounded Memo LRU so
-    // repeated large-input calls can't accumulate executor storage
-    val cached = graft.queries.Memo.cached(spark, "pcaembed", Seq(series))(series)
+    // the distributed path reads its input three times (the mean
+    // pass, the fit, the transform): hold it in memory through Memo,
+    // which leaves a caller's own cache alone
+    val cached = graft.queries.Memo.input(spark, "pcaembed", series)
     val c = centered(cached).withColumn("__fv", array_to_vector(col("values")))
     try {
       val model = new PCA().setK(k).setInputCol("__fv").setOutputCol("__pca").fit(c)
@@ -315,7 +315,9 @@ object Embedding {
     * Deterministic at any parallelism: below the gate images are
     * collected in id order and every training step is sequential
     * driver code; above it the per-row encode is a pure function of
-    * the broadcast weights. */
+    * the broadcast weights. The fit on either side of the gate is a
+    * Memo value keyed by the input plan and every parameter, which
+    * [[aeHistory]] over the same input reuses. */
   def aeEmbed(series: DataFrame, imaging: String, imgSize: Int,
       gate: Long = 20000L, cfg: ConvAE.Config = ConvAE.Config()): DataFrame = {
     val spark = series.sparkSession
@@ -366,54 +368,40 @@ object Embedding {
     * alone and only its ≤`fitSample` rows are imaged, so the sample
     * pass is O(fitSample) imaging work, not a third full scan
     * (review r12: the old shape imaged the corpus three times).
-    * Driver-cached like [[aeFit]] so the embedding and history
+    * A Memo value like [[aeFit]], so the embedding and history
     * queries above the gate share ONE training run — the reported
     * curve is the curve of the weights the projection actually
     * broadcast. */
-  private val aeDistFitCache =
-    new java.util.LinkedHashMap[String, (Array[Array[Double]], Double, Array[Double])](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Array[Array[Double]], Double, Array[Double])]): Boolean =
-        size() > 4
-    }
-
   private def aeDistFit(series: DataFrame, imaging: String, imgSize: Int,
       c: ConvAE.Config): (Array[Array[Double]], Double, Array[Double]) = {
     val spark = series.sparkSession
     import spark.implicits._
-    val key = s"${System.identityHashCode(spark)}|$imaging|$imgSize|$c|" +
-      s"${series.queryExecution.logical.semanticHash()}"
-    aeDistFitCache.synchronized {
-      val hit = aeDistFitCache.get(key)
-      if (hit != null) return hit
+    graft.queries.Memo.value(spark, "aedistfit", Seq(series), imaging, imgSize, c) {
+      // sample FIRST, on ids only (partition k-heaps via TakeOrdered —
+      // no imaging, no global sort), then image just the sampled rows.
+      // Same keys (xxhash64 of the cast id, then id) as the old
+      // image-everything selection, so the selected set is unchanged
+      // (ConvAESpec landmark==exact pin).
+      val keyed = series.select(col("series_id").cast("long").as("series_id"),
+        col("values"))
+      val fitRows = keyed
+        .withColumn("__h", xxhash64(col("series_id"), lit(c.seed)))
+        .orderBy(col("__h"), col("series_id"))
+        .limit(c.fitSample)
+        .select(col("series_id"),
+          graft.ops.Imaging.fusedImageUdf(imaging, imgSize)(col("values")).as("img"))
+        .as[(Long, Array[Double])].collect()
+        .sortBy(_._1)
+      require(fitRows.nonEmpty, "aeEmbed: empty input")
+      // global-max normalization (app.py:531-533): max is order-free, so
+      // the distributed agg is bitwise the driver regime's value
+      val mxRow = keyed.agg(max(array_max(
+        graft.ops.Imaging.fusedImageUdf(imaging, imgSize)(col("values"))))).head()
+      val mx = if (mxRow.isNullAt(0)) 0.0 else mxRow.getDouble(0)
+      val fitSet = fitRows.map(r => if (mx > 0) r._2.map(_ / mx) else r._2)
+      val (weights, hist) = ConvAE.fitWeightsWithHistory(fitSet, c)
+      (weights, mx, hist)
     }
-    // sample FIRST, on ids only (partition k-heaps via TakeOrdered —
-    // no imaging, no global sort), then image just the sampled rows.
-    // Same keys (xxhash64 of the cast id, then id) as the old
-    // image-everything selection, so the selected set is unchanged
-    // (ConvAESpec landmark==exact pin).
-    val keyed = series.select(col("series_id").cast("long").as("series_id"),
-      col("values"))
-    val fitRows = keyed
-      .withColumn("__h", xxhash64(col("series_id"), lit(c.seed)))
-      .orderBy(col("__h"), col("series_id"))
-      .limit(c.fitSample)
-      .select(col("series_id"),
-        graft.ops.Imaging.fusedImageUdf(imaging, imgSize)(col("values")).as("img"))
-      .as[(Long, Array[Double])].collect()
-      .sortBy(_._1)
-    require(fitRows.nonEmpty, "aeEmbed: empty input")
-    // global-max normalization (app.py:531-533): max is order-free, so
-    // the distributed agg is bitwise the driver regime's value
-    val mxRow = keyed.agg(max(array_max(
-      graft.ops.Imaging.fusedImageUdf(imaging, imgSize)(col("values"))))).head()
-    val mx = if (mxRow.isNullAt(0)) 0.0 else mxRow.getDouble(0)
-    val fitSet = fitRows.map(r => if (mx > 0) r._2.map(_ / mx) else r._2)
-    val (weights, hist) = ConvAE.fitWeightsWithHistory(fitSet, c)
-    val out = (weights, mx, hist)
-    aeDistFitCache.synchronized { aeDistFitCache.put(key, out) }
-    out
   }
 
   /** The conv-AE training-progress surface (reference:
@@ -425,7 +413,9 @@ object Embedding {
     * DIFFERENT training run than the one the embedding used): below
     * `gate` the history comes from the shared driver fit, above it
     * from the shared bounded distributed fit — either way the curve
-    * describes the weights `aeEmbed` actually projects with. */
+    * describes the weights `aeEmbed` actually projects with. After
+    * `aeEmbed` on the same input, both fits are Memo hits: the history
+    * runs no Spark job. */
   def aeHistory(series: DataFrame, imaging: String, imgSize: Int,
       gate: Long = 20000L, cfg: ConvAE.Config = ConvAE.Config()): DataFrame = {
     val spark = series.sparkSession
@@ -436,37 +426,22 @@ object Embedding {
       .toSeq.toDF("epoch", "loss")
   }
 
-  /** Bounded driver-side fit cache: the embedding and history queries
-    * share one seeded fit per (session, input, params) — same pattern
-    * as the Memo LRU, but the artifact is driver arrays, not a
-    * DataFrame. 4 entries ≈ two (dir × imaging) pairs. */
-  private val aeFitCache =
-    new java.util.LinkedHashMap[String, (Array[Long], Array[Array[Double]], Array[Double])](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Array[Long], Array[Array[Double]], Array[Double])]): Boolean =
-        size() > 4
-    }
-
   /** Shared gated-path body: the driver fit, or None at/above `gate`.
     * The series are collected in id order through [[Gate]] and imaged
     * on the driver (so an input at/above the gate images nothing before
     * the distributed path), global-max normalized (app.py:531-533),
-    * then a bounded seeded fit sample is trained. Memoized driver-side (see [[aeFitCache]]): a cached fit
-    * of the same input answers the gate by its own row count, so a
-    * repeated call (the history after the embedding) runs no job. */
+    * then a bounded seeded fit sample is trained. The outcome, fit or
+    * None, is a Memo value per (input, imaging, imgSize, gate, cfg), so
+    * a repeated call (the history after the embedding) runs no job. */
   private def aeFit(series: DataFrame, imaging: String, imgSize: Int, gate: Long,
       cfg: ConvAE.Config): Option[(Array[Long], Array[Array[Double]], Array[Double])] = {
     if (gate <= 0) return None
-    val key = s"${System.identityHashCode(series.sparkSession)}|$imaging|" +
-      s"$imgSize|$cfg|${series.queryExecution.logical.semanticHash()}"
-    val hit = aeFitCache.synchronized(aeFitCache.get(key))
-    if (hit != null) return Some(hit).filter(_._1.length < gate)
-    val image = graft.ops.Imaging.fusedImage(imaging, imgSize)
-    Gate.seriesBelow(series, gate).map { rows =>
-      val out = aeFitRows(rows.map { case (id, v) => (id, image(v)) }, imgSize, cfg)
-      aeFitCache.synchronized { aeFitCache.put(key, out) }
-      out
+    graft.queries.Memo.value(series.sparkSession, "aefit", Seq(series),
+        imaging, imgSize, gate, cfg) {
+      val image = graft.ops.Imaging.fusedImage(imaging, imgSize)
+      Gate.seriesBelow(series, gate).map { rows =>
+        aeFitRows(rows.map { case (id, v) => (id, image(v)) }, imgSize, cfg)
+      }
     }
   }
 

@@ -30,24 +30,6 @@ object SeriesOps extends Serializable {
     java.math.BigDecimal.valueOf(x)
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
 
-  /** [[theilSen]]'s defensive-cache pool, keyed by the input plan's
-    * semantic hash (see its body). Bounded LRU: at most
-    * [[TheilSenCacheSlots]] distinct uncached inputs stay pinned;
-    * re-calling over the SAME input reuses its slot instead of
-    * unpersisting it, so a lazy result frame from an earlier call
-    * keeps its cache alive across repeated calls (ADVICE r13). */
-  private val TheilSenCacheSlots = 4
-  private val autoCachedTheilSen =
-    new java.util.LinkedHashMap[Int, DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Int, DataFrame]): Boolean = {
-        val evict = size() > TheilSenCacheSlots
-        if (evict) e.getValue.unpersist(blocking = false)
-        evict
-      }
-    }
-
-
   /** P2 + N1 + N2: drop null values, append whole-column `min_max` and
     * `z_score` columns (app.py:184-192; population stddev, ddof=0).
     * The reference appends both but feeds min_max downstream (§1.4). */
@@ -497,50 +479,20 @@ object SeriesOps extends Serializable {
     * partitioning- and run-independent. Both branches filter the ONE
     * series frame on size(values) — disjoint predicates, no extra
     * shuffle, exact results for every series the oracle can afford
-    * to replay.
+    * to replay. Since the two branches scan the input twice, an input
+    * the caller has not cached is held in memory as a Memo entry
+    * (`Memo.input`); a cached or local input is read as it is.
     * Output: (series_id, n, slope 6dp, intercept 6dp). */
   def theilSen(series: DataFrame, minLen: Int = 10,
       lengthGate: Int = 1000, samplesPerPoint: Int = 16): DataFrame = {
     require(lengthGate >= 2, s"lengthGate must be >= 2, got $lengthGate")
     require(samplesPerPoint >= 1,
       s"samplesPerPoint must be >= 1, got $samplesPerPoint")
-    // ADVICE r12: the two tiers scan the input once each (disjoint
-    // size(values) filters, one union) — an UNCACHED caller would
-    // re-execute the entire upstream plan (e.g. the events
-    // group-collect) twice. The scaladoc asked callers to pass a
-    // cached frame; enforce it here instead of by convention: cache
-    // the one-row-per-series input if the caller hasn't. ADVICE r13:
-    // the pool is keyed by the analyzed plan's semantic hash with a
-    // bounded LRU — a repeat call over the same input REUSES its slot
-    // (no unpersist, so a lazy result frame from the earlier call
-    // still reads the cache), distinct inputs coexist up to
-    // TheilSenCacheSlots before the eldest is evicted, and both the
-    // storageLevel check and the slot lookup happen under the lock so
-    // concurrent calls can't double-cache or race the eviction
-    // (already-cached inputs pass through untouched: the Memo'd
-    // registry caller is unaffected and never enters the pool).
-    val src = SeriesOps.synchronized {
-      if (series.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        series
-      else {
-        val key = series.queryExecution.analyzed.semanticHash()
-        val hit = autoCachedTheilSen.get(key)
-        // ADVICE r14: the 32-bit semanticHash can collide across
-        // DIFFERENT plans; confirm identity with sameResult before
-        // reuse (collision -> fall through and overwrite the slot),
-        // so a hash clash costs a re-cache instead of wrong data.
-        if (hit != null &&
-            hit.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
-            hit.queryExecution.analyzed
-              .sameResult(series.queryExecution.analyzed))
-          hit
-        else {
-          val c = series.cache()
-          autoCachedTheilSen.put(key, c)
-          c
-        }
-      }
-    }
+    // the two tiers scan the input once each (disjoint size(values)
+    // filters, one union): an uncached input is held in memory through
+    // Memo, so its upstream plan (e.g. the events group-collect) runs
+    // once, and repeated calls over an equal plan share that copy
+    val src = graft.queries.Memo.input(series.sparkSession, "theilsen", series)
     val maxExactPairs = 100000000L
     // EXACT tier (round 12 perf): a tight JVM loop + Arrays.sort per
     // series replaces the Catalyst higher-order-function expression —
@@ -821,7 +773,9 @@ object SeriesOps extends Serializable {
     * extrapolation case exists by construction.
     *
     * Scale: identical shape to LOCF — one shuffle onto the key, two
-    * ordered window passes (backward + forward) instead of one.
+    * ordered running-frame window passes (ascending for the previous
+    * observation, descending for the next) instead of one; linear in
+    * each key's bin count.
     *
     * The bin means are quantized to `quantizeDp` decimals BEFORE
     * interpolating: the blend `pv + (nv−pv)·frac` amplifies last-ulp
@@ -844,16 +798,22 @@ object SeriesOps extends Serializable {
       .agg(min(col("__bin")).as("__b0"), max(col("__bin")).as("__b1"))
       .select(col(keyCol),
         explode(sequence(col("__b0"), col("__b1"))).as("__bin"))
-    val wPrev = Window.partitionBy(col(keyCol)).orderBy(col("__bin"))
+    // both neighbours are running frames (unbounded preceding to the
+    // current row), which Spark extends row by row: the next observed
+    // value is the last one so far in DESCENDING bin order. A frame to
+    // unbounded FOLLOWING is re-aggregated from every row, quadratic
+    // in each key's bin count. Bins are unique per key, so both orders
+    // are total.
+    def upTo(order: Column) = Window.partitionBy(col(keyCol)).orderBy(order)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val wNext = Window.partitionBy(col(keyCol)).orderBy(col("__bin"))
-      .rowsBetween(0, Window.unboundedFollowing)
+    val wPrev = upTo(col("__bin"))
+    val wNext = upTo(col("__bin").desc)
     val obsBin = when(col("__v").isNotNull, col("__bin"))
     grid.join(agged, Seq(keyCol, "__bin"), "left")
       .withColumn("__pv", last(col("__v"), ignoreNulls = true).over(wPrev))
       .withColumn("__pb", last(obsBin, ignoreNulls = true).over(wPrev))
-      .withColumn("__nv", first(col("__v"), ignoreNulls = true).over(wNext))
-      .withColumn("__nb", first(obsBin, ignoreNulls = true).over(wNext))
+      .withColumn("__nv", last(col("__v"), ignoreNulls = true).over(wNext))
+      .withColumn("__nb", last(obsBin, ignoreNulls = true).over(wNext))
       .withColumn("v", when(col("__v").isNotNull, col("__v")).otherwise(
         col("__pv") + (col("__nv") - col("__pv")) *
           ((col("__bin") - col("__pb")).cast("double") /

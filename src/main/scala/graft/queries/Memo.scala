@@ -1,14 +1,30 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.storage.StorageLevel
 
-/** S3 scan memoization (app.py:156-178 → df.cache()), shared by the ML
-  * and [EXT] query families: one cached DataFrame per (session, op,
-  * inputs, params). Memo alone derives the key from those parts (see
-  * [[cachedWith]]), so no caller can forget an input or a parameter.
-  * The key includes the session identity so a cached plan bound to a
-  * stopped session is never replayed into a new one.
+/** S3 scan memoization (app.py:156-178 → df.cache()), and the engine's
+  * only cache that outlives a call. One entry per (session, op, inputs,
+  * params) holds one of three things:
+  *  - a frame a build returned ([[cached]]), optionally paired with a
+  *    driver value built with it ([[cachedWith]]);
+  *  - a driver value alone ([[value]]): a fitted model, a size probe;
+  *  - a caller's input that an operator scans more than once
+  *    ([[input]]).
+  * Memo alone derives the key from those parts (see [[cachedWith]]), so
+  * no caller can forget an input or a parameter. The key includes the
+  * session identity so a cached plan bound to a stopped session is
+  * never replayed into a new one. Each entry also keeps its input
+  * plans, and a hit is served only when every one is `sameResult` with
+  * the caller's: the key's 32-bit plan hash can collide, and a
+  * collision then costs a rebuild, never another input's result.
+  *
+  * Memo caches a frame only when it is not already local rows: a frame
+  * whose optimized plan is a `LocalRelation` (a driver path's result)
+  * is stored as it is. Memo unpersists only frames its builds returned
+  * — never a frame the caller cached, which [[input]] hands back
+  * untouched without registering it.
   *
   * Sizing is STRUCTURAL, not hand-tuned. Three incidents (round-3
   * minhash 39 s; 48 entries at 114 queries; 96 entries at 127 queries)
@@ -25,7 +41,8 @@ import org.apache.spark.storage.StorageLevel
   * registry-adjacent, so an entry untouched for a whole window of
   * queries is dead for the rest of the run). [[evictionCount]] feeds
   * the bench canary: any capacity eviction during a suite run is a
-  * regression signal, reported in the bench JSON. */
+  * regression signal, reported in the bench JSON. Every entry, frame or
+  * value, leaves by the same three paths. */
 private[graft] object Memo {
   /** Derived capacity: 2× the registry so the LRU can never again be
     * undersized for the suite it serves (each query touches ~1-3 keys,
@@ -40,26 +57,33 @@ private[graft] object Memo {
     * and warns; MemoSpec pins the derivation. */
   @volatile var evictionCount: Long = 0L
 
-  /** A cached frame and the driver-side value built with it. The value
-    * lives in the entry, so it leaves with it by every path (capacity
-    * eviction, staleness release, explicit release) and a rebuilt
-    * entry never pairs with a value derived from an older frame. */
-  private final class Entry(val df: DataFrame, val paired: Any)
+  /** A frame (null for a value-only entry), the driver-side value built
+    * with it, and the input plans it was built from. The value lives in
+    * the entry, so it leaves with it by every path (capacity eviction,
+    * staleness release, explicit release) and a rebuilt entry never
+    * pairs with a value derived from an older frame. `ownsCache`: the
+    * frame is Memo's to unpersist (false for local rows). */
+  private final class Entry(val df: DataFrame, val paired: Any,
+      plans: Seq[LogicalPlan], ownsCache: Boolean) {
+    def serves(inputs: Seq[LogicalPlan]): Boolean =
+      plans.corresponds(inputs)(_ sameResult _)
+    def leave(): Unit = if (ownsCache) df.unpersist()
+  }
 
   private var tick: Long = 0L
   private val lastTouch = new java.util.HashMap[String, Long]
   private val memo = new java.util.LinkedHashMap[String, Entry](32, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
       if (size() > MaxEntries) {
-        e.getValue.df.unpersist(); lastTouch.remove(e.getKey); evictionCount += 1; true
+        e.getValue.leave(); lastTouch.remove(e.getKey); evictionCount += 1; true
       } else false
   }
 
   /** Per-operation hit/miss recording, for `perfbench --trace` and
-    * MemoSpec: while recording, every internal key whose entry
-    * [[cached]] MATERIALIZED (a build-miss) is collected, and so is
-    * every key that HIT. [[release]] drops recorded entries. Not meant
-    * for concurrent recorders. */
+    * MemoSpec: while recording, every internal key whose entry a call
+    * BUILT (a miss) is collected, and so is every key that HIT.
+    * [[release]] drops recorded entries. Not meant for concurrent
+    * recorders. */
   private val recording = new java.util.HashSet[String]
   private val recordingHits = new java.util.HashSet[String]
   private var recordOn = false
@@ -86,7 +110,7 @@ private[graft] object Memo {
     var n = 0
     keys.foreach { k =>
       val e = memo.remove(k)
-      if (e != null) { e.df.unpersist(); lastTouch.remove(k); n += 1 }
+      if (e != null) { e.leave(); lastTouch.remove(k); n += 1 }
     }
     n
   }
@@ -108,17 +132,54 @@ private[graft] object Memo {
     * content — each quoted so no two parameter lists render alike. */
   def cachedWith[V](s: SparkSession, op: String, inputs: Seq[Dataset[_]], params: Any*)(
       build: => (DataFrame, V)): (DataFrame, V) = {
+    val e = entry(s, op, inputs, params) { plans =>
+      val (frame, value) = build
+      if (isLocal(frame)) new Entry(frame, value, plans, ownsCache = false)
+      else new Entry(if (frame.storageLevel == StorageLevel.NONE) frame.cache() else frame,
+        value, plans, ownsCache = true)
+    }
+    (e.df, e.paired.asInstanceOf[V])
+  }
+
+  /** A driver value alone, built once per key like a frame entry (a
+    * fitted model, a size probe). */
+  def value[V](s: SparkSession, op: String, inputs: Seq[Dataset[_]], params: Any*)(
+      build: => V): V =
+    entry(s, op, inputs, params)(plans => new Entry(null, build, plans, ownsCache = false))
+      .paired.asInstanceOf[V]
+
+  /** `df` held in memory for an operator that scans it more than once.
+    * A frame already held (cached by the caller, or an equal plan by an
+    * earlier call) or local rows comes back untouched and registers
+    * nothing; otherwise the cached copy is an entry like any other. */
+  def input(s: SparkSession, op: String, df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE || isLocal(df)) df
+    else cached(s, op, Seq(df))(df)
+
+  /** The optimized plan is local rows. Only plans with local leaves
+    * are optimized to find out. */
+  private def isLocal(df: Dataset[_]): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The entry under the key, or the one `build` makes from the input
+    * plans on a miss. A colliding entry (same key, other plans) is
+    * replaced. */
+  private def entry(s: SparkSession, op: String, inputs: Seq[Dataset[_]], params: Seq[Any])(
+      build: Seq[LogicalPlan] => Entry): Entry = {
+    val plans = inputs.map(_.queryExecution.logical)
     val k = (Seq(System.identityHashCode(s).toString, op,
-        inputs.map(_.queryExecution.logical.semanticHash()).mkString(",")) ++
-      params.map(render)).mkString("|")
-    memo.synchronized {
-      val hit = memo.get(k)
-      if (hit != null) {
+        plans.map(_.semanticHash()).mkString(",")) ++ params.map(render)).mkString("|")
+    def hit(): Entry = {
+      val e = memo.get(k)
+      if (e == null || !e.serves(plans)) null
+      else {
         if (recordOn) recordingHits.add(k)
         lastTouch.put(k, tick)
-        return (hit.df, hit.paired.asInstanceOf[V])
+        e
       }
     }
+    memo.synchronized { val e = hit(); if (e != null) return e }
     // Build OUTSIDE the monitor (round 12): a memoized build that
     // Awaits worker threads which themselves call cached() — the
     // parity rig's shape — deadlocked when the whole build ran inside
@@ -129,17 +190,16 @@ private[graft] object Memo {
     // dedupes the cache() — the loser's copy IS the winner's entry,
     // nothing leaks and nothing must be unpersisted. The loser's
     // paired value is dropped with it.
-    val (frame, value) = build
-    val df = if (frame.storageLevel == StorageLevel.NONE) frame.cache() else frame
+    val built = build(plans)
     memo.synchronized {
-      val winner = memo.get(k)
-      if (winner != null) {
-        if (recordOn) recordingHits.add(k)
-        lastTouch.put(k, tick)
-        (winner.df, winner.paired.asInstanceOf[V])
-      } else {
+      val winner = hit()
+      if (winner != null) winner
+      else {
         if (recordOn) recording.add(k)
-        memo.put(k, new Entry(df, value)); lastTouch.put(k, tick); (df, value)
+        val collided = memo.put(k, built)
+        if (collided != null) collided.leave()
+        lastTouch.put(k, tick)
+        built
       }
     }
   }
@@ -172,7 +232,7 @@ private[graft] object Memo {
       // getOrDefault: an entry the touch map somehow lost is treated as
       // maximally stale (released), never an NPE mid-suite
       if (lastTouch.getOrDefault(e.getKey, Long.MinValue) < cutoff) {
-        e.getValue.df.unpersist(); lastTouch.remove(e.getKey); it.remove()
+        e.getValue.leave(); lastTouch.remove(e.getKey); it.remove()
         n += 1
       }
     }

@@ -19,4 +19,21 @@ class BenchSpec extends SparkSpec {
     assert(causes.exists(_.getMessage == "pruned column ran"),
       s"sink must run the UDF column, got $e")
   }
+
+  test("the JSON line stays within 1,700 chars when every query fails") {
+    val zero = Bench.Timing(0, 0, 0, 0)
+    val names = SparkEntry.queries.keys.toSeq.take(285)
+    assert(names.size == 285)
+    val families = Bench.families.keys.map(_ -> zero)
+    val allFailed = Bench.jsonLine(zero, Nil, families, 0L, names, "sf0.1", Nil)
+    assert(allFailed.length <= 1700, s"${allFailed.length} chars")
+    assert(allFailed.contains("\"failed_n\":285"))
+    // the names kept are the first ones, and at least one is kept
+    assert(allFailed.contains("\"failed\":[\"" + names.head + "\""))
+    // a few failures beside a full set of timed queries
+    val timed = SparkEntry.queries.keys.toSeq.map(_ -> Bench.Timing(12.34, 12.34, 1, 1))
+    val mixed = Bench.jsonLine(zero, Nil, families, 0L, names.take(3), "sf0.1", timed)
+    assert(mixed.length <= 1700, s"${mixed.length} chars")
+    assert(names.take(3).forall(n => mixed.contains("\"" + n + "\"")))
+  }
 }

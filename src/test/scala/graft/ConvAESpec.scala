@@ -186,6 +186,17 @@ class ConvAESpec extends SparkSpec {
     assert(dist5 == dist, "distributed conv path depends on partitioning")
   }
 
+  test("aeHistory after aeEmbed on the same input runs no Spark job (one shared fit)") {
+    val ser = spark.range(0, 10)
+      .select(col("id").as("series_id"),
+        expr("transform(sequence(1, 12), t -> cos(t * (id % 4 + 1) * 0.5) + 0.03 * id)")
+          .as("values"))
+    Embedding.aeEmbed(ser, "gaf", 8).collect()
+    val (jobs, hist) = jobsOf(Embedding.aeHistory(ser, "gaf", 8).collect())
+    assert(hist.nonEmpty)
+    assert(jobs == 0, s"aeHistory ran $jobs jobs instead of reusing aeEmbed's fit")
+  }
+
   test("fitWeights + encoder reproduce fitEmbed bitwise (the broadcast artifact contract)") {
     val imgs = Array.tabulate(14)(i => fakeImg(i + 3, 8))
     val cfg = ConvAE.Config(epochs = 8, seed = 13)

@@ -1,14 +1,17 @@
 package graft
 
 import graft.queries.Memo
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array, col, sin}
+import org.apache.spark.storage.StorageLevel
 
 /** Canary for the round-3/round-4/round-5 eviction-thrash failure
   * class: Memo capacity must be DERIVED from the registry (so adding
   * queries can never silently undersize it again), and the staleness
   * release must drop dead entries while keeping recently-touched ones.
-  * Also pins the typed key's contract: inputs by plan, parameters by
-  * value, sessions apart, and paired values leaving with their entry.
+  * Also pins the typed key's contract: inputs by plan (a colliding
+  * plan hash included), parameters by value, sessions apart, paired
+  * and value-only entries leaving like frames, local rows stored as
+  * they are, and a caller's cached input never unpersisted.
   */
 class MemoSpec extends SparkSpec {
 
@@ -24,7 +27,9 @@ class MemoSpec extends SparkSpec {
   test("releaseStale drops entries untouched for a window, keeps touched ones") {
     import spark.implicits._
     val before = Memo.entryCount
-    val a = Memo.cached(spark, "memospec-stale", Nil)(Seq(1, 2, 3).toDF("x"))
+    // a planned frame: Memo caches it (local rows it would keep as they are)
+    val a = Memo.cached(spark, "memospec-stale", Nil)(spark.range(3).toDF("x"))
+    assert(a.storageLevel != StorageLevel.NONE)
     (1 to 30).foreach { i =>
       Memo.advance()
       // touched every tick — must survive the window
@@ -46,7 +51,8 @@ class MemoSpec extends SparkSpec {
   test("recording captures MISSES only; release drops exactly those, cold rebuild follows") {
     import spark.implicits._
     Memo.startRecording()
-    val a = Memo.cached(spark, "memospec-rec", Nil, "a")(Seq(1).toDF("x"))
+    val a = Memo.cached(spark, "memospec-rec", Nil, "a")(spark.range(1).toDF("x"))
+    assert(a.storageLevel != StorageLevel.NONE)
     Memo.cached(spark, "memospec-rec", Nil, "b")(Seq(2).toDF("x"))
     val keys = Memo.stopRecording()
     assert(keys.size == 2, s"expected 2 recorded keys, got ${keys.size}")
@@ -159,25 +165,94 @@ class MemoSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(1).toDF("x")
     var builds = 0
+    var valueBuilds = 0
     def pairedValue(): Int =
       Memo.cachedWith(spark, "memospec-pair", Nil) { builds += 1; (df, builds) }._2
-    assert(pairedValue() == 1)
-    assert(pairedValue() == 1, "a hit must return the value built with the entry")
+    // a value-only entry, keyed and released like a frame entry
+    def soloValue(): Int =
+      Memo.value(spark, "memospec-value", Seq(df), "p") { valueBuilds += 1; valueBuilds }
+    assert(pairedValue() == 1 && soloValue() == 1)
+    assert(pairedValue() == 1 && soloValue() == 1, "a hit must return the value built with the entry")
 
     // staleness release
     (1 to 30).foreach(_ => Memo.advance()); Memo.releaseStale(24)
-    val own = misses(assert(pairedValue() == 2))
+    val own = misses(assert(pairedValue() == 2 && soloValue() == 2))
     // explicit release
-    assert(Memo.release(own) == 1)
-    assert(pairedValue() == 3)
+    assert(Memo.release(own) == 2)
+    assert(pairedValue() == 3 && soloValue() == 3)
 
-    // capacity eviction: `capacity` newer entries push the pair out
+    // capacity eviction: `capacity` newer entries push both out
     val evictions = Memo.evictionCount
     val fill = misses((1 to Memo.capacity).foreach(i => Memo.cached(spark, "memospec-fill", Nil, i)(df)))
     assert(Memo.evictionCount > evictions)
     Memo.release(fill)
-    assert(pairedValue() == 4)
+    assert(pairedValue() == 4 && soloValue() == 4)
     (1 to 30).foreach(_ => Memo.advance()); Memo.releaseStale(24)
+  }
+
+  test("a frame the caller cached is still cached after Memo releases every entry") {
+    import spark.implicits._
+    val series = spark.range(1, 21)
+      .select($"id".as("series_id"), array((1 to 4).map(j => sin($"id" * j)): _*).as("values"))
+      .cache()
+    try {
+      val keys = misses {
+        assert(Memo.input(spark, "memospec-input", series) eq series)
+        // the distributed PCA path holds its input through Memo
+        graft.ml.Embedding.pcaEmbed(series, 2, gate = 0).collect()
+      }
+      assert(keys.isEmpty, s"a caller-cached input was registered: $keys")
+      (1 to 30).foreach(_ => Memo.advance()); Memo.releaseStale(24)
+      assert(series.storageLevel != StorageLevel.NONE, "Memo unpersisted the caller's cache")
+      // an input nobody cached is Memo's: held once, released like any entry
+      val uncached = series.filter($"series_id" > 3)
+      val inKeys = misses {
+        assert(Memo.input(spark, "memospec-input", uncached).storageLevel != StorageLevel.NONE)
+        // an equal plan now reads that cache and registers nothing more
+        val again = series.filter($"series_id" > 3)
+        assert(Memo.input(spark, "memospec-input", again) eq again)
+      }
+      assert(inKeys.size == 1)
+      Memo.release(inKeys)
+      assert(uncached.storageLevel == StorageLevel.NONE)
+    } finally series.unpersist()
+  }
+
+  test("inputs with equal plan hashes but different results never share an entry") {
+    import spark.implicits._
+    // a pair found offline by a birthday search over one-row local frames
+    val a = Seq(-8527701771009787665L).toDF("x")
+    val b = Seq(9109956887523806648L).toDF("x")
+    val (pa, pb) = (a.queryExecution.logical, b.queryExecution.logical)
+    assert(pa.semanticHash() == pb.semanticHash(),
+      "Spark's plan hash changed: this pair no longer collides, search for a new one")
+    assert(!pa.sameResult(pb))
+    val keys = misses {
+      Memo.cached(spark, "memospec-collide", Seq(a))(a.select(($"x" + 1).as("y")))
+      val rb = Memo.cached(spark, "memospec-collide", Seq(b))(b.select(($"x" + 1).as("y")))
+      assert(rb.as[Long].collect().toSeq == Seq(9109956887523806649L), "b was served a's entry")
+      assert(Memo.value[String](spark, "memospec-collide-v", Seq(a))("a") == "a")
+      assert(Memo.value[String](spark, "memospec-collide-v", Seq(b))("b") == "b", "b was served a's value")
+      // the last build holds the shared key, and its hits still work
+      assert(Memo.value[String](spark, "memospec-collide-v", Seq(b))(sys.error("must hit")) == "b")
+    }
+    Memo.release(keys)
+  }
+
+  test("a local frame is stored as it is; a planned frame is cached") {
+    import spark.implicits._
+    val keys = misses {
+      val local = Memo.cached(spark, "memospec-local", Nil, "rows")(Seq(1L, 2L).toDF("x"))
+      assert(local.storageLevel == StorageLevel.NONE)
+      assert(Memo.cached(spark, "memospec-local", Nil, "rows")(sys.error("must hit")) eq local)
+      val planned = Memo.cached(spark, "memospec-local", Nil, "range")(spark.range(2).toDF("x"))
+      assert(planned.storageLevel != StorageLevel.NONE)
+      // the input entry point keeps local rows as they are too
+      val rows = Seq(3L).toDF("x")
+      assert(Memo.input(spark, "memospec-local", rows) eq rows)
+    }
+    assert(keys.size == 2, s"expected the two built entries, got $keys")
+    Memo.release(keys)
   }
 
   test("entries of one session never serve another") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ml.SemDedup
+import org.apache.spark.sql.functions.{col, count, lit, size, sum}
 
 /** SemDeDup semantics on closed-form two-cluster fixtures: the
   * within-cluster pairing, the lowest-centroid-similarity keep rule,
@@ -86,6 +87,22 @@ class SemDedupSpec extends SparkSpec {
         maxBroadcastBytes = 0L)
       .orderBy("vec_id").collect().toSeq
     assert(bc == fb, "gated fallback must be bitwise-equal to the broadcast plan")
+  }
+
+  test("evalContamination: a second call against the same eval frame skips the size probe") {
+    import graft.ext.Similarity
+    val ev = Seq((700L, unit(33)), (800L, unit(66))).toDF("vec_id", "embedding")
+    val tr = Seq((7L, unit(30)), (8L, unit(70))).toDF("vec_id", "embedding")
+    def run() = Similarity.evalContamination(tr, ev, "vec_id", "embedding", 0.9)
+      .orderBy("vec_id").collect().toSeq
+    val (first, r1) = jobsOf(run())
+    val (second, r2) = jobsOf(run())
+    assert(r1 == r2)
+    // the probe is one global aggregate over the eval side: under AQE
+    // its shuffle stage and its result each run as a job
+    val (probe, _) = jobsOf(ev.agg(sum(size(col("embedding"))), count(lit(1))).head())
+    assert(probe >= 1 && second == first - probe,
+      s"first call $first jobs, second $second, the probe alone $probe")
   }
 
   test("epsPairs: confined scan == co-clustered subset of the exact scan") {

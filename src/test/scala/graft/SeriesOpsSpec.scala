@@ -188,6 +188,18 @@ class SeriesOpsSpec extends SparkSpec {
     }
   }
 
+  test("resampleInterp: no window frame runs to unbounded following") {
+    import java.sql.Timestamp
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing}
+    val df = Seq((1L, new Timestamp(0L), 1.0), (1L, new Timestamp(7200000L), 3.0))
+      .toDF("k", "t", "v")
+    val plan = SeriesOps.resampleInterp(df, "k", "t", "v", 3600L).queryExecution.optimizedPlan
+    val frames = plan.flatMap(_.expressions.flatMap(_.collect { case f: SpecifiedWindowFrame => f }))
+    assert(frames.nonEmpty, "the operator has no window frame")
+    // such a frame is re-aggregated from every row: quadratic per key
+    assert(!frames.exists(_.upper == UnboundedFollowing), s"unbounded-following frame in $frames")
+  }
+
   test("asof join carries the matched right row atomically (null fields survive)") {
     import java.sql.Timestamp
     def ts(s: Int) = new Timestamp(s * 1000L)

@@ -33,4 +33,20 @@ abstract class SparkSpec extends AnyFunSuite {
     Tables.trackForCleanup(p)
     p
   }
+
+  /** Spark jobs `body` submits, and its result. */
+  protected def jobsOf[T](body: => T): (Int, T) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      (jobs.get, out)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

@@ -158,22 +158,6 @@ class TextDedupSpec extends SparkSpec {
     df.queryExecution.optimizedPlan.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
-  /** Spark jobs `body` submits, and its result. */
-  private def jobsOf[T](body: => T): (Int, T) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      (jobs.get, out)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   /** minhashLshPairsFrom's driver path and its forced plan: equal
     * schema, equal rows; returns the rows. */
   private def minhashParity(sh: org.apache.spark.sql.DataFrame,

@@ -8,8 +8,44 @@ import org.apache.spark.sql.functions._
   * into these scans, so every query should start here, not from a cache.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `dir/name.parquet`, read with the schema Spark inferred for it
+    * once. Inference is a Spark job (about 0.15 s warm on 4 vCPUs); a
+    * read with the schema given runs none. Every such read of a table
+    * has the same logical plan, so Memo keys over it keep hitting, and
+    * analyzed it is the same relation as a plain read.
+    *
+    * The schema is a `Memo.value` keyed by the path, every leaf file's
+    * (path, length, modification time) as the path's Hadoop
+    * `FileSystem` lists them, and the session's confs: a rewritten file,
+    * or a conf that steers inference (`events` sets
+    * `spark.sql.legacy.parquet.nanosAsLong`), re-infers it, so no key
+    * serves a stale schema. A path that cannot be listed is read as
+    * before and fails with Spark's own error. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    leafFiles(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val confs = spark.conf.getAll.toSeq.sorted
+        val schema = graft.queries.Memo.value(spark, "schema", Nil, path, files, confs)(
+          spark.read.parquet(path).schema)
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** (path, length, modification time) of every file under `path`,
+    * sorted; None when the path cannot be listed. */
+  private def leafFiles(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.IOException => None }
 
   /** `events.ts` appears in two driver testdata generations: parquet
     * TIMESTAMP(NANOS) (Spark 4 only maps it via the nanos-as-long

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines
@@ -1014,17 +1014,89 @@ object TextOps {
     * bucket distributions aggregate to `m` rows, their totals are a
     * 2-scalar driver fetch (same regime as [[tfidfTopK]]'s doc
     * count), and the m-row ratio table joins back broadcast — the
-    * corpus never shuffles a second time. */
+    * corpus never shuffles a second time.
+    *
+    * Below 10⁵ documents ([[DsirDriverGate]]) with non-null integral
+    * ids, the features `(id, __t, __cnts)` are collected once
+    * (`graft.ml.Gate`) and the fit and the scores are computed on the
+    * driver exactly as the plan computes them ([[dsirLocal]]); the
+    * result is a local frame with the plan's schema, sorted by id, and
+    * the feature cache is not filled. At or above the gate, or with
+    * null or non-integral ids, the plan above runs unchanged. */
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
-      targetPred: Column, m: Int = 64): DataFrame = {
+      targetPred: Column, m: Int = 64): DataFrame =
+    dsirWeights(df, idCol, textCol, targetPred, m, DsirDriverGate)
+
+  /** Documents below which [[dsirWeights]] fits and scores on the
+    * driver. */
+  private[graft] val DsirDriverGate: Long = 100000L
+
+  /** [[dsirWeights]] under an explicit gate in documents; `gate = 0`
+    * forces the plan (the parity specs' lever). */
+  private[graft] def dsirWeights(df: DataFrame, idCol: String, textCol: String,
+      targetPred: Column, m: Int, gate: Long): DataFrame = {
     require(m > 0, s"m must be positive, got $m")
     // the whole weight frame (one small row per doc) is the Memo'd
     // unit: the scorer (text_dsir_weights) builds it, the selector
     // (text_dsir_select) reuses it — scoring pays for the ngram pass
     // once per corpus, like every other shared-pass family
-    graft.queries.Memo.cached(df.sparkSession, "dsir", Seq(df), m, targetPred, idCol, textCol) {
-      dsirScoreWith(df, idCol, textCol, targetPred,
-        dsirRatioTable(df, idCol, textCol, targetPred, m), m)
+    graft.queries.Memo.cached(df.sparkSession, "dsir", Seq(df),
+        m, targetPred, idCol, textCol, gate) {
+      dsirLocal(df, idCol, textCol, targetPred, m, gate).getOrElse(
+        dsirScoreWith(df, idCol, textCol, targetPred,
+          dsirRatioTable(df, idCol, textCol, targetPred, m), m))
+    }
+  }
+
+  /** The driver side of [[dsirWeights]]: one gated collect of the
+    * (unmemoized) features, then what the plan computes — per-bucket
+    * long sums (`when(__t)` counts only true), the two totals, `__lr`
+    * with Spark's `log` (`StrictMath.log`) over the same long → double
+    * casts, `n_ngrams` as a long sum and `log_w` as the left fold in
+    * bucket order, rounded HALF_UP at 6 dp through
+    * `BigDecimal.valueOf(d).setScale` as Spark's `round` does (NaN and
+    * ±Inf pass through). None: the plan's side. */
+  private def dsirLocal(df: DataFrame, idCol: String, textCol: String,
+      targetPred: Column, m: Int, gate: Long): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    import scala.jdk.CollectionConverters._
+    val features = dsirFeaturePlan(df, idCol, textCol, targetPred, m)
+    features.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case _ => return None
+    }
+    graft.ml.Gate.collectBelow(features, gate)(
+        r => if (r.isNullAt(0)) Long.MinValue else r.getAs[Number](0).longValue)
+      .filter(_.forall(!_.isNullAt(0)))
+      .map(rows => df.sparkSession.createDataFrame(dsirLocalRows(rows, m).asJava,
+        dsirScore(features, idCol, Seq.fill(m)(0.0)).schema))
+  }
+
+  /** [[dsirLocal]]'s fit and scores over id-sorted feature rows. */
+  private def dsirLocalRows(rows: Array[Row], m: Int): Seq[Row] = {
+    val cnts = rows.map(_.getSeq[Long](2).toArray)
+    val ct = new Array[Long](m); val cr = new Array[Long](m)
+    rows.indices.foreach { i =>
+      val tgt = !rows(i).isNullAt(1) && rows(i).getBoolean(1)
+      var b = 0
+      while (b < m) {
+        if (tgt) ct(b) += cnts(i)(b)
+        cr(b) += cnts(i)(b)
+        b += 1
+      }
+    }
+    val (tt, tr) = (ct.sum, cr.sum)
+    val lr = Array.tabulate(m)(b =>
+      StrictMath.log((ct(b) + 1).toDouble / (tt + m).toDouble) -
+        StrictMath.log((cr(b) + 1).toDouble / (tr + m).toDouble))
+    rows.indices.map { i =>
+      val c = cnts(i)
+      var acc = 0.0; var b = 0
+      while (b < m) { acc += c(b).toDouble * lr(b); b += 1 }
+      val logW = if (acc.isNaN || acc.isInfinite) acc
+        else java.math.BigDecimal.valueOf(acc)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+      Row(rows(i).get(0), rows(i).get(1), c.sum, logW)
     }
   }
 
@@ -1050,40 +1122,45 @@ object TextOps {
   private def dsirFeatures(df: DataFrame, idCol: String, textCol: String,
       targetPred: Column, m: Int): DataFrame =
     graft.queries.Memo.cached(df.sparkSession, "dsirb2", Seq(df),
-        m, targetPred, idCol, textCol) {
-      val bucketCounts = udf((text: String) =>
-        if (text == null) null
-        else {
-          // replicate tokensCol = split(lower(trim(text)), "\s+")
-          // exactly: Spark trim strips U+0020 only; lower is
-          // locale-agnostic (ROOT)
-          var b = 0; var e = text.length
-          while (b < e && text.charAt(b) == ' ') b += 1
-          while (e > b && text.charAt(e - 1) == ' ') e -= 1
-          val toks = text.substring(b, e)
-            .toLowerCase(java.util.Locale.ROOT).split("\\s+", -1)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val cnt = new Array[Long](m)
-          def add(ng: String): Unit = {
-            val d = md.digest(ng.getBytes("UTF-8"))
-            // first 8 hex chars == first 4 digest bytes, unsigned
-            val h = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
-              ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-            cnt((h % m).toInt) += 1
-            md.reset()
-          }
-          var i = 0
-          while (i < toks.length) {
-            add(toks(i))
-            if (i + 1 < toks.length) add(toks(i) + " " + toks(i + 1))
-            i += 1
-          }
-          cnt
-        })
-      df.select(col(idCol), targetPred.as("__t"),
-          bucketCounts(col(textCol)).as("__cnts"))
-        .filter(col("__cnts").isNotNull)
-    }
+        m, targetPred, idCol, textCol)(dsirFeaturePlan(df, idCol, textCol, targetPred, m))
+
+  /** [[dsirFeatures]]' plan, not memoized: the driver path collects it
+    * once and never fills the feature cache. */
+  private def dsirFeaturePlan(df: DataFrame, idCol: String, textCol: String,
+      targetPred: Column, m: Int): DataFrame = {
+    val bucketCounts = udf((text: String) =>
+      if (text == null) null
+      else {
+        // replicate tokensCol = split(lower(trim(text)), "\s+")
+        // exactly: Spark trim strips U+0020 only; lower is
+        // locale-agnostic (ROOT)
+        var b = 0; var e = text.length
+        while (b < e && text.charAt(b) == ' ') b += 1
+        while (e > b && text.charAt(e - 1) == ' ') e -= 1
+        val toks = text.substring(b, e)
+          .toLowerCase(java.util.Locale.ROOT).split("\\s+", -1)
+        val md = java.security.MessageDigest.getInstance("MD5")
+        val cnt = new Array[Long](m)
+        def add(ng: String): Unit = {
+          val d = md.digest(ng.getBytes("UTF-8"))
+          // first 8 hex chars == first 4 digest bytes, unsigned
+          val h = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
+            ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
+          cnt((h % m).toInt) += 1
+          md.reset()
+        }
+        var i = 0
+        while (i < toks.length) {
+          add(toks(i))
+          if (i + 1 < toks.length) add(toks(i) + " " + toks(i + 1))
+          i += 1
+        }
+        cnt
+      })
+    df.select(col(idCol), targetPred.as("__t"),
+        bucketCounts(col(textCol)).as("__cnts"))
+      .filter(col("__cnts").isNotNull)
+  }
 
   /** The m-row importance log-ratio table fit on a REFERENCE corpus:
     * (__b, __lr) with `__lr = ln p̂_tgt[b] − ln p̂_raw[b]`, add-one
@@ -1139,14 +1216,16 @@ object TextOps {
     val lrByBucket = ratio.select(col("__b").cast("int"), col("__lr"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val lrArr = (0 until m).map(b => lrByBucket.getOrElse(b, 0.0))
-    val lrLit = typedLit(lrArr)
-    dsirFeatures(docs, idCol, textCol, targetPred, m)
-      .select(col(idCol), col("__t").as("is_target"),
-        aggregate(col("__cnts"), lit(0L), (acc, x) => acc + x).as("n_ngrams"),
-        round(aggregate(
-          zip_with(col("__cnts"), lrLit, (c, lr) => c.cast("double") * lr),
-          lit(0.0), (acc, x) => acc + x), 6).as("log_w"))
+    dsirScore(dsirFeatures(docs, idCol, textCol, targetPred, m), idCol, lrArr)
   }
+
+  /** The per-doc scorer over features and a collected log-ratio array. */
+  private def dsirScore(features: DataFrame, idCol: String, lrArr: Seq[Double]): DataFrame =
+    features.select(col(idCol), col("__t").as("is_target"),
+      aggregate(col("__cnts"), lit(0L), (acc, x) => acc + x).as("n_ngrams"),
+      round(aggregate(
+        zip_with(col("__cnts"), typedLit(lrArr), (c, lr) => c.cast("double") * lr),
+        lit(0.0), (acc, x) => acc + x), 6).as("log_w"))
 
   /** Code-vs-prose document routing ([EXT] — the corpus-construction
     * step that sends source code and natural language down different

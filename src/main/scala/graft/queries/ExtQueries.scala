@@ -713,7 +713,7 @@ object ExtQueries {
     // pairs share a full band, then exact-Jaccard verification of
     // candidates only (the scale path: pair volume ∝ true near-dups)
     Q("dedup_minhash_lsh",
-      (s, dir) => minhashPairs(s, dir).orderBy("id_a", "id_b"),
+      (s, dir) => LocalSort(minhashPairs(s, dir).orderBy("id_a", "id_b")),
       Some(s"""WITH $shingleCte,
               |mh AS (SELECT doc_id, h, min(md5(h || '|' || s)) AS mv
               |       FROM sh, (SELECT unnest(range(8)) AS h) GROUP BY doc_id, h),
@@ -2705,9 +2705,9 @@ object ExtQueries {
     // add-one smoothed, per-doc importance log-weight as an ordered
     // fold — the model-free data-selection scorer
     Q("text_dsir_weights",
-      (s, dir) => TextOps.dsirWeights(Tables.documents(s, dir), "doc_id",
+      (s, dir) => LocalSort(TextOps.dsirWeights(Tables.documents(s, dir), "doc_id",
           "text", col("lang") === "en")
-        .orderBy("doc_id"),
+        .orderBy("doc_id")),
       Some(s"""WITH tk AS (SELECT doc_id,
               |         string_split_regex(lower(trim(text)), '\\s+') AS t
               |       FROM documents),

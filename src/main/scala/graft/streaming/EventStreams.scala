@@ -37,13 +37,13 @@ object EventStreams {
   /** Stream the events table from an sf directory (the streaming file
     * source requires a directory; the glob picks the events parquet).
     * The streaming source needs an explicit schema, so the ts physical
-    * type is probed once from the file footer via a batch read; both
-    * generations normalize to micros TimestampType (session TZ is UTC,
-    * so the NTZ cast is value-preserving). */
+    * type is probed from the batch table's schema, which `Tables.load`
+    * infers once per file and conf set; both generations normalize to
+    * micros TimestampType (session TZ is UTC, so the NTZ cast is
+    * value-preserving). */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir).schema("ts").dataType
+    val tsType = graft.Tables.load(spark, sfDir, "events").schema("ts").dataType
     val raw = spark.readStream.schema(rawSchema(tsType))
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)

@@ -219,8 +219,10 @@ class PlanSpec extends SparkSpec {
 
   test("dsir weights: scoring is a pure map over the count arrays — no join, no shuffle, no Generate") {
     import org.apache.spark.sql.functions.col
+    // gate = 0: the distributed scorer (below the gate the weights are
+    // local rows, which would pass trivially)
     val df = graft.ext.TextOps.dsirWeights(
-      Tables.documents(spark, sf), "doc_id", "text", col("lang") === "en")
+      Tables.documents(spark, sf), "doc_id", "text", col("lang") === "en", 64, 0L)
     val plan = formatted(df)
     // the m-row ratio table is collected to a literal at build time, so
     // the per-doc scorer must be scan → kernel → fold: any Exchange or

@@ -1,12 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Pins [[Tables.reapDead]]'s owner-identity rules (review r12): the
   * start-time token makes pid recycling detectable, live owners are
   * never age-reaped, and legacy token-less names keep the old
-  * dead-or-aged behavior. Pure filesystem logic — no SparkSession. */
-class TablesSpec extends AnyFunSuite {
+  * dead-or-aged behavior (pure filesystem logic); and [[Tables.load]]'s
+  * schema reuse: one inference per file and conf set. */
+class TablesSpec extends SparkSpec {
   private val prefix = "graft_tt_abcdef123456_p"
 
   private def deadPid: Long = {
@@ -83,6 +82,67 @@ class TablesSpec extends AnyFunSuite {
     me.info().startInstant().ifPresent { si =>
       assert(base.endsWith(s"p${me.pid()}t${si.toEpochMilli}"),
         s"expected pid+start token suffix, got $base")
+    }
+  }
+
+  test("load: a second read of a table runs no Spark job and plans as a plain read") {
+    val first = Tables.documents(spark, sf)
+    val (jobs, second) = jobsOf(Tables.documents(spark, sf))
+    assert(jobs == 0, s"a warm read ran $jobs jobs")
+    val plain = spark.read.parquet(s"$sf/documents.parquet")
+    // StructType equality covers names, types, nullability and metadata
+    assert(second.schema == first.schema && second.schema == plain.schema)
+    // Memo keys hash the logical plan: every read of the table keys alike
+    assert(second.queryExecution.logical.semanticHash() ==
+      first.queryExecution.logical.semanticHash())
+    // and a plain read's cached data still serves it
+    assert(second.queryExecution.analyzed.sameResult(plain.queryExecution.analyzed))
+    assert(second.collect().toSeq == plain.collect().toSeq)
+  }
+
+  test("load: a rewritten file with a new schema is re-inferred") {
+    import spark.implicits._
+    val dir = tempDir("graft_tables_rw")
+    val path = s"$dir/t.parquet"
+    Seq(1L, 2L).toDF("a").write.parquet(path)
+    assert(Tables.load(spark, dir, "t").schema.fieldNames.toSeq == Seq("a"))
+    Seq((1L, "x", 2.5)).toDF("a", "b", "c").write.mode("overwrite").parquet(path)
+    val again = Tables.load(spark, dir, "t")
+    assert(again.schema == spark.read.parquet(path).schema)
+    assert(again.schema.fieldNames.toSeq == Seq("a", "b", "c"))
+    assert(again.as[(Long, String, Double)].collect().toSeq == Seq((1L, "x", 2.5)))
+  }
+
+  test("load: a conf that steers inference re-infers the schema") {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    import spark.implicits._
+    val dir = tempDir("graft_tables_conf")
+    // an un-annotated binary column in a file without Spark's schema
+    // metadata (a Spark-written file would pin BinaryType)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val msg = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message t { required binary b; }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/t.parquet"), conf))
+      .withType(msg).withConf(conf).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+      .newGroup().append("b", org.apache.parquet.io.api.Binary.fromString("hi")))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val was = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(Tables.load(spark, dir, "t").schema("b").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      val asString = Tables.load(spark, dir, "t")
+      assert(asString.schema("b").dataType == StringType)
+      assert(asString.select("b").as[String].collect().toSeq == Seq("hi"))
+      spark.conf.set(key, "false")
+      assert(Tables.load(spark, dir, "t").schema("b").dataType == BinaryType)
+    } finally was match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 }

@@ -1197,6 +1197,61 @@ class TextDedupSpec extends SparkSpec {
     assert(out.forall(r => !r._4.isNaN && !r._4.isInfinite))
   }
 
+  /** The driver path of dsirWeights equals the forced plan (`gate = 0`):
+    * schema, rows and order under the query's id sort. The corpus is
+    * repartitioned so that Catalyst cannot fold the plan's side into
+    * local rows too. */
+  private def dsirParity(corpus: org.apache.spark.sql.DataFrame,
+      target: org.apache.spark.sql.Column): Array[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val d = corpus.repartition(2)
+    val driver = TextOps.dsirWeights(d, "doc_id", "text", target, 64, TextOps.DsirDriverGate)
+    val plan = TextOps.dsirWeights(d, "doc_id", "text", target, 64, 0L)
+    assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      "the driver path did not run")
+    assert(!plan.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(driver.schema == plan.schema)
+    val got = driver.orderBy("doc_id").collect()
+    assert(got.toSeq == plan.orderBy("doc_id").collect().toSeq)
+    got
+  }
+
+  test("dsirWeights: the driver path equals the forced plan") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // the spec corpus, with a target slice
+    assert(dsirParity(docs, col("doc_id") <= 2L).length == 5)
+    // sf0.001 documents, the query's own target
+    val sfDocs = Tables.documents(spark, sf)
+    assert(dsirParity(sfDocs, col("lang") === "en").length == sfDocs.count())
+    // null text drops out of the fit and the scores; a null target
+    // counts as non-target
+    val withNulls = Seq[(Long, String, String)]((1L, "alpha beta gamma", "en"),
+      (2L, null, "en"), (3L, "beta gamma delta", null), (4L, "", "de"))
+      .toDF("doc_id", "text", "lang")
+    assert(dsirParity(withNulls, col("lang") === "en").map(_.getLong(0)).toSeq ==
+      Seq(1L, 3L, 4L))
+    // an empty target subset
+    assert(dsirParity(docs, lit(false)).forall(!_.getBoolean(1)))
+    // no documents at all
+    assert(dsirParity(docs.filter(col("doc_id") < 0L), lit(true)).isEmpty)
+    // int ids keep their type
+    val intIds = docs.select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    assert(dsirParity(intIds, col("doc_id") =!= 4).head.get(0).isInstanceOf[Int])
+  }
+
+  test("dsirWeights: null or non-integral ids take the plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.col
+    val nullId = Seq[(Option[Long], String)]((Some(1L), "a b"), (None, "b c"))
+      .toDF("doc_id", "text")
+    val strId = Seq(("x", "a b"), ("y", "b c")).toDF("doc_id", "text")
+    Seq(nullId, strId).map(_.repartition(2)).foreach { d =>
+      val out = TextOps.dsirWeights(d, "doc_id", "text", col("text").contains("a"))
+      assert(!out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(out.count() == 2L)
+    }
+  }
+
   test("structureRoute: code signals fire on code, stay zero on prose") {
     val code = "    val x = f(1);\n    val y = g(x);\nreturn y;"
     val prose = "the quick brown fox jumps over the lazy dog again"

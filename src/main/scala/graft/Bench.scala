@@ -115,8 +115,8 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       // pinned-UTC invariant (same as Verify): TIMESTAMP_NTZ→TimestampType
-      // casts in Tables/EventStreams assume a UTC session everywhere, not
-      // just in the correctness entry point
+      // casts in Tables assume a UTC session everywhere, not just in the
+      // correctness entry point
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

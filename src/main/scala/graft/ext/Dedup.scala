@@ -606,18 +606,6 @@ object Dedup {
       .withColumn("keep", !col("is_dup"))
   }
 
-  /** Per-doc minhash signature rows (id, h, mv): mv = lexicographic
-    * min of md5(h || '|' || shingle) over the doc's shingles. All
-    * `numHashes` mins are computed as parallel aggregates in ONE pass
-    * over the shingle rows (no h-fold row explosion before the
-    * shuffle), then unpivoted. */
-  def minhashSignatures(sh: DataFrame, idCol: String, numHashes: Int): DataFrame =
-    minhashSignaturesWide(sh, idCol, numHashes)
-      .select(col(idCol),
-        posexplode(array((0 until numHashes).map(h => col(s"__mh$h")): _*)))
-      .withColumnRenamed("pos", "h")
-      .withColumnRenamed("col", "mv")
-
   /** Wide signature form: one row per doc, columns __mh0..__mhN-1.
     * (Measured alternative: hashing each DISTINCT shingle once and
     * joining back was no faster at sf0.1 — the extra distinct+join

@@ -693,9 +693,8 @@ object Similarity {
       .select(col(idCol).as("__eid"), col("v").as("__ev"),
         col("nrm").as("__en"))
     // ~8 bytes per vector element + id/norm/struct overhead per row.
-    // A Memo value per (eval plan, columns): a streaming sink scoring
-    // epochs against a FROZEN eval set pays the probe once, not one
-    // extra Spark job per micro-batch
+    // A Memo value per (eval plan, columns): repeated audits against
+    // the same eval set pay the probe once
     val estBytes = graft.queries.Memo.value(evalSet.sparkSession, "evalsize",
         Seq(evalSet), idCol, vecCol) {
       val est = ev.agg(coalesce(sum(size(col("__ev"))), lit(0L)).as("e"),

@@ -1162,16 +1162,12 @@ object TextOps {
       .filter(col("__cnts").isNotNull)
   }
 
-  /** The m-row importance log-ratio table fit on a REFERENCE corpus:
-    * (__b, __lr) with `__lr = ln p̂_tgt[b] − ln p̂_raw[b]`, add-one
-    * smoothed. This is DSIR's offline artifact — fit once, then
-    * broadcast-stable across any number of scoring passes or
-    * streaming epochs ([[graft.streaming.EventStreams
-    * .incrementalDsirSink]]). The bucket totals are a 2-scalar driver
-    * fetch (metadata-sized, same regime as tfidfTopK's doc count). */
-  def dsirRatioTable(ref: DataFrame, idCol: String, textCol: String,
-      targetPred: Column, m: Int = 64): DataFrame = {
-    require(m > 0, s"m must be positive, got $m")
+  /** The fit half of [[dsirWeights]]' plan: the m-row importance
+    * log-ratio table over the corpus, (__b, __lr) with
+    * `__lr = ln p̂_tgt[b] − ln p̂_raw[b]`, add-one smoothed.
+    * [[dsirScoreWith]] then scores the same corpus against it. */
+  private def dsirRatioTable(ref: DataFrame, idCol: String, textCol: String,
+      targetPred: Column, m: Int): DataFrame = {
     val spark = ref.sparkSession
     // per-bucket totals from the dense count arrays: posexplode to
     // (bucket, count) rows — O(docs × m), map-side combined to m rows
@@ -1196,12 +1192,9 @@ object TextOps {
             (col("__tr") + m).cast("double"))).as("__lr"))
   }
 
-  /** Score `docs` against a FIXED ratio table (the incremental /
-    * streaming path — and the tail of [[dsirWeights]], which fits the
-    * table on the same corpus). Because scoring is per-doc given the
-    * table, scoring a corpus in N slices and unioning equals scoring
-    * it at once — the equivalence the streaming DSIR epochs ride.
-    * Output: (idCol, is_target, n_ngrams, log_w).
+  /** The score half of [[dsirWeights]]' plan: each doc of `docs`
+    * scored against the ratio table [[dsirRatioTable]] fit on the same
+    * corpus. Output: (idCol, is_target, n_ngrams, log_w).
     *
     * The ratio table is m rows by construction (metadata-sized): it
     * collects to an m-element literal and scoring is a PURE MAP over
@@ -1211,8 +1204,8 @@ object TextOps {
     * ordered summation as the old per-(doc,bucket) sort_array fold
     * (one term per bucket, zero-count buckets contribute +0.0), so
     * the result is bit-identical at any parallelism. */
-  def dsirScoreWith(docs: DataFrame, idCol: String, textCol: String,
-      targetPred: Column, ratio: DataFrame, m: Int = 64): DataFrame = {
+  private def dsirScoreWith(docs: DataFrame, idCol: String, textCol: String,
+      targetPred: Column, ratio: DataFrame, m: Int): DataFrame = {
     val lrByBucket = ratio.select(col("__b").cast("int"), col("__lr"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val lrArr = (0 until m).map(b => lrByBucket.getOrElse(b, 0.0))

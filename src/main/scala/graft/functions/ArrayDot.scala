@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,16 +79,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       (exprs: Seq[Expression]) => ArrayDot(exprs(0), exprs(1))))
 }
 
-/** Registration + Column helpers for graft's native expressions. */
+/** Session registration of graft's native expressions. */
 object GraftFunctions {
   /** Register SQL-callable names on the session (idempotent). */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "array_dot", exprs => ArrayDot(exprs(0), exprs(1)), "scala_udf")
-
-  /** array_dot as a Column op (expression-based, codegen'd). */
-  def arrayDot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("array_dot", a, b)
-  }
 }

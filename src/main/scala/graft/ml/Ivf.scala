@@ -56,12 +56,11 @@ object Ivf {
       val model = new KMeans().setK(nlist).setSeed(seed)
         .setFeaturesCol("__f").setPredictionCol("centroid_id").fit(withVec)
       val centers = model.clusterCenters.map(_.toArray)
-      // assignment goes through assignWith's argmin — the SAME kernel
-      // the streaming ingest uses (VERDICT r9 #3d) — not MLlib's
-      // model.transform distance path, whose norm-trick rounding can
-      // diverge from the plain squared-distance fold on near-ties. One
-      // argmin means the batch index and the streamed state are
-      // row-identical BY CONSTRUCTION, not just on non-tied inputs.
+      // assignment goes through assignWith's argmin — the probe's own
+      // squared-distance fold — not MLlib's model.transform distance
+      // path, whose norm-trick rounding can diverge from the plain fold
+      // on near-ties. One argmin means a vector's cell is always the
+      // first cell its own nprobe = 1 probe reads.
       (assignWith(emb, idCol, vecCol, centers), centers)
     }
   }
@@ -88,11 +87,11 @@ object Ivf {
   }
 
   /** Bounded cell pruning shared by every probe join (plain, int8,
-    * PQ, streaming-state): materialize the probe side once, collect
+    * PQ): materialize the probe side once, collect
     * its distinct probed cell ids (query-sized, capped at
     * `maxPrunedCells`), and push them as an `isin` on the index side
-    * — bucket pruning over a bucketed state table, a pushed filter
-    * over parquet; untouched inverted lists are never read. Past the
+    * — partition pruning over a saved index ([[saveIndex]]), a pushed
+    * filter elsewhere; untouched inverted lists are never read. Past the
     * cap the filter is skipped and the equi-join alone confines the
     * pairing. Returns (materialized queries, pruned index); results
     * are identical with or without the filter — only I/O changes. */
@@ -109,28 +108,22 @@ object Ivf {
 
   /** The probe tail over an ALREADY-BUCKETED index frame
     * (idCol, vn, centroid_id) and its centers — shared by [[topK]]
-    * and the streaming-ingested index
-    * ([[graft.streaming.EventStreams.ivfTopKFromState]]).
+    * and [[topKFromSaved]].
     *
     * Reads only the probed inverted lists via [[pruneToCells]] —
     * an IVF probe that scans the whole index defeats the coarse
     * quantizer; the pruning changes I/O, never results. */
-  private[graft] def probeAndRank(bucketed: DataFrame, centers: Array[Array[Double]],
+  private def probeAndRank(bucketed: DataFrame, centers: Array[Array[Double]],
       idCol: String, queryPred: String, k: Int, nprobe: Int,
-      maxPrunedCells: Int = 4096, corpusPred: String = "true"): DataFrame = {
+      maxPrunedCells: Int = 4096): DataFrame = {
     val spark = bucketed.sparkSession
     GraftFunctions.register(spark)
     val probe = probeUdf(spark, centers, nprobe)
-    val (queries, index0) = pruneToCells(bucketed,
+    val (queries, index) = pruneToCells(bucketed,
       bucketed.filter(expr(queryPred))
         .select(col(idCol).as("q_id"), col("vn").as("qv"),
           explode(probe(col("vn"))).as("centroid_id")),
       maxPrunedCells)
-    // metadata pre-filter (the filteredTopK semantics over an
-    // arbitrary index frame, e.g. streamed state carrying attribute
-    // columns): composes with cell pruning INSIDE the index scan;
-    // queries above come from the UNfiltered frame
-    val index = index0.filter(expr(corpusPred))
     val scored = queries.join(index, "centroid_id")
       .filter(col("q_id") =!= col(idCol))
       .select(col("q_id"), col(idCol).as("n_id"),
@@ -179,20 +172,11 @@ object Ivf {
     }.reduce(_ unionAll _)
   }
 
-  /** The fitted coarse-quantizer centers for `emb` — the OFFLINE index
-    * artifact a streaming ingest freezes (nlist × dim doubles,
-    * metadata-sized). Rides the memoized [[indexed]] fit. */
-  def fittedCenters(emb: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, seed: Long = 42): Array[Array[Double]] =
-    indexed(emb, idCol, vecCol, nlist, seed)._2
-
-  /** Map-side assignment of vectors to FROZEN centers (nearest
-    * centroid = nprobe-1 probe over the broadcast center array): the
-    * incremental half of index maintenance — new vectors join the
-    * index without any re-fit, exactly how a production ANN index
-    * ingests. Output (idCol, vn, centroid_id) — [[indexed]]'s frame
-    * shape, so the probe tail is shared. */
-  private[graft] def assignWith(emb: DataFrame, idCol: String, vecCol: String,
+  /** Map-side assignment of vectors to fitted centers (nearest
+    * centroid = nprobe-1 probe over the broadcast center array).
+    * Output (idCol, vn, centroid_id) — [[indexed]]'s frame shape, so
+    * the probe tail is shared. */
+  private def assignWith(emb: DataFrame, idCol: String, vecCol: String,
       centers: Array[Array[Double]]): DataFrame = {
     val spark = emb.sparkSession
     GraftFunctions.register(spark)

@@ -97,8 +97,6 @@ object Imaging {
     }
   }
 
-  def resizeUdf = udf(resize)
-
   /** Fused imaging + area-resize kernel for the AE-substitute path:
     * series → RP/GAF matrix → size×size area average, computed per
     * output cell in one tight loop (never materializing the m×m

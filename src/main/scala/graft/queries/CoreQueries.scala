@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.SeriesOps
@@ -26,6 +27,31 @@ object CoreQueries {
     Memo.cached(s, "evser", Nil, dir) {
       SeriesOps.collectSeries(Tables.events(s, dir), "user_id", "value", "event_id")
     }
+
+  /** Events left-joined to a dimension table on `keyCol`. The dimension
+    * is broadcast, so the event side never shuffles; an event with no
+    * dimension row keeps its row with null dimension columns. */
+  private[graft] def enrichWithDim(events: DataFrame, dim: DataFrame,
+      keyCol: String): DataFrame =
+    events.join(broadcast(dim), Seq(keyCol), "left")
+
+  /** Each click joined to the same user's purchases in
+    * (click ts, click ts + `boundSeconds`]: (click_id, purchase_id,
+    * user_id, gap_s), gap_s in whole seconds. */
+  private[graft] def clickPurchaseIntervalJoin(events: DataFrame,
+      boundSeconds: Int): DataFrame = {
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+        col("ts").as("c_ts"))
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+        col("ts").as("p_ts"))
+    clicks.join(purchases,
+      expr(s"c_user = p_user AND p_ts > c_ts " +
+        s"AND p_ts <= c_ts + interval $boundSeconds seconds"))
+      .select(col("click_id"), col("purchase_id"), col("c_user").as("user_id"),
+        (unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts"))).as("gap_s"))
+  }
 
   val all: Seq[Q] = Seq(
 
@@ -970,18 +996,15 @@ object CoreQueries {
              |  UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3))
              |ORDER BY stage""".stripMargin)),
 
-    // Stream-static enrichment join, batch twin: events enriched with
-    // the customer market segment (user_id = c_custkey), rolled up per
-    // (segment, type). The streaming form is the same join
-    // (EventStreams.enrichWithDim, broadcast dim, stateless append);
-    // StreamingSpec asserts streaming == batch on a fixture.
+    // Dimension enrichment: events enriched with the customer market
+    // segment (user_id = c_custkey) through `enrichWithDim`, rolled
+    // up per (segment, type); events with no customer land in 'none'.
     Q("evt_static_enrich",
       (s, dir) => {
         val dim = Tables.customer(s, dir)
           .select(col("c_custkey").as("user_id"),
             col("c_mktsegment").as("segment"))
-        graft.streaming.EventStreams
-          .enrichWithDim(Tables.events(s, dir), dim, "user_id")
+        enrichWithDim(Tables.events(s, dir), dim, "user_id")
           .groupBy(coalesce(col("segment"), lit("none")).as("segment"),
             col("event_type"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_v"))
@@ -1284,8 +1307,7 @@ object CoreQueries {
              |FROM events, (SELECT unnest([0,1]) AS k)
              |GROUP BY 1 ORDER BY wstart_s""".stripMargin)),
 
-    // Gap-based session windows per user (batch twin of
-    // EventStreams.sessionCounts, same session_window() operator).
+    // Gap-based session windows per user (session_window()).
     // Spark merges an event into the open session iff ts < prev end
     // (= prev ts + gap, half-open), so the oracle's island break is
     // diff >= gap. Session end = last event + gap, like the operator.
@@ -1314,12 +1336,9 @@ object CoreQueries {
              |ORDER BY user_id, sess_start_s""".stripMargin)),
 
     // Event-time interval join (click → same-user purchases within 30
-    // minutes after). THE SAME code runs as a stream-stream join with
-    // watermark-bounded state (StreamingSpec asserts streaming ==
-    // batch); this batch twin is the oracle-checked form.
+    // minutes after), through `clickPurchaseIntervalJoin`.
     Q("evt_interval_join",
-      (s, dir) => graft.streaming.EventStreams.clickPurchaseIntervalJoin(
-          Tables.events(s, dir), "10 minutes", 1800)
+      (s, dir) => clickPurchaseIntervalJoin(Tables.events(s, dir), 1800)
         .orderBy("click_id", "purchase_id"),
       Some("""WITH c AS (SELECT event_id AS click_id, user_id, ts FROM events
              |           WHERE event_type = 'click'),

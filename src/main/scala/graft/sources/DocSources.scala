@@ -33,28 +33,20 @@ object DocSources {
   def readJsonl(spark: SparkSession, path: String): (DataFrame, DataFrame) =
     readJsonlAs(spark, path, docSchema, "doc_id")
 
-  /** The one parsing contract behind every JSONL entry point (batch
-    * path reads AND streaming ingest epochs): non-blank lines are
-    * parsed with the explicit schema; a line is clean iff it parses
-    * AND carries the id; everything else is quarantined with its raw
-    * text. `lines` must have a single string column of raw lines. */
-  def parseJsonlLines(lines: DataFrame, schema: StructType,
+  /** [[readJsonl]] generalized to any schema + id column: non-blank
+    * lines are parsed with the explicit schema (never inference: at
+    * 100 TB, schema inference is a second full corpus scan before the
+    * first real one); a line is clean iff it parses AND carries the id;
+    * everything else is quarantined with its raw text. */
+  def readJsonlAs(spark: SparkSession, path: String, schema: StructType,
       idCol: String): (DataFrame, DataFrame) = {
-    val parsed = lines.select(col(lines.columns.head).as("value"))
+    val parsed = spark.read.text(path)
       .filter(length(trim(col("value"))) > 0)
       .select(col("value"), from_json(col("value"), schema).as("j"))
     val ok = col("j").isNotNull && col(s"j.$idCol").isNotNull
     (parsed.filter(ok).select(col("j.*")),
       parsed.filter(!ok).select(col("value").as("raw_line")))
   }
-
-  /** [[readJsonl]] generalized to any schema + id column — the same
-    * text-scan + `from_json` quarantine contract (explicit schema,
-    * never inference: at 100 TB, schema inference is a second full
-    * corpus scan before the first real one). */
-  def readJsonlAs(spark: SparkSession, path: String, schema: StructType,
-      idCol: String): (DataFrame, DataFrame) =
-    parseJsonlLines(spark.read.text(path), schema, idCol)
 
   /** Corpus round-trip through JSONL: write `df` to a scratch dir,
     * read it back through the quarantine reader, return the read-back

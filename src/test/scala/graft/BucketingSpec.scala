@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Co-located joins via bucketing — the 100-TB join strategy the plan
@@ -105,85 +104,5 @@ class BucketingSpec extends SparkSpec {
     assert(viaTable.find(_._1 == 100L).get._2.contains(0L))
     assert(viaTable.find(_._1 == 105L).get._2.contains(104L))
     s.sql("DROP DATABASE pspec CASCADE")
-  }
-
-  test("streaming sem-dedup/IVF state is centroid-bucketed: probes never reshuffle the state side") {
-    import graft.streaming.EventStreams
-    import graft.ml.Ivf
-    val wh = new java.io.File(tempDir("graft-semstate"))
-    wh.deleteOnExit()
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    s.sql(s"CREATE DATABASE IF NOT EXISTS sbspec LOCATION '${wh.getAbsolutePath}/sbspec'")
-    import s.implicits._
-
-    def vec(id: Long): Seq[Double] = {
-      val r = math.toRadians((id * 7 % 360).toDouble)
-      Seq(math.cos(r), math.sin(r))
-    }
-    val rows = (0L until 60L).map(id => (id, vec(id)))
-    val centers = Ivf.fittedCenters(
-      rows.toDF("vec_id", "embedding"), "vec_id", "embedding", 4)
-    val slices = rows.grouped(20).toSeq
-    slices.zipWithIndex.foreach { case (sl, i) =>
-      EventStreams.semDedupEpoch(sl.toDF("vec_id", "embedding"), i.toLong,
-        "vec_id", "embedding", centers, 0.9999, "sbspec.sem_state", 4)
-      EventStreams.ivfEpoch(sl.toDF("vec_id", "embedding"), i.toLong,
-        "vec_id", "embedding", centers, "sbspec.ivf_state", 4)
-    }
-    // structural pin — the epoch's prior-state probe shape: micro-batch
-    // joined to the ACCUMULATED state on centroid_id. The state table is
-    // bucketed on that key, so only the batch side may shuffle.
-    val batch = Ivf.assignWith(slices.last.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", centers).localCheckpoint()
-    def probeOf(state: org.apache.spark.sql.DataFrame) = batch.join(
-      state.filter(col("batch_id") < 2)
-        .select(col("vec_id").as("__pid"), col("vn").as("__pvn"),
-          col("centroid_id")),
-      Seq("centroid_id"))
-    assert(shuffleCount(probeOf(s.table("sbspec.sem_state"))) == 1,
-      "sem-dedup probe must shuffle only the micro-batch side")
-    assert(shuffleCount(probeOf(s.table("sbspec.ivf_state"))) == 1,
-      "IVF cell probe must shuffle only the query side")
-    // control: the same state read BY PATH loses the bucket metadata
-    // and the join reshuffles the whole accumulated state
-    val semLoc = s.sql("DESCRIBE TABLE EXTENDED sbspec.sem_state")
-      .filter($"col_name" === "Location").select("data_type").as[String].head()
-    assert(shuffleCount(probeOf(s.read.parquet(semLoc))) == 2,
-      "control: a path read of the state should shuffle both sides")
-    // cell pruning: an IVF probe over the state must READ only the
-    // probed cells — the isin pushdown becomes bucket pruning
-    // (SelectedBucketsCount below total on the index-side scan)
-    val probedTopK = EventStreams.ivfTopKFromState(s, "sbspec.ivf_state",
-      "vec_id", centers, "vec_id < 1", 3, 1)
-    probedTopK.collect()
-    val scanCounts = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findAllMatchIn(probedTopK.queryExecution.executedPlan.toString)
-      .map(m => (m.group(1).toInt, m.group(2).toInt)).toSeq
-    assert(scanCounts.exists { case (sel, tot) => sel < tot },
-      s"IVF probe must bucket-prune to the probed cells, scans=$scanCounts")
-    // epoch replay stayed idempotent under insertInto (dynamic overwrite)
-    val n0 = s.table("sbspec.sem_state").count()
-    EventStreams.semDedupEpoch(slices.last.toDF("vec_id", "embedding"),
-      (slices.size - 1).toLong, "vec_id", "embedding", centers, 0.9999,
-      "sbspec.sem_state", 4)
-    assert(s.table("sbspec.sem_state").count() == n0)
-    // maintenance compaction: fold epochs ≤ 1 into one partition —
-    // rows identical, partition count drops, the zero-Exchange probe
-    // pin STILL holds (bucketing survives the staging-table swap)
-    val before = s.table("sbspec.sem_state")
-      .orderBy("vec_id").collect().map(r =>
-        (r.getAs[Long]("vec_id"), r.getAs[Boolean]("keep"))).toSeq
-    EventStreams.compactEpochState(s, "sbspec.sem_state", 1L, 4)
-    val after = s.table("sbspec.sem_state")
-      .orderBy("vec_id").collect().map(r =>
-        (r.getAs[Long]("vec_id"), r.getAs[Boolean]("keep"))).toSeq
-    assert(after == before, "compaction must not change state rows")
-    val parts = s.table("sbspec.sem_state")
-      .select("batch_id").distinct().as[Long].collect().sorted.toSeq
-    assert(parts == Seq(1L, 2L), s"epochs 0-1 must fold into 1, got $parts")
-    assert(shuffleCount(probeOf(s.table("sbspec.sem_state"))) == 1,
-      "probe must stay shuffle-free on the state side after compaction")
-    s.sql("DROP DATABASE sbspec CASCADE")
   }
 }

@@ -951,6 +951,20 @@ class MultimodalSourcesSpec extends SparkSpec {
     assert(back.columns.toSeq == Seq("id", "v"))
   }
 
+  test("path-derived CSV sink writes a headed CSV beside the source file (K3)") {
+    val dir = tempDir("graftk3")
+    val source = java.nio.file.Paths.get(dir, "series.csv")
+    Files.write(source, "p,v\nx,1.5\n".getBytes("UTF-8"))
+    val df = Seq((1L, 2.5), (2L, 3.5)).toDF("id", "v")
+    CsvSeries.writeBesideSource(df, source.toString, "clusters")
+    val out = new java.io.File(dir, "clusters")
+    val parts = out.listFiles().filter(f => f.getName.endsWith(".csv") && f.length > 0)
+    assert(parts.nonEmpty, s"no CSV part files in $out")
+    assert(parts.forall(f => Files.readAllLines(f.toPath).get(0) == "id,v"))
+    val back = spark.read.option("header", "true").schema(df.schema).csv(out.toString)
+    assert(back.as[(Long, Double)].collect().sorted.toSeq == Seq((1L, 2.5), (2L, 3.5)))
+  }
+
   // ---- ImageIoFast: the r18 plumbing-removal layer must be invisible
   // in the bytes and pixels (cached codec instances + array-backed
   // streams vs the per-call registry/MemoryCache composite it replaced)

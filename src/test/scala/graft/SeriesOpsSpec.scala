@@ -281,6 +281,29 @@ class SeriesOpsSpec extends SparkSpec {
     assert(out == Seq((1L, "view", 3L), (2L, "click", 2L), (3L, "purchase", 2L)))
   }
 
+  test("clickPurchaseIntervalJoin: only same-user purchases in (click, click + bound]") {
+    import java.sql.Timestamp
+    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
+    val ev = Seq(
+      (1L, 1L, ts(0), "click"), (2L, 1L, ts(10), "purchase"), // in bound (10m ≤ 30m)
+      (3L, 1L, ts(45), "purchase"),                           // out of bound for click 1
+      (4L, 2L, ts(5), "click"), (5L, 2L, ts(4), "purchase"),  // purchase BEFORE click: excluded
+      (6L, 3L, ts(7), "click")                                // user with no purchase
+    ).toDF("event_id", "user_id", "ts", "event_type")
+    val out = graft.queries.CoreQueries.clickPurchaseIntervalJoin(ev, 1800)
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(out == Set((1L, 2L, 1L, 600L)))
+  }
+
+  test("enrichWithDim: a left join that keeps unmatched keys with a null segment") {
+    val ev = Seq((1L, 1.0), (1L, 2.0), (2L, 3.0)).toDF("user_id", "value")
+    val dim = Seq((1L, "gold"), (9L, "silver")).toDF("user_id", "segment") // user 2 unmatched
+    val out = graft.queries.CoreQueries.enrichWithDim(ev, dim, "user_id")
+      .select("user_id", "value", "segment")
+      .as[(Long, Double, Option[String])].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(out == Seq((1L, 1.0, Some("gold")), (1L, 2.0, Some("gold")), (2L, 3.0, None)))
+  }
+
   test("matrixProfile: planted repeated shape is the motif, planted spike window is the discord") {
     // 48 points of a pure period-8 sawtooth: every clean window has
     // an EXACT twin 8 positions away (just outside the exclusion

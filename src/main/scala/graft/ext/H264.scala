@@ -1,181 +1,62 @@
 package graft.ext
 
 /** H.264/AVC (ITU-T Rec. H.264 / ISO-IEC 14496-10, public spec)
-  * INTRA-frame codec — the round-12 second narrowing of the
-  * predictive-codec fence (VERDICT r11 "what's missing" #3): after
-  * [[Mpeg1]] covered the classic-codec intra path, this covers the
-  * MODERN 'avc1' 4cc for the macroblock families a pure-JVM decoder
-  * can be exactly right about. Reference behavior: the reference app
+  * decoder for the CAVLC I/P tier, plus the fixture encoder that
+  * produces its test streams. Reference behavior: the reference app
   * never decodes video at all (app.py has no video path); this tier
-  * exists for the 100-TB curation pipeline, where avc1 is the single
-  * most common payload codec.
+  * serves the curation pipeline's per-frame luma consumers (scene
+  * cuts, dHash/pHash), where avc1 is the most common payload codec.
   *
   * Decoded for real (bit-exact per the spec):
   *  - NAL syntax: Annex-B start-code streams AND pre-split NAL lists
   *    (the avcC length-prefixed form), emulation-prevention removal,
-  *    Exp-Golomb ue(v)/se(v).
-  *  - SPS/PPS/IDR-slice headers (baseline/main/extended profiles,
-  *    frame_mbs_only, CAVLC entropy, single slice group).
-  *  - I_PCM macroblocks (raw samples — always exact).
-  *  - Intra_16x16 macroblocks: all four prediction modes (V/H/DC/
-  *    Plane, 8.3.3), CAVLC residuals through the ALGORITHMIC parts of
-  *    9.2 (level prefix/suffix with suffixLength adaptation, the
-  *    nC >= 8 fixed-length coeff_token) plus the short-code coeff
-  *    token / total_zeros / run_before entries reproduced from the
-  *    spec tables, integer dequant (8.5.9-12, flat weight scale),
-  *    inverse 4x4 DC Hadamard and the 4x4 core transform.
+  *    Exp-Golomb ue(v)/se(v); parameter sets selected by id.
+  *  - I slices: I_PCM (raw samples), Intra_16x16 (all four modes,
+  *    8.3.3) and Intra_4x4 (all nine modes, 8.3.1.2, with the 8.3.1.1
+  *    mode prediction). CAVLC residuals through the ALGORITHMIC parts
+  *    of 9.2 (level prefix/suffix with suffixLength adaptation, the
+  *    nC >= 8 fixed-length coeff_token) plus the short-code
+  *    coeff_token / total_zeros / run_before entries reproduced from
+  *    the spec tables; flat-weight dequant (8.5.9-12), the 4x4 DC
+  *    Hadamard and the 4x4 core transform.
+  *  - P slices: every partition shape (P_L0_16x16, 16x8 and 8x16 with
+  *    their 8.4.1.3 directional predictors, P_8x8 / P_8x8ref0 with
+  *    all four sub_mb_types), P_Skip (8.4.1.1), quarter-pel luma and
+  *    eighth-pel chroma MC, inter residuals, intra refresh, and
+  *    EXPLICIT WEIGHTED prediction (luma and chroma, 8.4.2.3.2).
+  *  - Reference management: a sliding-window DPB sized by
+  *    max_num_ref_frames, multi-reference list 0, explicit list
+  *    reordering (8.2.4.3, short- and long-term ops), the full MMCO
+  *    set (8.2.5.4 ops 1-6) with long-term references, and the IDR
+  *    long_term_reference_flag. Only reference pictures enter the
+  *    DPB; a frame_num gap degrades.
+  *  - Multi-slice pictures: slices decode in order into one picture
+  *    state, with prediction availability gated to the slice; an
+  *    incompletely covered picture never emits.
+  *  - In-loop deblocking (8.7): luma and chroma filters, bS per
+  *    8.7.2.1, Table 8-16/8-17 thresholds, slice alpha/beta offsets,
+  *    disable_deblocking_filter_idc 0/1/2, I_PCM's qp-0 rule.
+  *  - 4:2:0 chroma: intra prediction (8.3.4), the 2x2 DC transform +
+  *    QPc dequant, I_PCM chroma samples and chroma deblocking;
+  *    [[decodeFramesYuv]] exposes the planes.
   *
-  * Honesty bounds, all degrade-to-None (the caller falls back to the
-  * byte-histogram fence, never a WRONG decode — the [[Mpeg1]]
-  * discipline):
-  *  - I and P slices. Round 13 widened P from the old
-  *    single-16x16-cbp0 subset to the profile's full P toolset:
-  *    EVERY partition shape (P_L0_16x16, P_L0_L0_16x8 / 8x16 with
-  *    their 8.4.1.3 directional predictor rules, P_8x8 / P_8x8ref0
-  *    with all four sub_mb_types 8x8/8x4/4x8/4x4 — motion state is
-  *    tracked per 4x4 cell so later partitions of the same macroblock
-  *    predict from earlier ones), MULTI-REFERENCE list 0 (sliding
-  *    window sized by max_num_ref_frames, te(v) ref_idx_l0 per
-  *    partition, refIdx-aware prediction shortcuts, IDR window reset),
-  *    INTER RESIDUALS
-  *    (coded_block_pattern through Table 9-4's inter column,
-  *    mb_qp_delta, per-8x8-gated 4x4 CAVLC luma residuals dequantized
-  *    straight onto the quarter-pel prediction), P_Skip (8.4.1.1),
-  *    and intra refresh (Intra_16x16 or Intra_4x4), plus EXPLICIT
-  *    round 14: EXPLICIT LIST REORDERING (8.2.4.3.1 over PicNum and,
-  *    round 15, long_term_pic_num), the FULL MMCO SET (8.2.5.4 ops
-  *    1-6, round 15: short/long-term unmarking, short-to-long
-  *    conversion, MaxLongTermFrameIdx eviction, the mmco5
-  *    all-unused + frame_num/POC re-base, current-picture long-term
-  *    marking, the IDR long_term_reference_flag) with LONG-TERM
-  *    REFERENCES as first-class DPB entries (they never slide out,
-  *    join P lists after the short-term window and B lists after the
-  *    POC-ordered part, are excluded from PicNum derivations, force
-  *    implicit-bipred 32/32 and colZeroFlag 0), and POC TYPE 1
-  *    (8.2.1.2, round 15: the frame_num cycle with
-  *    offset_for_ref_frame / offset_for_non_ref_pic and the
-  *    FrameNumOffset decode-order chain, mmco5-aware),
-  *    EXPLICIT WEIGHTED PREDICTION (7.3.3.2 luma weights/offsets per ref,
-  *    8.4.2.3.2 single-list application; chroma weights parsed for
-  *    sync) and MULTI-SLICE pictures (in-order slices decode into one
-  *    per-picture state with prediction availability gated to the
-  *    slice; the loop filter honors each slice's own idc/offsets and
-  *    idc 2's cross-slice-boundary exemption; an incompletely covered
-  *    picture never emits). ROUND 16 — High profile decodes:
-  *    SCALING MATRICES (seq + pic with the Table 7-2 fall-back
-  *    rules, threaded through every dequant chain), Intra_8x8
-  *    (8.3.2 filtered-reference prediction, the 8x8 scan/dequant/
-  *    inverse transform) under CAVLC AND CABAC (ctx 399-401 +
-  *    ctxBlockCat 5), INTER 8x8-transform residuals under CAVLC,
-  *    and the deblocking edge-set interaction. Still degrading:
-  *    CABAC P/B slices under a transform_8x8 PPS (slice-entry
-  *    fence), FMO/ASO, field coding (PicAFF/MBAFF — see the field
-  *    triage note below), >8-bit, non-4:2:0.
-  *
-  *  - FIELD-CODING TRIAGE (round 16, VERDICT r15 #8): the fence
-  *    STAYS, decided rather than deferred. Basis: (a) this container
-  *    is offline, so the asked-for wild-corpus frequency sample
-  *    cannot be measured here — the claim below is the decision
-  *    input a connected round should re-verify; (b) interlaced
-  *    coding exists for interlaced CONTENT, which in practice means
-  *    broadcast-era material: every consumer capture pipeline of the
-  *    last decade (phones, webcams, screen capture) and every major
-  *    web delivery path emits progressive streams, so a
-  *    training-data corpus drawn from web video encounters
-  *    frame_mbs_only_flag = 0 in a small tail dominated by TV
-  *    archive uploads; (c) the cost side is outsized — MBAFF
-  *    restructures NEIGHBOR DERIVATION globally (every ctxIdxInc,
-  *    mode predictor, nC and deblock rule gains frame/field
-  *    variants; the spec dedicates clause 6.4.10 to it), the
-  *    opposite of a contained feature. The degrade is clean and
-  *    self-labeling: frame_mbs_only_flag = 0 fails at the SPS, so a
-  *    field-coded stream costs a `decoded = false` histogram row,
-  *    never a wrong pixel. If a future corpus sample contradicts
-  *    (b), PicAFF (field PICTURES: POC/DPB pairing, no per-MB
-  *    adaptivity) is the first tier to lift — it reuses the frame
-  *    MB layer unchanged.
-  *  - B slices (round 14 two-list; round 15 direct): every Table 7-14
-  *    mb_type including B_Skip / B_Direct_16x16 / B_8x8 (all Table
-  *    7-18 sub_mb_types) through BOTH direct modes — SPATIAL
-  *    (8.4.1.2.2: MinPositive refIdx over the MB neighbors, median
-  *    motion, per-block colZeroFlag against the colocated picture's
-  *    stored motion field, direct_8x8_inference corner sampling) and
-  *    TEMPORAL (8.4.1.2.3: colocated motion scaled by the
-  *    DistScaleFactor POC chain, the referenced picture resolved
-  *    across window shifts by a stable serial, intra colocated
-  *    blocks reading as zero against the colocated picture's own
-  *    RefPicList0[0], evicted references degrading) — POC-derived
-  *    default list construction (8.2.4.2.3 over the sliding-window
-  *    DPB; all three pocTypes since round 15),
-  *    rounded-average bipred (8.4.2.3.1), explicit weighted bipred
-  *    idc 1 (8.4.2.3.2, single-list and two-sided) AND implicit idc 2
-  *    (POC-distance DistScaleFactor weights), per-list 8.4.1.3 motion
-  *    prediction over separate L0/L1 contexts, inter residuals, intra
-  *    refresh, non-reference and reference B (pyramid), DEBLOCKED
-  *    B slices (the full 8.7.2.1 two-list bS rules by DPB picture
-  *    identity with the straight/crossed pairing), and the
-  *    bottom-field POC delta (frame PicOrderCnt = Min(top, bottom)).
-  *  - CABAC I slices (round 14, VERDICT r13 #1): the full 9.3
-  *    arithmetic engine ([[H264Cabac]]) with context-modeled mb_type
-  *    (incl. the ctx-276 I_PCM escape with engine re-init),
-  *    intra pred modes, coded_block_pattern, mb_qp_delta,
-  *    coded_block_flag / significance map / UEG0 levels across block
-  *    categories 0-4, end_of_slice termination, multi-slice pictures,
-  *    and a strict phantom-bit guard (a truncated slice can never
-  *    emit). Reconstruction is SHARED with the CAVLC walk
-  *    ([[reconI16]]/[[reconI4]]), and the fixture encoder
-  *    ([[idrNalCabac]]) drives the decoder's own ctxIdxInc helpers,
-  *    so entropy-layer correctness is pinned by CAVLC-vs-CABAC pixel
-  *    equality.
-  *  - CABAC P/B slices (round 15, VERDICT r14 #1): the full inter
-  *    syntax layer — mb_skip_flag (9.3.3.1.1.1), the mb_type P/B
-  *    trees with the direct-neighbor bin-0 context (9.3.3.1.1.3),
-  *    sub_mb_type, unary ref_idx with the refIdx-zero neighbor term
-  *    (9.3.3.1.1.6), UEG3 mvds with per-cell |mvd| context
-  *    accumulation (9.3.3.1.1.7), inter coded_block_pattern and the
-  *    inter coded_block_flag availability rule (9.3.3.1.1.9) — routed
-  *    through the SAME reconstruction closures as the CAVLC walk
-  *    (direct motion, weighted/implicit bipred, the loop filter) and
-  *    the shared intra tails. cabac_init_idc selects among
-  *    [[H264Cabac.InitPB]]'s three columns — see that constant's
-  *    GRADED provenance note: the inter-syntax ranges are confident
-  *    transcriptions and, since round 16, the residual ranges are
-  *    TRANSCRIBED per-idc columns too (the former I-column stand-in
-  *    is gone; round 16 likewise corrected InitI's residual ranges,
-  *    which rounds 14-15 had filled with the idc-0 column by
-  *    mistake). Every local gate (round-trip, CAVLC-vs-CABAC
-  *    equality, the DuckDB oracle) is exact by construction; the
-  *    remaining wild-stream bound is the per-column confidence
-  *    grading at the definition site.
-  *  - Intra_4x4 (I_NxN, round 13 — VERDICT r12 #2): all nine 4x4
-  *    prediction modes (8.3.1.2.1-9) with the spec's neighbor
-  *    availability and p[x,-1] x=4..7 substitution rules, the 8.3.1.1
-  *    min(A,B) mode prediction, and the Table 9-4 intra
-  *    coded_block_pattern mapping.
-  *  - In-loop deblocking (8.7, round 13; chroma round 14): luma AND
-  *    chroma filters applied for real — per-MB raster order, vertical
-  *    then horizontal edges, bS derivation 8.7.2.1 (intra/coeffs/mv
-  *    rules for the decoded subset), Table 8-16 alpha/beta and Table
-  *    8-17 tC0, slice alpha/beta offsets, I_PCM's qp-0 rule; chroma
-  *    edges at every other luma edge with QPc-derived thresholds and
-  *    the p0/q0-only 8.7.2.4 filters. Slices with
-  *    disable_deblocking_filter_idc = 1 skip it, as before; idc 0/2
-  *    now decode (single-slice streams: 2 has no cross-slice edges
-  *    to exempt).
+  * The fence. Everything else degrades: the walk stops and keeps the
+  * frames decoded so far, so a caller falls back to the byte-histogram
+  * path and never sees a WRONG frame.
+  *  - A High-profile SPS (`HighProfiles`) is refused, as is any SPS
+  *    with field coding (frame_mbs_only_flag = 0).
+  *  - A PPS that selects CABAC (entropy_coding_mode_flag = 1), carries
+  *    the High tail (transform_8x8_mode, scaling matrices, a second
+  *    chroma QP offset) or uses slice groups is refused.
+  *  - A slice that references a refused parameter set, or a B slice
+  *    (slice_type 1 or 6), returns None.
   *  - VLC tables are PARTIAL: only the table entries this file is
-  *    certain of are present (the fixed-length nC >= 8 code is
-  *    complete by construction); an unlisted code returns None rather
-  *    than risking a misremembered table row. [[encodeIFrame]] emits
-  *    only listed codes, so fixture streams are fully decodable.
-  *
-  * CHROMA is RECONSTRUCTED for real since round 14 (VERDICT r13 #3):
-  * intra prediction 8.3.4 (per-4x4 DC edge rules, H/V/Plane), the
-  * 2x2 DC transform + QPc dequant chain (8.5.8/8.5.11, both PPS
-  * chroma QP offsets), eighth-pel bilinear inter MC (8.4.2.2.2)
-  * across P and B including weighted/bipred with the chroma weight
-  * tables, I_PCM chroma samples, and chroma deblocking —
-  * [[decodeFramesYuv]] exposes the full 4:2:0 planes, and the luma
-  * APIs are unchanged. */
+  *    certain of are present; an unlisted code returns None rather
+  *    than risking a misremembered table row. [[encodeIFrame]] and
+  *    [[pNal]] emit only listed codes, so fixture streams are fully
+  *    decodable.
+  *  - Constrained intra prediction in a P slice, >8-bit and non-4:2:0
+  *    streams degrade too. */
 object H264 {
 
   /** 4x4 zigzag: scan index -> raster index (8.5.6 / figure 8-8). */
@@ -193,84 +74,6 @@ object H264 {
     if ((r & 1) == 0 && (c & 1) == 0) 0
     else if ((r & 1) == 1 && (c & 1) == 1) 1
     else 2
-  }
-
-  /** 8x8 zigzag (frame) scan: scan index -> raster (8.5.8, Fig 8-9 —
-    * the classic 8x8 zigzag). */
-  private val Zig8: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
-  /** normAdjust8x8 (8.5.9 Table, qp%6 x position class 0-5). */
-  private val NormAdjust8: Array[Array[Int]] = Array(
-    Array(20, 18, 32, 19, 25, 24), Array(22, 19, 35, 21, 28, 26),
-    Array(26, 23, 42, 24, 33, 31), Array(28, 25, 45, 26, 35, 33),
-    Array(32, 28, 51, 30, 40, 38), Array(36, 32, 58, 34, 46, 43))
-
-  /** 8.5.9's six 8x8 position classes by (i%4, j%4) pattern. */
-  private def posClass8(raster: Int): Int = {
-    val i = raster >> 3; val j = raster & 7
-    if ((i & 3) == 0 && (j & 3) == 0) 0
-    else if ((i & 1) == 1 && (j & 1) == 1) 1
-    else if ((i & 3) == 2 && (j & 3) == 2) 2
-    else if (((i & 3) == 0 && (j & 1) == 1) || ((i & 1) == 1 && (j & 3) == 0)) 3
-    else if (((i & 3) == 0 && (j & 3) == 2) || ((i & 3) == 2 && (j & 3) == 0)) 4
-    else 5
-  }
-
-  // Default scaling lists (Tables 7-3 / 7-4), SCAN order as printed
-  // in the spec (round 16, High profile).
-  private val Def4Intra: Array[Int] = Array(
-    6, 13, 13, 20, 20, 20, 28, 28, 28, 28, 32, 32, 32, 37, 37, 42)
-  private val Def4Inter: Array[Int] = Array(
-    10, 14, 14, 20, 20, 20, 24, 24, 24, 24, 27, 27, 27, 30, 30, 34)
-  private val Def8Intra: Array[Int] = Array(
-    6, 10, 10, 13, 11, 13, 16, 16, 16, 16, 18, 18, 18, 18, 18, 23,
-    23, 23, 23, 23, 23, 25, 25, 25, 25, 25, 25, 25, 27, 27, 27, 27,
-    27, 27, 27, 27, 29, 29, 29, 29, 29, 29, 29, 29, 31, 31, 31, 31,
-    31, 31, 31, 33, 33, 33, 33, 33, 33, 36, 36, 36, 36, 38, 38, 40)
-  private val Def8Inter: Array[Int] = Array(
-    9, 13, 13, 15, 13, 15, 17, 17, 17, 17, 19, 19, 19, 19, 19, 21,
-    21, 21, 21, 21, 21, 22, 22, 22, 22, 22, 22, 22, 24, 24, 24, 24,
-    24, 24, 24, 24, 25, 25, 25, 25, 25, 25, 25, 25, 27, 27, 27, 27,
-    27, 27, 27, 28, 28, 28, 28, 28, 28, 30, 30, 30, 30, 32, 32, 33)
-
-  /** Flat (weight 16) lists: the Main-profile / matrix-absent case. */
-  private val Flat4: Array[Int] = Array.fill(16)(16)
-  private val Flat8: Array[Int] = Array.fill(64)(16)
-  private val FlatW4: Array[Array[Int]] = Array.fill(6)(Flat4)
-  private val FlatW8: Array[Array[Int]] = Array.fill(2)(Flat8)
-
-  /** Scan-order values -> raster-order weight matrix. */
-  private def scanToRaster(scanVals: Array[Int], zig: Array[Int]): Array[Int] = {
-    val out = new Array[Int](zig.length)
-    var j = 0
-    while (j < zig.length) { out(zig(j)) = scanVals(j); j += 1 }
-    out
-  }
-
-  /** scaling_list() (7.3.2.1.1.1). Returns raster-order weights, or
-    * null for UseDefaultScalingMatrix (a first delta that lands
-    * nextScale on 0). */
-  private def parseScalingList(br: BitReader, zig: Array[Int]): Array[Int] = {
-    val out = new Array[Int](zig.length)
-    var lastScale = 8
-    var nextScale = 8
-    var j = 0
-    while (j < zig.length) {
-      if (nextScale != 0) {
-        val delta = br.se()
-        nextScale = ((lastScale + delta) % 256 + 256) % 256
-        if (j == 0 && nextScale == 0) return null
-      }
-      val v = if (nextScale == 0) lastScale else nextScale
-      out(zig(j)) = v
-      lastScale = v
-      j += 1
-    }
-    out
   }
 
   /** Table 9-4: codeNum -> coded_block_pattern for Intra_4x4
@@ -454,93 +257,37 @@ object H264 {
     * picture enters the DPB long-term at this index. */
   private final case class MmcoCurLong(lt: Int) extends Mmco
 
-  /** One DPB entry: luma + both chroma planes (round 14). Round 15
-    * adds the picture's own motion field for the spatial-direct
-    * colZeroFlag read (8.4.1.2.2): per 4x4 cell, the L0 (falling back
-    * to L1) refIdx as decoded in THAT picture (-1 = intra/none) and
-    * the quarter-pel vector. */
+  /** One DPB entry: luma + both chroma planes. */
   private final case class RefPic(y: Array[Int], cb: Array[Int],
-      cr: Array[Int], colRef: Array[Int] = null,
-      colMvx: Array[Int] = null, colMvy: Array[Int] = null,
-      serial: Int = -1, colRefSerial: Array[Int] = null,
-      firstL0Serial: Int = -1)
+      cr: Array[Int])
 
   private final case class Sps(
       id: Int, mbW: Int, mbH: Int,
       cropL: Int, cropR: Int, cropT: Int, cropB: Int,
       log2MaxFrameNum: Int, pocType: Int, log2MaxPocLsb: Int,
-      deltaPocAlwaysZero: Boolean, maxRefFrames: Int,
-      direct8x8: Boolean = true,
-      offsetNonRef: Int = 0, offsetTopBottom: Int = 0,
-      offsetsForRef: IndexedSeq[Int] = IndexedSeq.empty,
-      /** seq scaling matrix, fall-back rule A resolved at parse time
-        * (round 16): 6 raster 4x4 lists + 2 raster 8x8 lists; null =
-        * seq_scaling_matrix_present_flag == 0 (flat 16). */
-      scalW4: Array[Array[Int]] = null,
-      scalW8: Array[Array[Int]] = null)
+      deltaPocAlwaysZero: Boolean, maxRefFrames: Int)
 
   private final case class Pps(
       id: Int, spsId: Int,
       picInitQp: Int, deblockPresent: Boolean, redundantPresent: Boolean,
       bottomFieldPoc: Boolean, numRefIdxL0Default: Int,
       weightedPred: Boolean, constrainedIntra: Boolean,
-      cabac: Boolean, numRefIdxL1Default: Int, weightedBipredIdc: Int,
-      chromaQpOff: Int, chromaQpOff2: Int,
-      /** round 16 (High profile): transform_8x8_mode_flag plus the
-        * pic scaling matrix — per-index parsed raster lists with null
-        * = "fall back" (rule B, resolved against the SPS at slice
-        * decode); picL4/picL8 are themselves null when
-        * pic_scaling_matrix_present_flag == 0. */
-      transform8x8: Boolean = false,
-      picL4: Array[Array[Int]] = null,
-      picL8: Array[Array[Int]] = null)
+      chromaQpOff: Int)
 
-  /** Profiles whose SPS carries the chroma/bit-depth/scaling block. */
+  /** Profiles whose SPS carries the chroma/bit-depth/scaling block
+    * (High and above). Their tools (scaling matrices, the 8x8
+    * transform) are outside the decoded tier, so such an SPS is
+    * refused. */
   private val HighProfiles =
     Set(100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135)
 
   private def parseSps(rbsp: Array[Byte]): Sps = {
     val br = new BitReader(rbsp)
     val profile = br.bits(8)
+    if (HighProfiles.contains(profile)) throw ParseFail
     br.bits(8) // constraint flags + reserved
     br.bits(8) // level_idc
     val spsId = br.ue()
-    var scalW4: Array[Array[Int]] = null
-    var scalW8: Array[Array[Int]] = null
-    if (HighProfiles.contains(profile)) {
-      val chromaFormat = br.ue()
-      if (chromaFormat != 1) throw ParseFail // 4:2:0 only
-      if (br.ue() != 0) throw ParseFail // bit_depth_luma_minus8
-      if (br.ue() != 0) throw ParseFail // bit_depth_chroma_minus8
-      br.bit() // qpprime_y_zero_transform_bypass
-      if (br.bit() == 1) { // seq_scaling_matrix_present (round 16)
-        // fall-back rule A (Table 7-2): absent anchor lists (0, 3,
-        // 6, 7) and UseDefaultScalingMatrix lists take the DEFAULT
-        // (non-flat!) list; absent non-anchors take the previous
-        // resolved list
-        val l4 = new Array[Array[Int]](6)
-        var i = 0
-        while (i < 6) {
-          val parsed = if (br.bit() == 1) parseScalingList(br, Zig4)
-            else { if (i == 0 || i == 3) null else l4(i - 1) }
-          l4(i) =
-            if (parsed != null) parsed
-            else if (i < 3) scanToRaster(Def4Intra, Zig4)
-            else scanToRaster(Def4Inter, Zig4)
-          i += 1
-        }
-        val l8 = new Array[Array[Int]](2)
-        i = 0
-        while (i < 2) {
-          val parsed = if (br.bit() == 1) parseScalingList(br, Zig8) else null
-          l8(i) = if (parsed != null) parsed
-            else scanToRaster(if (i == 0) Def8Intra else Def8Inter, Zig8)
-          i += 1
-        }
-        scalW4 = l4
-        scalW8 = l8
-      }
-    }
     val log2MaxFrameNum = br.ue() + 4
     if (log2MaxFrameNum > 16) throw ParseFail // spec bound (7.4.2.1)
     val pocType = br.ue()
@@ -550,16 +297,15 @@ object H264 {
       log2MaxPocLsb = br.ue() + 4
       if (log2MaxPocLsb > 16) throw ParseFail
     }
-    var offsetNonRef = 0
-    var offsetTopBottom = 0
-    var offsetsForRef: IndexedSeq[Int] = IndexedSeq.empty
-    if (pocType == 1) { // 8.2.1.2 cycle parameters (round 15)
+    if (pocType == 1) { // 8.2.1.2 cycle parameters: parsed, unused —
+      // picture order only orders B-slice lists, which are refused
       deltaPocAlwaysZero = br.bit() == 1
-      offsetNonRef = br.se()
-      offsetTopBottom = br.se()
+      br.se() // offset_for_non_ref_pic
+      br.se() // offset_for_top_to_bottom_field
       val n = br.ue()
       if (n > 255) throw ParseFail
-      offsetsForRef = IndexedSeq.fill(n)(br.se())
+      var i = 0
+      while (i < n) { br.se(); i += 1 } // offset_for_ref_frame
     } else if (pocType != 0 && pocType != 2) throw ParseFail
     val maxRefFrames = br.ue() // sliding-window DPB capacity
     if (maxRefFrames > 16) throw ParseFail // spec bound (7.4.2.1.1)
@@ -567,8 +313,7 @@ object H264 {
     val mbW = br.ue() + 1
     val mbH = br.ue() + 1
     if (br.bit() != 1) throw ParseFail // frame_mbs_only required
-    val direct8x8 = br.bit() == 1 // colZero sampling granularity
-    // (8.4.1.2.2: corner 4x4 per 8x8 when set, per 4x4 otherwise)
+    br.bit() // direct_8x8_inference (B-slice direct modes only)
     var cl = 0; var cr = 0; var ct = 0; var cb = 0
     if (br.bit() == 1) { cl = br.ue(); cr = br.ue(); ct = br.ue(); cb = br.ue() }
     // vui ignored (everything needed is parsed)
@@ -576,112 +321,35 @@ object H264 {
     // a crafted ue(v) frame size must cost a degrade, not a task OOM
     if (mbW <= 0 || mbH <= 0 || mbW.toLong * mbH > 32768L) throw ParseFail
     Sps(spsId, mbW, mbH, cl, cr, ct, cb, log2MaxFrameNum, pocType,
-      log2MaxPocLsb, deltaPocAlwaysZero, math.max(1, maxRefFrames),
-      direct8x8, offsetNonRef, offsetTopBottom, offsetsForRef,
-      scalW4, scalW8)
+      log2MaxPocLsb, deltaPocAlwaysZero, math.max(1, maxRefFrames))
   }
 
+  /** PPS parse. CABAC (entropy_coding_mode_flag = 1) and the High
+    * tail (transform_8x8_mode, pic scaling matrices, the second chroma
+    * QP offset) are outside the decoded tier: either refuses the PPS,
+    * and every slice that references it degrades. */
   private def parsePps(rbsp: Array[Byte]): Pps = {
     val br = new BitReader(rbsp)
     val ppsId = br.ue()
     val spsId = br.ue()
-    // round 14: CABAC parses; the slice layer decodes CABAC I slices
-    // and degrades CABAC P/B (H264Cabac honesty bounds)
-    val cabac = br.bit() == 1
+    if (br.bit() == 1) throw ParseFail // entropy_coding_mode_flag
     val bottomFieldPoc = br.bit() == 1
     if (br.ue() != 0) throw ParseFail // num_slice_groups_minus1
     val numRefIdxL0Default = br.ue() + 1
-    val numRefIdxL1Default = br.ue() + 1
+    br.ue() // num_ref_idx_l1_default_active_minus1 (B only)
     val weightedPred = br.bit() == 1
-    val weightedBipredIdc = br.bits(2)
+    br.bits(2) // weighted_bipred_idc (B only)
     val picInitQp = 26 + br.se()
     br.se() // pic_init_qs
-    val chromaQpOff = br.se() // chroma_qp_index_offset (round 14)
+    val chromaQpOff = br.se() // chroma_qp_index_offset
     if (chromaQpOff < -12 || chromaQpOff > 12) throw ParseFail
     val deblockPresent = br.bit() == 1
     val constrainedIntra = br.bit() == 1
     val redundantPresent = br.bit() == 1
-    var chromaQpOff2 = chromaQpOff // Cr defaults to the Cb offset
-    var transform8x8 = false
-    var picL4: Array[Array[Int]] = null
-    var picL8: Array[Array[Int]] = null
-    if (br.moreRbspData()) {
-      transform8x8 = br.bit() == 1 // transform_8x8_mode (round 16)
-      if (br.bit() == 1) { // pic_scaling_matrix_present (round 16)
-        // present lists resolve UseDefaultScalingMatrix here; absent
-        // lists stay null for the SPS-dependent fall-back rule B at
-        // slice-decode time (resolveWeights)
-        picL4 = new Array[Array[Int]](6)
-        var i = 0
-        while (i < 6) {
-          if (br.bit() == 1) {
-            val parsed = parseScalingList(br, Zig4)
-            picL4(i) = if (parsed != null) parsed
-              else scanToRaster(if (i < 3) Def4Intra else Def4Inter, Zig4)
-          }
-          i += 1
-        }
-        if (transform8x8) {
-          picL8 = new Array[Array[Int]](2)
-          i = 0
-          while (i < 2) {
-            if (br.bit() == 1) {
-              val parsed = parseScalingList(br, Zig8)
-              picL8(i) = if (parsed != null) parsed
-                else scanToRaster(if (i == 0) Def8Intra else Def8Inter, Zig8)
-            }
-            i += 1
-          }
-        }
-      }
-      chromaQpOff2 = br.se() // second_chroma_qp_index_offset
-      if (chromaQpOff2 < -12 || chromaQpOff2 > 12) throw ParseFail
-    }
+    if (br.moreRbspData()) throw ParseFail // the High tail
     Pps(ppsId, spsId, picInitQp, deblockPresent, redundantPresent,
       bottomFieldPoc, numRefIdxL0Default, weightedPred, constrainedIntra,
-      cabac, numRefIdxL1Default, weightedBipredIdc, chromaQpOff,
-      chromaQpOff2, transform8x8, picL4, picL8)
-  }
-
-  /** Resolve the active scaling weights from the SPS/PPS pair
-    * (7.4.2.1.1.1 fall-back rules, round 16): 6 raster 4x4 lists +
-    * 2 raster 8x8 lists, flat 16s when neither carries a matrix. */
-  private def resolveWeights(sps: Sps,
-      pps: Pps): (Array[Array[Int]], Array[Array[Int]]) = {
-    val seq4 = sps.scalW4
-    val seq8 = sps.scalW8
-    if (pps.picL4 == null)
-      return (if (seq4 != null) seq4 else FlatW4,
-        if (seq8 != null) seq8 else FlatW8)
-    // fall-back rule B: absent anchor lists (0/3 and 6/7) inherit
-    // the SPS's resolved list when the SPS carries a matrix, the
-    // default list otherwise; absent non-anchors take the previous
-    // resolved list
-    val w4 = new Array[Array[Int]](6)
-    var i = 0
-    while (i < 6) {
-      val p = pps.picL4(i)
-      w4(i) =
-        if (p != null) p
-        else if (i == 0 || i == 3) {
-          if (seq4 != null) seq4(i)
-          else scanToRaster(if (i == 0) Def4Intra else Def4Inter, Zig4)
-        } else w4(i - 1)
-      i += 1
-    }
-    val w8 = new Array[Array[Int]](2)
-    i = 0
-    while (i < 2) {
-      val p = if (pps.picL8 != null) pps.picL8(i) else null
-      w8(i) =
-        if (p != null) p
-        else if (seq8 != null) seq8(i)
-        else if (pps.picL8 != null)
-          scanToRaster(if (i == 0) Def8Intra else Def8Inter, Zig8)
-        else Flat8
-      i += 1
-    }
-    (w4, w8)
+      chromaQpOff)
   }
 
   // ---------------------------------------------------------------- CAVLC
@@ -884,75 +552,19 @@ object H264 {
     out
   }
 
-  /** Luma-DC scaling (8.5.10); `w0` = weightScale(0,0) of the active
-    * intra luma list (16 = flat, round 16: scaling matrices). */
-  private def scaleDc(f: Int, qp: Int, w0: Int = 16): Int = {
-    val ls = w0 * NormAdjust(qp % 6)(0)
+  /** Luma-DC scaling (8.5.10) under the flat weight scale (16): no
+    * profile this decoder accepts carries a scaling matrix. */
+  private def scaleDc(f: Int, qp: Int): Int = {
+    val ls = 16 * NormAdjust(qp % 6)(0)
     if (qp >= 36) (f * ls) << (qp / 6 - 6)
     else (f * ls + (1 << (5 - qp / 6))) >> (6 - qp / 6)
   }
 
-  /** AC coefficient dequant (8.5.12.1) under a raster weight matrix
-    * (Flat4 = the matrix-absent case). */
-  private def scaleAc(c: Int, raster: Int, qp: Int,
-      w: Array[Int] = Flat4): Int = {
-    val ls = w(raster) * NormAdjust(qp % 6)(posClass(raster))
+  /** AC coefficient dequant (8.5.12.1) under the flat weight scale. */
+  private def scaleAc(c: Int, raster: Int, qp: Int): Int = {
+    val ls = 16 * NormAdjust(qp % 6)(posClass(raster))
     if (qp >= 24) (c * ls) << (qp / 6 - 4)
     else (c * ls + (1 << (3 - qp / 6))) >> (4 - qp / 6)
-  }
-
-  /** 8x8 coefficient dequant (8.5.13.2, round 16: High profile). */
-  private def scaleAc8(c: Int, raster: Int, qp: Int, w: Array[Int]): Int = {
-    val ls = w(raster) * NormAdjust8(qp % 6)(posClass8(raster))
-    if (qp >= 36) (c * ls) << (qp / 6 - 6)
-    else (c * ls + (1 << (5 - qp / 6))) >> (6 - qp / 6)
-  }
-
-  /** 8x8 inverse transform (8.5.13.1, round 16): rows then columns,
-    * final (x + 32) >> 6 on the column pass. */
-  private def invTransform8x8(d: Array[Int]): Array[Int] = {
-    val t = new Array[Int](64)
-    var r = 0
-    while (r < 8) {
-      val o = r * 8
-      val p0 = d(o); val p1 = d(o + 1); val p2 = d(o + 2); val p3 = d(o + 3)
-      val p4 = d(o + 4); val p5 = d(o + 5); val p6 = d(o + 6); val p7 = d(o + 7)
-      val a0 = p0 + p4; val a2 = p0 - p4
-      val a4 = (p2 >> 1) - p6; val a6 = p2 + (p6 >> 1)
-      val b0 = a0 + a6; val b2 = a2 + a4; val b4 = a2 - a4; val b6 = a0 - a6
-      val a1 = -p3 + p5 - p7 - (p7 >> 1)
-      val a3 = p1 + p7 - p3 - (p3 >> 1)
-      val a5 = -p1 + p7 + p5 + (p5 >> 1)
-      val a7 = p3 + p5 + p1 + (p1 >> 1)
-      val b1 = (a7 >> 2) + a1; val b3 = a3 + (a5 >> 2)
-      val b5 = (a3 >> 2) - a5; val b7 = a7 - (a1 >> 2)
-      t(o) = b0 + b7; t(o + 7) = b0 - b7
-      t(o + 1) = b2 + b5; t(o + 6) = b2 - b5
-      t(o + 2) = b4 + b3; t(o + 5) = b4 - b3
-      t(o + 3) = b6 + b1; t(o + 4) = b6 - b1
-      r += 1
-    }
-    val out = new Array[Int](64)
-    var c = 0
-    while (c < 8) {
-      val p0 = t(c); val p1 = t(8 + c); val p2 = t(16 + c); val p3 = t(24 + c)
-      val p4 = t(32 + c); val p5 = t(40 + c); val p6 = t(48 + c); val p7 = t(56 + c)
-      val a0 = p0 + p4; val a2 = p0 - p4
-      val a4 = (p2 >> 1) - p6; val a6 = p2 + (p6 >> 1)
-      val b0 = a0 + a6; val b2 = a2 + a4; val b4 = a2 - a4; val b6 = a0 - a6
-      val a1 = -p3 + p5 - p7 - (p7 >> 1)
-      val a3 = p1 + p7 - p3 - (p3 >> 1)
-      val a5 = -p1 + p7 + p5 + (p5 >> 1)
-      val a7 = p3 + p5 + p1 + (p1 >> 1)
-      val b1 = (a7 >> 2) + a1; val b3 = a3 + (a5 >> 2)
-      val b5 = (a3 >> 2) - a5; val b7 = a7 - (a1 >> 2)
-      out(c) = (b0 + b7 + 32) >> 6; out(56 + c) = (b0 - b7 + 32) >> 6
-      out(8 + c) = (b2 + b5 + 32) >> 6; out(48 + c) = (b2 - b5 + 32) >> 6
-      out(16 + c) = (b4 + b3 + 32) >> 6; out(40 + c) = (b4 - b3 + 32) >> 6
-      out(24 + c) = (b6 + b1 + 32) >> 6; out(32 + c) = (b6 - b1 + 32) >> 6
-      c += 1
-    }
-    out
   }
 
   // ---------------------------------------------------------------- nC grid
@@ -1104,251 +716,38 @@ object H264 {
     out
   }
 
-  // ------------------------------------------------------- Intra_8x8
-
-  /** Intra_8x8 prediction (8.3.2, round 16 — High profile) of the
-    * 8x8 block at 8x8 grid (b8x, b8y), mode 0..8. The reference
-    * samples are LOW-PASS FILTERED first (8.3.2.2.1: 121 taps with
-    * 3-tap ends; the corner blends into both arms), then the nine
-    * modes apply the same geometric formulas as their 4x4 twins at
-    * double size. Unavailable p[x,-1] x = 8..15 substitute p[7,-1]
-    * BEFORE filtering. `curBlk8` is the z-order 8x8 index within the
-    * MB for decode-order availability. Returns 64 row-major samples
-    * or null when a required neighbor is unavailable. */
-  private def predict8x8(luma: Array[Int], stride: Int, mbW: Int, mbH: Int,
-      b8x: Int, b8y: Int, mode: Int, curMb: Int, curBlk8: Int,
-      sliceOk: Int => Boolean): Array[Int] = {
-    val gw = mbW * 2
-    val gh = mbH * 2
-    def decodedBefore(x8: Int, y8: Int): Boolean = {
-      if (x8 < 0 || y8 < 0 || x8 >= gw || y8 >= gh) false
-      else {
-        val m2 = (y8 >> 1) * mbW + (x8 >> 1)
-        if (m2 < curMb) sliceOk(m2)
-        else if (m2 > curMb) false
-        else ((y8 & 1) * 2 + (x8 & 1)) < curBlk8
-      }
-    }
-    val availLeft = decodedBefore(b8x - 1, b8y)
-    val availTop = decodedBefore(b8x, b8y - 1)
-    val availTL = decodedBefore(b8x - 1, b8y - 1)
-    val availTR = decodedBefore(b8x + 1, b8y - 1)
-    val need = mode match {
-      case 0 | 3 | 7 => availTop
-      case 1 | 8 => availLeft
-      case 2 => true
-      case 4 | 5 | 6 => availLeft && availTop && availTL
-      case _ => false
-    }
-    if (!need) return null
-    val x0 = b8x * 8
-    val y0 = b8y * 8
-    // raw references: t(0) = p[-1,-1], t(1+i) = p[i,-1] i = 0..15,
-    // l(j) = p[-1, j] j = 0..7
-    val t = new Array[Int](17)
-    val l = new Array[Int](8)
-    if (availTL) t(0) = luma((y0 - 1) * stride + x0 - 1)
-    if (availTop) {
-      var i = 0
-      while (i < 8) { t(1 + i) = luma((y0 - 1) * stride + x0 + i); i += 1 }
-      if (availTR) {
-        i = 8
-        while (i < 16) { t(1 + i) = luma((y0 - 1) * stride + x0 + i); i += 1 }
-      } else {
-        i = 8
-        while (i < 16) { t(1 + i) = t(8); i += 1 } // duplicate p[7,-1]
-      }
-    }
-    if (availLeft) {
-      var j = 0
-      while (j < 8) { l(j) = luma((y0 + j) * stride + x0 - 1); j += 1 }
-    }
-    // 8.3.2.2.1 reference filtering into t' / l'
-    val tf = new Array[Int](17)
-    val lf = new Array[Int](8)
-    if (availTop) {
-      tf(1) =
-        if (availTL) (t(0) + 2 * t(1) + t(2) + 2) >> 2
-        else (3 * t(1) + t(2) + 2) >> 2
-      var i = 1
-      while (i < 15) {
-        tf(1 + i) = (t(i) + 2 * t(1 + i) + t(2 + i) + 2) >> 2
-        i += 1
-      }
-      tf(16) = (t(15) + 3 * t(16) + 2) >> 2
-    }
-    if (availTL) {
-      tf(0) =
-        if (availTop && availLeft) (t(1) + 2 * t(0) + l(0) + 2) >> 2
-        else if (availTop) (3 * t(0) + t(1) + 2) >> 2
-        else if (availLeft) (3 * t(0) + l(0) + 2) >> 2
-        else t(0)
-    }
-    if (availLeft) {
-      lf(0) =
-        if (availTL) (t(0) + 2 * l(0) + l(1) + 2) >> 2
-        else (3 * l(0) + l(1) + 2) >> 2
-      var j = 1
-      while (j < 7) {
-        lf(j) = (l(j - 1) + 2 * l(j) + l(j + 1) + 2) >> 2
-        j += 1
-      }
-      lf(7) = (l(6) + 3 * l(7) + 2) >> 2
-    }
-    def pt(i: Int): Int = tf(1 + i) // p'[i,-1]; i may be -1 (corner)
-    def pl(j: Int): Int = if (j < 0) tf(0) else lf(j)
-    val out = new Array[Int](64)
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        val v = mode match {
-          case 0 => pt(x)
-          case 1 => pl(y)
-          case 2 =>
-            if (availLeft && availTop) {
-              var s = 8
-              var i = 0
-              while (i < 8) { s += pt(i) + pl(i); i += 1 }
-              s >> 4
-            } else if (availLeft) {
-              var s = 4
-              var j = 0
-              while (j < 8) { s += pl(j); j += 1 }
-              s >> 3
-            } else if (availTop) {
-              var s = 4
-              var i = 0
-              while (i < 8) { s += pt(i); i += 1 }
-              s >> 3
-            } else 128
-          case 3 => // diagonal down-left
-            if (x == 7 && y == 7) (pt(14) + 3 * pt(15) + 2) >> 2
-            else (pt(x + y) + 2 * pt(x + y + 1) + pt(x + y + 2) + 2) >> 2
-          case 4 => // diagonal down-right
-            if (x > y) (pt(x - y - 2) + 2 * pt(x - y - 1) + pt(x - y) + 2) >> 2
-            else if (x < y) (pl(y - x - 2) + 2 * pl(y - x - 1) + pl(y - x) + 2) >> 2
-            else (pt(0) + 2 * tf(0) + pl(0) + 2) >> 2
-          case 5 => // vertical right
-            val zVR = 2 * x - y
-            if (zVR >= 0 && (zVR & 1) == 0)
-              (pt(x - (y >> 1) - 1) + pt(x - (y >> 1)) + 1) >> 1
-            else if (zVR >= 0)
-              (pt(x - (y >> 1) - 2) + 2 * pt(x - (y >> 1) - 1) + pt(x - (y >> 1)) + 2) >> 2
-            else if (zVR == -1) (pl(0) + 2 * tf(0) + pt(0) + 2) >> 2
-            else (pl(y - 2 * x - 1) + 2 * pl(y - 2 * x - 2) + pl(y - 2 * x - 3) + 2) >> 2
-          case 6 => // horizontal down
-            val zHD = 2 * y - x
-            if (zHD >= 0 && (zHD & 1) == 0)
-              (pl(y - (x >> 1) - 1) + pl(y - (x >> 1)) + 1) >> 1
-            else if (zHD >= 0)
-              (pl(y - (x >> 1) - 2) + 2 * pl(y - (x >> 1) - 1) + pl(y - (x >> 1)) + 2) >> 2
-            else if (zHD == -1) (pl(0) + 2 * tf(0) + pt(0) + 2) >> 2
-            else (pt(x - 2 * y - 1) + 2 * pt(x - 2 * y - 2) + pt(x - 2 * y - 3) + 2) >> 2
-          case 7 => // vertical left
-            if ((y & 1) == 0) (pt(x + (y >> 1)) + pt(x + (y >> 1) + 1) + 1) >> 1
-            else (pt(x + (y >> 1)) + 2 * pt(x + (y >> 1) + 1) + pt(x + (y >> 1) + 2) + 2) >> 2
-          case _ => // 8: horizontal up
-            val zHU = x + 2 * y
-            if (zHU <= 12 && (zHU & 1) == 0)
-              (pl(y + (x >> 1)) + pl(y + (x >> 1) + 1) + 1) >> 1
-            else if (zHU <= 11) // odd < 13
-              (pl(y + (x >> 1)) + 2 * pl(y + (x >> 1) + 1) + pl(y + (x >> 1) + 2) + 2) >> 2
-            else if (zHU == 13) (pl(6) + 3 * pl(7) + 2) >> 2
-            else pl(7) // zHU > 13
-        }
-        out(y * 8 + x) = v
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   // ------------------------------------------------------- deblocking
 
-  /** In-loop luma deblocking (8.7), frame coding, 4x4 transform: per
-    * MB in raster order, the four vertical edges left-to-right, then
-    * the four horizontal edges top-to-bottom. bS per 8.7.2.1 for the
-    * decoded subset (intra flags; per-4x4 coefficient presence;
-    * per-4x4 motion vectors, single reference). I_PCM macroblocks
-    * filter with QP 0 (8.7.2). Chroma planes are not reconstructed,
-    * so only luma is filtered. */
+  /** In-loop deblocking (8.7), frame coding, 4x4 transform: per MB
+    * in raster order, the four vertical edges left-to-right, then the
+    * four horizontal edges top-to-bottom. bS per 8.7.2.1 for a
+    * single-list picture (intra flags; per-4x4 coefficient presence;
+    * per-4x4 reference picture and motion vector). I_PCM macroblocks
+    * filter with QP 0 (8.7.2). Chroma edges filter alongside. */
   private def deblockLuma(luma: Array[Int], stride: Int, mbW: Int, mbH: Int,
       mbIntra: Array[Boolean], qpMb: Array[Int], lumaNz: NzCtx,
       mv: MvCtx, sliceOf: Array[Int],
       sliceParams: Array[(Int, Int, Int)],
-      cbPlane: Array[Int] = null, crPlane: Array[Int] = null,
-      cqpOffCb: Int = 0, cqpOffCr: Int = 0,
-      mvL1: MvCtx = null,
-      mbT8: Array[Boolean] = null, nz8: Array[Boolean] = null): Unit = {
+      cbPlane: Array[Int], crPlane: Array[Int], cqpOff: Int): Unit = {
     val strideC = mbW * 8
-    // 8.7.2.1 motion-based bS over BOTH lists (round 15: B slices
-    // deblock for real). Reference comparison is by PICTURE (the
-    // per-cell DPB id), never by per-slice index.
+    // 8.7.2.1 motion-based bS. Reference comparison is by PICTURE
+    // (the per-cell DPB id), never by per-slice index.
     def mvDiff4(ax: Int, ay: Int, bx: Int, by: Int): Boolean = {
       val dx = ax - bx; val dy = ay - by
       dx <= -4 || dx >= 4 || dy <= -4 || dy >= 4
     }
     def bS(mbP: Int, mbQ: Int, bxP: Int, byP: Int, bxQ: Int, byQ: Int,
         mbEdge: Boolean): Int = {
-      def coded(mbi: Int, bx: Int, by: Int): Boolean =
-        if (mbT8 != null && mbT8(mbi))
-          nz8((by >> 1) * (mv.gw >> 1) + (bx >> 1))
-        else lumaNz.get(bx, by) > 0
       if (mbIntra(mbP) || mbIntra(mbQ)) { if (mbEdge) 4 else 3 }
-      else if (coded(mbP, bxP, byP) || coded(mbQ, bxQ, byQ)) 2
+      else if (lumaNz.get(bxP, byP) > 0 || lumaNz.get(bxQ, byQ) > 0) 2
       else {
         val kp = byP * mv.gw + bxP
         val kq = byQ * mv.gw + bxQ
-        val p0 = mv.inter(kp)
-        val q0 = mv.inter(kq)
-        val p1 = mvL1 != null && mvL1.inter(kp)
-        val q1 = mvL1 != null && mvL1.inter(kq)
-        val np = (if (p0) 1 else 0) + (if (p1) 1 else 0)
-        val nq = (if (q0) 1 else 0) + (if (q1) 1 else 0)
-        if (np != nq) 1 // different number of motion vectors
-        else if (np == 1) {
-          // one vector each: same picture AND < 4 quarter-pel apart
-          val (pp, px, py) =
-            if (p0) (mv.pic(kp), mv.mvx(kp), mv.mvy(kp))
-            else (mvL1.pic(kp), mvL1.mvx(kp), mvL1.mvy(kp))
-          val (qp2, qx, qy) =
-            if (q0) (mv.pic(kq), mv.mvx(kq), mv.mvy(kq))
-            else (mvL1.pic(kq), mvL1.mvx(kq), mvL1.mvy(kq))
-          if (pp != qp2 || mvDiff4(px, py, qx, qy)) 1 else 0
-        } else {
-          // two vectors each: picture SETS must match; with two
-          // distinct pictures compare per picture, with the same
-          // picture twice both the straight and the crossed pairing
-          // must exceed the threshold for bS 1 (8.7.2.1)
-          val pA = mv.pic(kp); val pB = mvL1.pic(kp)
-          val qA = mv.pic(kq); val qB = mvL1.pic(kq)
-          val sameSets = (pA == qA && pB == qB) || (pA == qB && pB == qA)
-          if (!sameSets) 1
-          else if (pA != pB) {
-            // match q's vectors to p's by picture
-            val (qxA, qyA, qxB, qyB) =
-              if (pA == qA) (mv.mvx(kq), mv.mvy(kq),
-                mvL1.mvx(kq), mvL1.mvy(kq))
-              else (mvL1.mvx(kq), mvL1.mvy(kq),
-                mv.mvx(kq), mv.mvy(kq))
-            if (mvDiff4(mv.mvx(kp), mv.mvy(kp), qxA, qyA) ||
-              mvDiff4(mvL1.mvx(kp), mvL1.mvy(kp), qxB, qyB)) 1
-            else 0
-          } else {
-            val straight =
-              mvDiff4(mv.mvx(kp), mv.mvy(kp), mv.mvx(kq), mv.mvy(kq)) ||
-                mvDiff4(mvL1.mvx(kp), mvL1.mvy(kp),
-                  mvL1.mvx(kq), mvL1.mvy(kq))
-            val crossed =
-              mvDiff4(mv.mvx(kp), mv.mvy(kp),
-                mvL1.mvx(kq), mvL1.mvy(kq)) ||
-                mvDiff4(mvL1.mvx(kp), mvL1.mvy(kp),
-                  mv.mvx(kq), mv.mvy(kq))
-            if (straight && crossed) 1 else 0
-          }
-        }
+        if (mv.inter(kp) != mv.inter(kq)) 1 // different number of vectors
+        else if (!mv.inter(kp)) 0
+        else if (mv.pic(kp) != mv.pic(kq) ||
+          mvDiff4(mv.mvx(kp), mv.mvy(kp), mv.mvx(kq), mv.mvy(kq))) 1
+        else 0
       }
     }
     // filter one line across an edge: q0 at `pos`, p0 at `pos - step`
@@ -1438,12 +837,8 @@ object H264 {
             // chroma_qp_index_offset, QPc-derived chroma alpha can be
             // nonzero while luma alpha is zero (8.7.2.4), so the
             // chroma edge walk must not hide under the luma gate
-            // round 16: under the 8x8 transform the MB's internal
-            // 4x4 edges (k = 1, 3) are not transform boundaries and
-            // are not filtered (8.7: transformSize8x8Flag edge set)
-            val lumaOn = AlphaT(indexA) > 0 &&
-              !(mbT8 != null && mbT8(mb) && (k & 1) == 1)
-            val chromaOn = cbPlane != null && (k & 1) == 0
+            val lumaOn = AlphaT(indexA) > 0
+            val chromaOn = (k & 1) == 0
             if (lumaOn || chromaOn) {
               var g = 0 // 4-sample groups along the edge
               while (g < 4) {
@@ -1470,25 +865,22 @@ object H264 {
                   // (4:2:0: k = 0, 2 -> chroma 0, 4); 2 chroma lines
                   // per 4-luma-line group; thresholds from QPc
                   if (chromaOn) {
+                    val qpAvC = (qpChroma(qpMb(mbP), cqpOff) +
+                      qpChroma(qpQ, cqpOff) + 1) >> 1
+                    val iA = clip3(0, 51, qpAvC + offA)
+                    val iB = clip3(0, 51, qpAvC + offB)
                     var comp = 0
-                    while (comp < 2) {
-                      val off = if (comp == 0) cqpOffCb else cqpOffCr
-                      val qpAvC = (qpChroma(qpMb(mbP), off) +
-                        qpChroma(qpQ, off) + 1) >> 1
-                      val iA = clip3(0, 51, qpAvC + offA)
-                      val iB = clip3(0, 51, qpAvC + offB)
-                      if (AlphaT(iA) > 0) {
-                        val plane = if (comp == 0) cbPlane else crPlane
-                        var sc = 0
-                        while (sc < 2) {
-                          val pos =
-                            if (vert == 0)
-                              (byQ * 2 + sc) * strideC + bxQ * 2
-                            else byQ * 2 * strideC + bxQ * 2 + sc
-                          filterLineC(plane, pos,
-                            if (vert == 0) 1 else strideC, bs, iA, iB)
-                          sc += 1
-                        }
+                    while (comp < 2 && AlphaT(iA) > 0) {
+                      val plane = if (comp == 0) cbPlane else crPlane
+                      var sc = 0
+                      while (sc < 2) {
+                        val pos =
+                          if (vert == 0)
+                            (byQ * 2 + sc) * strideC + bxQ * 2
+                          else byQ * 2 * strideC + bxQ * 2 + sc
+                        filterLineC(plane, pos,
+                          if (vert == 0) 1 else strideC, bs, iA, iB)
+                        sc += 1
                       }
                       comp += 1
                     }
@@ -1625,16 +1017,8 @@ object H264 {
       * (8.7.2.1) must compare pictures, not per-slice indices. -1 =
       * intra/unset. */
     val pic = new Array[Int](gw * gh)
-    /** |mvd| per cell per component and the skip/direct (inferred
-      * motion) marker — the CABAC mvd (9.3.3.1.1.7) and ref_idx
-      * (9.3.3.1.1.6) neighbor terms (round 15). Inferred partitions
-      * carry amvd 0 by definition. */
-    val amvdx = new Array[Int](gw * gh)
-    val amvdy = new Array[Int](gw * gh)
-    val inferred = new Array[Boolean](gw * gh)
     def fill(x4: Int, y4: Int, w4: Int, h4: Int, isInter: Boolean,
-        mx: Int, my: Int, refIdx: Int = 0, picId: Int = -1,
-        amx: Int = 0, amy: Int = 0, inf: Boolean = false): Unit = {
+        mx: Int, my: Int, refIdx: Int = 0, picId: Int = -1): Unit = {
       var y = y4
       while (y < y4 + h4) {
         var x = x4
@@ -1643,8 +1027,6 @@ object H264 {
           done(k) = true; inter(k) = isInter; mvx(k) = mx; mvy(k) = my
           ref(k) = if (isInter) refIdx else -1
           pic(k) = if (isInter) picId else -1
-          amvdx(k) = amx; amvdy(k) = amy
-          inferred(k) = isInter && inf
           x += 1
         }
         y += 1
@@ -1756,11 +1138,10 @@ object H264 {
 
   /** Decode up to `maxFrames` frames of an Annex-B stream in decode
     * order: (width, height, cropped luma, 'I'|'P'). P slices
-    * reconstruct via list-0 MC against the PREVIOUS decoded picture
-    * (single-reference subset: one short-term ref, unreordered,
-    * unweighted; P_L0_16x16 + P_Skip + intra refresh, cbp 0). The
-    * walk stops cleanly at the first unsupported element, keeping
-    * the exact frames decoded so far. */
+    * reconstruct via list-0 MC against the DPB's reference pictures.
+    * The walk stops cleanly at the first element outside the tier
+    * (see the fence in the object's header), keeping the exact frames
+    * decoded so far. */
   def decodeFramesLuma(es: Array[Byte],
       maxFrames: Int): Seq[(Int, Int, Array[Int], Char)] =
     decodeFramesLumaNals(splitAnnexB(es), maxFrames)
@@ -1798,19 +1179,12 @@ object H264 {
       // reference first; capped at the SPS's max_num_ref_frames. An
       // IDR resets it (8.2.5.1); a geometry change invalidates it.
       var refList: Vector[RefPic] = Vector.empty
-      var refPocs: Vector[Int] = Vector.empty // parallel (round 14: B)
       var refFns: Vector[Int] = Vector.empty // frame_num per entry
       var refLongs: Vector[Int] = Vector.empty // LongTermFrameIdx;
-      // -1 = short-term (round 15)
-      var picSerial = 0 // stable picture identity across window
-      // shifts (round 15, temporal direct)
+      // -1 = short-term
       var refMbW = -1
       var refMbH = -1
       var prevRefFn = -1
-      var prevPocMsb = 0 // POC decode state (8.2.1.1), from the
-      var prevPocLsb = 0 // previous REFERENCE picture
-      var prevFnOffset = 0 // pocType 1 state (8.2.1.2), from the
-      var prevPicFn = 0 // previous picture in DECODE order (round 15)
       // the picture whose slices are still arriving
       var pending: PicState = null
       var pendingRefIdc = 0
@@ -1825,15 +1199,6 @@ object H264 {
         val frameNum = st.frameNum
         cropFrame(sps, st.luma) match {
           case Some((w, h, cropped)) =>
-            // pocType 1 decode-order chain (8.2.1.2): every picture
-            // (reference or not) advances it; an mmco5 re-bases it
-            if (st.mmcoOps.contains(MmcoReset)) {
-              prevFnOffset = 0
-              prevPicFn = 0
-            } else {
-              prevFnOffset = st.frameNumOffset
-              prevPicFn = frameNum
-            }
             // only REFERENCE pictures enter the DPB: a
             // nal_ref_idc == 0 frame is emitted but never
             // referenced (8.2.5; review r12). An IDR resets
@@ -1843,7 +1208,6 @@ object H264 {
               if (pendingIdr || refMbW != sps.mbW ||
                   refMbH != sps.mbH) {
                 refList = Vector.empty
-                refPocs = Vector.empty
                 refFns = Vector.empty
                 refLongs = Vector.empty
               }
@@ -1892,51 +1256,15 @@ object H264 {
                 }
                 val keepIdx = (0 until n).filter(alive)
                 refList = keepIdx.map(refList).toVector
-                refPocs = keepIdx.map(refPocs).toVector
                 refFns = keepIdx.map(refFns).toVector
                 refLongs = keepIdx.map(lt).toVector
               } else if (refLongs.length != refList.length)
                 refLongs = Vector.fill(refList.length)(-1)
               // mmco5 re-base (8.2.5.4.5): the current picture's
-              // frame_num and POC read as 0 from here on
+              // frame_num reads as 0 from here on
               val fnStored = if (reset) 0 else frameNum
-              val pocStored = if (reset) 0 else st.poc
               val cap = math.max(1, sps.maxRefFrames)
-              // snapshot the picture's motion field for later
-              // spatial-direct colZeroFlag reads (L0 first, L1 when
-              // a B cell used only list 1; intra/unset = -1)
-              val cells = st.mv.gw * st.mv.gh
-              val cRef = new Array[Int](cells)
-              val cMx = new Array[Int](cells)
-              val cMy = new Array[Int](cells)
-              // referenced-PICTURE serials per cell (round 15,
-              // temporal direct): resolved via the DPB this picture
-              // decoded against, which is still intact here
-              val cSer = new Array[Int](cells)
-              def serialAt(dpbIdx: Int): Int =
-                if (dpbIdx >= 0 && dpbIdx < refList.length)
-                  refList(dpbIdx).serial
-                else -1
-              var ck = 0
-              while (ck < cells) {
-                if (st.mv.inter(ck)) {
-                  cRef(ck) = st.mv.ref(ck)
-                  cMx(ck) = st.mv.mvx(ck)
-                  cMy(ck) = st.mv.mvy(ck)
-                  cSer(ck) = serialAt(st.mv.pic(ck))
-                } else if (st.mvL1.inter(ck)) {
-                  cRef(ck) = st.mvL1.ref(ck)
-                  cMx(ck) = st.mvL1.mvx(ck)
-                  cMy(ck) = st.mvL1.mvy(ck)
-                  cSer(ck) = serialAt(st.mvL1.pic(ck))
-                } else { cRef(ck) = -1; cSer(ck) = -1 }
-                ck += 1
-              }
-              picSerial += 1
-              refList = RefPic(st.luma, st.cb, st.cr, cRef, cMx,
-                cMy, serial = picSerial, colRefSerial = cSer,
-                firstL0Serial = serialAt(st.firstL0Dpb)) +: refList
-              refPocs = pocStored +: refPocs
+              refList = RefPic(st.luma, st.cb, st.cr) +: refList
               refFns = fnStored +: refFns
               refLongs = curLong +: refLongs
               // sliding window (8.2.5.3): only SHORT-TERM pictures
@@ -1948,19 +1276,16 @@ object H264 {
                 def rm[T](v: Vector[T]): Vector[T] =
                   v.patch(victim, Nil, 1)
                 refList = rm(refList)
-                refPocs = rm(refPocs)
                 refFns = rm(refFns)
                 refLongs = rm(refLongs)
               }
               refMbW = sps.mbW
               refMbH = sps.mbH
               prevRefFn = fnStored
-              prevPocMsb = if (reset) 0 else st.pocMsb
-              prevPocLsb = if (reset) 0 else st.pocLsb
             }
             frames += ((w, h, cropped, cropFrameC(sps, st.cb),
               cropFrameC(sps, st.cr),
-              if (st.allIntra) 'I' else if (st.hasB) 'B' else 'P'))
+              if (st.allIntra) 'I' else 'P'))
             true
           case None => false
         }
@@ -2010,12 +1335,8 @@ object H264 {
                   ppsById.toMap, poisoned.toSet,
                   nalRefIdc = refIdc, isIdr = typ == 5,
                   refs = refList, refMbW = refMbW, refMbH = refMbH,
-                  prevRefFrameNum = prevRefFn,
-                  refPocs = refPocs, prevPocMsb = prevPocMsb,
-                  prevPocLsb = prevPocLsb, refFrameNums = refFns,
+                  prevRefFrameNum = prevRefFn, refFrameNums = refFns,
                   refLongIdx = refLongs,
-                  prevFrameNumOffset = prevFnOffset,
-                  prevPicFrameNum = prevPicFn,
                   stateIn = if (firstMb == 0) null else pending)
                 catch {
                   case ParseFail => None
@@ -2115,72 +1436,23 @@ object H264 {
     val i4mode: Array[Int] = Array.fill(mbW * 4 * mbH * 4)(-1)
     /** slice index per decoded macroblock; -1 = not yet decoded. */
     val sliceOf: Array[Int] = Array.fill(nMbs)(-1)
-    // ---- CABAC neighbor state (round 14; written by the CABAC walk
-    // only — CAVLC slices never read these). All derivations gate
-    // availability on sliceOf like the rest of the file.
-    /** 0 = I_NxN, 1 = Intra_16x16, 2 = I_PCM, 3 = inter; -1 = none. */
-    val mbKind: Array[Int] = Array.fill(nMbs)(-1)
-    /** mb_skip_flag per MB (9.3.3.1.1.1 neighbor term, round 15). */
-    val mbSkip = new Array[Boolean](nMbs)
-    /** B_Skip / B_Direct_16x16 per MB (9.3.3.1.1.3 neighbor term). */
-    val mbDirect = new Array[Boolean](nMbs)
-    /** coded_block_pattern per MB (luma | chroma << 4; I_PCM = 47). */
-    val mbCbp = new Array[Int](nMbs)
-    /** intra_chroma_pred_mode per MB (ctx 64 inc, 9.3.3.1.1.8). */
-    val chromaMode = new Array[Int](nMbs)
-    /** coded_block_flag state per transform-block kind (9.3.3.1.1.9):
-      * luma DC (I16 only), luma 4x4/AC per cell, chroma DC per comp,
-      * chroma AC per comp per cell. Values 0/1; blocks that do not
-      * exist in an MB stay 0 (the spec's "block absent" term). */
-    val cbfLumaDc = new Array[Byte](nMbs)
-    val cbfLuma4 = new Array[Byte](mbW * 4 * mbH * 4)
-    val cbfCbDc = new Array[Byte](nMbs)
-    val cbfCrDc = new Array[Byte](nMbs)
-    val cbfCbAc = new Array[Byte](mbW * 2 * mbH * 2)
-    val cbfCrAc = new Array[Byte](mbW * 2 * mbH * 2)
     /** per-slice (deblocking idc, alpha offset, beta offset). */
     val sliceParams =
       scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
     var mbNext = 0
     var allIntra = true
     var curSlice = -1
-    /** Round 14 (B slices): list-1 motion state (list 0 lives in
-      * [[mv]]); picture order count + its decode state (8.2.1) for
-      * the walk's POC-based B list construction. */
-    val mvL1 = new MvCtx(mbW, mbH)
-    var hasB = false
-    var poc = 0
-    var pocMsb = 0
-    var pocLsb = 0
-    /** pocType 1 FrameNumOffset (8.2.1.2, round 15) — the walk
-      * threads it to the next picture in decode order. */
-    var frameNumOffset = 0
-    /** The first inter slice's RefPicList0[0] as a DPB index (round
-      * 15, temporal direct: an INTRA colocated block reads as mvCol 0
-      * with refIdxCol 0 — i.e. this picture, 8.4.1.2.3). -1 = none. */
-    var firstL0Dpb = -1
-    /** MMCO ops (round 15: the full 8.2.5.4 set), resolved at
-      * slice-header parse time against the passed DPB and applied by
-      * the walk when THIS picture enters the window. */
+    /** MMCO ops (the full 8.2.5.4 set), resolved at slice-header
+      * parse time against the passed DPB and applied by the walk when
+      * THIS picture enters the window. */
     var mmcoOps: List[Mmco] = Nil
-    /** the picture's PPS chroma QP offsets (one PPS per picture,
-      * ADVICE r13) — the loop filter derives chroma thresholds. */
-    var cqpOffCb = 0
-    var cqpOffCr = 0
-    /** Round 16 (High profile): the resolved scaling weights (6
-      * raster 4x4 lists, 2 raster 8x8 lists; flat 16 default) and
-      * per-MB transform_size_8x8_flag + per-8x8-block coded flags
-      * (the loop filter's bS consults the 8x8 granularity for t8
-      * macroblocks, 8.7.2.1). */
-    var w4: Array[Array[Int]] = FlatW4
-    var w8: Array[Array[Int]] = FlatW8
-    val mbT8 = new Array[Boolean](nMbs)
-    val nz8 = new Array[Boolean](mbW * 2 * mbH * 2)
+    /** the picture's PPS chroma QP offset (one PPS per picture) — the
+      * loop filter derives chroma thresholds from it. */
+    var cqpOff = 0
     lumaNz.gate = (bx, by) => sliceOf((by >> 2) * mbW + (bx >> 2)) == curSlice
     cbNz.gate = (bx, by) => sliceOf((by >> 1) * mbW + (bx >> 1)) == curSlice
     crNz.gate = (bx, by) => sliceOf((by >> 1) * mbW + (bx >> 1)) == curSlice
     mv.gate = (x4, y4) => sliceOf((y4 >> 2) * mbW + (x4 >> 2)) == curSlice
-    mvL1.gate = mv.gate
   }
 
   /** Finish a fully-covered picture: run the loop filter per each
@@ -2193,16 +1465,16 @@ object H264 {
     if (st.sliceParams.exists(_._1 != 1))
       deblockLuma(st.luma, st.stride, st.mbW, st.mbH, st.mbIntraA,
         st.qpMbA, st.lumaNz, st.mv, st.sliceOf, st.sliceParams.toArray,
-        st.cb, st.cr, st.cqpOffCb, st.cqpOffCr, st.mvL1,
-        st.mbT8, st.nz8)
+        st.cb, st.cr, st.cqpOff)
     true
   }
 
   /** ref_pic_list_modification (7.3.3.1 -> 8.2.4.3.1, round 14):
     * consume the op list from `br` and reorder `init` (DPB indices,
-    * truncated/validated to `numActive`). Short-term ops only —
-    * idc 2 (long-term) returns None, as does a picNum naming no DPB
-    * picture. PicNum of a frame = FrameNumWrap (8.2.4.1). */
+    * truncated/validated to `numActive`). Short-term ops (idc 0/1)
+    * address a PicNum, idc 2 a long_term_pic_num; one naming no DPB
+    * picture returns None. PicNum of a frame = FrameNumWrap
+    * (8.2.4.1). */
   private def applyReorder(br: BitReader, init: IndexedSeq[Int],
       numActive: Int, dpbFrameNums: IndexedSeq[Int], curPicNum: Int,
       maxPicNum: Int, longOf: Int => Int = _ => -1
@@ -2254,43 +1526,36 @@ object H264 {
     * continuation slices must agree on geometry, IDR-ness and
     * frame_num and arrive in macroblock order (no FMO/ASO — the PPS
     * parser already refuses slice groups). Returns the (possibly
-    * fresh) picture state, or None on degrade. */
+    * fresh) picture state, or None on degrade — a B slice (type 1 or
+    * 6) always degrades. */
   private def decodeSliceInto(rbsp: Array[Byte], spsById: Map[Int, Sps],
       ppsById: Map[Int, Pps], poisoned: Set[(Int, Int)],
       nalRefIdc: Int, isIdr: Boolean,
       refs: IndexedSeq[RefPic], refMbW: Int = -1,
       refMbH: Int = -1,
       prevRefFrameNum: Int = -1,
-      refPocs: IndexedSeq[Int] = IndexedSeq.empty,
-      prevPocMsb: Int = 0, prevPocLsb: Int = 0,
       refFrameNums: IndexedSeq[Int] = IndexedSeq.empty,
       refLongIdx: IndexedSeq[Int] = IndexedSeq.empty,
-      prevFrameNumOffset: Int = 0, prevPicFrameNum: Int = 0,
       stateIn: PicState = null): Option[PicState] = {
     val br = new BitReader(rbsp)
     val startMb = br.ue() // first_mb_in_slice
     val sliceType = br.ue()
     val isP = sliceType == 0 || sliceType == 5
-    val isB = sliceType == 1 || sliceType == 6 // round 14
-    if (!isP && !isB && sliceType != 2 && sliceType != 7) return None
-    val isInter = isP || isB
-    if (isInter && isIdr) return None // an IDR slice cannot be P/B
+    if (!isP && sliceType != 2 && sliceType != 7) return None
+    if (isP && isIdr) return None // an IDR slice cannot be P
     val ppsId = br.ue()
     if (poisoned((8, ppsId))) return None // referenced PPS unparseable
     val pps = ppsById.getOrElse(ppsId, return None)
     if (poisoned((7, pps.spsId))) return None
     val sps = spsById.getOrElse(pps.spsId, return None)
-    if (isInter && (refs.isEmpty ||
+    if (isP && (refs.isEmpty ||
         refMbW != sps.mbW || refMbH != sps.mbH ||
         refs.exists(_.y.length != sps.mbW * 16 * sps.mbH * 16)))
       return None // no reference, or one with a DIFFERENT geometry: a
     // same-area different-shape SPS switch would MC with the wrong
     // stride (review r12) — compare dimensions, not just length
-    if (isInter && pps.constrainedIntra) return None // intra-in-P/B would
+    if (isP && pps.constrainedIntra) return None // intra-in-P would
     // have to treat inter neighbors as unavailable (8.3.3): not done
-    // round 15: all three pocTypes decode for B (type 1 via the full
-    // 8.2.1.2 cycle derivation below), including the bottom-field
-    // frame delta (PicOrderCnt = Min(top, bottom), 8.2.1).
     val frameNum = br.bits(sps.log2MaxFrameNum)
     // frame_num continuity (7.4.3, round 13 review): with a
     // multi-picture DPB a GAP means un-decoded reference frames the
@@ -2320,226 +1585,81 @@ object H264 {
           return None // in-order slices only (no FMO/ASO)
         stateIn
       }
-    // long-term status per DPB index (round 15); -1 = short-term
+    // long-term status per DPB index; -1 = short-term
     def longOf(i: Int): Int =
       if (i < refLongIdx.length) refLongIdx(i) else -1
     if (isIdr) br.ue() // idr_pic_id
-    // picture order count (8.2.1; round 14 — the B lists sort on it).
-    // pocType 0: lsb + the 8.2.1.1 msb wrap against the previous
-    // reference picture; pocType 2: decode order (2 * frame_num,
-    // minus 1 for non-reference pictures).
+    // picture order count syntax (7.3.3): parsed for sync only —
+    // frames emit in decode order and P lists order by PicNum
     if (sps.pocType == 0) {
-      val lsb = br.bits(sps.log2MaxPocLsb)
-      // delta_pic_order_cnt_bottom (round 15): a frame's POC is
-      // Min(TopFieldOrderCnt, BottomFieldOrderCnt) = top + Min(0, d)
-      val deltaBottom = if (pps.bottomFieldPoc) br.se() else 0
-      val maxLsb = 1 << sps.log2MaxPocLsb
-      val pMsb = if (isIdr) 0 else prevPocMsb
-      val pLsb = if (isIdr) 0 else prevPocLsb
-      val msb =
-        if (lsb < pLsb && pLsb - lsb >= maxLsb / 2) pMsb + maxLsb
-        else if (lsb > pLsb && lsb - pLsb > maxLsb / 2) pMsb - maxLsb
-        else pMsb
-      if (stateIn == null) {
-        st.pocMsb = msb
-        st.pocLsb = lsb
-        st.poc = msb + lsb + math.min(0, deltaBottom)
-      }
-    } else if (sps.pocType == 1) {
-      // 8.2.1.2 (round 15): POC from the frame_num cycle. Frames
-      // only (frame_mbs_only is enforced at the SPS): TopFieldOrderCnt
-      // = expected + delta[0]; the frame POC is min(top, bottom).
-      val delta0 =
-        if (!sps.deltaPocAlwaysZero) br.se()
-        else 0
-      val delta1 =
-        if (!sps.deltaPocAlwaysZero && pps.bottomFieldPoc) br.se()
-        else 0
-      if (stateIn == null) {
-        val maxFn = 1 << sps.log2MaxFrameNum
-        val fnOffset =
-          if (isIdr) 0
-          else if (prevPicFrameNum > frameNum)
-            prevFrameNumOffset + maxFn
-          else prevFrameNumOffset
-        val nCycle = sps.offsetsForRef.length
-        var absFrameNum =
-          if (nCycle != 0) fnOffset + frameNum else 0
-        if (nalRefIdc == 0 && absFrameNum > 0) absFrameNum -= 1
-        var expected = 0
-        if (absFrameNum > 0) {
-          val cycleCnt = (absFrameNum - 1) / nCycle
-          val inCycle = (absFrameNum - 1) % nCycle
-          var sum = 0L
-          var i2 = 0
-          while (i2 < nCycle) { sum += sps.offsetsForRef(i2); i2 += 1 }
-          var part = 0L
-          i2 = 0
-          while (i2 <= inCycle) { part += sps.offsetsForRef(i2); i2 += 1 }
-          val e = cycleCnt.toLong * sum + part
-          if (e < Int.MinValue / 2 || e > Int.MaxValue / 2) return None
-          expected = e.toInt
-        }
-        if (nalRefIdc == 0) expected += sps.offsetNonRef
-        val top = expected + delta0
-        val bottom = top + sps.offsetTopBottom + delta1
-        st.poc = math.min(top, bottom)
-        st.frameNumOffset = fnOffset
-      }
-    } else if (sps.pocType == 2 && stateIn == null) {
-      st.poc = 2 * frameNum - (if (nalRefIdc == 0) 1 else 0)
+      br.bits(sps.log2MaxPocLsb) // pic_order_cnt_lsb
+      if (pps.bottomFieldPoc) br.se() // delta_pic_order_cnt_bottom
+    } else if (sps.pocType == 1 && !sps.deltaPocAlwaysZero) {
+      br.se() // delta_pic_order_cnt[0]
+      if (pps.bottomFieldPoc) br.se() // delta_pic_order_cnt[1]
     }
     if (pps.redundantPresent) br.ue()
     var numRefL0 = 1
-    var numRefL1 = 0
     var listL0: IndexedSeq[Int] = null // indices into refs
-    var listL1: IndexedSeq[Int] = null
-    var directSpatial = true
-    if (isB) {
-      // both direct modes decode (round 15): spatial 8.4.1.2.2 and
-      // temporal 8.4.1.2.3 (motion scaled from the colocated picture
-      // by POC distance over the serial-resolved reference chain)
-      directSpatial = br.bit() == 1 // direct_spatial_mv_pred_flag
-      if (br.bit() == 1) { // num_ref_idx_active_override
-        numRefL0 = br.ue() + 1
-        numRefL1 = br.ue() + 1
-      } else {
-        numRefL0 = pps.numRefIdxL0Default
-        numRefL1 = pps.numRefIdxL1Default
-      }
-      if (numRefL0 < 1 || numRefL1 < 1 || numRefL0 > 32 || numRefL1 > 32)
-        return None
-      // default B list init (8.2.4.2.3, short-term frames): L0 = POC
-      // before current (descending) then after (ascending); L1 the
-      // mirror; if the lists come out identical with > 1 entry, swap
-      // L1's first two
-      if (refPocs.length != refs.length ||
-        refFrameNums.length != refs.length) return None
-      val curPoc = st.poc
-      val idx = refs.indices
-      // 8.2.4.2.3/4: short-term entries by POC, then long-term
-      // entries by ascending LongTermFrameIdx appended to BOTH lists
-      val shorts = idx.filter(longOf(_) < 0)
-      val longs = idx.filter(longOf(_) >= 0).sortBy(longOf)
-      val before = shorts.filter(refPocs(_) < curPoc).sortBy(k => -refPocs(k))
-      val after = shorts.filter(refPocs(_) >= curPoc).sortBy(k => refPocs(k))
-      listL0 = before ++ after ++ longs
-      listL1 = after ++ before ++ longs
-      if (listL1.length > 1 && listL0 == listL1)
-        listL1 = IndexedSeq(listL1(1), listL1(0)) ++ listL1.drop(2)
-      if (numRefL0 > listL0.length || numRefL1 > listL1.length)
-        return None
-      // explicit reordering (round 14): short-term ops rewrite the
-      // initial lists in place; long-term ops degrade
-      val maxPicNum = 1 << sps.log2MaxFrameNum
-      if (br.bit() == 1) { // ref_pic_list_modification_flag_l0
-        listL0 = applyReorder(br, listL0, numRefL0, refFrameNums,
-          frameNum, maxPicNum, longOf).getOrElse(return None)
-      }
-      if (br.bit() == 1) { // ref_pic_list_modification_flag_l1
-        listL1 = applyReorder(br, listL1, numRefL1, refFrameNums,
-          frameNum, maxPicNum, longOf).getOrElse(return None)
-      }
-    } else if (isP) {
-      // multi-reference since round 13: list 0 = the last numRefL0
-      // decoded reference pictures in decode order (sliding window,
-      // unreordered — 8.2.4.2's initial P list IS most-recent-first
-      // by descending PicNum with no frame_num gaps); a list longer
-      // than the pictures actually held degrades rather than padding
+    if (isP) {
+      // list 0 = the last numRefL0 decoded reference pictures in
+      // decode order (sliding window — 8.2.4.2's initial P list IS
+      // most-recent-first by descending PicNum with no frame_num
+      // gaps); a list longer than the pictures actually held degrades
+      // rather than padding
       numRefL0 =
         if (br.bit() == 1) br.ue() + 1 // num_ref_idx_active_override
         else pps.numRefIdxL0Default
       if (numRefL0 < 1 || numRefL0 > refs.length || numRefL0 > 32)
         return None
-      // 8.2.4.2.1 (round 15): short-term window (most recent first =
-      // descending PicNum in a gap-free stream), then long-term
-      // entries by ascending LongTermFrameIdx
+      // 8.2.4.2.1: short-term window (most recent first = descending
+      // PicNum in a gap-free stream), then long-term entries by
+      // ascending LongTermFrameIdx
       listL0 = refs.indices.filter(longOf(_) < 0) ++
         refs.indices.filter(longOf(_) >= 0).sortBy(longOf)
       if (br.bit() == 1) { // ref_pic_list_modification_flag_l0
-        // explicit reordering (8.2.4.3.1; round 15: long-term ops too)
+        // explicit reordering (8.2.4.3.1, long-term ops too)
         if (refFrameNums.length != refs.length) return None
         listL0 = applyReorder(br, listL0, numRefL0, refFrameNums,
           frameNum, 1 << sps.log2MaxFrameNum, longOf)
           .getOrElse(return None)
       }
     }
-    if (isInter && st.firstL0Dpb < 0 && listL0 != null &&
-      listL0.nonEmpty) st.firstL0Dpb = listL0(0)
-    // explicit weighted prediction (round 13, 7.3.3.2 / 8.4.2.3.2;
-    // round 14: chroma weights applied for real now that chroma
-    // reconstructs). Default = identity (1<<denom, 0).
+    // explicit weighted prediction (7.3.3.2 / 8.4.2.3.2), luma and
+    // chroma. Default = identity (no table).
     var wpDenom = 0
     var wpDenomC = 0
     var wpW: Array[Int] = null
     var wpO: Array[Int] = null
-    var wpW1: Array[Int] = null // list 1 (B, explicit bipred idc 1)
-    var wpO1: Array[Int] = null
-    // chroma weights per list x component: (wCb, oCb, wCr, oCr)
-    var wpC: Array[Array[Int]] = null // list 0: 4 arrays
-    var wpC1: Array[Array[Int]] = null
-    def readWeights(n: Int): (Array[Int], Array[Int], Array[Array[Int]]) = {
-      val w = Array.fill(n)(1 << wpDenom)
-      val o = new Array[Int](n)
-      val cw = Array(Array.fill(n)(1 << wpDenomC), new Array[Int](n),
-        Array.fill(n)(1 << wpDenomC), new Array[Int](n))
-      var i = 0
-      while (i < n) {
-        if (br.bit() == 1) { // luma_weight_lX_flag
-          w(i) = br.se()
-          o(i) = br.se()
-          if (w(i) < -128 || w(i) > 127 ||
-            o(i) < -128 || o(i) > 127) throw ParseFail
-        }
-        if (br.bit() == 1) { // chroma_weight_lX_flag
-          var c = 0
-          while (c < 4) {
-            cw(c)(i) = br.se()
-            if (cw(c)(i) < -128 || cw(c)(i) > 127) throw ParseFail
-            c += 1
-          }
-        }
-        i += 1
-      }
-      (w, o, cw)
-    }
-    if ((isP && pps.weightedPred) ||
-      (isB && pps.weightedBipredIdc == 1)) {
+    // chroma weights per component: (wCb, oCb, wCr, oCr)
+    var wpC: Array[Array[Int]] = null
+    if (isP && pps.weightedPred) {
       wpDenom = br.ue()
       if (wpDenom > 7) return None
       wpDenomC = br.ue() // chroma_log2_weight_denom
       if (wpDenomC > 7) return None
-      val (w0, o0, c0) = readWeights(numRefL0)
-      wpW = w0
-      wpO = o0
-      wpC = c0
-      if (isB) {
-        val (w1, o1, c1) = readWeights(numRefL1)
-        wpW1 = w1
-        wpO1 = o1
-        wpC1 = c1
-      }
-    }
-    // implicit weighted bipred (idc 2, 8.4.2.3.2, round 15): w1 from
-    // the POC-distance DistScaleFactor, w0 = 64 - w1, logWD = 5 and
-    // zero offsets; equal-POC / out-of-range pairs fall back to
-    // 32/32. Single-list partitions stay unweighted under idc 2.
-    var wImp: Array[Array[Int]] = null // (r0)(r1) -> w1
-    if (isB && pps.weightedBipredIdc == 2) {
-      val curPoc = st.poc
-      wImp = Array.tabulate(numRefL0, numRefL1) { (a, b) =>
-        val poc0 = refPocs(listL0(a))
-        val poc1 = refPocs(listL1(b))
-        // 8.4.2.3.2: long-term references fall back to 32/32
-        if (poc0 == poc1 || longOf(listL0(a)) >= 0 ||
-          longOf(listL1(b)) >= 0) 32
-        else {
-          val tb = clip3(-128, 127, curPoc - poc0)
-          val td = clip3(-128, 127, poc1 - poc0)
-          val tx = (16384 + math.abs(td / 2)) / td
-          val dsf = clip3(-1024, 1023, (tb * tx + 32) >> 6) >> 2
-          if (dsf < -64 || dsf > 128) 32 else dsf
+      wpW = Array.fill(numRefL0)(1 << wpDenom)
+      wpO = new Array[Int](numRefL0)
+      wpC = Array(Array.fill(numRefL0)(1 << wpDenomC),
+        new Array[Int](numRefL0), Array.fill(numRefL0)(1 << wpDenomC),
+        new Array[Int](numRefL0))
+      var i = 0
+      while (i < numRefL0) {
+        if (br.bit() == 1) { // luma_weight_l0_flag
+          wpW(i) = br.se()
+          wpO(i) = br.se()
+          if (wpW(i) < -128 || wpW(i) > 127 ||
+            wpO(i) < -128 || wpO(i) > 127) throw ParseFail
         }
+        if (br.bit() == 1) { // chroma_weight_l0_flag
+          var c = 0
+          while (c < 4) {
+            wpC(c)(i) = br.se()
+            if (wpC(c)(i) < -128 || wpC(c)(i) > 127) throw ParseFail
+            c += 1
+          }
+        }
+        i += 1
       }
     }
     // weight one rect in place (8.4.2.3.2 single-list), generic over
@@ -2562,62 +1682,15 @@ object H264 {
       }
     }
     def weightRect(out: Array[Int], off: Int, w: Int, h: Int,
-        refIdx: Int, list: Int = 0): Unit = {
-      val wt = if (list == 0) wpW else wpW1
-      val ot = if (list == 0) wpO else wpO1
-      if (wt == null) return
-      weightRectG(out, off, w, h, 16, wt(refIdx), ot(refIdx), wpDenom)
-    }
-    /** chroma single-list weight: comp 0 = Cb, 1 = Cr; 8-stride. */
+        refIdx: Int): Unit =
+      if (wpW != null)
+        weightRectG(out, off, w, h, 16, wpW(refIdx), wpO(refIdx), wpDenom)
+    /** chroma weight: comp 0 = Cb, 1 = Cr; 8-stride. */
     def weightRectC(out: Array[Int], off: Int, w: Int, h: Int,
-        refIdx: Int, list: Int, comp: Int): Unit = {
-      val ct = if (list == 0) wpC else wpC1
-      if (ct == null) return
-      weightRectG(out, off, w, h, 8, ct(comp * 2)(refIdx),
-        ct(comp * 2 + 1)(refIdx), wpDenomC)
-    }
-    // combine the L0 rect (already in `out`) with the L1 rect in `b1`
-    // (both UNWEIGHTED): default bipred = rounded average (8.4.2.3.1);
-    // explicit idc 1 = the 8.4.2.3.2 two-sided formula
-    def bipredRectG(out: Array[Int], b1: Array[Int], off: Int, w: Int,
-        h: Int, stride: Int, w0: Int, w1: Int, o0: Int, o1: Int,
-        denom: Int, explicit: Boolean): Unit = {
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val k = off + y * stride + x
-          out(k) =
-            if (!explicit) (out(k) + b1(k) + 1) >> 1
-            else clip255(
-              ((out(k) * w0 + b1(k) * w1 + (1 << denom))
-                >> (denom + 1)) + ((o0 + o1 + 1) >> 1))
-          x += 1
-        }
-        y += 1
-      }
-    }
-    def bipredRect(out: Array[Int], b1: Array[Int], off: Int, w: Int,
-        h: Int, r0: Int, r1: Int): Unit =
-      if (wImp != null)
-        bipredRectG(out, b1, off, w, h, 16, 64 - wImp(r0)(r1),
-          wImp(r0)(r1), 0, 0, 5, explicit = true)
-      else bipredRectG(out, b1, off, w, h, 16,
-        if (wpW == null) 0 else wpW(r0),
-        if (wpW1 == null) 0 else wpW1(r1),
-        if (wpO == null) 0 else wpO(r0),
-        if (wpO1 == null) 0 else wpO1(r1), wpDenom, wpW != null)
-    def bipredRectC(out: Array[Int], b1: Array[Int], off: Int, w: Int,
-        h: Int, r0: Int, r1: Int, comp: Int): Unit =
-      if (wImp != null) // implicit weights apply to chroma unchanged
-        bipredRectG(out, b1, off, w, h, 8, 64 - wImp(r0)(r1),
-          wImp(r0)(r1), 0, 0, 5, explicit = true)
-      else bipredRectG(out, b1, off, w, h, 8,
-        if (wpC == null) 0 else wpC(comp * 2)(r0),
-        if (wpC1 == null) 0 else wpC1(comp * 2)(r1),
-        if (wpC == null) 0 else wpC(comp * 2 + 1)(r0),
-        if (wpC1 == null) 0 else wpC1(comp * 2 + 1)(r1),
-        wpDenomC, wpC != null)
+        refIdx: Int, comp: Int): Unit =
+      if (wpC != null)
+        weightRectG(out, off, w, h, 8, wpC(comp * 2)(refIdx),
+          wpC(comp * 2 + 1)(refIdx), wpDenomC)
     if (nalRefIdc != 0) {
       if (isIdr) {
         br.bit() // no_output_of_prior_pics_flag
@@ -2680,13 +1753,6 @@ object H264 {
         st.mmcoOps = ops.reverse // decode order matters (op 4 vs 3/6)
       }
     }
-    // cabac_init_idc (7.3.3: present for CABAC P/SP/B slices) picks
-    // one of the three Tables 9-13..9-33 init columns (round 15)
-    var cabacInitIdc = 0
-    if (pps.cabac && isInter) {
-      cabacInitIdc = br.ue()
-      if (cabacInitIdc > 2) return None
-    }
     var qp = pps.picInitQp + br.se()
     if (qp < 0 || qp > 51) return None
     // in-loop deblocking (round 13): idc 1 disables this slice's
@@ -2706,9 +1772,6 @@ object H264 {
         if (offA < -12 || offA > 12 || offB < -12 || offB > 12) return None
       }
     }
-    // round 15: B slices deblock for real — the bS derivation above
-    // compares both lists' pictures/vectors per 8.7.2.1.
-
     val mbW = sps.mbW; val mbH = sps.mbH
     val stride = mbW * 16
     val luma = st.luma
@@ -2721,9 +1784,6 @@ object H264 {
     val mc16 = new Array[Int](256)
     val mcCb = new Array[Int](64) // MB chroma prediction (round 14)
     val mcCr = new Array[Int](64)
-    val bi16 = new Array[Int](256) // list-1 side of Bi partitions
-    val biCb = new Array[Int](64)
-    val biCr = new Array[Int](64)
     val strideC = st.strideC
     val planeHC = mbH * 8
     val mbIntraA = st.mbIntraA
@@ -2732,13 +1792,7 @@ object H264 {
     val sliceIdx = st.sliceParams.length
     st.curSlice = sliceIdx
     st.sliceParams += ((deblockIdc, offA, offB))
-    st.cqpOffCb = pps.chromaQpOff
-    st.cqpOffCr = pps.chromaQpOff2
-    locally { // round 16: resolve the active scaling matrices
-      val (w4r, w8r) = resolveWeights(sps, pps)
-      st.w4 = w4r
-      st.w8 = w8r
-    }
+    st.cqpOff = pps.chromaQpOff
     def i4ModeAt(bx: Int, by: Int): Int =
       if (bx < 0 || by < 0) 2
       else if (st.sliceOf((by >> 2) * mbW + (bx >> 2)) != sliceIdx) 2
@@ -2799,8 +1853,7 @@ object H264 {
       val pcr = predictChroma(st.cr, st.strideC, mbX * 8, mbY * 8,
         mode, hasL, hasT, hasTL)
       if (pcb == null || pcr == null) return false
-      reconChromaMb(st, mb, qpY, pps.chromaQpOff, pps.chromaQpOff2,
-        cc, pcb, pcr)
+      reconChromaMb(st, mb, qpY, pps.chromaQpOff, cc, pcb, pcr)
       true
     }
     def zeroNz(mbX: Int, mbY: Int): Unit = {
@@ -2824,86 +1877,17 @@ object H264 {
       }
     }
     // coded_block_pattern + mb_qp_delta + per-8x8-gated luma CAVLC
-    // residuals dequantized onto the MB prediction in mc16 — shared
-    // by the P and B inter branches (round 14). Throws ParseFail
-    // upstream; returns false on an out-of-range cbp code.
-    def interResiduals(mb: Int, mbX: Int, mbY: Int,
-        t8Allowed: Boolean = true): ChromaCoeffs = {
+    // residuals dequantized onto the MB prediction in mc16. Throws
+    // ParseFail upstream; returns null on an out-of-range cbp code.
+    def interResiduals(mb: Int, mbX: Int, mbY: Int): ChromaCoeffs = {
       val cbpCode = br.ue()
       if (cbpCode > 47) return null
       val cbp = CbpInter(cbpCode)
       val cbpLuma = cbp & 15
       val cbpChroma = cbp >> 4
-      // round 16: transform_size_8x8_flag for INTER macroblocks
-      // (7.3.5: present under a t8 PPS when luma cbp != 0 and every
-      // partition is >= 8x8). Flag = 1 DECODES: the luma residual is
-      // four interleaved-CAVLC 8x8 blocks through the 8.5.13 chain
-      // onto the MB prediction.
-      val t8 = pps.transform8x8 && cbpLuma != 0 && t8Allowed &&
-        br.bit() == 1
       if (cbp != 0) qp = (qp + br.se() + 52) % 52 // mb_qp_delta (7.3.5)
       qpMbA(mb) = qp
       if (cbp == 0) { zeroNz(mbX, mbY); new ChromaCoeffs }
-      else if (t8) {
-        st.mbT8(mb) = true
-        val d8 = new Array[Int](64)
-        var blk8 = 0
-        while (blk8 < 4) {
-          val cellX = mbX * 2 + (blk8 & 1)
-          val cellY = mbY * 2 + (blk8 >> 1)
-          if ((cbpLuma & (1 << blk8)) != 0) {
-            val c8 = new Array[Int](64)
-            var any = false
-            var i4 = 0
-            while (i4 < 4) {
-              val sub = blk8 * 4 + i4
-              val r = blkRow(sub); val c = blkCol(sub)
-              val (cf, tc) =
-                residualCavlc(br, lumaNz.nC(mbX * 4 + c, mbY * 4 + r), 16)
-              lumaNz.set(mbX * 4 + c, mbY * 4 + r, tc)
-              if (tc > 0) any = true
-              var k = 0
-              while (k < 16) { c8(4 * k + i4) = cf(k); k += 1 }
-              i4 += 1
-            }
-            st.nz8(cellY * (mbW * 2) + cellX) = any
-            if (any) {
-              java.util.Arrays.fill(d8, 0)
-              var si = 0
-              while (si < 64) {
-                if (c8(si) != 0) {
-                  val raster = Zig8(si)
-                  d8(raster) = scaleAc8(c8(si), raster, qp, st.w8(1))
-                }
-                si += 1
-              }
-              val res = invTransform8x8(d8)
-              val ox8 = (blk8 & 1) * 8
-              val oy8 = (blk8 >> 1) * 8
-              var y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) {
-                  val k = (oy8 + y) * 16 + ox8 + x
-                  mc16(k) = clip255(mc16(k) + res(y * 8 + x))
-                  x += 1
-                }
-                y += 1
-              }
-            }
-          } else {
-            st.nz8(cellY * (mbW * 2) + cellX) = false
-            var i4 = 0
-            while (i4 < 4) {
-              val sub = blk8 * 4 + i4
-              lumaNz.set(mbX * 4 + blkCol(sub), mbY * 4 + blkRow(sub), 0)
-              i4 += 1
-            }
-          }
-          blk8 += 1
-        }
-        parseChroma(cbpChroma, mbX, mbY)
-      }
       else {
         val d4 = new Array[Int](16)
         var blk = 0
@@ -2919,7 +1903,7 @@ object H264 {
               while (si < 16) {
                 if (cf(si) != 0) {
                   val raster = Zig4(si)
-                  d4(raster) = scaleAc(cf(si), raster, qp, st.w4(3))
+                  d4(raster) = scaleAc(cf(si), raster, qp)
                 }
                 si += 1
               }
@@ -2941,884 +1925,9 @@ object H264 {
         parseChroma(cbpChroma, mbX, mbY)
       }
     }
-    // ---- spatial direct prediction (8.4.1.2.2, round 15): shared by
-    // B_Skip, B_Direct_16x16 and B_Direct_8x8. Reference indices are
-    // the MinPositive of the 16x16 neighbors' per-list refIdx; motion
-    // is the 8.4.1.3 median for that refIdx; per-block colZeroFlag
-    // (sampled at the 8x8's outer-corner 4x4 under
-    // direct_8x8_inference, per 4x4 otherwise) zeroes the vector of
-    // any list whose refIdx is 0 when the colocated block in
-    // RefPicList1[0] is a near-static refIdx-0 block.
-    // directZeroPrediction (no inter neighbor at all) -> both lists,
-    // refIdx 0, zero motion, colZero ignored.
-    val colPic = if (isB) refs(listL1(0)) else null
-    // 8.4.1.2.2: colZeroFlag requires a SHORT-TERM colocated picture
-    val colPicShort = isB && longOf(listL1(0)) < 0
-    var directMb = -1 // per-MB derivation cache
-    var dR0 = 0; var dR1 = 0
-    var dM0x = 0; var dM0y = 0; var dM1x = 0; var dM1y = 0
-    var dZeroPred = false
-    def directDerive(mb: Int, mbX: Int, mbY: Int): Boolean = {
-      if (directMb == mb) return true
-      val x4 = mbX * 4
-      val y4 = mbY * 4
-      def refOf(ctx: MvCtx, x: Int, y: Int): Int = {
-        val (ok, r, _, _) = ctx.info(x, y)
-        if (ok) r else -1
-      }
-      def minPos(a: Int, b: Int): Int =
-        if (a >= 0 && b >= 0) math.min(a, b) else math.max(a, b)
-      def nRef(ctx: MvCtx): Int = {
-        val a = refOf(ctx, x4 - 1, y4)
-        val b = refOf(ctx, x4, y4 - 1)
-        val c =
-          if (ctx.available(x4 + 4, y4 - 1)) refOf(ctx, x4 + 4, y4 - 1)
-          else refOf(ctx, x4 - 1, y4 - 1)
-        minPos(minPos(a, b), c)
-      }
-      val r0 = nRef(mv)
-      val r1 = nRef(st.mvL1)
-      // a previous slice's longer list must not leak an off-list
-      // index into this slice's shorter one
-      if (r0 >= numRefL0 || r1 >= numRefL1) return false
-      dZeroPred = r0 < 0 && r1 < 0
-      if (dZeroPred) {
-        dR0 = 0; dR1 = 0; dM0x = 0; dM0y = 0; dM1x = 0; dM1y = 0
-      } else {
-        dR0 = r0; dR1 = r1
-        if (r0 >= 0) {
-          val (mx, my) = mvPredPart(mv, x4, y4, 4, ShapeMedian, r0)
-          dM0x = mx; dM0y = my
-        } else { dM0x = 0; dM0y = 0 }
-        if (r1 >= 0) {
-          val (mx, my) = mvPredPart(st.mvL1, x4, y4, 4, ShapeMedian, r1)
-          dM1x = mx; dM1y = my
-        } else { dM1x = 0; dM1y = 0 }
-      }
-      directMb = mb
-      true
-    }
-    // fill + MC + combine ONE direct 4x4 cell with the given per-list
-    // usage, reference indices and vectors (shared by the spatial and
-    // temporal modes)
-    def directCell(mbX: Int, mbY: Int, bx: Int, by: Int,
-        useL0: Boolean, useL1: Boolean, er0: Int, er1: Int,
-        m0x: Int, m0y: Int, m1x: Int, m1y: Int): Unit = {
-      val x4 = mbX * 4
-      val y4 = mbY * 4
-      val ox = mbX * 16
-      val oy = mbY * 16
-      if (useL0) mv.fill(x4 + bx, y4 + by, 1, 1, isInter = true,
-        m0x, m0y, er0, picId = listL0(er0), inf = true)
-      else mv.fill(x4 + bx, y4 + by, 1, 1, isInter = false, 0, 0)
-      if (useL1) st.mvL1.fill(x4 + bx, y4 + by, 1, 1,
-        isInter = true, m1x, m1y, er1, picId = listL1(er1),
-        inf = true)
-      else st.mvL1.fill(x4 + bx, y4 + by, 1, 1, isInter = false,
-        0, 0)
-      val off = by * 4 * 16 + bx * 4
-      val offC = by * 2 * 8 + bx * 2
-      if (useL0) {
-        interPredictRect(refs(listL0(er0)).y, stride, planeH,
-          ox + bx * 4, oy + by * 4, 4, 4, m0x, m0y, mc16, off, 16)
-        interPredictRectChroma(refs(listL0(er0)).cb, strideC,
-          planeHC, (ox >> 1) + bx * 2, (oy >> 1) + by * 2, 2, 2,
-          m0x, m0y, mcCb, offC, 8)
-        interPredictRectChroma(refs(listL0(er0)).cr, strideC,
-          planeHC, (ox >> 1) + bx * 2, (oy >> 1) + by * 2, 2, 2,
-          m0x, m0y, mcCr, offC, 8)
-      }
-      if (useL1) {
-        val t16 = if (useL0) bi16 else mc16
-        val tCb = if (useL0) biCb else mcCb
-        val tCr = if (useL0) biCr else mcCr
-        interPredictRect(refs(listL1(er1)).y, stride, planeH,
-          ox + bx * 4, oy + by * 4, 4, 4, m1x, m1y, t16, off, 16)
-        interPredictRectChroma(refs(listL1(er1)).cb, strideC,
-          planeHC, (ox >> 1) + bx * 2, (oy >> 1) + by * 2, 2, 2,
-          m1x, m1y, tCb, offC, 8)
-        interPredictRectChroma(refs(listL1(er1)).cr, strideC,
-          planeHC, (ox >> 1) + bx * 2, (oy >> 1) + by * 2, 2, 2,
-          m1x, m1y, tCr, offC, 8)
-      }
-      if (useL0 && useL1) {
-        bipredRect(mc16, bi16, off, 4, 4, er0, er1)
-        bipredRectC(mcCb, biCb, offC, 2, 2, er0, er1, 0)
-        bipredRectC(mcCr, biCr, offC, 2, 2, er0, er1, 1)
-      } else if (useL0) {
-        weightRect(mc16, off, 4, 4, er0, list = 0)
-        weightRectC(mcCb, offC, 2, 2, er0, 0, 0)
-        weightRectC(mcCr, offC, 2, 2, er0, 0, 1)
-      } else {
-        weightRect(mc16, off, 4, 4, er1, list = 1)
-        weightRectC(mcCb, offC, 2, 2, er1, 1, 0)
-        weightRectC(mcCr, offC, 2, 2, er1, 1, 1)
-      }
-    }
-    // TEMPORAL direct (8.4.1.2.3, round 15): per sampled block, the
-    // colocated motion scales by the POC distances to the picture the
-    // colocated block referenced — resolved across windows by the
-    // stable picture serial; an intra colocated block reads as mvCol
-    // (0,0) against the colocated picture's own RefPicList0[0].
-    val colPicPoc = if (isB) refPocs(listL1(0)) else 0
-    def directReconTemporal(mbX: Int, mbY: Int, bx0: Int, by0: Int,
-        n4: Int): Boolean = {
-      if (colPic.colRefSerial == null) return false
-      val x4 = mbX * 4
-      val y4 = mbY * 4
-      var by = by0
-      while (by < by0 + n4) {
-        var bx = bx0
-        while (bx < bx0 + n4) {
-          val (sx, sy) =
-            if (sps.direct8x8) (x4 + (bx >> 1) * 3, y4 + (by >> 1) * 3)
-            else (x4 + bx, y4 + by)
-          val ck = sy * mv.gw + sx
-          val (ser, mcx, mcy) =
-            if (colPic.colRef(ck) < 0) // intra colocated block
-              (colPic.firstL0Serial, 0, 0)
-            else (colPic.colRefSerial(ck), colPic.colMvx(ck),
-              colPic.colMvy(ck))
-          if (ser < 0) return false
-          var j = -1
-          var jj = 0
-          while (jj < refs.length && j < 0) {
-            if (refs(jj).serial == ser) j = jj
-            jj += 1
-          }
-          if (j < 0) return false // referenced picture left the DPB
-          // lowest L0 index naming that picture
-          var r0 = -1
-          var rr = 0
-          while (rr < numRefL0 && r0 < 0) {
-            if (listL0(rr) == j) r0 = rr
-            rr += 1
-          }
-          if (r0 < 0) return false
-          val refPoc = refPocs(j)
-          val td0 = clip3(-128, 127, colPicPoc - refPoc)
-          val (m0x, m0y, m1x, m1y) =
-            if (longOf(j) >= 0 || td0 == 0) (mcx, mcy, 0, 0)
-            else {
-              val tb = clip3(-128, 127, st.poc - refPoc)
-              val tx = (16384 + math.abs(td0 / 2)) / td0
-              val dsf = clip3(-1024, 1023, (tb * tx + 32) >> 6)
-              val ax = (dsf * mcx + 128) >> 8
-              val ay = (dsf * mcy + 128) >> 8
-              (ax, ay, ax - mcx, ay - mcy)
-            }
-          directCell(mbX, mbY, bx, by, useL0 = true, useL1 = true,
-            r0, 0, m0x, m0y, m1x, m1y)
-          bx += 1
-        }
-        by += 1
-      }
-      true
-    }
-    // reconstruct the direct region [bx0, bx0+n4) x [by0, by0+n4)
-    // (MB-local 4x4 units; (0, 0, 4) = whole MB, a quadrant = 2) into
-    // the MB buffers, filling both motion grids per cell
-    def directRecon(mb: Int, mbX: Int, mbY: Int, bx0: Int, by0: Int,
-        n4: Int): Boolean = {
-      if (!directSpatial)
-        return directReconTemporal(mbX, mbY, bx0, by0, n4)
-      if (!directDerive(mb, mbX, mbY)) return false
-      val x4 = mbX * 4
-      val y4 = mbY * 4
-      val useL0 = dZeroPred || dR0 >= 0
-      val useL1 = dZeroPred || dR1 >= 0
-      val er0 = math.max(dR0, 0)
-      val er1 = math.max(dR1, 0)
-      var by = by0
-      while (by < by0 + n4) {
-        var bx = bx0
-        while (bx < bx0 + n4) {
-          val (sx, sy) =
-            if (sps.direct8x8) (x4 + (bx >> 1) * 3, y4 + (by >> 1) * 3)
-            else (x4 + bx, y4 + by)
-          val ck = sy * mv.gw + sx
-          val colZero = !dZeroPred && colPicShort &&
-            colPic.colRef != null && colPic.colRef(ck) == 0 &&
-            colPic.colMvx(ck) >= -1 && colPic.colMvx(ck) <= 1 &&
-            colPic.colMvy(ck) >= -1 && colPic.colMvy(ck) <= 1
-          val z0 = colZero && dR0 == 0
-          val z1 = colZero && dR1 == 0
-          directCell(mbX, mbY, bx, by, useL0, useL1, er0, er1,
-            if (z0) 0 else dM0x, if (z0) 0 else dM0y,
-            if (z1) 0 else dM1x, if (z1) 0 else dM1y)
-          bx += 1
-        }
-        by += 1
-      }
-      true
-    }
-    // ---- CABAC P/B macroblock walk (round 15, VERDICT r14 #1): the
-    // inter binarizations (mb_skip_flag 11-13/24-26, the mb_type P/B
-    // trees at 14-20/27-35, sub_mb_type 21-23/36-39, unary ref_idx
-    // 54-59, UEG3 mvd 40-53) with their 9.3.3.1.1.x neighbor
-    // derivations, routed through the SAME reconstruction closures as
-    // the CAVLC walk below (directRecon, weight/bipred, the 8.4.2 MC
-    // helpers, reconChromaMb) and the shared [[CabacMb]] intra tails.
-    def cabacSliceInter(startBit: Int): Option[PicState] = {
-      val cxp = new H264Cabac.Ctx(qp, H264Cabac.InitPB(cabacInitIdc))
-      val dec = new H264Cabac.Dec(rbsp, startBit)
-      if (!dec.valid) return None
-      val w = new CabacMb(st, sliceIdx, rbsp, dec, cxp,
-        pps.chromaQpOff, pps.chromaQpOff2)
-      w.qp = qp
-      // unary ref_idx (9.3.3.1.1.6); -1 = malformed
-      def refIdxC(list: Int, numRef: Int, x4p: Int, y4p: Int): Int = {
-        if (numRef == 1) return 0 // ref_idx absent (7.3.5.1)
-        val ctxL = if (list == 0) mv else st.mvL1
-        def cond(cx4: Int, cy4: Int): Int =
-          if (!ctxL.available(cx4, cy4)) 0
-          else {
-            val k = cy4 * ctxL.gw + cx4
-            if (!ctxL.inter(k) || ctxL.inferred(k) || ctxL.ref(k) <= 0) 0
-            else 1
-          }
-        val inc = cond(x4p - 1, y4p) + 2 * cond(x4p, y4p - 1)
-        if (!dec.decision(cxp, 54 + inc)) return 0
-        var v = 1
-        var c2 = 58
-        while (v < 32 && dec.decision(cxp, c2)) { v += 1; c2 = 59 }
-        if (v >= 32) -1 else v
-      }
-      // UEG3 mvd (9.3.3.1.1.7): base 40 = x, 47 = y; Int.MinValue =
-      // malformed escape
-      def mvdC(base: Int, list: Int, x4p: Int, y4p: Int): Int = {
-        val ctxL = if (list == 0) mv else st.mvL1
-        def am(cx4: Int, cy4: Int): Int =
-          if (!ctxL.available(cx4, cy4)) 0
-          else {
-            val k = cy4 * ctxL.gw + cx4
-            if (!ctxL.inter(k)) 0
-            else if (base == 40) ctxL.amvdx(k) else ctxL.amvdy(k)
-          }
-        val sum = am(x4p - 1, y4p) + am(x4p, y4p - 1)
-        val inc = if (sum < 3) 0 else if (sum <= 32) 1 else 2
-        if (!dec.decision(cxp, base + inc)) return 0
-        var v = 1
-        var b = 1
-        while (v < 9 && dec.decision(cxp, base + math.min(b + 2, 6))) {
-          v += 1; b += 1
-        }
-        if (v >= 9) { // EG3 bypass suffix for |mvd| - 9
-          var k = 3
-          while (k < 24 && dec.bypass()) { v += 1 << k; k += 1 }
-          if (k >= 24) return Int.MinValue
-          var j = k - 1
-          while (j >= 0) {
-            if (dec.bypass()) v += 1 << j
-            j -= 1
-          }
-        }
-        if (dec.bypass()) -v else v
-      }
-      // mb_type intra suffix inside P/B (ctx base 17 / 32): returns
-      // the I-namespace type (0 I_NxN, 1-24 I16, 25 I_PCM)
-      def intraSuffix(base: Int): Int = {
-        if (!dec.decision(cxp, base)) return 0
-        if (dec.terminate()) return 25
-        var t = 1
-        if (dec.decision(cxp, base + 1)) t += 12
-        if (dec.decision(cxp, base + 2))
-          t += 4 + (if (dec.decision(cxp, base + 2)) 4 else 0)
-        if (dec.decision(cxp, base + 3)) t += 2
-        if (dec.decision(cxp, base + 3)) t += 1
-        t
-      }
-      def clearCbfInter(mb: Int, mbX: Int, mbY: Int): Unit = {
-        st.cbfLumaDc(mb) = 0; st.cbfCbDc(mb) = 0; st.cbfCrDc(mb) = 0
-        var blk = 0
-        while (blk < 16) {
-          st.cbfLuma4((mbY * 4 + blkRow(blk)) * mbW * 4 +
-            mbX * 4 + blkCol(blk)) = 0
-          blk += 1
-        }
-        var cblk = 0
-        while (cblk < 4) {
-          val ccx = mbX * 2 + (cblk & 1)
-          val ccy = mbY * 2 + (cblk >> 1)
-          st.cbfCbAc(ccy * mbW * 2 + ccx) = 0
-          st.cbfCrAc(ccy * mbW * 2 + ccx) = 0
-          cblk += 1
-        }
-      }
-      var mb = startMb
-      var end = false
-      while (mb < nMbs && !end) {
-        val mbX = mb % mbW
-        val mbY = mb / mbW
-        val ox = mbX * 16
-        val oy = mbY * 16
-        val x4 = mbX * 4
-        val y4 = mbY * 4
-        // mb_skip_flag (9.3.3.1.1.1; neighbors read BEFORE sliceOf
-        // claims the MB)
-        def skipCond(m2: Int, ok: Boolean): Int =
-          if (!ok || st.sliceOf(m2) != sliceIdx || st.mbSkip(m2)) 0
-          else 1
-        val skipInc = skipCond(mb - 1, mbX > 0) +
-          skipCond(mb - mbW, mbY > 0)
-        st.sliceOf(mb) = sliceIdx
-        val skipped =
-          dec.decision(cxp, (if (isB) 24 else 11) + skipInc)
-        if (skipped) {
-          if (isB) {
-            if (!directRecon(mb, mbX, mbY, 0, 0, 4)) return None
-          } else {
-            val (mx, my) = skipMv(mv, mbX, mbY)
-            mv.fill(x4, y4, 4, 4, isInter = true, mx, my, 0,
-              picId = listL0(0), inf = true)
-            interPredict16x16(refs(listL0(0)).y, stride, planeH,
-              ox, oy, mx, my, mc16)
-            weightRect(mc16, 0, 16, 16, 0)
-            interPredictRectChroma(refs(listL0(0)).cb, strideC,
-              planeHC, ox >> 1, oy >> 1, 8, 8, mx, my, mcCb, 0, 8)
-            interPredictRectChroma(refs(listL0(0)).cr, strideC,
-              planeHC, ox >> 1, oy >> 1, 8, 8, mx, my, mcCr, 0, 8)
-            weightRectC(mcCb, 0, 8, 8, 0, 0, 0)
-            weightRectC(mcCr, 0, 8, 8, 0, 0, 1)
-          }
-          writeMc(ox, oy)
-          reconChromaMb(st, mb, w.qp, pps.chromaQpOff,
-            pps.chromaQpOff2, new ChromaCoeffs, mcCb, mcCr)
-          zeroNz(mbX, mbY)
-          qpMbA(mb) = w.qp
-          st.mbSkip(mb) = true
-          st.mbDirect(mb) = isB
-          st.mbKind(mb) = 3
-          st.mbCbp(mb) = 0
-          clearCbfInter(mb, mbX, mbY)
-          w.prevQpDeltaNz = false
-        } else {
-          // mb_type
-          var interShape = -1 // P: 0 16x16 / 1 16x8 / 2 8x16 / 3 8x8;
-          // B: the rawType namespace of the CAVLC walk
-          var intraT = -1
-          if (isP) {
-            if (!dec.decision(cxp, 14)) {
-              interShape =
-                if (!dec.decision(cxp, 15)) {
-                  if (dec.decision(cxp, 16)) 3 else 0
-                } else if (dec.decision(cxp, 17)) 1 else 2
-            } else intraT = intraSuffix(17)
-          } else {
-            // bin0 ctx 27 + inc over non-direct neighbors (9.3.3.1.1.3)
-            def dirCond(m2: Int, ok: Boolean): Int =
-              if (!ok || st.sliceOf(m2) != sliceIdx ||
-                st.mbDirect(m2)) 0
-              else 1
-            val inc = dirCond(mb - 1, mbX > 0) +
-              dirCond(mb - mbW, mbY > 0)
-            if (!dec.decision(cxp, 27 + inc)) interShape = 100 // direct
-            else if (!dec.decision(cxp, 30))
-              interShape = 101 + (if (dec.decision(cxp, 32)) 1 else 0)
-            else {
-              var bits = 0
-              if (dec.decision(cxp, 31)) bits |= 8
-              if (dec.decision(cxp, 32)) bits |= 4
-              if (dec.decision(cxp, 32)) bits |= 2
-              if (dec.decision(cxp, 32)) bits |= 1
-              if (bits < 8) interShape = 100 + bits + 3
-              else if (bits == 13) intraT = intraSuffix(32)
-              else if (bits == 14) interShape = 111
-              else if (bits == 15) interShape = 122
-              else interShape = 100 +
-                (((bits << 1) | (if (dec.decision(cxp, 32)) 1 else 0))
-                  - 4)
-            }
-          }
-          if (intraT >= 0) {
-            // ---- intra refresh inside the inter slice
-            st.mbSkip(mb) = false
-            st.mbDirect(mb) = false
-            if (isB) st.mvL1.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-            if (intraT == 25) { if (!w.ipcm(mb)) return None }
-            else if (intraT == 0) {
-              // round 16: I_NxN inside a P/B slice carries the t8
-              // flag under a t8 PPS (7.3.5). Flag = 1 degrades for
-              // the same reason as the inter case — intraI8's cat-5
-              // residuals would read the P/B pool's untranscribed
-              // 402-435 rows.
-              if (pps.transform8x8 &&
-                dec.decision(cxp, 399 + t8IncSt(st, sliceIdx, mb)))
-                return None
-              if (!w.intraI4(mb)) return None
-            }
-            else {
-              val t = intraT
-              val acFlag = (t - 1) / 12
-              val cbpChroma = ((t - 1) / 4) % 3
-              val predMode = (t - 1) % 4
-              if (!w.intraI16(mb, acFlag, cbpChroma, predMode))
-                return None
-            }
-          } else {
-            // ---- inter macroblock: motion syntax, then residuals
-            st.mbSkip(mb) = false
-            st.mbDirect(mb) = isB && interShape == 100
-            // noSubMbPartSizeLessThan8x8Flag for the t8 flag (7.3.5)
-            var t8OkC = true
-            if (isB && interShape == 100) t8OkC = sps.direct8x8
-            // MC one partition for a list into the MB buffers
-            def mcTo(list: Int, refIdx: Int, cx4: Int, cy4: Int,
-                w4: Int, h4: Int, mx: Int, my: Int, t16: Array[Int],
-                tCb: Array[Int], tCr: Array[Int]): Unit = {
-              val lst = if (list == 0) listL0 else listL1
-              val off = cy4 * 4 * 16 + cx4 * 4
-              val offC = cy4 * 2 * 8 + cx4 * 2
-              interPredictRect(refs(lst(refIdx)).y, stride, planeH,
-                ox + cx4 * 4, oy + cy4 * 4, w4 * 4, h4 * 4, mx, my,
-                t16, off, 16)
-              interPredictRectChroma(refs(lst(refIdx)).cb, strideC,
-                planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-                w4 * 2, h4 * 2, mx, my, tCb, offC, 8)
-              interPredictRectChroma(refs(lst(refIdx)).cr, strideC,
-                planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-                w4 * 2, h4 * 2, mx, my, tCr, offC, 8)
-            }
-            // read mvd pair + fill + MC for one partition; mode:
-            // 0 = L0-only, 1 = L1-only, 2 = Bi leg (list selects leg)
-            def partC(list: Int, refIdx: Int, cx4: Int, cy4: Int,
-                w4: Int, h4: Int, shape: Int, mode: Int): Boolean = {
-              val mdx = mvdC(40, list, x4 + cx4, y4 + cy4)
-              if (mdx == Int.MinValue) return false
-              val mdy = mvdC(47, list, x4 + cx4, y4 + cy4)
-              if (mdy == Int.MinValue) return false
-              val ctxL = if (list == 0) mv else st.mvL1
-              val (px, py) = mvPredPart(ctxL, x4 + cx4, y4 + cy4, w4,
-                shape, refIdx)
-              val mx = px + mdx
-              val my = py + mdy
-              if (mx < -2048 * 4 || mx > 2048 * 4 ||
-                my < -2048 * 4 || my > 2048 * 4) return false
-              val lst = if (list == 0) listL0 else listL1
-              ctxL.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = true,
-                mx, my, refIdx, picId = lst(refIdx),
-                amx = math.abs(mdx), amy = math.abs(mdy))
-              val toBi = mode == 2 && list == 1
-              val t16 = if (toBi) bi16 else mc16
-              val tCb = if (toBi) biCb else mcCb
-              val tCr = if (toBi) biCr else mcCr
-              mcTo(list, refIdx, cx4, cy4, w4, h4, mx, my, t16, tCb,
-                tCr)
-              val off = cy4 * 4 * 16 + cx4 * 4
-              val offC = cy4 * 2 * 8 + cx4 * 2
-              if (mode != 2) {
-                weightRect(mc16, off, w4 * 4, h4 * 4, refIdx, list)
-                weightRectC(mcCb, offC, w4 * 2, h4 * 2, refIdx, list, 0)
-                weightRectC(mcCr, offC, w4 * 2, h4 * 2, refIdx, list, 1)
-              }
-              true
-            }
-            if (isP) {
-              interShape match {
-                case 0 =>
-                  val r = refIdxC(0, numRefL0, x4, y4)
-                  if (r < 0 || r >= numRefL0) return None
-                  if (!partC(0, r, 0, 0, 4, 4, ShapeMedian, 0))
-                    return None
-                case 1 =>
-                  val rt = refIdxC(0, numRefL0, x4, y4)
-                  if (rt < 0 || rt >= numRefL0) return None
-                  val rb2 = refIdxC(0, numRefL0, x4, y4 + 2)
-                  if (rb2 < 0 || rb2 >= numRefL0) return None
-                  if (!partC(0, rt, 0, 0, 4, 2, Shape16x8Top, 0))
-                    return None
-                  if (!partC(0, rb2, 0, 2, 4, 2, Shape16x8Bot, 0))
-                    return None
-                case 2 =>
-                  val rl = refIdxC(0, numRefL0, x4, y4)
-                  if (rl < 0 || rl >= numRefL0) return None
-                  val rr = refIdxC(0, numRefL0, x4 + 2, y4)
-                  if (rr < 0 || rr >= numRefL0) return None
-                  if (!partC(0, rl, 0, 0, 2, 4, Shape8x16Left, 0))
-                    return None
-                  if (!partC(0, rr, 2, 0, 2, 4, Shape8x16Right, 0))
-                    return None
-                case _ => // P_8x8: sub_mb_type[4] (ctx 21-23), refs,
-                  // then mvds per sub-partition
-                  val subT = new Array[Int](4)
-                  var p8 = 0
-                  while (p8 < 4) {
-                    subT(p8) =
-                      if (dec.decision(cxp, 21)) 0
-                      else if (!dec.decision(cxp, 22)) 1
-                      else if (dec.decision(cxp, 23)) 2
-                      else 3
-                    p8 += 1
-                  }
-                  t8OkC = subT.forall(_ == 0)
-                  val r8 = new Array[Int](4)
-                  p8 = 0
-                  while (p8 < 4) {
-                    r8(p8) = refIdxC(0, numRefL0,
-                      x4 + (p8 & 1) * 2, y4 + (p8 >> 1) * 2)
-                    if (r8(p8) < 0 || r8(p8) >= numRefL0) return None
-                    p8 += 1
-                  }
-                  p8 = 0
-                  while (p8 < 4) {
-                    val bx8 = (p8 & 1) * 2
-                    val by8 = (p8 >> 1) * 2
-                    val rr = r8(p8)
-                    val ok = subT(p8) match {
-                      case 0 => partC(0, rr, bx8, by8, 2, 2,
-                        ShapeMedian, 0)
-                      case 1 => partC(0, rr, bx8, by8, 2, 1,
-                        ShapeMedian, 0) &&
-                        partC(0, rr, bx8, by8 + 1, 2, 1, ShapeMedian, 0)
-                      case 2 => partC(0, rr, bx8, by8, 1, 2,
-                        ShapeMedian, 0) &&
-                        partC(0, rr, bx8 + 1, by8, 1, 2, ShapeMedian, 0)
-                      case _ => partC(0, rr, bx8, by8, 1, 1,
-                        ShapeMedian, 0) &&
-                        partC(0, rr, bx8 + 1, by8, 1, 1, ShapeMedian, 0) &&
-                        partC(0, rr, bx8, by8 + 1, 1, 1, ShapeMedian, 0) &&
-                        partC(0, rr, bx8 + 1, by8 + 1, 1, 1,
-                          ShapeMedian, 0)
-                    }
-                    if (!ok) return None
-                    p8 += 1
-                  }
-              }
-            } else interShape match {
-              case 100 => // B_Direct_16x16
-                if (!directRecon(mb, mbX, mbY, 0, 0, 4)) return None
-              case 122 => // B_8x8
-                val subT = new Array[Int](4)
-                var p8 = 0
-                while (p8 < 4) {
-                  subT(p8) =
-                    if (!dec.decision(cxp, 36)) 0
-                    else if (!dec.decision(cxp, 37))
-                      1 + (if (dec.decision(cxp, 39)) 1 else 0)
-                    else {
-                      var t = 3
-                      var done2 = false
-                      if (dec.decision(cxp, 38)) {
-                        if (dec.decision(cxp, 39)) {
-                          t = 11 + (if (dec.decision(cxp, 39)) 1 else 0)
-                          done2 = true
-                        } else t += 4
-                      }
-                      if (!done2) {
-                        if (dec.decision(cxp, 39)) t += 2
-                        if (dec.decision(cxp, 39)) t += 1
-                      }
-                      t
-                    }
-                  p8 += 1
-                }
-                t8OkC = subT.forall(t => t == 1 || t == 2 || t == 3 ||
-                  (t == 0 && sps.direct8x8))
-                def subUsesL0(t: Int) = t == 1 || t == 3 || t == 4 ||
-                  t == 5 || t == 8 || t == 9 || t == 10 || t == 12
-                def subUsesL1(t: Int) = t == 2 || t == 3 || t == 6 ||
-                  t == 7 || t == 8 || t == 9 || t == 11 || t == 12
-                def subParts(t: Int): Seq[(Int, Int, Int, Int)] =
-                  t match {
-                    case 1 | 2 | 3 => Seq((0, 0, 2, 2))
-                    case 4 | 6 | 8 => Seq((0, 0, 2, 1), (0, 1, 2, 1))
-                    case 5 | 7 | 9 => Seq((0, 0, 1, 2), (1, 0, 1, 2))
-                    case _ => Seq((0, 0, 1, 1), (1, 0, 1, 1),
-                      (0, 1, 1, 1), (1, 1, 1, 1))
-                  }
-                p8 = 0
-                while (p8 < 4) {
-                  if (subT(p8) == 0) {
-                    if (!directRecon(mb, mbX, mbY, (p8 & 1) * 2,
-                      (p8 >> 1) * 2, 2)) return None
-                  }
-                  p8 += 1
-                }
-                val r0a = new Array[Int](4)
-                val r1a = new Array[Int](4)
-                p8 = 0
-                while (p8 < 4) {
-                  if (subT(p8) != 0 && subUsesL0(subT(p8))) {
-                    r0a(p8) = refIdxC(0, numRefL0,
-                      x4 + (p8 & 1) * 2, y4 + (p8 >> 1) * 2)
-                    if (r0a(p8) < 0 || r0a(p8) >= numRefL0) return None
-                  }
-                  p8 += 1
-                }
-                p8 = 0
-                while (p8 < 4) {
-                  if (subT(p8) != 0 && subUsesL1(subT(p8))) {
-                    r1a(p8) = refIdxC(1, numRefL1,
-                      x4 + (p8 & 1) * 2, y4 + (p8 >> 1) * 2)
-                    if (r1a(p8) < 0 || r1a(p8) >= numRefL1) return None
-                  }
-                  p8 += 1
-                }
-                p8 = 0
-                while (p8 < 4) { // pass 1: list-0 mvds
-                  val t = subT(p8)
-                  if (t != 0) {
-                    val bx8 = (p8 & 1) * 2
-                    val by8 = (p8 >> 1) * 2
-                    val mode = if (subUsesL1(t)) 2 else 0
-                    if (subUsesL0(t)) {
-                      val all = subParts(t).forall {
-                        case (sbx, sby, w4s, h4s) =>
-                          partC(0, r0a(p8), bx8 + sbx, by8 + sby, w4s,
-                            h4s, ShapeMedian,
-                            if (mode == 2) 2 else 0)
-                      }
-                      if (!all) return None
-                    } else mv.fill(x4 + bx8, y4 + by8, 2, 2,
-                      isInter = false, 0, 0)
-                  }
-                  p8 += 1
-                }
-                p8 = 0
-                while (p8 < 4) { // pass 2: list-1 mvds (+ combine)
-                  val t = subT(p8)
-                  if (t != 0) {
-                    val bx8 = (p8 & 1) * 2
-                    val by8 = (p8 >> 1) * 2
-                    val both = subUsesL0(t) && subUsesL1(t)
-                    if (subUsesL1(t)) {
-                      val all = subParts(t).forall {
-                        case (sbx, sby, w4s, h4s) =>
-                          val okp = partC(1, r1a(p8), bx8 + sbx,
-                            by8 + sby, w4s, h4s, ShapeMedian,
-                            if (both) 2 else 1)
-                          if (okp && both) {
-                            val cx4 = bx8 + sbx
-                            val cy4 = by8 + sby
-                            val off = cy4 * 4 * 16 + cx4 * 4
-                            val offC = cy4 * 2 * 8 + cx4 * 2
-                            bipredRect(mc16, bi16, off, w4s * 4,
-                              h4s * 4, r0a(p8), r1a(p8))
-                            bipredRectC(mcCb, biCb, offC, w4s * 2,
-                              h4s * 2, r0a(p8), r1a(p8), 0)
-                            bipredRectC(mcCr, biCr, offC, w4s * 2,
-                              h4s * 2, r0a(p8), r1a(p8), 1)
-                          }
-                          okp
-                      }
-                      if (!all) return None
-                    } else st.mvL1.fill(x4 + bx8, y4 + by8, 2, 2,
-                      isInter = false, 0, 0)
-                  }
-                  p8 += 1
-                }
-              case bshape => // two-list 16x16 / 16x8 / 8x16 types
-                val bt = bshape - 100
-                if (bt < 1 || bt > 21) return None
-                val parts: Seq[(Int, Int, Int, Int, Int)] =
-                  if (bt <= 3) Seq((0, 0, 4, 4, ShapeMedian))
-                  else if ((bt & 1) == 0)
-                    Seq((0, 0, 4, 2, Shape16x8Top),
-                      (0, 2, 4, 2, Shape16x8Bot))
-                  else
-                    Seq((0, 0, 2, 4, Shape8x16Left),
-                      (2, 0, 2, 4, Shape8x16Right))
-                val pmodes: Seq[Int] =
-                  if (bt <= 3) Seq(bt - 1)
-                  else Seq(
-                    Seq(0, 0), Seq(1, 1), Seq(0, 1), Seq(1, 0),
-                    Seq(0, 2), Seq(1, 2), Seq(2, 0), Seq(2, 1),
-                    Seq(2, 2))((bt - 4) / 2)
-                def usesL0(m: Int) = m == 0 || m == 2
-                def usesL1(m: Int) = m == 1 || m == 2
-                val n = parts.length
-                val r0 = new Array[Int](n)
-                val r1 = new Array[Int](n)
-                var p = 0
-                while (p < n) {
-                  if (usesL0(pmodes(p))) {
-                    val (cx4, cy4, _, _, _) = parts(p)
-                    r0(p) = refIdxC(0, numRefL0, x4 + cx4, y4 + cy4)
-                    if (r0(p) < 0 || r0(p) >= numRefL0) return None
-                  }
-                  p += 1
-                }
-                p = 0
-                while (p < n) {
-                  if (usesL1(pmodes(p))) {
-                    val (cx4, cy4, _, _, _) = parts(p)
-                    r1(p) = refIdxC(1, numRefL1, x4 + cx4, y4 + cy4)
-                    if (r1(p) < 0 || r1(p) >= numRefL1) return None
-                  }
-                  p += 1
-                }
-                p = 0
-                while (p < n) { // pass 1: list-0 mvds
-                  val (cx4, cy4, w4p, h4p, shape) = parts(p)
-                  val m = pmodes(p)
-                  if (usesL0(m)) {
-                    if (!partC(0, r0(p), cx4, cy4, w4p, h4p, shape,
-                      if (m == 2) 2 else 0)) return None
-                  } else mv.fill(x4 + cx4, y4 + cy4, w4p, h4p,
-                    isInter = false, 0, 0)
-                  p += 1
-                }
-                p = 0
-                while (p < n) { // pass 2: list-1 mvds
-                  val (cx4, cy4, w4p, h4p, shape) = parts(p)
-                  val m = pmodes(p)
-                  if (usesL1(m)) {
-                    if (!partC(1, r1(p), cx4, cy4, w4p, h4p, shape,
-                      if (m == 2) 2 else 1)) return None
-                    if (m == 2) {
-                      val off = cy4 * 4 * 16 + cx4 * 4
-                      val offC = cy4 * 2 * 8 + cx4 * 2
-                      bipredRect(mc16, bi16, off, w4p * 4, h4p * 4,
-                        r0(p), r1(p))
-                      bipredRectC(mcCb, biCb, offC, w4p * 2, h4p * 2,
-                        r0(p), r1(p), 0)
-                      bipredRectC(mcCr, biCr, offC, w4p * 2, h4p * 2,
-                        r0(p), r1(p), 1)
-                    }
-                  } else st.mvL1.fill(x4 + cx4, y4 + cy4, w4p, h4p,
-                    isInter = false, 0, 0)
-                  p += 1
-                }
-            }
-            // ---- coded_block_pattern (ctx 73-84) + mb_qp_delta +
-            // residuals, dequantized onto the MB prediction
-            var cbpLuma = 0
-            var b8 = 0
-            while (b8 < 4) {
-              val inc = cbpLumaInc(st, sliceIdx, mb, b8, cbpLuma)
-              if (dec.decision(cxp, 73 + inc)) cbpLuma |= 1 << b8
-              b8 += 1
-            }
-            var cbpChroma = 0
-            if (dec.decision(cxp,
-              77 + cbpChromaInc(st, sliceIdx, mb, bin1 = false)))
-              cbpChroma = if (dec.decision(cxp,
-                81 + cbpChromaInc(st, sliceIdx, mb, bin1 = true))) 2
-              else 1
-            st.mbKind(mb) = 3
-            st.mbCbp(mb) = cbpLuma | (cbpChroma << 4)
-            st.cbfLumaDc(mb) = 0
-            // round 16: transform_size_8x8_flag (ctx 399-401, the
-            // transcribed per-idc rows) for coded inter macroblocks
-            // under a t8 PPS. Flag = 1 DEGRADES: the cat-5 residual
-            // init values of the P/B columns (ctx 402-435) are an
-            // I-column stand-in pending transcription, and decoding
-            // through them would desync silently on wild streams —
-            // the exact class this round eliminated from the main
-            // table. CAVLC inter t8 decodes for real; CABAC waits
-            // for the Tables 9-34..9-43-era P/B columns.
-            if (pps.transform8x8 && cbpLuma != 0 && t8OkC &&
-              dec.decision(cxp, 399 + t8IncSt(st, sliceIdx, mb)))
-              return None
-            if ((cbpLuma | cbpChroma) != 0) {
-              if (!w.qpDelta()) return None
-            } else w.prevQpDeltaNz = false
-            qpMbA(mb) = w.qp
-            locally {
-            val d4 = new Array[Int](16)
-            var blk = 0
-            while (blk < 16) {
-              val r = blkRow(blk); val c = blkCol(blk)
-              val bx = mbX * 4 + c; val by = mbY * 4 + r
-              if ((cbpLuma & (1 << (blk >> 2))) != 0) {
-                val inc = cbfIncCell(st, sliceIdx, mb, bx, by,
-                  st.cbfLuma4, mbW * 4, 4, curIntra = false)
-                val rb = residualCabac(dec, cxp, 2, inc)
-                if (rb == null) return None
-                st.cbfLuma4(by * mbW * 4 + bx) =
-                  if (rb._2 > 0) 1 else 0
-                lumaNz.set(bx, by, rb._2)
-                if (rb._2 > 0) {
-                  java.util.Arrays.fill(d4, 0)
-                  var si = 0
-                  while (si < 16) {
-                    if (rb._1(si) != 0) {
-                      val raster = Zig4(si)
-                      d4(raster) = scaleAc(rb._1(si), raster, w.qp,
-                        st.w4(3))
-                    }
-                    si += 1
-                  }
-                  val res = invTransform4x4(d4)
-                  var y = 0
-                  while (y < 4) {
-                    var x = 0
-                    while (x < 4) {
-                      val k = (r * 4 + y) * 16 + c * 4 + x
-                      mc16(k) = clip255(mc16(k) + res(y * 4 + x))
-                      x += 1
-                    }
-                    y += 1
-                  }
-                }
-              } else {
-                st.cbfLuma4(by * mbW * 4 + bx) = 0
-                lumaNz.set(bx, by, 0)
-              }
-              blk += 1
-            }
-            val ccI = cabacChroma(st, sliceIdx, dec, cxp, mb,
-              cbpChroma, curIntra = false)
-            if (ccI == null) return None
-            writeMc(ox, oy)
-            reconChromaMb(st, mb, w.qp, pps.chromaQpOff,
-              pps.chromaQpOff2, ccI, mcCb, mcCr)
-            }
-          }
-        }
-        mb += 1
-        end = dec.terminate()
-        if (!end && mb >= nMbs) return None
-      }
-      if (dec.overrun > 0) return None
-      st.mbNext = mb
-      st.allIntra = false
-      if (isB) st.hasB = true
-      Some(st)
-    }
-    // ---- entropy dispatch (round 15: the CABAC branch sits AFTER
-    // the shared reconstruction closures so P/B CABAC reuses them)
-    if (pps.cabac) {
-      // round 16: CABAC I slices decode transform_8x8_mode for real
-      // (ctx 399-401 + the I-column cat-5 layer). CABAC P/B slices
-      // PARSE the per-MB flag (the per-idc 399-401 rows are
-      // transcribed) and degrade when it is SET — their cat-5 init
-      // rows are an I-column stand-in (see H264Cabac.pbT8Tail), and
-      // decoding through a stand-in would desync silently. A t8 PPS
-      // with all-4x4 inter macroblocks decodes fully.
-      // cabac_alignment_one_bit (7.3.4): every bit up to the byte
-      // boundary must be 1 — anything else is a malformed stream
-      while ((br.pos & 7) != 0) if (br.bit() != 1) return None
-      return if (!isInter)
-        cabacSliceI(st, sliceIdx, rbsp, br.pos, startMb, qp,
-          pps.chromaQpOff, pps.chromaQpOff2, t8Mode = pps.transform8x8)
-      else cabacSliceInter(br.pos)
-    }
     var mb = startMb
     var ended = false // slice data exhausted (or trailing skip run)
     while (mb < nMbs && !ended) {
-      if (isB) {
-        // mb_skip_run in B slices marks B_Skip macroblocks, which
-        // reconstruct in spatial-direct mode with no residual
-        // (8.4.1.2, round 15)
-        val run = br.ue()
-        if (run < 0 || mb + run > nMbs) return None
-        var s = 0
-        while (s < run) {
-          st.sliceOf(mb) = sliceIdx
-          val mbX = mb % mbW
-          val mbY = mb / mbW
-          if (!directRecon(mb, mbX, mbY, 0, 0, 4)) return None
-          qpMbA(mb) = qp
-          writeMc(mbX * 16, mbY * 16)
-          reconChromaMb(st, mb, qp, pps.chromaQpOff, pps.chromaQpOff2,
-            new ChromaCoeffs, mcCb, mcCr)
-          zeroNz(mbX, mbY)
-          mb += 1
-          s += 1
-        }
-        if (mb >= nMbs || !br.moreRbspData()) ended = true
-      }
       if (isP) {
         // mb_skip_run precedes every coded macroblock (7.3.4);
         // skipped MBs reconstruct with the P_Skip vector (8.4.1.1)
@@ -3829,7 +1938,7 @@ object H264 {
           st.sliceOf(mb) = sliceIdx
           val (mx, my) = skipMv(mv, mb % mbW, mb / mbW)
           mv.fill((mb % mbW) * 4, (mb / mbW) * 4, 4, 4, isInter = true,
-            mx, my, refIdx = 0, picId = listL0(0), inf = true)
+            mx, my, refIdx = 0, picId = listL0(0))
           qpMbA(mb) = qp
           interPredict16x16(refs(listL0(0)).y, stride, planeH,
             (mb % mbW) * 16, (mb / mbW) * 16, mx, my, mc16)
@@ -3839,10 +1948,10 @@ object H264 {
             (mb % mbW) * 8, (mb / mbW) * 8, 8, 8, mx, my, mcCb, 0, 8)
           interPredictRectChroma(refs(listL0(0)).cr, strideC, planeHC,
             (mb % mbW) * 8, (mb / mbW) * 8, 8, 8, mx, my, mcCr, 0, 8)
-          weightRectC(mcCb, 0, 8, 8, 0, 0, 0)
-          weightRectC(mcCr, 0, 8, 8, 0, 0, 1)
-          reconChromaMb(st, mb, qp, pps.chromaQpOff, pps.chromaQpOff2,
-            new ChromaCoeffs, mcCb, mcCr)
+          weightRectC(mcCb, 0, 8, 8, 0, 0)
+          weightRectC(mcCr, 0, 8, 8, 0, 1)
+          reconChromaMb(st, mb, qp, pps.chromaQpOff, new ChromaCoeffs,
+            mcCb, mcCr)
           zeroNz(mb % mbW, mb / mbW)
           mb += 1
           s += 1
@@ -3861,17 +1970,8 @@ object H264 {
       // P slices: 0..4 = inter partition types (7.4.5: P_L0_16x16,
       // P_L0_L0_16x8, P_L0_L0_8x16, P_8x8, P_8x8ref0 — the last two
       // identical with one reference); >= 5 = intra types shifted by 5.
-      // B slices: 0 = B_Direct_16x16 (-200), 22 = B_8x8 (-201, round
-      // 15); 1..21 = the two-list partition types (-100 - t
-      // namespace); >= 23 = intra.
       val mbType =
         if (isP) { if (rawType <= 4) -1 - rawType else rawType - 5 }
-        else if (isB) {
-          if (rawType == 0) -200
-          else if (rawType == 22) -201
-          else if (rawType <= 21) -100 - rawType
-          else rawType - 23
-        }
         else rawType
       if (mbType <= -1 && mbType >= -5) {
         // ---- inter macroblock (round 13: all P partition shapes).
@@ -3904,8 +2004,7 @@ object H264 {
           if (mx < -2048 * 4 || mx > 2048 * 4 ||
             my < -2048 * 4 || my > 2048 * 4) return false
           mv.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = true, mx, my,
-            refIdx, picId = listL0(refIdx),
-            amx = math.abs(mx - px), amy = math.abs(my - py))
+            refIdx, picId = listL0(refIdx))
           interPredictRect(refs(listL0(refIdx)).y, stride, planeH,
             ox + cx4 * 4, oy + cy4 * 4, w4 * 4, h4 * 4, mx, my,
             mc16, cy4 * 4 * 16 + cx4 * 4, 16)
@@ -3917,11 +2016,10 @@ object H264 {
           interPredictRectChroma(refs(listL0(refIdx)).cr, strideC,
             planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
             w4 * 2, h4 * 2, mx, my, mcCr, offC, 8)
-          weightRectC(mcCb, offC, w4 * 2, h4 * 2, refIdx, 0, 0)
-          weightRectC(mcCr, offC, w4 * 2, h4 * 2, refIdx, 0, 1)
+          weightRectC(mcCb, offC, w4 * 2, h4 * 2, refIdx, 0)
+          weightRectC(mcCr, offC, w4 * 2, h4 * 2, refIdx, 1)
           true
         }
-        var t8Ok = true // noSubMbPartSizeLessThan8x8Flag (7.3.5)
         mbType match {
           case -1 => // P_L0_16x16
             val r0 = readRefIdx()
@@ -3945,7 +2043,6 @@ object H264 {
               if (subT(p8) > 3) return None
               p8 += 1
             }
-            t8Ok = subT.forall(_ == 0) // only P_L0_8x8 subs keep t8
             val r8 = new Array[Int](4)
             if (t == -4) { // P_8x8: ref_idx coded; P_8x8ref0 (-5): all 0
               p8 = 0
@@ -3971,330 +2068,14 @@ object H264 {
               p8 += 1
             }
         }
-        val ccP = interResiduals(mb, mbX, mbY, t8Ok)
+        val ccP = interResiduals(mb, mbX, mbY)
         if (ccP == null) return None
         writeMc(ox, oy)
-        reconChromaMb(st, mb, qp, pps.chromaQpOff, pps.chromaQpOff2,
-          ccP, mcCb, mcCr)
-      } else if (mbType == -200) {
-        // ---- B_Direct_16x16 (8.4.1.2, round 15): derived motion
-        // over the whole MB, then a coded residual like any inter MB
-        if (!directRecon(mb, mbX, mbY, 0, 0, 4)) return None
-        val ccD = interResiduals(mb, mbX, mbY, sps.direct8x8)
-        if (ccD == null) return None
-        writeMc(ox, oy)
-        reconChromaMb(st, mb, qp, pps.chromaQpOff, pps.chromaQpOff2,
-          ccD, mcCb, mcCr)
-      } else if (mbType == -201) {
-        // ---- B_8x8 (round 15): sub_mb_type per 8x8 quadrant (Table
-        // 7-18 — direct / L0 / L1 / Bi at 8x8 / 8x4 / 4x8 / 4x4),
-        // ref_idx passes then mvd passes in 7.3.5.2 order. Direct
-        // quadrants derive + reconstruct BEFORE any mvd is read:
-        // their cells are z-earlier than every predictor that can
-        // touch them, so fill order matches decode-order semantics.
-        val x4 = mbX * 4
-        val y4 = mbY * 4
-        val subT = new Array[Int](4)
-        var p8 = 0
-        while (p8 < 4) {
-          subT(p8) = br.ue()
-          if (subT(p8) > 12) return None
-          p8 += 1
-        }
-        def subUsesL0(t: Int) = t == 1 || t == 3 || t == 4 || t == 5 ||
-          t == 8 || t == 9 || t == 10 || t == 12
-        def subUsesL1(t: Int) = t == 2 || t == 3 || t == 6 || t == 7 ||
-          t == 8 || t == 9 || t == 11 || t == 12
-        // sub-partition rects (8x8-local 4x4 units): (bx, by, w4, h4)
-        def subParts(t: Int): Seq[(Int, Int, Int, Int)] = t match {
-          case 1 | 2 | 3 => Seq((0, 0, 2, 2))
-          case 4 | 6 | 8 => Seq((0, 0, 2, 1), (0, 1, 2, 1))
-          case 5 | 7 | 9 => Seq((0, 0, 1, 2), (1, 0, 1, 2))
-          case _ =>
-            Seq((0, 0, 1, 1), (1, 0, 1, 1), (0, 1, 1, 1), (1, 1, 1, 1))
-        }
-        p8 = 0
-        while (p8 < 4) {
-          if (subT(p8) == 0) {
-            if (!directRecon(mb, mbX, mbY, (p8 & 1) * 2, (p8 >> 1) * 2,
-              2)) return None
-          }
-          p8 += 1
-        }
-        def readRefIdxN(n: Int): Int =
-          if (n == 1) 0
-          else if (n == 2) 1 - br.bit()
-          else br.ue()
-        val r0 = new Array[Int](4)
-        val r1 = new Array[Int](4)
-        p8 = 0
-        while (p8 < 4) {
-          if (subT(p8) != 0 && subUsesL0(subT(p8))) {
-            r0(p8) = readRefIdxN(numRefL0)
-            if (r0(p8) < 0 || r0(p8) >= numRefL0) return None
-          }
-          p8 += 1
-        }
-        p8 = 0
-        while (p8 < 4) {
-          if (subT(p8) != 0 && subUsesL1(subT(p8))) {
-            r1(p8) = readRefIdxN(numRefL1)
-            if (r1(p8) < 0 || r1(p8) >= numRefL1) return None
-          }
-          p8 += 1
-        }
-        // pass 1: list-0 mvds; L0-only sub-partitions MC (+ weight)
-        // straight into mc16
-        p8 = 0
-        while (p8 < 4) {
-          val t = subT(p8)
-          if (t != 0) {
-            val bx8 = (p8 & 1) * 2
-            val by8 = (p8 >> 1) * 2
-            val only0 = subUsesL0(t) && !subUsesL1(t)
-            if (subUsesL0(t)) {
-              subParts(t).foreach { case (sbx, sby, w4, h4) =>
-                val cx4 = bx8 + sbx
-                val cy4 = by8 + sby
-                val (px, py) = mvPredPart(mv, x4 + cx4, y4 + cy4, w4,
-                  ShapeMedian, r0(p8))
-                val mx = px + br.se()
-                val my = py + br.se()
-                if (mx < -2048 * 4 || mx > 2048 * 4 ||
-                  my < -2048 * 4 || my > 2048 * 4) return None
-                mv.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = true,
-                  mx, my, r0(p8), picId = listL0(r0(p8)))
-                val off = cy4 * 4 * 16 + cx4 * 4
-                val offC = cy4 * 2 * 8 + cx4 * 2
-                interPredictRect(refs(listL0(r0(p8))).y, stride,
-                  planeH, ox + cx4 * 4, oy + cy4 * 4, w4 * 4, h4 * 4,
-                  mx, my, mc16, off, 16)
-                interPredictRectChroma(refs(listL0(r0(p8))).cb,
-                  strideC, planeHC, (ox >> 1) + cx4 * 2,
-                  (oy >> 1) + cy4 * 2, w4 * 2, h4 * 2, mx, my, mcCb,
-                  offC, 8)
-                interPredictRectChroma(refs(listL0(r0(p8))).cr,
-                  strideC, planeHC, (ox >> 1) + cx4 * 2,
-                  (oy >> 1) + cy4 * 2, w4 * 2, h4 * 2, mx, my, mcCr,
-                  offC, 8)
-                if (only0) {
-                  weightRect(mc16, off, w4 * 4, h4 * 4, r0(p8), list = 0)
-                  weightRectC(mcCb, offC, w4 * 2, h4 * 2, r0(p8), 0, 0)
-                  weightRectC(mcCr, offC, w4 * 2, h4 * 2, r0(p8), 0, 1)
-                }
-              }
-            } else mv.fill(x4 + bx8, y4 + by8, 2, 2, isInter = false,
-              0, 0)
-          }
-          p8 += 1
-        }
-        // pass 2: list-1 mvds; L1-only MC into mc16, Bi MC into the
-        // bi buffers then combine
-        p8 = 0
-        while (p8 < 4) {
-          val t = subT(p8)
-          if (t != 0) {
-            val bx8 = (p8 & 1) * 2
-            val by8 = (p8 >> 1) * 2
-            val both = subUsesL0(t) && subUsesL1(t)
-            if (subUsesL1(t)) {
-              subParts(t).foreach { case (sbx, sby, w4, h4) =>
-                val cx4 = bx8 + sbx
-                val cy4 = by8 + sby
-                val (px, py) = mvPredPart(st.mvL1, x4 + cx4, y4 + cy4,
-                  w4, ShapeMedian, r1(p8))
-                val mx = px + br.se()
-                val my = py + br.se()
-                if (mx < -2048 * 4 || mx > 2048 * 4 ||
-                  my < -2048 * 4 || my > 2048 * 4) return None
-                st.mvL1.fill(x4 + cx4, y4 + cy4, w4, h4,
-                  isInter = true, mx, my, r1(p8),
-                  picId = listL1(r1(p8)))
-                val off = cy4 * 4 * 16 + cx4 * 4
-                val offC = cy4 * 2 * 8 + cx4 * 2
-                val t16 = if (both) bi16 else mc16
-                val tCb = if (both) biCb else mcCb
-                val tCr = if (both) biCr else mcCr
-                interPredictRect(refs(listL1(r1(p8))).y, stride,
-                  planeH, ox + cx4 * 4, oy + cy4 * 4, w4 * 4, h4 * 4,
-                  mx, my, t16, off, 16)
-                interPredictRectChroma(refs(listL1(r1(p8))).cb,
-                  strideC, planeHC, (ox >> 1) + cx4 * 2,
-                  (oy >> 1) + cy4 * 2, w4 * 2, h4 * 2, mx, my, tCb,
-                  offC, 8)
-                interPredictRectChroma(refs(listL1(r1(p8))).cr,
-                  strideC, planeHC, (ox >> 1) + cx4 * 2,
-                  (oy >> 1) + cy4 * 2, w4 * 2, h4 * 2, mx, my, tCr,
-                  offC, 8)
-                if (both) {
-                  bipredRect(mc16, bi16, off, w4 * 4, h4 * 4, r0(p8),
-                    r1(p8))
-                  bipredRectC(mcCb, biCb, offC, w4 * 2, h4 * 2,
-                    r0(p8), r1(p8), 0)
-                  bipredRectC(mcCr, biCr, offC, w4 * 2, h4 * 2,
-                    r0(p8), r1(p8), 1)
-                } else {
-                  weightRect(mc16, off, w4 * 4, h4 * 4, r1(p8), list = 1)
-                  weightRectC(mcCb, offC, w4 * 2, h4 * 2, r1(p8), 1, 0)
-                  weightRectC(mcCr, offC, w4 * 2, h4 * 2, r1(p8), 1, 1)
-                }
-              }
-            } else st.mvL1.fill(x4 + bx8, y4 + by8, 2, 2,
-              isInter = false, 0, 0)
-          }
-          p8 += 1
-        }
-        val cc8 = interResiduals(mb, mbX, mbY,
-          subT.forall(t => t == 1 || t == 2 || t == 3 ||
-            (t == 0 && sps.direct8x8)))
-        if (cc8 == null) return None
-        writeMc(ox, oy)
-        reconChromaMb(st, mb, qp, pps.chromaQpOff, pps.chromaQpOff2,
-          cc8, mcCb, mcCr)
-      } else if (mbType <= -100) {
-        // ---- B inter macroblock (round 14): Table 7-14 types 1-21 —
-        // every 16x16 / 16x8 / 8x16 L0/L1/Bi combination. Syntax
-        // (7.3.5.1): ref_idx_l0 for the L0-using partitions, then
-        // ref_idx_l1, then mvd_l0s, then mvd_l1s; each list predicts
-        // (8.4.1.3) over its OWN motion context. Bi partitions MC
-        // both lists unweighted and combine per 8.4.2.3.1 (rounded
-        // average) or 8.4.2.3.2 (explicit idc 1). B_Direct_16x16,
-        // B_Skip and B_8x8 degrade before reaching here.
-        val bt = -100 - mbType
-        val x4 = mbX * 4
-        val y4 = mbY * 4
-        // partition geometry: (cx4, cy4, w4, h4, shape)
-        val parts: Seq[(Int, Int, Int, Int, Int)] =
-          if (bt <= 3) Seq((0, 0, 4, 4, ShapeMedian))
-          else if ((bt & 1) == 0) // 16x8
-            Seq((0, 0, 4, 2, Shape16x8Top), (0, 2, 4, 2, Shape16x8Bot))
-          else // 8x16
-            Seq((0, 0, 2, 4, Shape8x16Left), (2, 0, 2, 4, Shape8x16Right))
-        // per-partition pred mode: 0 = L0, 1 = L1, 2 = Bi
-        val pmodes: Seq[Int] =
-          if (bt <= 3) Seq(bt - 1)
-          else Seq(
-            Seq(0, 0), Seq(1, 1), Seq(0, 1), Seq(1, 0), Seq(0, 2),
-            Seq(1, 2), Seq(2, 0), Seq(2, 1), Seq(2, 2))((bt - 4) / 2)
-        def usesL0(m: Int) = m == 0 || m == 2
-        def usesL1(m: Int) = m == 1 || m == 2
-        def readRefIdxN(n: Int): Int =
-          if (n == 1) 0
-          else if (n == 2) 1 - br.bit()
-          else br.ue()
-        val n = parts.length
-        val r0 = new Array[Int](n)
-        val r1 = new Array[Int](n)
-        var p = 0
-        while (p < n) {
-          if (usesL0(pmodes(p))) {
-            r0(p) = readRefIdxN(numRefL0)
-            if (r0(p) < 0 || r0(p) >= numRefL0) return None
-          }
-          p += 1
-        }
-        p = 0
-        while (p < n) {
-          if (usesL1(pmodes(p))) {
-            r1(p) = readRefIdxN(numRefL1)
-            if (r1(p) < 0 || r1(p) >= numRefL1) return None
-          }
-          p += 1
-        }
-        // pass 1: list-0 mvds in partition order; L0-only partitions
-        // MC (+ single-list weight) straight into mc16
-        p = 0
-        while (p < n) {
-          val (cx4, cy4, w4, h4, shape) = parts(p)
-          val m = pmodes(p)
-          if (usesL0(m)) {
-            val (px, py) = mvPredPart(mv, x4 + cx4, y4 + cy4, w4, shape,
-              r0(p))
-            val mx = px + br.se()
-            val my = py + br.se()
-            if (mx < -2048 * 4 || mx > 2048 * 4 ||
-              my < -2048 * 4 || my > 2048 * 4) return None
-            mv.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = true, mx, my,
-              r0(p), picId = listL0(r0(p)))
-            interPredictRect(refs(listL0(r0(p))).y, stride, planeH,
-              ox + cx4 * 4, oy + cy4 * 4, w4 * 4, h4 * 4, mx, my,
-              mc16, cy4 * 4 * 16 + cx4 * 4, 16)
-            val offC = cy4 * 2 * 8 + cx4 * 2
-            interPredictRectChroma(refs(listL0(r0(p))).cb, strideC,
-              planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-              w4 * 2, h4 * 2, mx, my, mcCb, offC, 8)
-            interPredictRectChroma(refs(listL0(r0(p))).cr, strideC,
-              planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-              w4 * 2, h4 * 2, mx, my, mcCr, offC, 8)
-            if (m == 0) {
-              weightRect(mc16, cy4 * 4 * 16 + cx4 * 4, w4 * 4, h4 * 4,
-                r0(p), list = 0)
-              weightRectC(mcCb, offC, w4 * 2, h4 * 2, r0(p), 0, 0)
-              weightRectC(mcCr, offC, w4 * 2, h4 * 2, r0(p), 0, 1)
-            }
-          } else mv.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = false, 0, 0)
-          p += 1
-        }
-        // pass 2: list-1 mvds; L1-only MC into mc16, Bi MC into bi16
-        // then combine with the L0 prediction already in place
-        p = 0
-        while (p < n) {
-          val (cx4, cy4, w4, h4, shape) = parts(p)
-          val m = pmodes(p)
-          if (usesL1(m)) {
-            val (px, py) = mvPredPart(st.mvL1, x4 + cx4, y4 + cy4, w4,
-              shape, r1(p))
-            val mx = px + br.se()
-            val my = py + br.se()
-            if (mx < -2048 * 4 || mx > 2048 * 4 ||
-              my < -2048 * 4 || my > 2048 * 4) return None
-            st.mvL1.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = true,
-              mx, my, r1(p), picId = listL1(r1(p)))
-            val off = cy4 * 4 * 16 + cx4 * 4
-            val offC = cy4 * 2 * 8 + cx4 * 2
-            if (m == 1) {
-              interPredictRect(refs(listL1(r1(p))).y, stride, planeH,
-                ox + cx4 * 4, oy + cy4 * 4, w4 * 4, h4 * 4, mx, my,
-                mc16, off, 16)
-              weightRect(mc16, off, w4 * 4, h4 * 4, r1(p), list = 1)
-              interPredictRectChroma(refs(listL1(r1(p))).cb, strideC,
-                planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-                w4 * 2, h4 * 2, mx, my, mcCb, offC, 8)
-              interPredictRectChroma(refs(listL1(r1(p))).cr, strideC,
-                planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-                w4 * 2, h4 * 2, mx, my, mcCr, offC, 8)
-              weightRectC(mcCb, offC, w4 * 2, h4 * 2, r1(p), 1, 0)
-              weightRectC(mcCr, offC, w4 * 2, h4 * 2, r1(p), 1, 1)
-            } else {
-              interPredictRect(refs(listL1(r1(p))).y, stride, planeH,
-                ox + cx4 * 4, oy + cy4 * 4, w4 * 4, h4 * 4, mx, my,
-                bi16, off, 16)
-              bipredRect(mc16, bi16, off, w4 * 4, h4 * 4, r0(p), r1(p))
-              interPredictRectChroma(refs(listL1(r1(p))).cb, strideC,
-                planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-                w4 * 2, h4 * 2, mx, my, biCb, offC, 8)
-              interPredictRectChroma(refs(listL1(r1(p))).cr, strideC,
-                planeHC, (ox >> 1) + cx4 * 2, (oy >> 1) + cy4 * 2,
-                w4 * 2, h4 * 2, mx, my, biCr, offC, 8)
-              bipredRectC(mcCb, biCb, offC, w4 * 2, h4 * 2, r0(p),
-                r1(p), 0)
-              bipredRectC(mcCr, biCr, offC, w4 * 2, h4 * 2, r0(p),
-                r1(p), 1)
-            }
-          } else st.mvL1.fill(x4 + cx4, y4 + cy4, w4, h4,
-            isInter = false, 0, 0)
-          p += 1
-        }
-        val ccB = interResiduals(mb, mbX, mbY)
-        if (ccB == null) return None
-        writeMc(ox, oy)
-        reconChromaMb(st, mb, qp, pps.chromaQpOff, pps.chromaQpOff2,
-          ccB, mcCb, mcCr)
+        reconChromaMb(st, mb, qp, pps.chromaQpOff, ccP, mcCb, mcCr)
       } else if (mbType == 25) {
         // ---- I_PCM: raw samples (always exact)
         mbIntraA(mb) = true
         mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-        if (isB) st.mvL1.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
         qpMbA(mb) = 0 // the loop filter treats I_PCM as QP 0 (8.7.2)
         br.byteAlign()
         // bulk aligned read (r18 perf): the samples are 384 consecutive
@@ -4351,7 +2132,6 @@ object H264 {
         qp = (qp + br.se() + 52) % 52 // mb_qp_delta
         mbIntraA(mb) = true
         mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-        if (isB) st.mvL1.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
         qpMbA(mb) = qp
         // luma DC: CAVLC with nC as for blkIdx 0 (9.2.1)
         val (dcCoeffs, _) =
@@ -4376,92 +2156,8 @@ object H264 {
           return None
         if (!intraChromaRecon(mb, mbX, mbY, chromaMode, ccI, qp))
           return None
-      } else if (mbType == 0 && pps.transform8x8 && br.bit() == 1) {
-        // ---- Intra_8x8 (I_NxN + transform_size_8x8_flag, round 16 —
-        // High profile). Four prediction modes in z order; prediction
-        // per 8.3.2.1 is the same min(modeA, modeB) over the covering
-        // neighbor blocks — each 8x8's mode is stored into all four
-        // covered 4x4 cells, so i4ModeAt answers for both 4x4 and 8x8
-        // neighbors.
-        val modes = new Array[Int](4)
-        var blk = 0
-        while (blk < 4) {
-          val bx = mbX * 4 + (blk & 1) * 2
-          val by = mbY * 4 + (blk >> 1) * 2
-          val predMode = math.min(i4ModeAt(bx - 1, by), i4ModeAt(bx, by - 1))
-          val mode =
-            if (br.bit() == 1) predMode
-            else { val rem = br.bits(3); if (rem < predMode) rem else rem + 1 }
-          if (mode < 0 || mode > 8) return None
-          modes(blk) = mode
-          var cy = 0
-          while (cy < 2) {
-            var cx = 0
-            while (cx < 2) {
-              i4mode((by + cy) * (mbW * 4) + bx + cx) = mode
-              cx += 1
-            }
-            cy += 1
-          }
-          blk += 1
-        }
-        val chromaMode8 = br.ue()
-        if (chromaMode8 > 3) return None
-        val cbpCode8 = br.ue()
-        if (cbpCode8 > 47) return None
-        val cbp8 = CbpIntra(cbpCode8)
-        val cbpLuma8 = cbp8 & 15
-        val cbpChroma8 = cbp8 >> 4
-        if (cbp8 != 0) qp = (qp + br.se() + 52) % 52 // mb_qp_delta
-        mbIntraA(mb) = true
-        st.mbT8(mb) = true
-        mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-        if (isB) st.mvL1.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-        qpMbA(mb) = qp
-        // residuals: one 64-coefficient 8x8 block per coded quadrant,
-        // CAVLC-coded as FOUR interleaved 4x4 sub-blocks (7.4.5.3.3 /
-        // 9.2.1: level8x8[4k + i] = level4x4[i][k]; each sub-block
-        // takes nC from its own 4x4 cell and records its TotalCoeff)
-        val coeffs8 = new Array[Array[Int]](4)
-        blk = 0
-        while (blk < 4) {
-          if ((cbpLuma8 & (1 << blk)) != 0) {
-            val c8 = new Array[Int](64)
-            var any = false
-            var i4 = 0
-            while (i4 < 4) {
-              val sub = blk * 4 + i4
-              val r = blkRow(sub); val c = blkCol(sub)
-              val (cf, tc) =
-                residualCavlc(br, lumaNz.nC(mbX * 4 + c, mbY * 4 + r), 16)
-              lumaNz.set(mbX * 4 + c, mbY * 4 + r, tc)
-              if (tc > 0) any = true
-              var k = 0
-              while (k < 16) { c8(4 * k + i4) = cf(k); k += 1 }
-              i4 += 1
-            }
-            coeffs8(blk) = if (any) c8 else null
-            st.nz8((mbY * 2 + (blk >> 1)) * (mbW * 2) + mbX * 2 + (blk & 1)) =
-              any
-          } else {
-            coeffs8(blk) = null
-            var i4 = 0
-            while (i4 < 4) {
-              val sub = blk * 4 + i4
-              lumaNz.set(mbX * 4 + blkCol(sub), mbY * 4 + blkRow(sub), 0)
-              i4 += 1
-            }
-          }
-          blk += 1
-        }
-        val ccI8 = parseChroma(cbpChroma8, mbX, mbY)
-        if (!reconI8(st, sliceIdx, mb, qp, modes, coeffs8)) return None
-        if (!intraChromaRecon(mb, mbX, mbY, chromaMode8, ccI8, qp))
-          return None
       } else if (mbType == 0) {
-        // ---- Intra_4x4 (I_NxN, round 13; under a t8 PPS the
-        // transform_size_8x8_flag was read as 0 in the branch guard
-        // above, so reaching here implies the 4x4 transform).
+        // ---- Intra_4x4 (I_NxN, round 13).
         // 16 prediction modes, bitstream order = z-order; prediction
         // per 8.3.1.1: min(modeA, modeB), DC (2) for unavailable or
         // non-Intra_4x4 neighbors
@@ -4489,7 +2185,6 @@ object H264 {
         if (cbp != 0) qp = (qp + br.se() + 52) % 52 // mb_qp_delta (7.3.5)
         mbIntraA(mb) = true
         mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-        if (isB) st.mvL1.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
         qpMbA(mb) = qp
         // residuals: the 16 luma 4x4 blocks in z-order, gated per-8x8
         // group (7.3.5.3); blocks in an uncoded group carry zero
@@ -4519,717 +2214,9 @@ object H264 {
       }
     }
     st.mbNext = mb
-    if (isInter) st.allIntra = false
-    if (isB) st.hasB = true
+    if (isP) st.allIntra = false
     Some(st)
   }
-
-  // ------------------------------------------------------ CABAC slice
-
-  /** Residual-block ctx offsets by ctxBlockCat 0-4 (Intra16DC,
-    * Intra16AC, Luma4x4, ChromaDC, ChromaAC): coded_block_flag base
-    * 85, significant/last bases 105/166, coeff_abs_level base 227. */
-  private val CbfCatOff = Array(0, 4, 8, 12, 16)
-  private val SigCatOff = Array(0, 15, 29, 44, 47)
-  private val LvlCatOff = Array(0, 10, 20, 30, 39)
-  /** cat 5 (round 16) = the High-profile 8x8 luma block: 64 coeffs,
-    * NO coded_block_flag in 4:2:0 (7.3.5.3.3 sends the block iff its
-    * cbp bit is set), sig/last at 402/417 through the Table 9-43
-    * position maps, levels at 426. */
-  private val MaxCoeffCat = Array(16, 15, 16, 4, 15, 64)
-
-  /** Table 9-43: ctxIdxInc per scan position for the 8x8
-    * significant_coeff_flag (frame coded). */
-  private val SigMap8: Array[Int] = Array(
-    0, 1, 2, 3, 4, 5, 5, 4, 4, 3, 3, 4, 4, 4, 5, 5,
-    4, 4, 4, 4, 3, 3, 6, 7, 7, 7, 8, 9, 10, 9, 8, 7,
-    7, 6, 11, 12, 13, 11, 6, 7, 8, 9, 14, 10, 9, 8, 6, 11,
-    12, 13, 11, 6, 9, 14, 10, 9, 11, 12, 13, 11, 14, 10, 12)
-
-  /** Table 9-43: ctxIdxInc per scan position for the 8x8
-    * last_significant_coeff_flag (frame coded). */
-  private val LastMap8: Array[Int] = Array(
-    // r17 (ADVICE r16 #1): entries 22-23 were 2 — the public
-    // last_coeff_flag_offset_8x8 table keeps inc 1 through scan 23 and
-    // starts 2 at 24; the shared-map encoder masked the slip locally,
-    // but a wild stream with a last coefficient at scan 22-23 desynced.
-    0, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 2, 2, 2, 2, 2, 2, 2, 2,
-    2, 2, 3, 3, 3, 3, 3, 3, 3, 3, 3, 3, 3, 3, 3, 3,
-    4, 4, 4, 4, 4, 4, 4, 4, 5, 5, 5, 5, 6, 7, 8)
-
-  // ctxIdxInc derivations (9.3.3.1.1.x), shared VERBATIM by the
-  // decoder walk and the fixture encoder — the encoder drives the
-  // same PicState, so the two can never drift on neighbor modeling.
-
-  /** mb_type (I) bin0 inc: neighbors coded as other-than-I_NxN. */
-  /** transform_size_8x8_flag ctxIdxInc (9.3.3.1.1.10): neighbor
-    * macroblocks with the flag set, slice-gated like every other
-    * derivation. */
-  private def t8IncSt(st: PicState, sliceIdx: Int, mb: Int): Int = {
-    val mbX = mb % st.mbW
-    def cond(m2: Int, ok: Boolean): Int =
-      if (ok && st.sliceOf(m2) == sliceIdx && st.mbT8(m2)) 1 else 0
-    cond(mb - 1, mbX > 0) + cond(mb - st.mbW, mb >= st.mbW)
-  }
-
-  private def mbTypeIInc(st: PicState, sliceIdx: Int, mb: Int): Int = {
-    val mbX = mb % st.mbW
-    val mbY = mb / st.mbW
-    val l = mb - 1
-    val t = mb - st.mbW
-    (if (mbX > 0 && st.sliceOf(l) == sliceIdx && st.mbKind(l) != 0) 1 else 0) +
-      (if (mbY > 0 && st.sliceOf(t) == sliceIdx && st.mbKind(t) != 0) 1
-      else 0)
-  }
-
-  /** intra_chroma_pred_mode bin0 inc (9.3.3.1.1.8). */
-  private def chromaModeInc(st: PicState, sliceIdx: Int, mb: Int): Int = {
-    val mbX = mb % st.mbW
-    val mbY = mb / st.mbW
-    def cond(m2: Int, geomOk: Boolean): Int =
-      if (geomOk && st.sliceOf(m2) == sliceIdx && st.mbKind(m2) != 2 &&
-        st.mbKind(m2) != 3 && st.chromaMode(m2) != 0) 1
-      else 0
-    cond(mb - 1, mbX > 0) + 2 * cond(mb - st.mbW, mbY > 0)
-  }
-
-  /** coded_block_pattern luma bin inc for 8x8 block `b8`, given the
-    * bits of THIS MB decoded so far (9.3.3.1.1.4; I_PCM neighbors
-    * carry stored cbp 47, making every rule uniform). */
-  private def cbpLumaInc(st: PicState, sliceIdx: Int, mb: Int, b8: Int,
-      cbpSoFar: Int): Int = {
-    val mbW = st.mbW
-    val mbX = mb % mbW
-    val mbY = mb / mbW
-    val bx8 = b8 & 1
-    val by8 = b8 >> 1
-    val condA =
-      if (bx8 == 1) { if (((cbpSoFar >> (b8 - 1)) & 1) != 0) 0 else 1 }
-      else if (!(mbX > 0 && st.sliceOf(mb - 1) == sliceIdx)) 0
-      else if (((st.mbCbp(mb - 1) >> (by8 * 2 + 1)) & 1) != 0) 0
-      else 1
-    val condB =
-      if (by8 == 1) { if (((cbpSoFar >> (b8 - 2)) & 1) != 0) 0 else 1 }
-      else if (!(mbY > 0 && st.sliceOf(mb - mbW) == sliceIdx)) 0
-      else if (((st.mbCbp(mb - mbW) >> (2 + bx8)) & 1) != 0) 0
-      else 1
-    condA + 2 * condB
-  }
-
-  /** coded_block_pattern chroma bin inc; `bin1` selects the second
-    * stage (cbpChroma == 2 test) vs the first (!= 0 test). */
-  private def cbpChromaInc(st: PicState, sliceIdx: Int, mb: Int,
-      bin1: Boolean): Int = {
-    val mbX = mb % st.mbW
-    val mbY = mb / st.mbW
-    def cond(m2: Int, geomOk: Boolean): Int =
-      if (!geomOk || st.sliceOf(m2) != sliceIdx) 0
-      else {
-        val ch = st.mbCbp(m2) >> 4
-        if (if (bin1) ch == 2 else ch != 0) 1 else 0
-      }
-    cond(mb - 1, mbX > 0) + 2 * cond(mb - st.mbW, mbY > 0)
-  }
-
-  /** coded_block_flag condTermFlag for an MB-level block (luma DC /
-    * chroma DC) of the left/top neighbor; in an intra MB an
-    * unavailable neighbor contributes 1 (9.3.3.1.1.9). `hasBlock`
-    * says whether the neighbor's kind carries that block at all. */
-  private def cbfIncMb(st: PicState, sliceIdx: Int, mb: Int,
-      arr: Array[Byte], hasBlock: Int => Boolean,
-      curIntra: Boolean = true): Int = {
-    val mbX = mb % st.mbW
-    val mbY = mb / st.mbW
-    def cond(m2: Int, geomOk: Boolean): Int =
-      if (!geomOk || st.sliceOf(m2) != sliceIdx) {
-        if (curIntra) 1 else 0 // 9.3.3.1.1.9: unavailable neighbor
-        // reads as coded only when the CURRENT mb is intra
-      }
-      else if (st.mbKind(m2) == 2) 1
-      else if (!hasBlock(st.mbKind(m2))) 0
-      else arr(m2).toInt
-    cond(mb - 1, mbX > 0) + 2 * cond(mb - st.mbW, mbY > 0)
-  }
-
-  /** coded_block_flag condTermFlag for one neighboring CELL on a
-    * per-4x4 (cellsPerMb = 4) or per-chroma-4x4 (2) grid. `mb` is the
-    * CURRENT macroblock (an intra one: outside-picture/slice -> 1). */
-  private def cbfCondCellAt(st: PicState, sliceIdx: Int, mb: Int,
-      cx0: Int, cy0: Int, grid: Array[Byte], gw: Int,
-      cellsPerMb: Int, curIntra: Boolean = true): Int = {
-    val unavail = if (curIntra) 1 else 0
-    if (cx0 < 0 || cy0 < 0) return unavail
-    val m2 = (cy0 / cellsPerMb) * st.mbW + (cx0 / cellsPerMb)
-    if (m2 != mb && st.sliceOf(m2) != sliceIdx) unavail
-    else if (st.mbKind(m2) == 2) 1
-    else grid(cy0 * gw + cx0).toInt
-  }
-
-  /** Both-neighbor cell inc: left + 2 * top. */
-  private def cbfIncCell(st: PicState, sliceIdx: Int, mb: Int,
-      cx0: Int, cy0: Int, grid: Array[Byte], gw: Int,
-      cellsPerMb: Int, curIntra: Boolean = true): Int =
-    cbfCondCellAt(st, sliceIdx, mb, cx0 - 1, cy0, grid, gw, cellsPerMb,
-      curIntra) +
-      2 * cbfCondCellAt(st, sliceIdx, mb, cx0, cy0 - 1, grid, gw,
-        cellsPerMb, curIntra)
-
-  /** chroma-DC coded_block_flag inc (the DC block exists whenever the
-    * neighbor's cbpChroma != 0). */
-  private def cbfIncChromaDc(st: PicState, sliceIdx: Int, mb: Int,
-      arr: Array[Byte], curIntra: Boolean = true): Int = {
-    val mbX = mb % st.mbW
-    val mbY = mb / st.mbW
-    def cond(m2: Int, geomOk: Boolean): Int =
-      if (!geomOk || st.sliceOf(m2) != sliceIdx) { if (curIntra) 1 else 0 }
-      else if (st.mbKind(m2) == 2) 1
-      else if ((st.mbCbp(m2) >> 4) == 0) 0
-      else arr(m2).toInt
-    cond(mb - 1, mbX > 0) + 2 * cond(mb - st.mbW, mbY > 0)
-  }
-
-  /** Decode one residual_block_cabac (7.3.5.3.3): coded_block_flag
-    * at `85 + catOff + cbfInc`, significance map, levels high-to-low
-    * with the 9.3.3.1.3 Eq1/Gt1 adaptation, signs in bypass. Returns
-    * scan-order coefficients (length = maxNumCoeff for the cat) and
-    * the nonzero count, or null on a malformed map/level. */
-  private[ext] def residualCabac(dec: H264Cabac.Dec, cx: H264Cabac.Ctx,
-      cat: Int, cbfInc: Int): (Array[Int], Int) = {
-    val maxC = MaxCoeffCat(cat)
-    val out = new Array[Int](maxC)
-    // cat 5 has no coded_block_flag in 4:2:0 (the cbp bit gates it)
-    if (cat != 5 &&
-      !dec.decision(cx, 85 + CbfCatOff(cat) + cbfInc)) return (out, 0)
-    val sigBase = if (cat == 5) 402 else 105 + SigCatOff(cat)
-    val lastBase = if (cat == 5) 417 else 166 + SigCatOff(cat)
-    val sig = new Array[Boolean](maxC)
-    var lastIdx = maxC - 1
-    var i = 0
-    var done = false
-    while (i < maxC - 1 && !done) {
-      val inc =
-        if (cat == 5) SigMap8(i)
-        else if (cat == 3) math.min(i, 2) else i
-      if (dec.decision(cx, sigBase + inc)) {
-        sig(i) = true
-        val lastInc = if (cat == 5) LastMap8(i) else inc
-        if (dec.decision(cx, lastBase + lastInc)) { lastIdx = i; done = true }
-      }
-      i += 1
-    }
-    if (!done) sig(maxC - 1) = true // the final position is inferred
-    val lvlBase = if (cat == 5) 426 else 227 + LvlCatOff(cat)
-    // 9.3.3.1.3: only the Gt1 increment clamps at 3 for chroma DC
-    // (cat 3); bin 0 is Min(4, 1 + numDecodAbsLevelEq1) everywhere.
-    val clampG = if (cat == 3) 3 else 4
-    var numEq1 = 0
-    var numGt1 = 0
-    var nz = 0
-    i = lastIdx
-    while (i >= 0) {
-      if (sig(i)) {
-        var absLvl = 1
-        val inc0 = if (numGt1 != 0) 0 else math.min(4, 1 + numEq1)
-        if (dec.decision(cx, lvlBase + inc0)) {
-          // TU prefix continues at the Gt1 context (constant while
-          // this level decodes), cMax 14, then the UEG0 bypass escape
-          val incG = 5 + math.min(clampG, numGt1)
-          absLvl = 2
-          while (absLvl < 15 && dec.decision(cx, lvlBase + incG))
-            absLvl += 1
-          if (absLvl == 15) { // escape: abs = 14 + 2^j + suffix
-            var j = 0
-            while (j < 30 && dec.bypass()) j += 1
-            if (j >= 30) return null
-            var v = 1
-            var k = 0
-            while (k < j) { v = (v << 1) | (if (dec.bypass()) 1 else 0); k += 1 }
-            absLvl = v + 14
-          }
-        }
-        val neg = dec.bypass()
-        out(i) = if (neg) -absLvl else absLvl
-        if (absLvl == 1) numEq1 += 1 else numGt1 += 1
-        nz += 1
-      }
-      i -= 1
-    }
-    (out, nz)
-  }
-
-  /** Shared CABAC macroblock-layer machinery (round 15): the walk
-    * state (qp, mb_qp_delta chain) plus the INTRA macroblock tails —
-    * used by the I-slice walk below AND the P/B walk inside
-    * [[decodeSliceInto]], so intra-in-inter rides the exact same
-    * context modeling and reconstruction. */
-  private final class CabacMb(val st: PicState, val sliceIdx: Int,
-      val rbsp: Array[Byte], val dec: H264Cabac.Dec,
-      val cx: H264Cabac.Ctx, val chromaQpOff: Int,
-      val chromaQpOff2: Int) {
-    var qp = 0
-    var prevQpDeltaNz = false
-    private val mbW = st.mbW
-    private val stride = st.stride
-
-    /** intra chroma prediction + reconstruction, the CAVLC twin. */
-    def intraChromaReconC(mb: Int, mode: Int, cc: ChromaCoeffs,
-        qpY: Int): Boolean = {
-      val mbX = mb % mbW
-      val mbY = mb / mbW
-      val hasL = mbX > 0 && st.sliceOf(mb - 1) == sliceIdx
-      val hasT = mbY > 0 && st.sliceOf(mb - mbW) == sliceIdx
-      val hasTL = mbX > 0 && mbY > 0 &&
-        st.sliceOf(mb - mbW - 1) == sliceIdx
-      val pcb = predictChroma(st.cb, st.strideC, mbX * 8, mbY * 8,
-        mode, hasL, hasT, hasTL)
-      val pcr = predictChroma(st.cr, st.strideC, mbX * 8, mbY * 8,
-        mode, hasL, hasT, hasTL)
-      if (pcb == null || pcr == null) return false
-      reconChromaMb(st, mb, qpY, chromaQpOff, chromaQpOff2, cc, pcb, pcr)
-      true
-    }
-
-    /** mb_qp_delta (9.3.2.7 U binarization, ctx 60-63); updates the
-      * qp chain on success. Returns false on a malformed value. */
-    def qpDelta(): Boolean = {
-      if (!dec.decision(cx, 60 + (if (prevQpDeltaNz) 1 else 0))) {
-        prevQpDeltaNz = false
-        return true
-      }
-      var k = 1
-      if (dec.decision(cx, 62)) {
-        k = 2
-        while (k <= 52 && dec.decision(cx, 63)) k += 1
-        if (k > 52) return false
-      }
-      val d = if ((k & 1) == 1) (k + 1) >> 1 else -(k >> 1)
-      qp = (qp + d + 52) % 52
-      prevQpDeltaNz = d != 0
-      true
-    }
-
-    /** intra_chroma_pred_mode (TU cMax 3, ctx 64 + inc then 67). */
-    def chromaPredMode(mb: Int): Int = {
-      val inc = chromaModeInc(st, sliceIdx, mb)
-      if (!dec.decision(cx, 64 + inc)) 0
-      else if (!dec.decision(cx, 67)) 1
-      else if (!dec.decision(cx, 67)) 2
-      else 3
-    }
-
-    /** I_PCM macroblock (the ctx-276 terminate escape fired): raw
-      * samples + engine re-init. The caller has already read the
-      * escape. */
-    def ipcm(mb: Int): Boolean = {
-      val mbX = mb % mbW
-      val mbY = mb / mbW
-      val byteStart = (dec.bitPos + 7) >> 3
-      if (byteStart + 384 > rbsp.length) return false
-      var y = 0
-      while (y < 16) {
-        var x = 0
-        while (x < 16) {
-          st.luma((mbY * 16 + y) * stride + mbX * 16 + x) =
-            rbsp(byteStart + y * 16 + x) & 0xFF
-          x += 1
-        }
-        y += 1
-      }
-      var comp = 0
-      while (comp < 2) {
-        val plane = if (comp == 0) st.cb else st.cr
-        var cy = 0
-        while (cy < 8) {
-          var cx0 = 0
-          while (cx0 < 8) {
-            plane((mbY * 8 + cy) * st.strideC + mbX * 8 + cx0) =
-              rbsp(byteStart + 256 + comp * 64 + cy * 8 + cx0) & 0xFF
-            cx0 += 1
-          }
-          cy += 1
-        }
-        comp += 1
-      }
-      st.mbKind(mb) = 2
-      st.mbCbp(mb) = 47
-      st.cbfLumaDc(mb) = 1
-      st.cbfCbDc(mb) = 1
-      st.cbfCrDc(mb) = 1
-      var blk = 0
-      while (blk < 16) {
-        st.lumaNz.set(mbX * 4 + blkCol(blk), mbY * 4 + blkRow(blk), 16)
-        st.cbfLuma4((mbY * 4 + blkRow(blk)) * mbW * 4 +
-          mbX * 4 + blkCol(blk)) = 1
-        blk += 1
-      }
-      var cblk = 0
-      while (cblk < 4) {
-        val ccx = mbX * 2 + (cblk & 1)
-        val ccy = mbY * 2 + (cblk >> 1)
-        st.cbNz.set(ccx, ccy, 16)
-        st.crNz.set(ccx, ccy, 16)
-        st.cbfCbAc(ccy * mbW * 2 + ccx) = 1
-        st.cbfCrAc(ccy * mbW * 2 + ccx) = 1
-        cblk += 1
-      }
-      st.mbIntraA(mb) = true
-      st.mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-      st.qpMbA(mb) = 0 // loop filter: I_PCM is QP 0 (8.7.2)
-      prevQpDeltaNz = false
-      dec.reinit((byteStart + 384) * 8)
-    }
-
-    /** I_NxN tail: everything after the mb_type bin (16 pred modes,
-      * chroma mode, cbp, qp delta, cat-2 residuals, reconstruction). */
-    def intraI4(mb: Int): Boolean = {
-      val mbX = mb % mbW
-      val mbY = mb / mbW
-      val modes = new Array[Int](16)
-      var blk = 0
-      while (blk < 16) {
-        val r = blkRow(blk); val c = blkCol(blk)
-        val bx = mbX * 4 + c; val by = mbY * 4 + r
-        val pm = math.min(i4ModeAtSt(st, sliceIdx, bx - 1, by),
-          i4ModeAtSt(st, sliceIdx, bx, by - 1))
-        val mode =
-          if (dec.decision(cx, 68)) pm
-          else {
-            var rem = 0
-            if (dec.decision(cx, 69)) rem |= 1
-            if (dec.decision(cx, 69)) rem |= 2
-            if (dec.decision(cx, 69)) rem |= 4
-            if (rem < pm) rem else rem + 1
-          }
-        if (mode < 0 || mode > 8) return false
-        modes(blk) = mode
-        st.i4mode(by * (mbW * 4) + bx) = mode
-        blk += 1
-      }
-      st.chromaMode(mb) = chromaPredMode(mb)
-      var cbpLuma = 0
-      var b8 = 0
-      while (b8 < 4) {
-        val inc = cbpLumaInc(st, sliceIdx, mb, b8, cbpLuma)
-        if (dec.decision(cx, 73 + inc)) cbpLuma |= 1 << b8
-        b8 += 1
-      }
-      var cbpChroma = 0
-      if (dec.decision(cx,
-        77 + cbpChromaInc(st, sliceIdx, mb, bin1 = false)))
-        cbpChroma = if (dec.decision(cx,
-          81 + cbpChromaInc(st, sliceIdx, mb, bin1 = true))) 2
-        else 1
-      st.mbKind(mb) = 0
-      st.mbCbp(mb) = cbpLuma | (cbpChroma << 4)
-      if ((cbpLuma | cbpChroma) != 0) { if (!qpDelta()) return false }
-      else prevQpDeltaNz = false
-      st.mbIntraA(mb) = true
-      st.mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-      st.qpMbA(mb) = qp
-      val coeffs = new Array[Array[Int]](16)
-      blk = 0
-      while (blk < 16) {
-        val r = blkRow(blk); val c = blkCol(blk)
-        val bx = mbX * 4 + c; val by = mbY * 4 + r
-        if ((cbpLuma & (1 << (blk >> 2))) != 0) {
-          val inc = cbfIncCell(st, sliceIdx, mb, bx, by,
-            st.cbfLuma4, mbW * 4, 4)
-          val rb = residualCabac(dec, cx, 2, inc)
-          if (rb == null) return false
-          coeffs(blk) = rb._1
-          st.cbfLuma4(by * mbW * 4 + bx) = if (rb._2 > 0) 1 else 0
-          st.lumaNz.set(bx, by, rb._2)
-        } else {
-          coeffs(blk) = null
-          st.cbfLuma4(by * mbW * 4 + bx) = 0
-          st.lumaNz.set(bx, by, 0)
-        }
-        blk += 1
-      }
-      val ccC4 = cabacChroma(st, sliceIdx, dec, cx, mb, cbpChroma)
-      if (ccC4 == null) return false
-      if (!reconI4(st, sliceIdx, mb, qp, modes, coeffs)) return false
-      intraChromaReconC(mb, st.chromaMode(mb), ccC4, qp)
-    }
-
-    /** Intra_8x8 under CABAC (round 16 — High profile): the I_NxN
-      * walk with transform_size_8x8_flag = 1 already consumed. Four
-      * prediction modes at the SAME ctx 68/69 pair as 4x4, cbp at
-      * 73-84, then one ctxBlockCat-5 residual per coded quadrant
-      * (sig/last through the Table 9-43 maps; no coded_block_flag in
-      * 4:2:0). The 8x8 coded flag spreads into the 4x4 cbf/nz grids
-      * for neighbor modeling (9.3.3.1.1.9's covering-block rule). */
-    def intraI8(mb: Int): Boolean = {
-      val mbX = mb % mbW
-      val mbY = mb / mbW
-      val modes = new Array[Int](4)
-      var blk = 0
-      while (blk < 4) {
-        val bx = mbX * 4 + (blk & 1) * 2
-        val by = mbY * 4 + (blk >> 1) * 2
-        val pm = math.min(i4ModeAtSt(st, sliceIdx, bx - 1, by),
-          i4ModeAtSt(st, sliceIdx, bx, by - 1))
-        val mode =
-          if (dec.decision(cx, 68)) pm
-          else {
-            var rem = 0
-            if (dec.decision(cx, 69)) rem |= 1
-            if (dec.decision(cx, 69)) rem |= 2
-            if (dec.decision(cx, 69)) rem |= 4
-            if (rem < pm) rem else rem + 1
-          }
-        if (mode < 0 || mode > 8) return false
-        modes(blk) = mode
-        var cy = 0
-        while (cy < 2) {
-          var cxx = 0
-          while (cxx < 2) {
-            st.i4mode((by + cy) * (mbW * 4) + bx + cxx) = mode
-            cxx += 1
-          }
-          cy += 1
-        }
-        blk += 1
-      }
-      st.chromaMode(mb) = chromaPredMode(mb)
-      var cbpLuma = 0
-      var b8 = 0
-      while (b8 < 4) {
-        val inc = cbpLumaInc(st, sliceIdx, mb, b8, cbpLuma)
-        if (dec.decision(cx, 73 + inc)) cbpLuma |= 1 << b8
-        b8 += 1
-      }
-      var cbpChroma = 0
-      if (dec.decision(cx,
-        77 + cbpChromaInc(st, sliceIdx, mb, bin1 = false)))
-        cbpChroma = if (dec.decision(cx,
-          81 + cbpChromaInc(st, sliceIdx, mb, bin1 = true))) 2
-        else 1
-      st.mbKind(mb) = 0
-      st.mbT8(mb) = true
-      st.mbCbp(mb) = cbpLuma | (cbpChroma << 4)
-      if ((cbpLuma | cbpChroma) != 0) { if (!qpDelta()) return false }
-      else prevQpDeltaNz = false
-      st.mbIntraA(mb) = true
-      st.mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-      st.qpMbA(mb) = qp
-      val coeffs8 = new Array[Array[Int]](4)
-      blk = 0
-      while (blk < 4) {
-        val cellX = mbX * 2 + (blk & 1)
-        val cellY = mbY * 2 + (blk >> 1)
-        var coded = false
-        if ((cbpLuma & (1 << blk)) != 0) {
-          val rb = residualCabac(dec, cx, 5, 0)
-          if (rb == null) return false
-          coeffs8(blk) = rb._1
-          coded = rb._2 > 0
-          st.nz8(cellY * (mbW * 2) + cellX) = coded
-          val f: Byte = if (coded) 1 else 0
-          val nzv = math.min(16, rb._2)
-          var i4 = 0
-          while (i4 < 4) {
-            val sub = blk * 4 + i4
-            val bx = mbX * 4 + blkCol(sub)
-            val by = mbY * 4 + blkRow(sub)
-            st.cbfLuma4(by * mbW * 4 + bx) = f
-            st.lumaNz.set(bx, by, nzv)
-            i4 += 1
-          }
-        } else {
-          coeffs8(blk) = null
-          st.nz8(cellY * (mbW * 2) + cellX) = false
-          var i4 = 0
-          while (i4 < 4) {
-            val sub = blk * 4 + i4
-            val bx = mbX * 4 + blkCol(sub)
-            val by = mbY * 4 + blkRow(sub)
-            st.cbfLuma4(by * mbW * 4 + bx) = 0
-            st.lumaNz.set(bx, by, 0)
-            i4 += 1
-          }
-        }
-        blk += 1
-      }
-      val ccC8 = cabacChroma(st, sliceIdx, dec, cx, mb, cbpChroma)
-      if (ccC8 == null) return false
-      if (!reconI8(st, sliceIdx, mb, qp, modes, coeffs8)) return false
-      intraChromaReconC(mb, st.chromaMode(mb), ccC8, qp)
-    }
-
-    /** Intra_16x16 tail: the suffix bins (cbp-luma flag, chroma,
-      * pred mode) are read by the CALLER — their contexts differ
-      * between I slices (6-10) and P/B intra suffixes (17+/32+). */
-    def intraI16(mb: Int, acFlag: Int, cbpChroma: Int,
-        predMode: Int): Boolean = {
-      val mbX = mb % mbW
-      val mbY = mb / mbW
-      st.chromaMode(mb) = chromaPredMode(mb)
-      if (!qpDelta()) return false
-      st.mbKind(mb) = 1
-      st.mbCbp(mb) = (if (acFlag == 1) 15 else 0) | (cbpChroma << 4)
-      st.mbIntraA(mb) = true
-      st.mv.fill(mbX * 4, mbY * 4, 4, 4, isInter = false, 0, 0)
-      st.qpMbA(mb) = qp
-      val dcInc = cbfIncMb(st, sliceIdx, mb, st.cbfLumaDc, _ == 1)
-      val dcRb = residualCabac(dec, cx, 0, dcInc)
-      if (dcRb == null) return false
-      st.cbfLumaDc(mb) = if (dcRb._2 > 0) 1 else 0
-      val acCoeffs = new Array[Array[Int]](16)
-      var blk = 0
-      while (blk < 16) {
-        val r = blkRow(blk); val c = blkCol(blk)
-        val bx = mbX * 4 + c; val by = mbY * 4 + r
-        if (acFlag == 1) {
-          val inc = cbfIncCell(st, sliceIdx, mb, bx, by,
-            st.cbfLuma4, mbW * 4, 4)
-          val rb = residualCabac(dec, cx, 1, inc)
-          if (rb == null) return false
-          acCoeffs(blk) = rb._1
-          st.cbfLuma4(by * mbW * 4 + bx) = if (rb._2 > 0) 1 else 0
-          st.lumaNz.set(bx, by, rb._2)
-        } else {
-          acCoeffs(blk) = null
-          st.cbfLuma4(by * mbW * 4 + bx) = 0
-          st.lumaNz.set(bx, by, 0)
-        }
-        blk += 1
-      }
-      val ccC16 = cabacChroma(st, sliceIdx, dec, cx, mb, cbpChroma)
-      if (ccC16 == null) return false
-      if (!reconI16(st, sliceIdx, mb, qp, predMode, dcRb._1, acCoeffs))
-        return false
-      intraChromaReconC(mb, st.chromaMode(mb), ccC16, qp)
-    }
-  }
-
-  /** CABAC I-slice macroblock walk (round 14; round 15 moved the
-    * intra tails into [[CabacMb]] so P/B intra refresh shares them):
-    * the mb_type tree (ctx 3-10 + the 276 I_PCM escape), Intra_4x4 /
-    * Intra_16x16 / I_PCM with full residual decoding across block
-    * categories 0-4, end_of_slice_flag termination. Reconstruction
-    * rides the SAME [[reconI16]]/[[reconI4]] helpers as the CAVLC
-    * walk, and the nz/mv/qp bookkeeping feeds the same loop filter. */
-  private def cabacSliceI(st: PicState, sliceIdx: Int, rbsp: Array[Byte],
-      startBit: Int, startMb: Int, qpInit: Int, chromaQpOff: Int,
-      chromaQpOff2: Int, t8Mode: Boolean = false): Option[PicState] = {
-    val cx = new H264Cabac.Ctx(qpInit)
-    val dec = new H264Cabac.Dec(rbsp, startBit)
-    if (!dec.valid) return None
-    val w = new CabacMb(st, sliceIdx, rbsp, dec, cx, chromaQpOff,
-      chromaQpOff2)
-    w.qp = qpInit
-    val nMbs = st.nMbs
-    var mb = startMb
-    var endOfSlice = false
-    while (mb < nMbs && !endOfSlice) {
-      // mb_type (I): bin0 at ctx 3 + inc (neighbors read BEFORE this
-      // MB claims its sliceOf entry)
-      val incT = mbTypeIInc(st, sliceIdx, mb)
-      st.sliceOf(mb) = sliceIdx
-      val isI4 = !dec.decision(cx, 3 + incT)
-      if (!isI4 && dec.terminate()) {
-        if (!w.ipcm(mb)) return None
-      } else if (isI4) {
-        // round 16: transform_size_8x8_flag (ctx 399-401) selects the
-        // Intra_8x8 walk under a t8 PPS
-        if (t8Mode && dec.decision(cx, 399 + t8IncSt(st, sliceIdx, mb))) {
-          if (!w.intraI8(mb)) return None
-        } else if (!w.intraI4(mb)) return None
-      } else {
-        // Intra_16x16 suffix: cbp-luma bit (ctx 6), chroma ('0' /
-        // '10' / '11' at ctx 7 then 8), two pred bits (9, 10)
-        val acFlag = if (dec.decision(cx, 6)) 1 else 0
-        var cbpChroma = 0
-        if (dec.decision(cx, 7))
-          cbpChroma = if (dec.decision(cx, 8)) 2 else 1
-        var predMode = 0
-        if (dec.decision(cx, 9)) predMode |= 2
-        if (dec.decision(cx, 10)) predMode |= 1
-        if (!w.intraI16(mb, acFlag, cbpChroma, predMode)) return None
-      }
-      mb += 1
-      endOfSlice = dec.terminate()
-      if (!endOfSlice && mb >= nMbs) return None // claims MBs past the
-      // picture: malformed
-    }
-    // phantom-bit guard: the bit-serial engine's reads are in exact
-    // renorm lockstep with the encoder's emissions (D = R + 9 = E at
-    // every flush), so a VALID slice never reads past its own bytes —
-    // any overrun means a truncated stream "completed" on fabricated
-    // zero bits and must degrade, never emit (the Mpeg1 discipline)
-    if (dec.overrun > 0) return None
-    st.mbNext = mb
-    Some(st)
-  }
-
-
-  /** Shared CABAC chroma residual walk (sync + cbf/nz bookkeeping;
-    * chroma is not reconstructed — the CAVLC parseChroma twin). */
-  private def cabacChroma(st: PicState, sliceIdx: Int,
-      dec: H264Cabac.Dec, cx: H264Cabac.Ctx, mb: Int,
-      cbpChroma: Int, curIntra: Boolean = true): ChromaCoeffs = {
-    val mbW = st.mbW
-    val mbX = mb % mbW
-    val mbY = mb / mbW
-    val out = new ChromaCoeffs
-    if (cbpChroma > 0) {
-      // chroma DC (cat 3), Cb then Cr; a neighbor's DC block exists
-      // whenever its cbpChroma != 0
-      var comp = 0
-      while (comp < 2) {
-        val arr = if (comp == 0) st.cbfCbDc else st.cbfCrDc
-        val rb = residualCabac(dec, cx, 3,
-          cbfIncChromaDc(st, sliceIdx, mb, arr, curIntra))
-        if (rb == null) return null
-        System.arraycopy(rb._1, 0,
-          if (comp == 0) out.dcCb else out.dcCr, 0, 4)
-        arr(mb) = if (rb._2 > 0) 1 else 0
-        comp += 1
-      }
-    } else {
-      st.cbfCbDc(mb) = 0
-      st.cbfCrDc(mb) = 0
-    }
-    var comp = 0
-    while (comp < 2) {
-      val grid = if (comp == 0) st.cbfCbAc else st.cbfCrAc
-      val nzc = if (comp == 0) st.cbNz else st.crNz
-      val acArr = if (comp == 0) out.acCb else out.acCr
-      var cblk = 0
-      while (cblk < 4) {
-        val ccx = mbX * 2 + (cblk & 1)
-        val ccy = mbY * 2 + (cblk >> 1)
-        if (cbpChroma == 2) {
-          val inc = cbfIncCell(st, sliceIdx, mb, ccx, ccy, grid,
-            mbW * 2, 2, curIntra)
-          val rb = residualCabac(dec, cx, 4, inc)
-          if (rb == null) return null
-          acArr(cblk) = rb._1
-          grid(ccy * mbW * 2 + ccx) = if (rb._2 > 0) 1 else 0
-          nzc.set(ccx, ccy, rb._2)
-        } else {
-          grid(ccy * mbW * 2 + ccx) = 0
-          nzc.set(ccx, ccy, 0)
-        }
-        cblk += 1
-      }
-      comp += 1
-    }
-    out
-  }
-
-  /** Slice-gated Intra_4x4 mode lookup over PicState (the CAVLC
-    * walk's i4ModeAt closure, shared with the CABAC walk). */
-  private def i4ModeAtSt(st: PicState, sliceIdx: Int, bx: Int,
-      by: Int): Int =
-    if (bx < 0 || by < 0) 2
-    else if (st.sliceOf((by >> 2) * st.mbW + (bx >> 2)) != sliceIdx) 2
-    else {
-      val m = st.i4mode(by * (st.mbW * 4) + bx)
-      if (m < 0) 2 else m
-    }
 
   /** Intra_16x16 prediction (8.3.3): mode 0 = V, 1 = H, 2 = DC,
     * 3 = Plane. Returns the 16x16 prediction (row-major) or null when
@@ -5299,9 +2286,8 @@ object H264 {
 
   /** Reconstruct one Intra_16x16 macroblock (8.3.3 + 8.5.10-12) from
     * SCAN-order DC coefficients (16) and per-4x4-block scan-order AC
-    * coefficients (15 each; null = uncoded block). Entropy-agnostic:
-    * the CAVLC and CABAC walks both land here (round 14). Returns
-    * false when a required prediction neighbor is unavailable. */
+    * coefficients (15 each; null = uncoded block). Returns false
+    * when a required prediction neighbor is unavailable. */
   private def reconI16(st: PicState, sliceIdx: Int, mb: Int, qp: Int,
       predMode: Int, dcCoeffsScan: Array[Int],
       acCoeffs: Array[Array[Int]]): Boolean = {
@@ -5327,14 +2313,14 @@ object H264 {
     while (blk < 16) {
       val r = blkRow(blk); val c = blkCol(blk)
       java.util.Arrays.fill(d, 0)
-      d(0) = scaleDc(dcF(r * 4 + c), qp, st.w4(0)(0))
+      d(0) = scaleDc(dcF(r * 4 + c), qp)
       val ac = acCoeffs(blk)
       if (ac != null) {
         var si = 0
         while (si < 15) {
           if (ac(si) != 0) {
             val raster = Zig4(si + 1)
-            d(raster) = scaleAc(ac(si), raster, qp, st.w4(0))
+            d(raster) = scaleAc(ac(si), raster, qp)
           }
           si += 1
         }
@@ -5361,7 +2347,7 @@ object H264 {
     * 16 z-order prediction modes and per-block scan-order
     * coefficients (16 each; null = uncoded). Z-order: each block's
     * prediction reads neighbors reconstructed earlier (unfiltered,
-    * 8.3.1). Entropy-agnostic (round 14). */
+    * 8.3.1). */
   private def reconI4(st: PicState, sliceIdx: Int, mb: Int, qp: Int,
       modes: Array[Int], coeffs: Array[Array[Int]]): Boolean = {
     val mbW = st.mbW
@@ -5384,7 +2370,7 @@ object H264 {
         while (si < 16) {
           if (cf(si) != 0) {
             val raster = Zig4(si)
-            d4(raster) = scaleAc(cf(si), raster, qp, st.w4(0))
+            d4(raster) = scaleAc(cf(si), raster, qp)
           }
           si += 1
         }
@@ -5396,54 +2382,6 @@ object H264 {
         while (x < 4) {
           luma((by * 4 + y) * stride + bx * 4 + x) =
             clip255(pred(y * 4 + x) + res(y * 4 + x))
-          x += 1
-        }
-        y += 1
-      }
-      blk += 1
-    }
-    true
-  }
-
-  /** Reconstruct an Intra_8x8 macroblock (round 16, High profile):
-    * four 8x8 blocks in z order, filtered-reference prediction
-    * (8.3.2), 8x8 dequant (8.5.13.2, intra-luma 8x8 weight list) and
-    * the 8x8 inverse transform. `coeffs(blk8)` is the 64-entry SCAN
-    * order vector (null = uncoded). */
-  private def reconI8(st: PicState, sliceIdx: Int, mb: Int, qp: Int,
-      modes: Array[Int], coeffs: Array[Array[Int]]): Boolean = {
-    val mbW = st.mbW
-    val stride = st.stride
-    val luma = st.luma
-    val mbX = mb % mbW
-    val mbY = mb / mbW
-    val d8 = new Array[Int](64)
-    var blk = 0
-    while (blk < 4) {
-      val b8x = mbX * 2 + (blk & 1)
-      val b8y = mbY * 2 + (blk >> 1)
-      val pred = predict8x8(luma, stride, mbW, st.mbH, b8x, b8y,
-        modes(blk), mb, blk, m2 => st.sliceOf(m2) == sliceIdx)
-      if (pred == null) return false
-      java.util.Arrays.fill(d8, 0)
-      val cf = coeffs(blk)
-      if (cf != null) {
-        var si = 0
-        while (si < 64) {
-          if (cf(si) != 0) {
-            val raster = Zig8(si)
-            d8(raster) = scaleAc8(cf(si), raster, qp, st.w8(0))
-          }
-          si += 1
-        }
-      }
-      val res = invTransform8x8(d8)
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          luma((b8y * 8 + y) * stride + b8x * 8 + x) =
-            clip255(pred(y * 8 + x) + res(y * 8 + x))
           x += 1
         }
         y += 1
@@ -5552,7 +2490,7 @@ object H264 {
 
   /** Chroma residual coefficients of ONE macroblock, both components:
     * 2x2 DC (scan order) + per-4x4-block AC (15 scan coeffs, null =
-    * uncoded). Shared by the CAVLC and CABAC walks. */
+    * uncoded). */
   private final class ChromaCoeffs {
     val dcCb = new Array[Int](4)
     val dcCr = new Array[Int](4)
@@ -5564,27 +2502,25 @@ object H264 {
     * AC dequant at QPc) onto the 8x8 PREDICTION buffers already in
     * `predCb`/`predCr` (row-major 8-stride), writing the planes. */
   private def reconChromaMb(st: PicState, mb: Int, qpY: Int,
-      chromaQpOff: Int, chromaQpOff2: Int, cc: ChromaCoeffs,
+      chromaQpOff: Int, cc: ChromaCoeffs,
       predCb: Array[Int], predCr: Array[Int]): Unit = {
     val mbW = st.mbW
     val strideC = st.strideC
     val oxC = (mb % mbW) * 8
     val oyC = (mb / mbW) * 8
+    val qpc = qpChroma(qpY, chromaQpOff)
     var comp = 0
     while (comp < 2) {
-      val qpc = qpChroma(qpY, if (comp == 0) chromaQpOff else chromaQpOff2)
       val plane = if (comp == 0) st.cb else st.cr
       val pred = if (comp == 0) predCb else predCr
       val dc = if (comp == 0) cc.dcCb else cc.dcCr
       val ac = if (comp == 0) cc.acCb else cc.acCr
-      // round 16: chroma scaling list — intra 1/2, inter 4/5
-      val wc = st.w4((if (st.mbIntraA(mb)) 1 else 4) + comp)
       // 2x2 DC transform + scaling (8.5.11)
       val f0 = dc(0) + dc(1) + dc(2) + dc(3)
       val f1 = dc(0) - dc(1) + dc(2) - dc(3)
       val f2 = dc(0) + dc(1) - dc(2) - dc(3)
       val f3 = dc(0) - dc(1) - dc(2) + dc(3)
-      val ls = wc(0) * NormAdjust(qpc % 6)(0)
+      val ls = 16 * NormAdjust(qpc % 6)(0)
       def dcScaleC(f: Int): Int = ((f * ls) << (qpc / 6)) >> 5
       val dcC = Array(dcScaleC(f0), dcScaleC(f1), dcScaleC(f2), dcScaleC(f3))
       val d = new Array[Int](16)
@@ -5600,7 +2536,7 @@ object H264 {
           while (si < 15) {
             if (a(si) != 0) {
               val raster = Zig4(si + 1)
-              d(raster) = scaleAc(a(si), raster, qpc, wc)
+              d(raster) = scaleAc(a(si), raster, qpc)
             }
             si += 1
           }
@@ -5691,15 +2627,6 @@ object H264 {
   final case class I4x4(mode: Int => Int,
       dcRes: Int => Int = _ => 0) extends Mb
 
-  /** Intra_8x8 (round 16 — High profile): `mode(blk8)` gives the
-    * 8.3.2 prediction mode per z-order 8x8 block; `dcRes(blk8)` one
-    * DC coefficient (8x8 scan position 0). At qp 28 with flat
-    * weights the DC dequant is 128c and the 8x8 inverse transform of
-    * a lone DC is uniform: residual = (128c + 32) >> 6 = 2c per
-    * sample. Requires a transform_8x8_mode PPS. */
-  final case class I8x8(mode: Int => Int,
-      dcRes: Int => Int = _ => 0) extends Mb
-
   private final class BitWriter {
     private val buf = new scala.collection.mutable.ArrayBuffer[Byte]
     private var cur = 0
@@ -5721,7 +2648,6 @@ object H264 {
       put(v, bits)
     }
     def putSe(k: Int): Unit = putUe(if (k > 0) 2 * k - 1 else -2 * k)
-    def byteAligned: Boolean = nb == 0
     def alignZero(): Unit = while (nb != 0) put(0, 1)
     def putByte(b: Int): Unit = { require(nb == 0); buf += b.toByte }
     def rbspTrailing(): Unit = { put(1, 1); alignZero() }
@@ -5744,72 +2670,16 @@ object H264 {
     header.toByte +: escapeRbsp(rbsp)
 
   /** SPS NAL (baseline profile 66, level 1.0, poc type 0,
-    * frame_mbs_only). */
-  /** Emit one scaling_list() as first-value + running deltas from
-    * SCAN-order values (round 16 fixture encoder). */
-  private def putScalingList(bw: BitWriter, scanVals: Array[Int]): Unit = {
-    var lastScale = 8
-    var j = 0
-    while (j < scanVals.length) {
-      val v = scanVals(j)
-      require(v >= 1 && v <= 255, s"scaling weight out of range: $v")
-      var delta = v - lastScale
-      if (delta > 127) delta -= 256
-      if (delta < -128) delta += 256
-      bw.putSe(delta)
-      lastScale = v
-      j += 1
-    }
-  }
-
-  def spsNal(mbW: Int, mbH: Int, maxRef: Int = 1,
-      pocCycle: Seq[Int] = Nil, offsetNonRef: Int = 0,
-      high: Boolean = false,
-      seqScal4: Seq[Array[Int]] = Nil,
-      seqScal8: Seq[Array[Int]] = Nil): Array[Byte] = {
+    * frame_mbs_only; log2 sizes 4 for frame_num and the POC lsb). */
+  def spsNal(mbW: Int, mbH: Int, maxRef: Int = 1): Array[Byte] = {
     val bw = new BitWriter
-    // round 16: profile 100 carries the chroma/bit-depth/scaling
-    // block; the fixture emits 4:2:0, 8-bit, with the given SCAN-
-    // order scaling lists (all-present when any are given)
-    bw.put(if (high) 100 else 66, 8) // profile_idc
+    bw.put(66, 8) // profile_idc (Baseline)
     bw.put(0, 8) // constraint flags
     bw.put(10, 8) // level 1.0
     bw.putUe(0) // sps_id
-    if (high) {
-      bw.putUe(1) // chroma_format_idc 4:2:0
-      bw.putUe(0) // bit_depth_luma_minus8
-      bw.putUe(0) // bit_depth_chroma_minus8
-      bw.put(0, 1) // qpprime_y_zero_transform_bypass
-      if (seqScal4.nonEmpty || seqScal8.nonEmpty) {
-        require(seqScal4.length == 6 && seqScal8.length == 2,
-          "fixture SPS matrices are all-present: 6 4x4 + 2 8x8 lists")
-        bw.put(1, 1) // seq_scaling_matrix_present
-        // a null entry = scaling_list_present_flag 0 (the fall-back
-        // rules are then on trial at decode)
-        seqScal4.foreach { l =>
-          if (l == null) bw.put(0, 1)
-          else { require(l.length == 16); bw.put(1, 1); putScalingList(bw, l) }
-        }
-        seqScal8.foreach { l =>
-          if (l == null) bw.put(0, 1)
-          else { require(l.length == 64); bw.put(1, 1); putScalingList(bw, l) }
-        }
-      } else bw.put(0, 1) // seq_scaling_matrix_present
-    }
     bw.putUe(0) // log2_max_frame_num_minus4
-    if (pocCycle.isEmpty) {
-      bw.putUe(0) // pic_order_cnt_type 0
-      bw.putUe(0) // log2_max_pic_order_cnt_lsb_minus4
-    } else {
-      // pocType 1 (round 15): delta_pic_order_always_zero, so the
-      // slice headers carry no POC syntax at all
-      bw.putUe(1) // pic_order_cnt_type 1
-      bw.put(1, 1) // delta_pic_order_always_zero_flag
-      bw.putSe(offsetNonRef)
-      bw.putSe(0) // offset_for_top_to_bottom_field
-      bw.putUe(pocCycle.length)
-      pocCycle.foreach(bw.putSe)
-    }
+    bw.putUe(0) // pic_order_cnt_type 0
+    bw.putUe(0) // log2_max_pic_order_cnt_lsb_minus4
     bw.putUe(maxRef) // max_num_ref_frames
     bw.put(0, 1) // gaps_in_frame_num
     bw.putUe(mbW - 1)
@@ -5826,48 +2696,22 @@ object H264 {
     * the encoder's slices disable the loop filter). `id` lets tests
     * exercise the by-id parameter-set selection (slices reference
     * pps_id 0). */
-  def ppsNal(qp: Int, id: Int = 0, weighted: Boolean = false,
-      cabac: Boolean = false, bipredExplicit: Boolean = false,
-      bipredImplicit: Boolean = false,
-      bottomPoc: Boolean = false,
-      transform8x8: Boolean = false,
-      picScal4: Seq[Array[Int]] = Nil,
-      picScal8: Seq[Array[Int]] = Nil): Array[Byte] = {
+  def ppsNal(qp: Int, id: Int = 0, weighted: Boolean = false): Array[Byte] = {
     val bw = new BitWriter
     bw.putUe(id) // pps_id
     bw.putUe(0) // sps_id
-    bw.put(if (cabac) 1 else 0, 1) // entropy_coding_mode_flag
-    bw.put(if (bottomPoc) 1 else 0, 1) // bottom_field_pic_order
+    bw.put(0, 1) // entropy_coding_mode_flag (CAVLC)
+    bw.put(0, 1) // bottom_field_pic_order
     bw.putUe(0) // num_slice_groups_minus1
     bw.putUe(0); bw.putUe(0) // num_ref_idx defaults
     bw.put(if (weighted) 1 else 0, 1) // weighted_pred
-    bw.put(if (bipredExplicit) 1 else if (bipredImplicit) 2 else 0,
-      2) // weighted_bipred_idc
+    bw.put(0, 2) // weighted_bipred_idc
     bw.putSe(qp - 26) // pic_init_qp_minus26
     bw.putSe(0) // pic_init_qs
     bw.putSe(0) // chroma_qp_index_offset
     bw.put(1, 1) // deblocking_filter_control_present
     bw.put(0, 1) // constrained_intra_pred
     bw.put(0, 1) // redundant_pic_cnt_present
-    if (transform8x8 || picScal4.nonEmpty) { // round 16: the High tail
-      bw.put(if (transform8x8) 1 else 0, 1) // transform_8x8_mode
-      if (picScal4.nonEmpty) {
-        require(picScal4.length == 6, "fixture PPS matrices: 6 4x4 lists")
-        bw.put(1, 1) // pic_scaling_matrix_present
-        picScal4.foreach { l =>
-          if (l == null) bw.put(0, 1)
-          else { require(l.length == 16); bw.put(1, 1); putScalingList(bw, l) }
-        }
-        if (transform8x8) {
-          require(picScal8.length == 2, "t8 PPS matrices: 2 8x8 lists")
-          picScal8.foreach { l =>
-            if (l == null) bw.put(0, 1)
-            else { require(l.length == 64); bw.put(1, 1); putScalingList(bw, l) }
-          }
-        }
-      } else bw.put(0, 1) // pic_scaling_matrix_present
-      bw.putSe(0) // second_chroma_qp_index_offset
-    }
     bw.rbspTrailing()
     nalUnit(0x68, bw.result())
   }
@@ -5881,10 +2725,7 @@ object H264 {
     * runtime degrade). */
   def idrNal(mbW: Int, mbH: Int, mb: Int => Mb, qp: Int,
       deblock: Boolean = false, firstMb: Int = 0, mbCount: Int = -1,
-      idcOverride: Int = -1, longTermRef: Boolean = false,
-      pocType1: Boolean = false,
-      pocBottomDelta: Option[Int] = None,
-      t8Pps: Boolean = false): Array[Byte] = {
+      idcOverride: Int = -1, longTermRef: Boolean = false): Array[Byte] = {
     require(qp >= 0 && qp <= 51, s"qp out of range: $qp")
     // round 13 multi-slice fixtures: emit ONE slice covering
     // [firstMb, firstMb+count); default = the whole picture. The
@@ -5899,10 +2740,7 @@ object H264 {
     bw.putUe(0) // pps_id
     bw.put(0, 4) // frame_num (log2 = 4)
     bw.putUe(0) // idr_pic_id
-    if (!pocType1) {
-      bw.put(0, 4) // pic_order_cnt_lsb (log2 = 4)
-      pocBottomDelta.foreach(bw.putSe) // vs a bottomPoc PPS only
-    }
+    bw.put(0, 4) // pic_order_cnt_lsb (log2 = 4)
     bw.put(0, 1) // no_output_of_prior_pics
     bw.put(if (longTermRef) 1 else 0, 1) // long_term_reference_flag
     bw.putSe(0) // slice_qp_delta (QP = pic_init_qp)
@@ -5966,7 +2804,6 @@ object H264 {
           writeI16Dc(bw, lumaNz, mbX, mbY, spec, typeOffset = 0)
         case I4x4(modeOf, dcOf) =>
           bw.putUe(0) // mb_type I_NxN
-          if (t8Pps) bw.put(0, 1) // transform_size_8x8_flag: 4x4
           var blk = 0
           while (blk < 16) {
             val r = blkRow(blk); val c = blkCol(blk)
@@ -5999,1194 +2836,11 @@ object H264 {
             } else lumaNz.set(mbX * 4 + c, mbY * 4 + r, 0)
             blk += 1
           }
-        case I8x8(modeOf, dcOf) =>
-          require(t8Pps, "I8x8 fixture needs a transform_8x8_mode PPS")
-          bw.putUe(0) // mb_type I_NxN
-          bw.put(1, 1) // transform_size_8x8_flag: 8x8
-          var blk = 0
-          while (blk < 4) {
-            val bx = mbX * 4 + (blk & 1) * 2
-            val by = mbY * 4 + (blk >> 1) * 2
-            val m = modeOf(blk)
-            require(m >= 0 && m <= 8, s"i8x8 mode out of range: $m")
-            val predMode = math.min(i4At(bx - 1, by), i4At(bx, by - 1))
-            if (m == predMode) bw.put(1, 1)
-            else {
-              bw.put(0, 1)
-              bw.put(if (m < predMode) m else m - 1, 3)
-            }
-            var cy = 0
-            while (cy < 2) {
-              var cx = 0
-              while (cx < 2) {
-                i4grid((by + cy) * (mbW * 4) + bx + cx) = m
-                cx += 1
-              }
-              cy += 1
-            }
-            blk += 1
-          }
-          bw.putUe(0) // intra_chroma_pred_mode DC
-          val cbpLuma = (0 until 4).map { g =>
-            if (dcOf(g) != 0) 1 << g else 0
-          }.sum
-          bw.putUe(CbpIntraInv(cbpLuma)) // cbp (chroma 0)
-          if (cbpLuma != 0) bw.putSe(0) // mb_qp_delta
-          // interleaved sub-blocks (7.4.5.3.3): the 8x8's lone DC
-          // (scan 0) is sub-block 0's k = 0; subs 1-3 are zero blocks
-          blk = 0
-          while (blk < 4) {
-            var i4 = 0
-            while (i4 < 4) {
-              val sub = blk * 4 + i4
-              val cx = mbX * 4 + blkCol(sub)
-              val cyy = mbY * 4 + blkRow(sub)
-              if ((cbpLuma & (1 << blk)) != 0) {
-                val lvl = if (i4 == 0) dcOf(blk) else 0
-                putCavlcSingle(bw, lumaNz.nC(cx, cyy), lvl, maxNumCoeff = 16)
-                lumaNz.set(cx, cyy, if (lvl != 0) 1 else 0)
-              } else lumaNz.set(cx, cyy, 0)
-              i4 += 1
-            }
-            blk += 1
-          }
       }
       i += 1
     }
     bw.rbspTrailing()
     nalUnit(0x65, bw.result())
-  }
-
-  /** Encode one residual_block_cabac from scan-order coefficients —
-    * the decoder's [[residualCabac]] mirrored bin for bin. Returns
-    * the nonzero count. */
-  private[ext] def putResidualCabac(enc: H264Cabac.Enc, cxp: H264Cabac.Ctx,
-      cat: Int, cbfInc: Int, coeffs: Array[Int]): Int = {
-    val maxC = MaxCoeffCat(cat)
-    require(coeffs.length == maxC, s"cat $cat wants $maxC coeffs")
-    var nz = 0
-    var lastIdx = -1
-    var i = 0
-    while (i < maxC) {
-      if (coeffs(i) != 0) { nz += 1; lastIdx = i }
-      i += 1
-    }
-    if (cat != 5)
-      enc.decision(cxp, 85 + CbfCatOff(cat) + cbfInc, nz > 0)
-    else require(nz > 0, "a coded 8x8 block carries >= 1 coefficient")
-    if (nz == 0) return 0
-    val sigBase = if (cat == 5) 402 else 105 + SigCatOff(cat)
-    val lastBase = if (cat == 5) 417 else 166 + SigCatOff(cat)
-    i = 0
-    var stop = false
-    while (i < maxC - 1 && !stop) {
-      val inc =
-        if (cat == 5) SigMap8(i)
-        else if (cat == 3) math.min(i, 2) else i
-      val s = coeffs(i) != 0
-      enc.decision(cxp, sigBase + inc, s)
-      if (s) {
-        val isLast = i == lastIdx
-        val lastInc = if (cat == 5) LastMap8(i) else inc
-        enc.decision(cxp, lastBase + lastInc, isLast)
-        if (isLast) stop = true
-      }
-      i += 1
-    }
-    val lvlBase = if (cat == 5) 426 else 227 + LvlCatOff(cat)
-    val clampG = if (cat == 3) 3 else 4 // Gt1-only clamp, like the decoder
-    var numEq1 = 0
-    var numGt1 = 0
-    i = lastIdx
-    while (i >= 0) {
-      val v = coeffs(i)
-      if (v != 0) {
-        val a = math.abs(v)
-        val inc0 = if (numGt1 != 0) 0 else math.min(4, 1 + numEq1)
-        enc.decision(cxp, lvlBase + inc0, a > 1)
-        if (a > 1) {
-          val incG = 5 + math.min(clampG, numGt1)
-          var k = 2
-          while (k < 15 && k < a) {
-            enc.decision(cxp, lvlBase + incG, bin = true)
-            k += 1
-          }
-          if (a < 15) enc.decision(cxp, lvlBase + incG, bin = false)
-          else { // UEG0 escape: j leading ones, stop, j suffix bits
-            val vv = a - 14
-            var j = 0
-            while ((vv >> (j + 1)) != 0) j += 1
-            var t = 0
-            while (t < j) { enc.bypass(bin = true); t += 1 }
-            enc.bypass(bin = false)
-            var b = j - 1
-            while (b >= 0) { enc.bypass(((vv >> b) & 1) == 1); b -= 1 }
-          }
-        }
-        enc.bypass(v < 0)
-        if (a == 1) numEq1 += 1 else numGt1 += 1
-      }
-      i -= 1
-    }
-    nz
-  }
-
-  /** CABAC twin of [[idrNal]] (round 14): one IDR I slice covering
-    * [firstMb, firstMb+count) encoded with the 9.3.4 engine over the
-    * SAME [[Mb]] vocabulary — Pcm / I16Dc / I4x4 keep their
-    * closed-form reconstruction semantics, so every CAVLC oracle
-    * formula carries over verbatim. Neighbor context modeling drives
-    * a real [[PicState]] through the decoder's own ctxIdxInc helpers
-    * (mbTypeIInc / cbpLumaInc / cbfIncCell / ...), which makes
-    * encoder-decoder context drift structurally impossible. */
-  def idrNalCabac(mbW: Int, mbH: Int, mb: Int => Mb, qp: Int,
-      deblock: Boolean = false, firstMb: Int = 0, mbCount: Int = -1,
-      idcOverride: Int = -1, t8Pps: Boolean = false): Array[Byte] = {
-    require(qp >= 0 && qp <= 51, s"qp out of range: $qp")
-    val count = if (mbCount < 0) mbW * mbH - firstMb else mbCount
-    require(firstMb >= 0 && count >= 1 && firstMb + count <= mbW * mbH,
-      s"slice range out of picture: $firstMb+$count")
-    val bw = new BitWriter
-    bw.putUe(firstMb) // first_mb_in_slice
-    bw.putUe(7) // slice_type: I (all)
-    bw.putUe(0) // pps_id
-    bw.put(0, 4) // frame_num (log2 = 4)
-    bw.putUe(0) // idr_pic_id
-    bw.put(0, 4) // pic_order_cnt_lsb
-    bw.put(0, 1); bw.put(0, 1) // dec_ref_pic_marking (IDR)
-    bw.putSe(0) // slice_qp_delta
-    val idc = if (idcOverride >= 0) idcOverride else if (deblock) 0 else 1
-    bw.putUe(idc)
-    if (idc != 1) { bw.putSe(0); bw.putSe(0) }
-    while (!bw.byteAligned) bw.put(1, 1) // cabac_alignment_one_bit
-    // shadow state: the decoder-shaped neighbor model
-    val sps = Sps(0, mbW, mbH, 0, 0, 0, 0, 4, 0, 4,
-      deltaPocAlwaysZero = false, maxRefFrames = 1)
-    val st = new PicState(sps, isIdr = true, frameNum = 0, ppsId = 0)
-    val sliceIdx = 0
-    st.sliceParams += ((idc, 0, 0))
-    st.curSlice = sliceIdx
-    val cxp = new H264Cabac.Ctx(qp)
-    var enc = new H264Cabac.Enc
-    var prevQpDeltaNz = false
-    def drainFlushed(): Unit = { enc.drain(b => bw.put(b, 1)) }
-    var i = firstMb
-    while (i < firstMb + count) {
-      val mbX = i % mbW
-      val mbY = i / mbW
-      def zeroChromaState(): Unit = {
-        st.cbfCbDc(i) = 0
-        st.cbfCrDc(i) = 0
-        var cblk = 0
-        while (cblk < 4) {
-          val ccx = mbX * 2 + (cblk & 1)
-          val ccy = mbY * 2 + (cblk >> 1)
-          st.cbfCbAc(ccy * mbW * 2 + ccx) = 0
-          st.cbfCrAc(ccy * mbW * 2 + ccx) = 0
-          st.cbNz.set(ccx, ccy, 0)
-          st.crNz.set(ccx, ccy, 0)
-          cblk += 1
-        }
-      }
-      def putLumaBlock(blk: Int, cat: Int, lvl: Int,
-          maxC: Int): Unit = {
-        val r = blkRow(blk); val c = blkCol(blk)
-        val bx = mbX * 4 + c; val by = mbY * 4 + r
-        val coeffs = new Array[Int](maxC)
-        coeffs(0) = lvl
-        val inc = cbfIncCell(st, sliceIdx, i, bx, by, st.cbfLuma4,
-          mbW * 4, 4)
-        val nz = putResidualCabac(enc, cxp, cat, inc, coeffs)
-        st.cbfLuma4(by * mbW * 4 + bx) = if (nz > 0) 1 else 0
-        st.lumaNz.set(bx, by, nz)
-      }
-      def zeroLumaBlock(blk: Int): Unit = {
-        val r = blkRow(blk); val c = blkCol(blk)
-        val bx = mbX * 4 + c; val by = mbY * 4 + r
-        st.cbfLuma4(by * mbW * 4 + bx) = 0
-        st.lumaNz.set(bx, by, 0)
-      }
-      mb(i) match {
-        case Pcm(pix, cbPix, crPix) =>
-          enc.decision(cxp, 3 + mbTypeIInc(st, sliceIdx, i), bin = true)
-          st.sliceOf(i) = sliceIdx
-          enc.terminate(bin = true) // the ctx-276 I_PCM escape + flush
-          drainFlushed()
-          bw.alignZero() // pcm_alignment_zero_bit
-          var y = 0
-          while (y < 16) {
-            var x = 0
-            while (x < 16) {
-              val v = pix(x, y)
-              require(v >= 0 && v <= 255, s"pcm pixel out of range: $v")
-              bw.putByte(v)
-              x += 1
-            }
-            y += 1
-          }
-          Seq(cbPix, crPix).foreach { cp =>
-            var cy = 0
-            while (cy < 8) {
-              var cx0 = 0
-              while (cx0 < 8) {
-                val v = cp(cx0, cy)
-                require(v >= 0 && v <= 255, s"pcm chroma out of range: $v")
-                bw.putByte(v)
-                cx0 += 1
-              }
-              cy += 1
-            }
-          }
-          st.mbKind(i) = 2
-          st.mbCbp(i) = 47
-          st.chromaMode(i) = 0
-          st.cbfLumaDc(i) = 1
-          st.cbfCbDc(i) = 1
-          st.cbfCrDc(i) = 1
-          var blk = 0
-          while (blk < 16) {
-            val bx = mbX * 4 + blkCol(blk)
-            val by = mbY * 4 + blkRow(blk)
-            st.cbfLuma4(by * mbW * 4 + bx) = 1
-            st.lumaNz.set(bx, by, 16)
-            blk += 1
-          }
-          var cblk = 0
-          while (cblk < 4) {
-            val ccx = mbX * 2 + (cblk & 1)
-            val ccy = mbY * 2 + (cblk >> 1)
-            st.cbfCbAc(ccy * mbW * 2 + ccx) = 1
-            st.cbfCrAc(ccy * mbW * 2 + ccx) = 1
-            st.cbNz.set(ccx, ccy, 16)
-            st.crNz.set(ccx, ccy, 16)
-            cblk += 1
-          }
-          prevQpDeltaNz = false
-          enc = new H264Cabac.Enc // engine re-init after PCM (9.3.1)
-        case spec: I16Dc =>
-          val I16Dc(z, ac0, pred, chromaDcTz, chromaPred) = spec
-          require(chromaPred >= 0 && chromaPred <= 3,
-            s"chroma pred mode out of range: $chromaPred")
-          require(z >= -7 && z <= 7, s"dc level out of range: $z")
-          require(ac0 >= -1 && ac0 <= 1, s"ac0 out of range: $ac0")
-          require(pred >= 0 && pred <= 3, s"pred mode out of range: $pred")
-          require(chromaDcTz >= -1 && chromaDcTz <= 3,
-            s"chromaDcTz out of range: $chromaDcTz")
-          val acFlag = if (ac0 != 0) 1 else 0
-          val cbpCh = if (chromaDcTz >= 0) 1 else 0
-          enc.decision(cxp, 3 + mbTypeIInc(st, sliceIdx, i), bin = true)
-          st.sliceOf(i) = sliceIdx
-          enc.terminate(bin = false) // not I_PCM
-          enc.decision(cxp, 6, acFlag == 1)
-          enc.decision(cxp, 7, cbpCh > 0)
-          if (cbpCh > 0) enc.decision(cxp, 8, bin = false) // cbpCh = 1
-          enc.decision(cxp, 9, ((pred >> 1) & 1) == 1)
-          enc.decision(cxp, 10, (pred & 1) == 1)
-          enc.decision(cxp, 64 + chromaModeInc(st, sliceIdx, i),
-            chromaPred > 0) // intra_chroma_pred_mode (TU cMax 3)
-          if (chromaPred > 0) enc.decision(cxp, 67, chromaPred > 1)
-          if (chromaPred > 1) enc.decision(cxp, 67, chromaPred > 2)
-          st.chromaMode(i) = chromaPred
-          enc.decision(cxp, 60 + (if (prevQpDeltaNz) 1 else 0),
-            bin = false) // mb_qp_delta 0
-          prevQpDeltaNz = false
-          st.mbKind(i) = 1
-          st.mbCbp(i) = (if (acFlag == 1) 15 else 0) | (cbpCh << 4)
-          // luma DC (cat 0)
-          val dcCoeffs = new Array[Int](16)
-          dcCoeffs(0) = z
-          val dcNz = putResidualCabac(enc, cxp, 0,
-            cbfIncMb(st, sliceIdx, i, st.cbfLumaDc, _ == 1), dcCoeffs)
-          st.cbfLumaDc(i) = if (dcNz > 0) 1 else 0
-          if (acFlag == 1) {
-            var blk = 0
-            while (blk < 16) {
-              putLumaBlock(blk, 1, if (blk == 0) ac0 else 0, 15)
-              blk += 1
-            }
-          } else {
-            var blk = 0
-            while (blk < 16) { zeroLumaBlock(blk); blk += 1 }
-          }
-          if (cbpCh == 1) {
-            var comp = 0
-            while (comp < 2) {
-              val arr = if (comp == 0) st.cbfCbDc else st.cbfCrDc
-              val coeffs = new Array[Int](4)
-              coeffs(chromaDcTz) = 1
-              val nz = putResidualCabac(enc, cxp, 3,
-                cbfIncChromaDc(st, sliceIdx, i, arr), coeffs)
-              arr(i) = if (nz > 0) 1 else 0
-              comp += 1
-            }
-            var cblk = 0
-            while (cblk < 4) {
-              val ccx = mbX * 2 + (cblk & 1)
-              val ccy = mbY * 2 + (cblk >> 1)
-              st.cbfCbAc(ccy * mbW * 2 + ccx) = 0
-              st.cbfCrAc(ccy * mbW * 2 + ccx) = 0
-              st.cbNz.set(ccx, ccy, 0)
-              st.crNz.set(ccx, ccy, 0)
-              cblk += 1
-            }
-          } else zeroChromaState()
-        case I4x4(modeOf, dcOf) =>
-          enc.decision(cxp, 3 + mbTypeIInc(st, sliceIdx, i), bin = false)
-          st.sliceOf(i) = sliceIdx
-          if (t8Pps) // transform_size_8x8_flag: 4x4
-            enc.decision(cxp, 399 + t8IncSt(st, sliceIdx, i), bin = false)
-          var blk = 0
-          while (blk < 16) {
-            val r = blkRow(blk); val c = blkCol(blk)
-            val bx = mbX * 4 + c; val by = mbY * 4 + r
-            val m = modeOf(blk)
-            require(m >= 0 && m <= 8, s"i4x4 mode out of range: $m")
-            val pm = math.min(i4ModeAtSt(st, sliceIdx, bx - 1, by),
-              i4ModeAtSt(st, sliceIdx, bx, by - 1))
-            if (m == pm) enc.decision(cxp, 68, bin = true)
-            else {
-              enc.decision(cxp, 68, bin = false)
-              val rem = if (m < pm) m else m - 1
-              enc.decision(cxp, 69, (rem & 1) == 1)
-              enc.decision(cxp, 69, (rem & 2) == 2)
-              enc.decision(cxp, 69, (rem & 4) == 4)
-            }
-            st.i4mode(by * (mbW * 4) + bx) = m
-            blk += 1
-          }
-          enc.decision(cxp, 64 + chromaModeInc(st, sliceIdx, i),
-            bin = false) // intra_chroma_pred_mode DC
-          st.chromaMode(i) = 0
-          val cbpLuma = (0 until 4).map { g =>
-            if ((0 until 4).exists(b => dcOf(g * 4 + b) != 0)) 1 << g else 0
-          }.sum
-          var b8 = 0
-          var sofar = 0
-          while (b8 < 4) {
-            val bit = (cbpLuma >> b8) & 1
-            enc.decision(cxp,
-              73 + cbpLumaInc(st, sliceIdx, i, b8, sofar), bit == 1)
-            sofar |= bit << b8
-            b8 += 1
-          }
-          enc.decision(cxp,
-            77 + cbpChromaInc(st, sliceIdx, i, bin1 = false), bin = false)
-          st.mbKind(i) = 0
-          st.mbCbp(i) = cbpLuma
-          if (cbpLuma != 0) {
-            enc.decision(cxp, 60 + (if (prevQpDeltaNz) 1 else 0),
-              bin = false) // mb_qp_delta 0
-          }
-          prevQpDeltaNz = false
-          blk = 0
-          while (blk < 16) {
-            if ((cbpLuma & (1 << (blk >> 2))) != 0)
-              putLumaBlock(blk, 2, dcOf(blk), 16)
-            else zeroLumaBlock(blk)
-            blk += 1
-          }
-          zeroChromaState()
-        case I8x8(modeOf, dcOf) =>
-          require(t8Pps, "CABAC I8x8 fixture needs a transform_8x8 PPS")
-          enc.decision(cxp, 3 + mbTypeIInc(st, sliceIdx, i), bin = false)
-          st.sliceOf(i) = sliceIdx
-          enc.decision(cxp, 399 + t8IncSt(st, sliceIdx, i), bin = true)
-          var blk = 0
-          while (blk < 4) {
-            val bx = mbX * 4 + (blk & 1) * 2
-            val by = mbY * 4 + (blk >> 1) * 2
-            val m = modeOf(blk)
-            require(m >= 0 && m <= 8, s"i8x8 mode out of range: $m")
-            val pm = math.min(i4ModeAtSt(st, sliceIdx, bx - 1, by),
-              i4ModeAtSt(st, sliceIdx, bx, by - 1))
-            if (m == pm) enc.decision(cxp, 68, bin = true)
-            else {
-              enc.decision(cxp, 68, bin = false)
-              val rem = if (m < pm) m else m - 1
-              enc.decision(cxp, 69, (rem & 1) == 1)
-              enc.decision(cxp, 69, (rem & 2) == 2)
-              enc.decision(cxp, 69, (rem & 4) == 4)
-            }
-            var cy = 0
-            while (cy < 2) {
-              var cxx = 0
-              while (cxx < 2) {
-                st.i4mode((by + cy) * (mbW * 4) + bx + cxx) = m
-                cxx += 1
-              }
-              cy += 1
-            }
-            blk += 1
-          }
-          enc.decision(cxp, 64 + chromaModeInc(st, sliceIdx, i),
-            bin = false) // intra_chroma_pred_mode DC
-          st.chromaMode(i) = 0
-          val cbpLuma8 = (0 until 4).map { g =>
-            if (dcOf(g) != 0) 1 << g else 0
-          }.sum
-          var b8c = 0
-          var sofar8 = 0
-          while (b8c < 4) {
-            val bit = (cbpLuma8 >> b8c) & 1
-            enc.decision(cxp,
-              73 + cbpLumaInc(st, sliceIdx, i, b8c, sofar8), bit == 1)
-            sofar8 |= bit << b8c
-            b8c += 1
-          }
-          enc.decision(cxp,
-            77 + cbpChromaInc(st, sliceIdx, i, bin1 = false), bin = false)
-          st.mbKind(i) = 0
-          st.mbT8(i) = true
-          st.mbCbp(i) = cbpLuma8
-          if (cbpLuma8 != 0) {
-            enc.decision(cxp, 60 + (if (prevQpDeltaNz) 1 else 0),
-              bin = false) // mb_qp_delta 0
-          }
-          prevQpDeltaNz = false
-          blk = 0
-          while (blk < 4) {
-            val cellX = mbX * 2 + (blk & 1)
-            val cellY = mbY * 2 + (blk >> 1)
-            if ((cbpLuma8 & (1 << blk)) != 0) {
-              val coeffs = new Array[Int](64)
-              coeffs(0) = dcOf(blk)
-              val nz = putResidualCabac(enc, cxp, 5, 0, coeffs)
-              st.nz8(cellY * (mbW * 2) + cellX) = nz > 0
-              var i4 = 0
-              while (i4 < 4) {
-                val sub = blk * 4 + i4
-                val bx = mbX * 4 + blkCol(sub)
-                val by = mbY * 4 + blkRow(sub)
-                st.cbfLuma4(by * mbW * 4 + bx) = if (nz > 0) 1 else 0
-                st.lumaNz.set(bx, by, math.min(16, nz))
-                i4 += 1
-              }
-            } else {
-              st.nz8(cellY * (mbW * 2) + cellX) = false
-              var i4 = 0
-              while (i4 < 4) {
-                val sub = blk * 4 + i4
-                zeroLumaBlock(sub)
-                i4 += 1
-              }
-            }
-            blk += 1
-          }
-          zeroChromaState()
-      }
-      val isLast = i == firstMb + count - 1
-      enc.terminate(isLast) // end_of_slice_flag (+ flush on the last)
-      i += 1
-    }
-    drainFlushed()
-    bw.alignZero() // the flush's final '1' was the rbsp stop bit
-    nalUnit(0x65, bw.result())
-  }
-
-  /** Annex-B CABAC I-frame: SPS + CABAC PPS + CABAC IDR slice. Same
-    * closed-form pixel semantics as [[encodeIFrame]] (qp 28 DC rule
-    * etc.) — only the entropy layer differs. */
-  def encodeIFrameCabac(mbW: Int, mbH: Int, mb: Int => Mb, qp: Int = 28,
-      deblock: Boolean = false): Array[Byte] = {
-    val sep = Array[Byte](0, 0, 0, 1)
-    sep ++ spsNal(mbW, mbH) ++ sep ++ ppsNal(qp, cabac = true) ++ sep ++
-      idrNalCabac(mbW, mbH, mb, qp, deblock)
-  }
-
-  /** CABAC High-profile I-frame (round 16): profile-100 SPS with
-    * optional matrices + CABAC transform_8x8 PPS + a CABAC IDR whose
-    * I_NxN macroblocks carry transform_size_8x8_flag. */
-  def encodeIFrameHighCabac(mbW: Int, mbH: Int, mb: Int => Mb,
-      qp: Int = 28, deblock: Boolean = false,
-      seqScal4: Seq[Array[Int]] = Nil, seqScal8: Seq[Array[Int]] = Nil,
-      transform8x8: Boolean = true): Array[Byte] = {
-    val sep = Array[Byte](0, 0, 0, 1)
-    sep ++ spsNal(mbW, mbH, high = true, seqScal4 = seqScal4,
-      seqScal8 = seqScal8) ++
-      sep ++ ppsNal(qp, cabac = true, transform8x8 = transform8x8) ++
-      sep ++ idrNalCabac(mbW, mbH, mb, qp, deblock, t8Pps = transform8x8)
-  }
-
-  /** CABAC twin of [[pNal]]/[[bNal]] (round 15): one P or B slice
-    * over the SAME macroblock vocabularies, encoded with the 9.3.4
-    * engine. Like [[idrNalCabac]], the encoder drives a real
-    * [[PicState]] through the decoder's OWN ctxIdxInc helpers and
-    * motion grids (amvd / inferred / refIdx), so encoder-decoder
-    * context drift is structurally impossible; pixel semantics are
-    * IDENTICAL to the CAVLC twins, which is what the
-    * CAVLC-vs-CABAC equality tests pin. Fixture bounds: list
-    * lengths from `numRef` (L0) and 1 (L1), identity weights,
-    * mb_qp_delta 0, chroma cbp 0 on inter MBs. */
-  private def interNalCabac(mbW: Int, mbH: Int, isB: Boolean,
-      pMb: Int => MbP, bMb: Int => MbB, qp: Int, frameNum: Int,
-      pocLsb: Int, numRef: Int, initIdc: Int, deblock: Boolean,
-      refIdc: Int,
-      colZeroAt: (Int, Int) => Boolean,
-      t8Pps: Boolean = false): Array[Byte] = {
-    require(qp >= 0 && qp <= 51, s"qp out of range: $qp")
-    require(initIdc >= 0 && initIdc <= 2, s"cabac_init_idc: $initIdc")
-    val bw = new BitWriter
-    bw.putUe(0) // first_mb_in_slice
-    bw.putUe(if (isB) 6 else 5) // slice_type
-    bw.putUe(0) // pps_id
-    bw.put(frameNum & 15, 4) // frame_num (log2 = 4)
-    bw.put((if (isB) pocLsb else frameNum * 2) & 15, 4) // poc lsb
-    if (isB) {
-      bw.put(1, 1) // direct_spatial_mv_pred_flag (CABAC fixtures
-      // stay spatial)
-      bw.put(0, 1) // num_ref_idx_active_override (defaults 1 + 1)
-      bw.put(0, 1); bw.put(0, 1) // list modification flags
-    } else {
-      if (numRef == 1) bw.put(0, 1)
-      else { bw.put(1, 1); bw.putUe(numRef - 1) }
-      bw.put(0, 1) // ref_pic_list_modification_flag_l0
-    }
-    if (refIdc != 0) bw.put(0, 1) // adaptive marking off
-    bw.putUe(initIdc) // cabac_init_idc
-    bw.putSe(0) // slice_qp_delta
-    bw.putUe(if (deblock) 0 else 1)
-    if (deblock) { bw.putSe(0); bw.putSe(0) }
-    while (!bw.byteAligned) bw.put(1, 1) // cabac_alignment_one_bit
-    // shadow state (the decoder-shaped neighbor model)
-    val sps = Sps(0, mbW, mbH, 0, 0, 0, 0, 4, 0, 4,
-      deltaPocAlwaysZero = false, maxRefFrames = math.max(1, numRef))
-    val st = new PicState(sps, isIdr = false, frameNum = frameNum,
-      ppsId = 0)
-    val sliceIdx = 0
-    st.sliceParams += ((if (deblock) 0 else 1, 0, 0))
-    st.curSlice = sliceIdx
-    val cxp = new H264Cabac.Ctx(qp, H264Cabac.InitPB(initIdc))
-    val enc = new H264Cabac.Enc
-    var prevQpDeltaNz = false
-    val numL1 = if (isB) 1 else 0
-    def putRefIdx(list: Int, nRef: Int, v: Int, x4p: Int,
-        y4p: Int): Unit = {
-      if (nRef == 1) { require(v == 0, "refIdx out of fixture list"); return }
-      val ctxL = if (list == 0) st.mv else st.mvL1
-      def cond(cx4: Int, cy4: Int): Int =
-        if (!ctxL.available(cx4, cy4)) 0
-        else {
-          val k = cy4 * ctxL.gw + cx4
-          if (!ctxL.inter(k) || ctxL.inferred(k) || ctxL.ref(k) <= 0) 0
-          else 1
-        }
-      val inc = cond(x4p - 1, y4p) + 2 * cond(x4p, y4p - 1)
-      if (v == 0) { enc.decision(cxp, 54 + inc, bin = false); return }
-      enc.decision(cxp, 54 + inc, bin = true)
-      var i2 = 1
-      while (i2 < v) {
-        enc.decision(cxp, if (i2 == 1) 58 else 59, bin = true)
-        i2 += 1
-      }
-      enc.decision(cxp, if (v == 1) 58 else 59, bin = false)
-    }
-    def putMvdComp(base: Int, list: Int, x4p: Int, y4p: Int,
-        mvd: Int): Unit = {
-      val ctxL = if (list == 0) st.mv else st.mvL1
-      def am(cx4: Int, cy4: Int): Int =
-        if (!ctxL.available(cx4, cy4)) 0
-        else {
-          val k = cy4 * ctxL.gw + cx4
-          if (!ctxL.inter(k)) 0
-          else if (base == 40) ctxL.amvdx(k) else ctxL.amvdy(k)
-        }
-      val sum = am(x4p - 1, y4p) + am(x4p, y4p - 1)
-      val inc = if (sum < 3) 0 else if (sum <= 32) 1 else 2
-      if (mvd == 0) { enc.decision(cxp, base + inc, bin = false); return }
-      enc.decision(cxp, base + inc, bin = true)
-      val a = math.abs(mvd)
-      var v = 1
-      var b = 1
-      while (v < 9 && v < a) {
-        enc.decision(cxp, base + math.min(b + 2, 6), bin = true)
-        v += 1; b += 1
-      }
-      if (a < 9) enc.decision(cxp, base + math.min(b + 2, 6), bin = false)
-      else { // EG3 bypass suffix of a - 9
-        var rem = a - 9
-        var k = 3
-        while (rem >= (1 << k)) {
-          enc.bypass(bin = true)
-          rem -= 1 << k
-          k += 1
-        }
-        enc.bypass(bin = false)
-        var j = k - 1
-        while (j >= 0) { enc.bypass(((rem >> j) & 1) == 1); j -= 1 }
-      }
-      enc.bypass(mvd < 0)
-    }
-    // one coded partition: derive the predictor from the SAME grids
-    // the decoder uses, emit the mvd pair, fill with amvd marks
-    def putPart(list: Int, refIdx: Int, x4: Int, y4: Int, cx4: Int,
-        cy4: Int, w4: Int, h4: Int, shape: Int, mvx: Int,
-        mvy: Int): Unit = {
-      val ctxL = if (list == 0) st.mv else st.mvL1
-      val (px, py) = mvPredPart(ctxL, x4 + cx4, y4 + cy4, w4, shape,
-        refIdx)
-      putMvdComp(40, list, x4 + cx4, y4 + cy4, mvx - px)
-      putMvdComp(47, list, x4 + cx4, y4 + cy4, mvy - py)
-      ctxL.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = true, mvx, mvy,
-        refIdx, amx = math.abs(mvx - px), amy = math.abs(mvy - py))
-    }
-    def fillDirectC(x4: Int, y4: Int, bx0: Int, by0: Int,
-        n4: Int): Unit = {
-      def refOf(ctxL: MvCtx, x: Int, y: Int): Int = {
-        val (ok, r, _, _) = ctxL.info(x, y)
-        if (ok) r else -1
-      }
-      def minPos(a: Int, b: Int): Int =
-        if (a >= 0 && b >= 0) math.min(a, b) else math.max(a, b)
-      def nRef(ctxL: MvCtx): Int = {
-        val a = refOf(ctxL, x4 - 1, y4)
-        val b = refOf(ctxL, x4, y4 - 1)
-        val c =
-          if (ctxL.available(x4 + 4, y4 - 1)) refOf(ctxL, x4 + 4, y4 - 1)
-          else refOf(ctxL, x4 - 1, y4 - 1)
-        minPos(minPos(a, b), c)
-      }
-      val r0 = nRef(st.mv)
-      val r1 = nRef(st.mvL1)
-      val zp = r0 < 0 && r1 < 0
-      val (m0x, m0y) =
-        if (!zp && r0 >= 0) mvPredPart(st.mv, x4, y4, 4, ShapeMedian, r0)
-        else (0, 0)
-      val (m1x, m1y) =
-        if (!zp && r1 >= 0) mvPredPart(st.mvL1, x4, y4, 4, ShapeMedian,
-          r1)
-        else (0, 0)
-      val useL0 = zp || r0 >= 0
-      val useL1 = zp || r1 >= 0
-      var by = by0
-      while (by < by0 + n4) {
-        var bx = bx0
-        while (bx < bx0 + n4) {
-          val cz = !zp && colZeroAt(x4 + (bx >> 1) * 3,
-            y4 + (by >> 1) * 3)
-          if (useL0) st.mv.fill(x4 + bx, y4 + by, 1, 1, isInter = true,
-            if (cz && r0 == 0) 0 else m0x,
-            if (cz && r0 == 0) 0 else m0y, math.max(r0, 0), inf = true)
-          else st.mv.fill(x4 + bx, y4 + by, 1, 1, isInter = false, 0, 0)
-          if (useL1) st.mvL1.fill(x4 + bx, y4 + by, 1, 1,
-            isInter = true,
-            if (cz && r1 == 0) 0 else m1x,
-            if (cz && r1 == 0) 0 else m1y, math.max(r1, 0), inf = true)
-          else st.mvL1.fill(x4 + bx, y4 + by, 1, 1, isInter = false,
-            0, 0)
-          bx += 1
-        }
-        by += 1
-      }
-    }
-    val nMbs = mbW * mbH
-    var i = 0
-    while (i < nMbs) {
-      val mbX = i % mbW
-      val mbY = i / mbW
-      val x4 = mbX * 4
-      val y4 = mbY * 4
-      def skipCond(m2: Int, ok: Boolean): Int =
-        if (!ok || st.sliceOf(m2) != sliceIdx || st.mbSkip(m2)) 0 else 1
-      val skipInc = skipCond(i - 1, mbX > 0) + skipCond(i - mbW, mbY > 0)
-      st.sliceOf(i) = sliceIdx
-      def zeroAll(): Unit = { // skip / zero-cbp bookkeeping
-        st.cbfLumaDc(i) = 0; st.cbfCbDc(i) = 0; st.cbfCrDc(i) = 0
-        var blk = 0
-        while (blk < 16) {
-          val bx = mbX * 4 + blkCol(blk)
-          val by = mbY * 4 + blkRow(blk)
-          st.cbfLuma4(by * mbW * 4 + bx) = 0
-          st.lumaNz.set(bx, by, 0)
-          blk += 1
-        }
-        var cblk = 0
-        while (cblk < 4) {
-          val ccx = mbX * 2 + (cblk & 1)
-          val ccy = mbY * 2 + (cblk >> 1)
-          st.cbfCbAc(ccy * mbW * 2 + ccx) = 0
-          st.cbfCrAc(ccy * mbW * 2 + ccx) = 0
-          st.cbNz.set(ccx, ccy, 0)
-          st.crNz.set(ccx, ccy, 0)
-          cblk += 1
-        }
-      }
-      // coded_block_pattern + one-DC-per-4x4 residuals (fixture
-      // chroma cbp is always 0 on inter MBs, like the CAVLC twins)
-      def putInterResiduals(dcOf: Int => Int): Unit = {
-        val cbpLuma = (0 until 4).map { g =>
-          if ((0 until 4).exists(b => dcOf(g * 4 + b) != 0)) 1 << g
-          else 0
-        }.sum
-        var b8 = 0
-        var sofar = 0
-        while (b8 < 4) {
-          val bit = (cbpLuma >> b8) & 1
-          enc.decision(cxp,
-            73 + cbpLumaInc(st, sliceIdx, i, b8, sofar), bit == 1)
-          sofar |= bit << b8
-          b8 += 1
-        }
-        enc.decision(cxp,
-          77 + cbpChromaInc(st, sliceIdx, i, bin1 = false), bin = false)
-        st.mbKind(i) = 3
-        st.mbCbp(i) = cbpLuma
-        st.cbfLumaDc(i) = 0
-        // round 16: the fixture's coded 16x16 is always t8-eligible,
-        // so a t8 PPS makes the flag present — stay 4x4 (bin 0)
-        if (t8Pps && cbpLuma != 0)
-          enc.decision(cxp, 399 + t8IncSt(st, sliceIdx, i), bin = false)
-        if (cbpLuma != 0)
-          enc.decision(cxp, 60 + (if (prevQpDeltaNz) 1 else 0),
-            bin = false) // mb_qp_delta 0
-        prevQpDeltaNz = false
-        var blk = 0
-        while (blk < 16) {
-          val r = blkRow(blk); val c = blkCol(blk)
-          val bx = mbX * 4 + c; val by = mbY * 4 + r
-          if ((cbpLuma & (1 << (blk >> 2))) != 0) {
-            val coeffs = new Array[Int](16)
-            coeffs(0) = dcOf(blk)
-            val inc = cbfIncCell(st, sliceIdx, i, bx, by, st.cbfLuma4,
-              mbW * 4, 4, curIntra = false)
-            val nz = putResidualCabac(enc, cxp, 2, inc, coeffs)
-            st.cbfLuma4(by * mbW * 4 + bx) = if (nz > 0) 1 else 0
-            st.lumaNz.set(bx, by, nz)
-          } else {
-            st.cbfLuma4(by * mbW * 4 + bx) = 0
-            st.lumaNz.set(bx, by, 0)
-          }
-          blk += 1
-        }
-        st.cbfCbDc(i) = 0
-        st.cbfCrDc(i) = 0
-        var cblk = 0
-        while (cblk < 4) {
-          val ccx = mbX * 2 + (cblk & 1)
-          val ccy = mbY * 2 + (cblk >> 1)
-          st.cbfCbAc(ccy * mbW * 2 + ccx) = 0
-          st.cbfCrAc(ccy * mbW * 2 + ccx) = 0
-          st.cbNz.set(ccx, ccy, 0)
-          st.crNz.set(ccx, ccy, 0)
-          cblk += 1
-        }
-      }
-      // Intra_16x16 refresh inside the inter slice (suffix at ctx
-      // base 17 / 32 per Table 9-39, then the shared I16 tail)
-      def putIntra16(base: Int, spec: I16Dc): Unit = {
-        val I16Dc(z, ac0, pred, chromaDcTz, chromaPred) = spec
-        require(z >= -7 && z <= 7 && ac0 >= -1 && ac0 <= 1 &&
-          pred >= 0 && pred <= 3 && chromaDcTz >= -1 && chromaDcTz <= 3 &&
-          chromaPred >= 0 && chromaPred <= 3, s"I16Dc out of range")
-        val acFlag = if (ac0 != 0) 1 else 0
-        val cbpCh = if (chromaDcTz >= 0) 1 else 0
-        enc.decision(cxp, base, bin = true) // not I_NxN
-        enc.terminate(bin = false) // not I_PCM
-        enc.decision(cxp, base + 1, acFlag == 1)
-        enc.decision(cxp, base + 2, cbpCh > 0)
-        if (cbpCh > 0) enc.decision(cxp, base + 2, bin = false)
-        enc.decision(cxp, base + 3, ((pred >> 1) & 1) == 1)
-        enc.decision(cxp, base + 3, (pred & 1) == 1)
-        enc.decision(cxp, 64 + chromaModeInc(st, sliceIdx, i),
-          chromaPred > 0)
-        if (chromaPred > 0) enc.decision(cxp, 67, chromaPred > 1)
-        if (chromaPred > 1) enc.decision(cxp, 67, chromaPred > 2)
-        st.chromaMode(i) = chromaPred
-        enc.decision(cxp, 60 + (if (prevQpDeltaNz) 1 else 0),
-          bin = false) // mb_qp_delta 0
-        prevQpDeltaNz = false
-        st.mbKind(i) = 1
-        st.mbCbp(i) = (if (acFlag == 1) 15 else 0) | (cbpCh << 4)
-        st.mbIntraA(i) = true
-        st.mv.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-        if (isB) st.mvL1.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-        val dcCoeffs = new Array[Int](16)
-        dcCoeffs(0) = z
-        val dcNz = putResidualCabac(enc, cxp, 0,
-          cbfIncMb(st, sliceIdx, i, st.cbfLumaDc, _ == 1), dcCoeffs)
-        st.cbfLumaDc(i) = if (dcNz > 0) 1 else 0
-        var blk = 0
-        while (blk < 16) {
-          val r = blkRow(blk); val c = blkCol(blk)
-          val bx = mbX * 4 + c; val by = mbY * 4 + r
-          if (acFlag == 1) {
-            val coeffs = new Array[Int](15)
-            coeffs(0) = if (blk == 0) ac0 else 0
-            val inc = cbfIncCell(st, sliceIdx, i, bx, by, st.cbfLuma4,
-              mbW * 4, 4)
-            val nz = putResidualCabac(enc, cxp, 1, inc, coeffs)
-            st.cbfLuma4(by * mbW * 4 + bx) = if (nz > 0) 1 else 0
-            st.lumaNz.set(bx, by, nz)
-          } else {
-            st.cbfLuma4(by * mbW * 4 + bx) = 0
-            st.lumaNz.set(bx, by, 0)
-          }
-          blk += 1
-        }
-        if (cbpCh == 1) {
-          var comp = 0
-          while (comp < 2) {
-            val arr = if (comp == 0) st.cbfCbDc else st.cbfCrDc
-            val coeffs = new Array[Int](4)
-            coeffs(chromaDcTz) = 1
-            val nz = putResidualCabac(enc, cxp, 3,
-              cbfIncChromaDc(st, sliceIdx, i, arr), coeffs)
-            arr(i) = if (nz > 0) 1 else 0
-            comp += 1
-          }
-          var cblk = 0
-          while (cblk < 4) {
-            val ccx = mbX * 2 + (cblk & 1)
-            val ccy = mbY * 2 + (cblk >> 1)
-            st.cbfCbAc(ccy * mbW * 2 + ccx) = 0
-            st.cbfCrAc(ccy * mbW * 2 + ccx) = 0
-            st.cbNz.set(ccx, ccy, 0)
-            st.crNz.set(ccx, ccy, 0)
-            cblk += 1
-          }
-        } else {
-          st.cbfCbDc(i) = 0
-          st.cbfCrDc(i) = 0
-          var cblk = 0
-          while (cblk < 4) {
-            val ccx = mbX * 2 + (cblk & 1)
-            val ccy = mbY * 2 + (cblk >> 1)
-            st.cbfCbAc(ccy * mbW * 2 + ccx) = 0
-            st.cbfCrAc(ccy * mbW * 2 + ccx) = 0
-            st.cbNz.set(ccx, ccy, 0)
-            st.crNz.set(ccx, ccy, 0)
-            cblk += 1
-          }
-        }
-      }
-      if (!isB) pMb(i) match {
-        case PSkip =>
-          enc.decision(cxp, 11 + skipInc, bin = true)
-          val (mx, my) = skipMv(st.mv, mbX, mbY)
-          st.mv.fill(x4, y4, 4, 4, isInter = true, mx, my, 0,
-            inf = true)
-          st.mbSkip(i) = true
-          st.mbKind(i) = 3
-          st.mbCbp(i) = 0
-          zeroAll()
-          prevQpDeltaNz = false
-        case PIntra(spec) =>
-          enc.decision(cxp, 11 + skipInc, bin = false)
-          enc.decision(cxp, 14, bin = true) // intra prefix
-          putIntra16(17, spec)
-        case other =>
-          enc.decision(cxp, 11 + skipInc, bin = false)
-          other match {
-            case PMove(mx, my, refIdx) =>
-              enc.decision(cxp, 14, bin = false)
-              enc.decision(cxp, 15, bin = false)
-              enc.decision(cxp, 16, bin = false) // P_L0_16x16
-              putRefIdx(0, numRef, refIdx, x4, y4)
-              putPart(0, refIdx, x4, y4, 0, 0, 4, 4, ShapeMedian, mx, my)
-              putInterResiduals(_ => 0)
-            case PMoveCoded(mx, my, dcOf) =>
-              enc.decision(cxp, 14, bin = false)
-              enc.decision(cxp, 15, bin = false)
-              enc.decision(cxp, 16, bin = false)
-              putRefIdx(0, numRef, 0, x4, y4)
-              putPart(0, 0, x4, y4, 0, 0, 4, 4, ShapeMedian, mx, my)
-              putInterResiduals(dcOf)
-            case P16x8((tx, ty), (bx2, by2)) =>
-              enc.decision(cxp, 14, bin = false)
-              enc.decision(cxp, 15, bin = true)
-              enc.decision(cxp, 17, bin = true) // 16x8
-              putRefIdx(0, numRef, 0, x4, y4)
-              putRefIdx(0, numRef, 0, x4, y4 + 2)
-              putPart(0, 0, x4, y4, 0, 0, 4, 2, Shape16x8Top, tx, ty)
-              putPart(0, 0, x4, y4, 0, 2, 4, 2, Shape16x8Bot, bx2, by2)
-              putInterResiduals(_ => 0)
-            case P8x16((lx, ly), (rx, ry)) =>
-              enc.decision(cxp, 14, bin = false)
-              enc.decision(cxp, 15, bin = true)
-              enc.decision(cxp, 17, bin = false) // 8x16
-              putRefIdx(0, numRef, 0, x4, y4)
-              putRefIdx(0, numRef, 0, x4 + 2, y4)
-              putPart(0, 0, x4, y4, 0, 0, 2, 4, Shape8x16Left, lx, ly)
-              putPart(0, 0, x4, y4, 2, 0, 2, 4, Shape8x16Right, rx, ry)
-              putInterResiduals(_ => 0)
-            case P8x8(subs) =>
-              require(subs.length == 4, "P8x8 needs 4 vectors")
-              enc.decision(cxp, 14, bin = false)
-              enc.decision(cxp, 15, bin = false)
-              enc.decision(cxp, 16, bin = true) // P_8x8
-              var q2 = 0
-              while (q2 < 4) { // sub_mb_type: all 8x8
-                enc.decision(cxp, 21, bin = true)
-                q2 += 1
-              }
-              q2 = 0
-              while (q2 < 4) {
-                putRefIdx(0, numRef, 0, x4 + (q2 & 1) * 2,
-                  y4 + (q2 >> 1) * 2)
-                q2 += 1
-              }
-              q2 = 0
-              while (q2 < 4) {
-                putPart(0, 0, x4, y4, (q2 & 1) * 2, (q2 >> 1) * 2, 2, 2,
-                  ShapeMedian, subs(q2)._1, subs(q2)._2)
-                q2 += 1
-              }
-              putInterResiduals(_ => 0)
-            case PSkip | PIntra(_) =>
-              throw new IllegalStateException("unreachable")
-          }
-      } else bMb(i) match {
-        case BSkip =>
-          enc.decision(cxp, 24 + skipInc, bin = true)
-          fillDirectC(x4, y4, 0, 0, 4)
-          st.mbSkip(i) = true
-          st.mbDirect(i) = true
-          st.mbKind(i) = 3
-          st.mbCbp(i) = 0
-          zeroAll()
-          prevQpDeltaNz = false
-        case other =>
-          enc.decision(cxp, 24 + skipInc, bin = false)
-          def dirCond(m2: Int, ok: Boolean): Int =
-            if (!ok || st.sliceOf(m2) != sliceIdx || st.mbDirect(m2)) 0
-            else 1
-          val dirInc = dirCond(i - 1, mbX > 0) + dirCond(i - mbW, mbY > 0)
-          // B mb_type tree encoder: raw values as in the CAVLC walk
-          def putBType(raw: Int): Unit = {
-            if (raw == 0) { enc.decision(cxp, 27 + dirInc, bin = false); return }
-            enc.decision(cxp, 27 + dirInc, bin = true)
-            if (raw == 1 || raw == 2) {
-              enc.decision(cxp, 30, bin = false)
-              enc.decision(cxp, 32, raw == 2)
-              return
-            }
-            enc.decision(cxp, 30, bin = true)
-            val bits =
-              if (raw >= 3 && raw <= 10) raw - 3
-              else if (raw == 11) 14
-              else if (raw == 22) 15
-              else (raw + 4) >> 1 // 12..21 -> 8..12
-            enc.decision(cxp, 31, (bits & 8) != 0)
-            enc.decision(cxp, 32, (bits & 4) != 0)
-            enc.decision(cxp, 32, (bits & 2) != 0)
-            enc.decision(cxp, 32, (bits & 1) != 0)
-            if (raw >= 12 && raw <= 21)
-              enc.decision(cxp, 32, ((raw + 4) & 1) == 1)
-          }
-          other match {
-            case BDirect(dcOf) =>
-              putBType(0)
-              st.mbDirect(i) = true
-              fillDirectC(x4, y4, 0, 0, 4)
-              putInterResiduals(dcOf)
-            case BFwd(mx, my) =>
-              putBType(1)
-              putRefIdx(0, 1, 0, x4, y4)
-              putPart(0, 0, x4, y4, 0, 0, 4, 4, ShapeMedian, mx, my)
-              st.mvL1.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-              putInterResiduals(_ => 0)
-            case BFwdCoded(mx, my, dcOf) =>
-              putBType(1)
-              putRefIdx(0, 1, 0, x4, y4)
-              putPart(0, 0, x4, y4, 0, 0, 4, 4, ShapeMedian, mx, my)
-              st.mvL1.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-              putInterResiduals(dcOf)
-            case BBwd(mx, my) =>
-              putBType(2)
-              putRefIdx(1, numL1, 0, x4, y4)
-              st.mv.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-              putPart(1, 0, x4, y4, 0, 0, 4, 4, ShapeMedian, mx, my)
-              putInterResiduals(_ => 0)
-            case BBi((fx, fy), (bx2, by2)) =>
-              putBType(3)
-              putRefIdx(0, 1, 0, x4, y4)
-              putRefIdx(1, numL1, 0, x4, y4)
-              putPart(0, 0, x4, y4, 0, 0, 4, 4, ShapeMedian, fx, fy)
-              putPart(1, 0, x4, y4, 0, 0, 4, 4, ShapeMedian, bx2, by2)
-              putInterResiduals(_ => 0)
-            case B16x8(tl, (tx, ty), bl, (bx2, by2)) =>
-              val raw = (tl, bl) match {
-                case (0, 0) => 4
-                case (1, 1) => 6
-                case (0, 1) => 8
-                case _ => 10
-              }
-              putBType(raw)
-              if (tl == 0) putRefIdx(0, 1, 0, x4, y4)
-              if (bl == 0) putRefIdx(0, 1, 0, x4, y4 + 2)
-              if (tl == 1) putRefIdx(1, numL1, 0, x4, y4)
-              if (bl == 1) putRefIdx(1, numL1, 0, x4, y4 + 2)
-              if (tl == 0) putPart(0, 0, x4, y4, 0, 0, 4, 2,
-                Shape16x8Top, tx, ty)
-              else st.mv.fill(x4, y4, 4, 2, isInter = false, 0, 0)
-              if (bl == 0) putPart(0, 0, x4, y4, 0, 2, 4, 2,
-                Shape16x8Bot, bx2, by2)
-              else st.mv.fill(x4, y4 + 2, 4, 2, isInter = false, 0, 0)
-              if (tl == 1) putPart(1, 0, x4, y4, 0, 0, 4, 2,
-                Shape16x8Top, tx, ty)
-              else st.mvL1.fill(x4, y4, 4, 2, isInter = false, 0, 0)
-              if (bl == 1) putPart(1, 0, x4, y4, 0, 2, 4, 2,
-                Shape16x8Bot, bx2, by2)
-              else st.mvL1.fill(x4, y4 + 2, 4, 2, isInter = false, 0, 0)
-              putInterResiduals(_ => 0)
-            case B8x8(subs) =>
-              require(subs.length == 4, "B8x8 needs 4 quadrants")
-              putBType(22)
-              subs.foreach { sub =>
-                sub match {
-                  case BSubDirect => enc.decision(cxp, 36, bin = false)
-                  case BSubL0(_, _) =>
-                    enc.decision(cxp, 36, bin = true)
-                    enc.decision(cxp, 37, bin = false)
-                    enc.decision(cxp, 39, bin = false)
-                  case BSubL1(_, _) =>
-                    enc.decision(cxp, 36, bin = true)
-                    enc.decision(cxp, 37, bin = false)
-                    enc.decision(cxp, 39, bin = true)
-                  case BSubBi(_, _) =>
-                    enc.decision(cxp, 36, bin = true)
-                    enc.decision(cxp, 37, bin = true)
-                    enc.decision(cxp, 38, bin = false)
-                    enc.decision(cxp, 39, bin = false)
-                    enc.decision(cxp, 39, bin = false)
-                  case BSubL04x4(_) => // type 10 = 7 + 3
-                    enc.decision(cxp, 36, bin = true)
-                    enc.decision(cxp, 37, bin = true)
-                    enc.decision(cxp, 38, bin = true)
-                    enc.decision(cxp, 39, bin = false)
-                    enc.decision(cxp, 39, bin = true)
-                    enc.decision(cxp, 39, bin = true)
-                }
-              }
-              var q2 = 0
-              while (q2 < 4) {
-                if (subs(q2) == BSubDirect)
-                  fillDirectC(x4, y4, (q2 & 1) * 2, (q2 >> 1) * 2, 2)
-                q2 += 1
-              }
-              q2 = 0
-              while (q2 < 4) { // ref_idx_l0 pass
-                subs(q2) match {
-                  case BSubL0(_, _) | BSubBi(_, _) | BSubL04x4(_) =>
-                    putRefIdx(0, 1, 0, x4 + (q2 & 1) * 2,
-                      y4 + (q2 >> 1) * 2)
-                  case _ => ()
-                }
-                q2 += 1
-              }
-              q2 = 0
-              while (q2 < 4) { // ref_idx_l1 pass
-                subs(q2) match {
-                  case BSubL1(_, _) | BSubBi(_, _) =>
-                    putRefIdx(1, numL1, 0, x4 + (q2 & 1) * 2,
-                      y4 + (q2 >> 1) * 2)
-                  case _ => ()
-                }
-                q2 += 1
-              }
-              q2 = 0
-              while (q2 < 4) { // mvd_l0 pass
-                val bx8 = (q2 & 1) * 2
-                val by8 = (q2 >> 1) * 2
-                subs(q2) match {
-                  case BSubL0(mx, my) =>
-                    putPart(0, 0, x4, y4, bx8, by8, 2, 2, ShapeMedian,
-                      mx, my)
-                  case BSubBi((fx, fy), _) =>
-                    putPart(0, 0, x4, y4, bx8, by8, 2, 2, ShapeMedian,
-                      fx, fy)
-                  case BSubL04x4(mvs) =>
-                    require(mvs.length == 4, "B_L0_4x4 needs 4 vectors")
-                    var b2 = 0
-                    while (b2 < 4) {
-                      putPart(0, 0, x4, y4, bx8 + (b2 & 1),
-                        by8 + (b2 >> 1), 1, 1, ShapeMedian,
-                        mvs(b2)._1, mvs(b2)._2)
-                      b2 += 1
-                    }
-                  case BSubL1(_, _) =>
-                    st.mv.fill(x4 + bx8, y4 + by8, 2, 2,
-                      isInter = false, 0, 0)
-                  case BSubDirect => ()
-                }
-                q2 += 1
-              }
-              q2 = 0
-              while (q2 < 4) { // mvd_l1 pass
-                val bx8 = (q2 & 1) * 2
-                val by8 = (q2 >> 1) * 2
-                subs(q2) match {
-                  case BSubL1(mx, my) =>
-                    putPart(1, 0, x4, y4, bx8, by8, 2, 2, ShapeMedian,
-                      mx, my)
-                  case BSubBi(_, (bx2, by2)) =>
-                    putPart(1, 0, x4, y4, bx8, by8, 2, 2, ShapeMedian,
-                      bx2, by2)
-                  case BSubL0(_, _) | BSubL04x4(_) =>
-                    st.mvL1.fill(x4 + bx8, y4 + by8, 2, 2,
-                      isInter = false, 0, 0)
-                  case BSubDirect => ()
-                }
-                q2 += 1
-              }
-              putInterResiduals(_ => 0)
-            case BIntra(spec) => // mb_type intra escape: bits 13
-              enc.decision(cxp, 27 + dirInc, bin = true)
-              enc.decision(cxp, 30, bin = true)
-              enc.decision(cxp, 31, bin = true)
-              enc.decision(cxp, 32, bin = true)
-              enc.decision(cxp, 32, bin = false)
-              enc.decision(cxp, 32, bin = true)
-              putIntra16(32, spec)
-            case BSkip =>
-              throw new IllegalStateException("unreachable")
-          }
-      }
-      val isLast = i == nMbs - 1
-      enc.terminate(isLast) // end_of_slice_flag
-      i += 1
-    }
-    enc.drain(b => bw.put(b, 1))
-    bw.alignZero()
-    nalUnit((refIdc << 5) | 1, bw.result()) // non-IDR slice
-  }
-
-  /** CABAC twin of [[pNal]] (fixture surface). */
-  def pNalCabac(mbW: Int, mbH: Int, mb: Int => MbP, qp: Int,
-      frameNum: Int = 1, numRef: Int = 1, initIdc: Int = 0,
-      deblock: Boolean = false, refIdc: Int = 2,
-      t8Pps: Boolean = false): Array[Byte] =
-    interNalCabac(mbW, mbH, isB = false, mb, _ => BSkip, qp, frameNum,
-      pocLsb = 0, numRef = numRef, initIdc = initIdc, deblock = deblock,
-      refIdc = refIdc, colZeroAt = (_, _) => false, t8Pps = t8Pps)
-
-  /** CABAC twin of [[bNal]] (fixture surface). */
-  def bNalCabac(mbW: Int, mbH: Int, mb: Int => MbB, qp: Int,
-      frameNum: Int, pocLsb: Int, initIdc: Int = 0,
-      deblock: Boolean = false, refIdc: Int = 0,
-      colZeroAt: (Int, Int) => Boolean = (_, _) => false): Array[Byte] =
-    interNalCabac(mbW, mbH, isB = true, _ => PSkip, mb, qp, frameNum,
-      pocLsb = pocLsb, numRef = 1, initIdc = initIdc, deblock = deblock,
-      refIdc = refIdc, colZeroAt = colZeroAt)
-
-  /** CABAC twin of [[encodeIPBStream]]: SPS + CABAC PPS + CABAC IDR +
-    * the given pictures, same vocabularies and pixel semantics. */
-  def encodeIPBStreamCabac(mbW: Int, mbH: Int, iMb: Int => Mb,
-      frames: Seq[IpbFrame], qp: Int = 28, initIdc: Int = 0,
-      colZeroAt: (Int, Int) => Boolean = (_, _) => false): Array[Byte] = {
-    val sep = Array[Byte](0, 0, 0, 1)
-    var out = sep ++ spsNal(mbW, mbH, maxRef = 2) ++ sep ++
-      ppsNal(qp, cabac = true) ++ sep ++ idrNalCabac(mbW, mbH, iMb, qp)
-    var fn = 1
-    frames.foreach {
-      case Pf(f) =>
-        out = out ++ sep ++ pNalCabac(mbW, mbH, f, qp, frameNum = fn,
-          initIdc = initIdc)
-        fn += 1
-      case Bf(f, poc) =>
-        out = out ++ sep ++ bNalCabac(mbW, mbH, f, qp, frameNum = fn,
-          pocLsb = poc, initIdc = initIdc, colZeroAt = colZeroAt)
-    }
-    out
   }
 
   /** One Intra_16x16 macroblock (shared by the IDR and P-slice
@@ -7261,13 +2915,6 @@ object H264 {
     * the block's 16 predicted samples). */
   final case class PMoveCoded(mvx: Int, mvy: Int,
       dcRes: Int => Int) extends MbP
-  /** P_L0_16x16 under the 8x8 TRANSFORM (round 16, High profile):
-    * MC at `(mvx, mvy)` plus one 8x8-scan-DC coefficient per 8x8
-    * block from `dcRes(blk8)` (z order; at qp 28 with flat weights a
-    * coefficient c adds exactly 2c to the block's 64 samples).
-    * Requires a transform_8x8_mode PPS (pNal t8Pps). */
-  final case class PMoveCoded8(mvx: Int, mvy: Int,
-      dcRes: Int => Int) extends MbP
   /** P_L0_L0_16x8 (round 13): top and bottom 16x8 partitions, each
     * with its own quarter-pel MV. */
   final case class P16x8(top: (Int, Int), bot: (Int, Int)) extends MbP
@@ -7288,10 +2935,7 @@ object H264 {
       weight: Option[(Int, Int, Int)] = None,
       reorder: Seq[(Int, Int)] = Nil,
       mmcoDrop: Seq[Int] = Nil,
-      mmcoOps: Seq[Seq[Int]] = Nil,
-      t8Pps: Boolean = false,
-      pocType1: Boolean = false,
-      pocBottomDelta: Option[Int] = None): Array[Byte] = {
+      mmcoOps: Seq[Seq[Int]] = Nil): Array[Byte] = {
     require(qp >= 0 && qp <= 51, s"qp out of range: $qp")
     require(refIdc >= 0 && refIdc <= 3, s"refIdc out of range: $refIdc")
     require(numRef >= 1 && numRef <= 16, s"numRef out of range: $numRef")
@@ -7302,10 +2946,7 @@ object H264 {
     bw.putUe(5) // slice_type: P (all)
     bw.putUe(0) // pps_id
     bw.put(frameNum & 15, 4) // frame_num (log2 = 4)
-    if (!pocType1) {
-      bw.put((frameNum * 2) & 15, 4) // pic_order_cnt_lsb (log2 = 4)
-      pocBottomDelta.foreach(bw.putSe) // vs a bottomPoc PPS only
-    }
+    bw.put((frameNum * 2) & 15, 4) // pic_order_cnt_lsb (log2 = 4)
     if (numRef == 1)
       bw.put(0, 1) // num_ref_idx_active_override (PPS default = 1 ref)
     else {
@@ -7406,37 +3047,6 @@ object H264 {
           putPart(0, 0, 4, 4, ShapeMedian, mvx, mvy, refIdx)
           bw.putUe(0) // coded_block_pattern: cbp 0
           zeroLumaNz()
-        case PMoveCoded8(mvx, mvy, dcOf) =>
-          require(t8Pps, "PMoveCoded8 needs a transform_8x8_mode PPS")
-          bw.putUe(skipRun); skipRun = 0 // mb_skip_run
-          bw.putUe(0) // mb_type P_L0_16x16
-          putRefIdx(0)
-          putPart(0, 0, 4, 4, ShapeMedian, mvx, mvy)
-          val cbpLuma8 = (0 until 4).map { g =>
-            if (dcOf(g) != 0) 1 << g else 0
-          }.sum
-          bw.putUe(CbpInterInv(cbpLuma8)) // coded_block_pattern (chroma 0)
-          if (cbpLuma8 != 0) {
-            bw.put(1, 1) // transform_size_8x8_flag: 8x8
-            bw.putSe(0) // mb_qp_delta
-          }
-          var blk8e = 0
-          while (blk8e < 4) {
-            var i4 = 0
-            while (i4 < 4) {
-              val sub = blk8e * 4 + i4
-              val cxp = mbX * 4 + blkCol(sub)
-              val cyp = mbY * 4 + blkRow(sub)
-              if ((cbpLuma8 & (1 << blk8e)) != 0) {
-                val lvl = if (i4 == 0) dcOf(blk8e) else 0
-                putCavlcSingle(bw, lumaNz.nC(cxp, cyp), lvl,
-                  maxNumCoeff = 16)
-                lumaNz.set(cxp, cyp, if (lvl != 0) 1 else 0)
-              } else lumaNz.set(cxp, cyp, 0)
-              i4 += 1
-            }
-            blk8e += 1
-          }
         case PMoveCoded(mvx, mvy, dcOf) =>
           bw.putUe(skipRun); skipRun = 0 // mb_skip_run
           bw.putUe(0) // mb_type P_L0_16x16
@@ -7446,10 +3056,6 @@ object H264 {
             if ((0 until 4).exists(b => dcOf(g * 4 + b) != 0)) 1 << g else 0
           }.sum
           bw.putUe(CbpInterInv(cbpLuma)) // coded_block_pattern (chroma 0)
-          // round 16: a t8 PPS makes transform_size_8x8_flag present
-          // for this coded 16x16 partition — the fixture stays on the
-          // 4x4 transform (flag 0), pinning the inter sync path
-          if (t8Pps && cbpLuma != 0) bw.put(0, 1)
           if (cbpLuma != 0) bw.putSe(0) // mb_qp_delta
           var blk = 0
           while (blk < 16) {
@@ -7506,363 +3112,6 @@ object H264 {
     nalUnit((refIdc << 5) | 1, bw.result()) // non-IDR slice
   }
 
-  /** Macroblock spec for [[bNal]] B slices (round 14). Vectors in
-    * QUARTER-pel units. List 0 = the temporally EARLIER reference
-    * (the I/P before the B in display order), list 1 = the later one
-    * — the default 8.2.4.2.3 ordering the decoder derives from POC. */
-  sealed trait MbB
-  /** B_L0_16x16: forward-only MC. */
-  final case class BFwd(mvx: Int, mvy: Int) extends MbB
-  /** B_L1_16x16: backward-only MC. */
-  final case class BBwd(mvx: Int, mvy: Int) extends MbB
-  /** B_Bi_16x16: both lists, rounded-average combination
-    * ((L0 + L1 + 1) >> 1, 8.4.2.3.1 default). */
-  final case class BBi(fwd: (Int, Int), bwd: (Int, Int)) extends MbB
-  /** B_L0_16x16 WITH a luma residual: one DC coefficient per 4x4
-    * block from `dcRes` (z-order; at qp 28 coefficient c adds exactly
-    * 4c to the block). */
-  final case class BFwdCoded(mvx: Int, mvy: Int,
-      dcRes: Int => Int) extends MbB
-  /** B 16x8 with per-partition list choice (`topList`/`botList` in
-    * {0, 1}): exercises the two-pass ref/mvd syntax (7.3.5.1). */
-  final case class B16x8(topList: Int, top: (Int, Int),
-      botList: Int, bot: (Int, Int)) extends MbB
-  /** Intra_16x16 refresh inside the B slice (mb_type offset 23). */
-  final case class BIntra(spec: I16Dc) extends MbB
-  /** B_Skip (round 15): emitted through mb_skip_run; reconstructs in
-    * spatial-direct mode with no residual. */
-  case object BSkip extends MbB
-  /** B_Direct_16x16 (round 15): derived motion, optional one-DC-per-
-    * 4x4 residual (z-order; at qp 28 coefficient c adds exactly 4c). */
-  final case class BDirect(dcRes: Int => Int = _ => 0) extends MbB
-  /** One B_8x8 quadrant (round 15). */
-  sealed trait BSub
-  case object BSubDirect extends BSub
-  final case class BSubL0(mvx: Int, mvy: Int) extends BSub
-  final case class BSubL1(mvx: Int, mvy: Int) extends BSub
-  final case class BSubBi(fwd: (Int, Int), bwd: (Int, Int)) extends BSub
-  /** B_L0_4x4: four list-0 vectors in z order. */
-  final case class BSubL04x4(mvs: Seq[(Int, Int)]) extends BSub
-  /** B_8x8 macroblock: one [[BSub]] per quadrant (z order). */
-  final case class B8x8(subs: Seq[BSub]) extends MbB
-
-  /** Non-reference B slice NAL (round 14): single slice, every
-    * macroblock from `mb(index)`, lists built by the decoder from
-    * POC (pass a `pocLsb` BETWEEN the two anchors'), loop filter
-    * disabled (B + deblock degrades by design). Motion differentials
-    * are computed against the same per-list 8.4.1.3 predictors the
-    * decoder derives, in the same two-pass L0-then-L1 order. */
-  def bNal(mbW: Int, mbH: Int, mb: Int => MbB, qp: Int,
-      frameNum: Int, pocLsb: Int, refIdc: Int = 0,
-      weight: Option[(Int, Int, Int, Int, Int)] = None,
-      deblock: Boolean = false,
-      colZeroAt: (Int, Int) => Boolean = (_, _) => false,
-      pocType1: Boolean = false,
-      temporal: Boolean = false,
-      pocBottomDelta: Option[Int] = None): Array[Byte] = {
-    require(qp >= 0 && qp <= 51, s"qp out of range: $qp")
-    require(refIdc >= 0 && refIdc <= 3, s"refIdc out of range: $refIdc")
-    val bw = new BitWriter
-    bw.putUe(0) // first_mb_in_slice
-    bw.putUe(6) // slice_type: B (all)
-    bw.putUe(0) // pps_id
-    bw.put(frameNum & 15, 4) // frame_num (log2 = 4)
-    if (!pocType1) {
-      bw.put(pocLsb & 15, 4) // pic_order_cnt_lsb (log2 = 4)
-      pocBottomDelta.foreach(bw.putSe) // vs a bottomPoc PPS only
-    }
-    // temporal fixtures (round 15): the encoder does not model the
-    // colocated motion, so direct/skip MBs must not PRECEDE any coded
-    // MB whose mvd prediction could read their cells
-    bw.put(if (temporal) 0 else 1, 1) // direct_spatial_mv_pred_flag (no direct MBs emitted)
-    bw.put(0, 1) // num_ref_idx_active_override (PPS defaults: 1 + 1)
-    bw.put(0, 1); bw.put(0, 1) // ref_pic_list_modification l0/l1
-    // explicit bipred weights (only against a bipredExplicit PPS):
-    // (log2 denom, w_l0, o_l0, w_l1, o_l1) applied to refIdx 0 of
-    // each list
-    weight.foreach { case (denom, w0, o0, w1, o1) =>
-      bw.putUe(denom) // luma_log2_weight_denom
-      bw.putUe(0) // chroma_log2_weight_denom
-      bw.put(1, 1); bw.putSe(w0); bw.putSe(o0) // luma_weight_l0[0]
-      bw.put(0, 1) // chroma_weight_l0_flag
-      bw.put(1, 1); bw.putSe(w1); bw.putSe(o1) // luma_weight_l1[0]
-      bw.put(0, 1) // chroma_weight_l1_flag
-    }
-    if (refIdc != 0) bw.put(0, 1) // adaptive_ref_pic_marking_mode_flag
-    bw.putSe(0) // slice_qp_delta
-    bw.putUe(if (deblock) 0 else 1) // disable_deblocking_filter_idc
-    if (deblock) { bw.putSe(0); bw.putSe(0) } // alpha/beta offsets
-    val lumaNz = new NzCtx(mbW * 4, mbH * 4)
-    val mv0 = new MvCtx(mbW, mbH)
-    val mv1 = new MvCtx(mbW, mbH)
-    val nMbs = mbW * mbH
-    var skipRun = 0 // pending B_Skip macroblocks (round 15)
-    var i = 0
-    while (i < nMbs) {
-      val mbX = i % mbW
-      val mbY = i / mbW
-      val x4 = mbX * 4
-      val y4 = mbY * 4
-      def zeroLumaNz(): Unit = {
-        var blk = 0
-        while (blk < 16) {
-          lumaNz.set(mbX * 4 + blkCol(blk), mbY * 4 + blkRow(blk), 0)
-          blk += 1
-        }
-      }
-      def putMvd(ctx: MvCtx, cx4: Int, cy4: Int, w4: Int, h4: Int,
-          shape: Int, mvx: Int, mvy: Int): Unit = {
-        val (px, py) = mvPredPart(ctx, x4 + cx4, y4 + cy4, w4, shape)
-        bw.putSe(mvx - px)
-        bw.putSe(mvy - py)
-        ctx.fill(x4 + cx4, y4 + cy4, w4, h4, isInter = true, mvx, mvy)
-      }
-      // spatial-direct derivation + per-cell fill, mirroring the
-      // decoder's directDerive/directRecon (round 15). colZeroAt is
-      // the fixture's statement of the colocated picture's motion —
-      // the tests arrange anchors so it is trivially all-true (static
-      // refIdx-0 P anchor) or all-false (intra anchor).
-      def fillDirect(bx0: Int, by0: Int, n4: Int): Unit = {
-        def refOf(ctx: MvCtx, x: Int, y: Int): Int = {
-          val (ok, r, _, _) = ctx.info(x, y)
-          if (ok) r else -1
-        }
-        def minPos(a: Int, b: Int): Int =
-          if (a >= 0 && b >= 0) math.min(a, b) else math.max(a, b)
-        def nRef(ctx: MvCtx): Int = {
-          val a = refOf(ctx, x4 - 1, y4)
-          val b = refOf(ctx, x4, y4 - 1)
-          val c =
-            if (ctx.available(x4 + 4, y4 - 1)) refOf(ctx, x4 + 4, y4 - 1)
-            else refOf(ctx, x4 - 1, y4 - 1)
-          minPos(minPos(a, b), c)
-        }
-        val r0 = nRef(mv0)
-        val r1 = nRef(mv1)
-        val zp = r0 < 0 && r1 < 0
-        val (m0x, m0y) =
-          if (!zp && r0 >= 0) mvPredPart(mv0, x4, y4, 4, ShapeMedian, r0)
-          else (0, 0)
-        val (m1x, m1y) =
-          if (!zp && r1 >= 0) mvPredPart(mv1, x4, y4, 4, ShapeMedian, r1)
-          else (0, 0)
-        val useL0 = zp || r0 >= 0
-        val useL1 = zp || r1 >= 0
-        var by = by0
-        while (by < by0 + n4) {
-          var bx = bx0
-          while (bx < bx0 + n4) {
-            // direct_8x8_inference is always 1 in spsNal: sample the
-            // quadrant's outer-corner cell
-            val cz = !zp && colZeroAt(x4 + (bx >> 1) * 3,
-              y4 + (by >> 1) * 3)
-            if (useL0) mv0.fill(x4 + bx, y4 + by, 1, 1, isInter = true,
-              if (cz && r0 == 0) 0 else m0x,
-              if (cz && r0 == 0) 0 else m0y)
-            else mv0.fill(x4 + bx, y4 + by, 1, 1, isInter = false, 0, 0)
-            if (useL1) mv1.fill(x4 + bx, y4 + by, 1, 1, isInter = true,
-              if (cz && r1 == 0) 0 else m1x,
-              if (cz && r1 == 0) 0 else m1y)
-            else mv1.fill(x4 + bx, y4 + by, 1, 1, isInter = false, 0, 0)
-            bx += 1
-          }
-          by += 1
-        }
-      }
-      mb(i) match {
-        case BSkip =>
-          fillDirect(0, 0, 4)
-          zeroLumaNz()
-          skipRun += 1
-        case other =>
-          bw.putUe(skipRun) // mb_skip_run
-          skipRun = 0
-          other match {
-        case BFwd(mx, my) =>
-          bw.putUe(1) // B_L0_16x16
-          putMvd(mv0, 0, 0, 4, 4, ShapeMedian, mx, my)
-          mv1.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-          bw.putUe(0) // cbp 0
-          zeroLumaNz()
-        case BBwd(mx, my) =>
-          bw.putUe(2) // B_L1_16x16
-          mv0.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-          putMvd(mv1, 0, 0, 4, 4, ShapeMedian, mx, my)
-          bw.putUe(0)
-          zeroLumaNz()
-        case BBi((fx, fy), (bx, by)) =>
-          bw.putUe(3) // B_Bi_16x16
-          putMvd(mv0, 0, 0, 4, 4, ShapeMedian, fx, fy)
-          putMvd(mv1, 0, 0, 4, 4, ShapeMedian, bx, by)
-          bw.putUe(0)
-          zeroLumaNz()
-        case BFwdCoded(mx, my, dcOf) =>
-          bw.putUe(1)
-          putMvd(mv0, 0, 0, 4, 4, ShapeMedian, mx, my)
-          mv1.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-          val cbpLuma = (0 until 4).map { g =>
-            if ((0 until 4).exists(b => dcOf(g * 4 + b) != 0)) 1 << g else 0
-          }.sum
-          bw.putUe(CbpInterInv(cbpLuma))
-          if (cbpLuma != 0) bw.putSe(0) // mb_qp_delta
-          var blk = 0
-          while (blk < 16) {
-            val r = blkRow(blk); val c = blkCol(blk)
-            if ((cbpLuma & (1 << (blk >> 2))) != 0) {
-              val lvl = dcOf(blk)
-              putCavlcSingle(bw, lumaNz.nC(mbX * 4 + c, mbY * 4 + r),
-                lvl, maxNumCoeff = 16)
-              lumaNz.set(mbX * 4 + c, mbY * 4 + r, if (lvl != 0) 1 else 0)
-            } else lumaNz.set(mbX * 4 + c, mbY * 4 + r, 0)
-            blk += 1
-          }
-        case B16x8(tl, (tx, ty), bl, (bx2, by2)) =>
-          require(tl == 0 || tl == 1, s"topList $tl")
-          require(bl == 0 || bl == 1, s"botList $bl")
-          // Table 7-14: (L0,L0)=4, (L1,L1)=6, (L0,L1)=8, (L1,L0)=10
-          val t = (tl, bl) match {
-            case (0, 0) => 4
-            case (1, 1) => 6
-            case (0, 1) => 8
-            case _ => 10
-          }
-          bw.putUe(t)
-          // two-pass order mirrors the decoder: all L0 mvds (filling
-          // both ctxs partition-wise), then all L1 mvds
-          if (tl == 0) putMvd(mv0, 0, 0, 4, 2, Shape16x8Top, tx, ty)
-          else mv0.fill(x4, y4, 4, 2, isInter = false, 0, 0)
-          if (bl == 0) putMvd(mv0, 0, 2, 4, 2, Shape16x8Bot, bx2, by2)
-          else mv0.fill(x4, y4 + 2, 4, 2, isInter = false, 0, 0)
-          if (tl == 1) putMvd(mv1, 0, 0, 4, 2, Shape16x8Top, tx, ty)
-          else mv1.fill(x4, y4, 4, 2, isInter = false, 0, 0)
-          if (bl == 1) putMvd(mv1, 0, 2, 4, 2, Shape16x8Bot, bx2, by2)
-          else mv1.fill(x4, y4 + 2, 4, 2, isInter = false, 0, 0)
-          bw.putUe(0)
-          zeroLumaNz()
-        case BIntra(spec) =>
-          writeI16Dc(bw, lumaNz, mbX, mbY, spec, typeOffset = 23)
-          mv0.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-          mv1.fill(x4, y4, 4, 4, isInter = false, 0, 0)
-        case BDirect(dcOf) =>
-          bw.putUe(0) // mb_type B_Direct_16x16
-          fillDirect(0, 0, 4)
-          val cbpLuma = (0 until 4).map { g =>
-            if ((0 until 4).exists(b => dcOf(g * 4 + b) != 0)) 1 << g
-            else 0
-          }.sum
-          bw.putUe(CbpInterInv(cbpLuma))
-          if (cbpLuma != 0) bw.putSe(0) // mb_qp_delta
-          var blk = 0
-          while (blk < 16) {
-            val r = blkRow(blk); val c = blkCol(blk)
-            if ((cbpLuma & (1 << (blk >> 2))) != 0) {
-              val lvl = dcOf(blk)
-              putCavlcSingle(bw, lumaNz.nC(mbX * 4 + c, mbY * 4 + r),
-                lvl, maxNumCoeff = 16)
-              lumaNz.set(mbX * 4 + c, mbY * 4 + r, if (lvl != 0) 1 else 0)
-            } else lumaNz.set(mbX * 4 + c, mbY * 4 + r, 0)
-            blk += 1
-          }
-        case B8x8(subs) =>
-          require(subs.length == 4, "B8x8 needs 4 quadrants")
-          bw.putUe(22) // mb_type B_8x8
-          subs.foreach { sub =>
-            bw.putUe(sub match {
-              case BSubDirect => 0
-              case _: BSubL0 => 1
-              case _: BSubL1 => 2
-              case _: BSubBi => 3
-              case _: BSubL04x4 => 10
-            })
-          }
-          // direct quadrants fill before any mvd, like the decoder;
-          // ref_idx fields are absent (both lists have length 1)
-          var q = 0
-          while (q < 4) {
-            if (subs(q) == BSubDirect)
-              fillDirect((q & 1) * 2, (q >> 1) * 2, 2)
-            q += 1
-          }
-          q = 0
-          while (q < 4) { // pass 1: list-0 mvds
-            val bx8 = (q & 1) * 2; val by8 = (q >> 1) * 2
-            subs(q) match {
-              case BSubL0(mx, my) =>
-                putMvd(mv0, bx8, by8, 2, 2, ShapeMedian, mx, my)
-              case BSubBi((fx, fy), _) =>
-                putMvd(mv0, bx8, by8, 2, 2, ShapeMedian, fx, fy)
-              case BSubL04x4(mvs) =>
-                require(mvs.length == 4, "B_L0_4x4 needs 4 vectors")
-                var b = 0
-                while (b < 4) {
-                  putMvd(mv0, bx8 + (b & 1), by8 + (b >> 1), 1, 1,
-                    ShapeMedian, mvs(b)._1, mvs(b)._2)
-                  b += 1
-                }
-              case _: BSubL1 =>
-                mv0.fill(x4 + bx8, y4 + by8, 2, 2, isInter = false, 0, 0)
-              case BSubDirect => ()
-            }
-            q += 1
-          }
-          q = 0
-          while (q < 4) { // pass 2: list-1 mvds
-            val bx8 = (q & 1) * 2; val by8 = (q >> 1) * 2
-            subs(q) match {
-              case BSubL1(mx, my) =>
-                putMvd(mv1, bx8, by8, 2, 2, ShapeMedian, mx, my)
-              case BSubBi(_, (bx2, by2)) =>
-                putMvd(mv1, bx8, by8, 2, 2, ShapeMedian, bx2, by2)
-              case _: BSubL0 | _: BSubL04x4 =>
-                mv1.fill(x4 + bx8, y4 + by8, 2, 2, isInter = false, 0, 0)
-              case BSubDirect => ()
-            }
-            q += 1
-          }
-          bw.putUe(0) // cbp 0
-          zeroLumaNz()
-        case BSkip => () // handled by the outer case; unreachable
-          }
-      }
-      i += 1
-    }
-    if (skipRun > 0) bw.putUe(skipRun) // trailing skip run ends the
-    // slice data (7.3.4: more_rbsp_data() goes false right after)
-    bw.rbspTrailing()
-    nalUnit((refIdc << 5) | 1, bw.result()) // non-IDR slice
-  }
-
-  /** One entry of [[encodeIPBStream]]'s inter-frame sequence. */
-  sealed trait IpbFrame
-  /** A reference P picture (frame_num advances). */
-  final case class Pf(mb: Int => MbP) extends IpbFrame
-  /** A non-reference B picture at the given pic_order_cnt_lsb —
-    * place it BETWEEN its two anchors' POCs (P pictures sit at
-    * 2 * frame_num). */
-  final case class Bf(mb: Int => MbB, pocLsb: Int) extends IpbFrame
-
-  /** Annex-B I + P/B stream (round 14): SPS(maxRef 2) + PPS + IDR +
-    * the given pictures in DECODE order. P pictures are references
-    * (POC = 2 * frame_num); B pictures are non-references whose
-    * lists the decoder builds from POC. */
-  def encodeIPBStream(mbW: Int, mbH: Int, iMb: Int => Mb,
-      frames: Seq[IpbFrame], qp: Int = 28,
-      colZeroAt: (Int, Int) => Boolean = (_, _) => false): Array[Byte] = {
-    val sep = Array[Byte](0, 0, 0, 1)
-    var out = sep ++ spsNal(mbW, mbH, maxRef = 2) ++ sep ++
-      ppsNal(qp) ++ sep ++ idrNal(mbW, mbH, iMb, qp)
-    var fn = 1
-    frames.foreach {
-      case Pf(f) =>
-        out = out ++ sep ++ pNal(mbW, mbH, f, qp, frameNum = fn)
-        fn += 1
-      case Bf(f, poc) =>
-        out = out ++ sep ++ bNal(mbW, mbH, f, qp, frameNum = fn,
-          pocLsb = poc, colZeroAt = colZeroAt)
-    }
-    out
-  }
-
   /** CAVLC block with AT MOST one coefficient, at scan position 0 —
     * the encoder's residual vocabulary (coeff_token (0,0)/(1,1)/(1,0),
     * total_zeros = 0, no runs), against the same nC tables the
@@ -7901,25 +3150,6 @@ object H264 {
     val sep = Array[Byte](0, 0, 0, 1)
     sep ++ spsNal(mbW, mbH) ++ sep ++ ppsNal(qp) ++ sep ++
       idrNal(mbW, mbH, mb, qp, deblock)
-  }
-
-  /** Annex-B HIGH-profile I-frame (round 16): SPS profile 100 with
-    * optional seq scaling matrices + PPS with optional pic matrices
-    * (SCAN-order lists, all-present when given). With non-flat
-    * matrices the dequant weight w replaces 16, so an I4x4 DC
-    * coefficient c at qp 28 adds (16·w₀·c + 32) >> 6 per sample. */
-  def encodeIFrameHigh(mbW: Int, mbH: Int, mb: Int => Mb, qp: Int = 28,
-      deblock: Boolean = false,
-      seqScal4: Seq[Array[Int]] = Nil, seqScal8: Seq[Array[Int]] = Nil,
-      picScal4: Seq[Array[Int]] = Nil,
-      picScal8: Seq[Array[Int]] = Nil,
-      transform8x8: Boolean = false): Array[Byte] = {
-    val sep = Array[Byte](0, 0, 0, 1)
-    sep ++ spsNal(mbW, mbH, high = true, seqScal4 = seqScal4,
-      seqScal8 = seqScal8) ++
-      sep ++ ppsNal(qp, transform8x8 = transform8x8,
-        picScal4 = picScal4, picScal8 = picScal8) ++
-      sep ++ idrNal(mbW, mbH, mb, qp, deblock, t8Pps = transform8x8)
   }
 
   /** Annex-B I + P stream: SPS + PPS + IDR + one P slice per entry of

@@ -1083,304 +1083,6 @@ object MultimodalQueries {
              |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
              |FROM m ORDER BY id""".stripMargin)),
 
-    // HEVC intra decode under the oracle gate (round 14; EXTENDED
-    // round 15 with the residual + angular paths, VERDICT r14 #3/#5):
-    // one 16-px CTU quadtree-split into four 8x8 CUs — two I_PCM flat
-    // quadrants, one VERTICAL (mode 26) CU copying q0's bottom row
-    // (its left refs substitute to the same flat value, so the
-    // boundary filter is a no-op), and one DC CU carrying a CODED
-    // DC coefficient c: prediction dc = (q0 + q1 + 1) // 2 over the
-    // flat refs (left = the mode-26 quadrant = q0, top = q1), the
-    // 8.4.4.2.5 boundary smoothing, then +2c per sample (8x8 dequant
-    // at qp 28 + the two DCT stages are exactly 2c for these
-    // magnitudes). The slice is CABAC-coded through the shared 9.3
-    // engine including the residual chain (last position, sig map,
-    // greater1/2, sign, remaining), so a single bin decoded
-    // differently breaks the hash. DuckDB replays the 256-pixel
-    // distribution analytically.
-    Q("multimodal_hevc_decode",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            def q(k: Int): Int = ((id * 11 + 4 * k + 60) % 180).toInt + 20
-            val c0 = (id % 9).toInt - 4
-            val c = if (c0 == 0) 5 else c0
-            // round 16: chroma DCs ride the same coded CU — PCM CUs
-            // carry flat (q0, q1) chroma so the DM-DC prediction of
-            // CU3's chroma is closed-form like its luma
-            val cbc = (id % 7).toInt - 3
-            val crc = ((id / 2) % 7).toInt - 3
-            val es = graft.ext.Hevc.encodeIFrame(1, 1, _ =>
-              graft.ext.Hevc.Quad(Seq(
-                graft.ext.Hevc.HPcm((_, _) => q(0),
-                  (_, _) => q(0), (_, _) => q(1)),
-                graft.ext.Hevc.HPcm((_, _) => q(1),
-                  (_, _) => q(1), (_, _) => q(0)),
-                graft.ext.Hevc.HIntra(26),
-                graft.ext.Hevc.HIntraCoded(1, Seq((0, c)),
-                  cbDc = cbc, crDc = crc))))
-            val (w, h, luma, cbP, crP) = graft.ext.Hevc
-              .decodeFramesYuv(es, 1).headOption
-              .getOrElse((0, 0, Array.empty[Int], Array.empty[Int],
-                Array.empty[Int]))
-            def stats(p: Array[Int]): (Double, Double) = {
-              var sum = 0.0
-              var sq = 0.0
-              p.foreach { v => sum += v; sq += v.toDouble * v }
-              val n = math.max(1, p.length)
-              val mean = sum / n
-              (mean, math.sqrt(math.max(0.0, sq / n - mean * mean)))
-            }
-            val (my, sy) = stats(luma)
-            val (mu, su) = stats(cbP)
-            val (mvv, sv) = stats(crP)
-            (id, w.toLong, h.toLong, my, sy, mu, su, mvv, sv)
-          })
-          .toDF("id", "width", "height", "m", "sd", "mu", "su", "mv", "sv")
-          .select(col("id"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"),
-            round(col("mu"), 6).as("mean_u"), round(col("su"), 6).as("std_u"),
-            round(col("mv"), 6).as("mean_v"), round(col("sv"), 6).as("std_v"))
-          .orderBy("id")
-      },
-      Some("""WITH p AS (SELECT doc_id,
-             |    (doc_id*11 + 60) % 180 + 20 AS q0,
-             |    (doc_id*11 + 64) % 180 + 20 AS q1,
-             |    CASE WHEN doc_id % 9 = 4 THEN 5
-             |         ELSE doc_id % 9 - 4 END AS c,
-             |    (doc_id % 7) - 3 AS cbc,
-             |    ((doc_id // 2) % 7) - 3 AS crc
-             |  FROM documents),
-             |d AS (SELECT doc_id, q0, q1, c, cbc, crc,
-             |    (q0 + q1 + 1) // 2 AS dc FROM p),
-             |cells(doc_id, cnt, v) AS (
-             |  SELECT doc_id, 64, q0 FROM d
-             |  UNION ALL SELECT doc_id, 64, q1 FROM d
-             |  UNION ALL SELECT doc_id, 64, q0 FROM d
-             |  UNION ALL SELECT doc_id, 1,
-             |    (q0 + 2*dc + q1 + 2) // 4 + 2*c FROM d
-             |  UNION ALL SELECT doc_id, 7, (q1 + 3*dc + 2) // 4 + 2*c FROM d
-             |  UNION ALL SELECT doc_id, 7, (q0 + 3*dc + 2) // 4 + 2*c FROM d
-             |  UNION ALL SELECT doc_id, 49, dc + 2*c FROM d),
-             |m AS (SELECT doc_id,
-             |    CAST(sum(cnt*v) AS DOUBLE)/256 AS mean_g,
-             |    CAST(sum(cnt*v*v) AS DOUBLE)/256 AS meansq_g
-             |  FROM cells GROUP BY doc_id),
-             |ccells(doc_id, comp, cnt, v) AS (
-             |  -- chroma 8x8: PCM quadrants flat; CU2 (DM vertical)
-             |  -- copies CU0's bottom row; CU3 (DM DC) averages CU2's
-             |  -- right column and CU1's bottom row (no smoothing for
-             |  -- chroma) + the 4c dequant chain at QPc(28) = 28
-             |  SELECT doc_id, 'u', 16, q0 FROM d
-             |  UNION ALL SELECT doc_id, 'u', 16, q1 FROM d
-             |  UNION ALL SELECT doc_id, 'u', 16, q0 FROM d
-             |  UNION ALL SELECT doc_id, 'u', 16,
-             |    (4*q0 + 4*q1 + 4) // 8 + 4*cbc FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16, q1 FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16, q0 FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16, q1 FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16,
-             |    (4*q1 + 4*q0 + 4) // 8 + 4*crc FROM d),
-             |cm AS (SELECT doc_id,
-             |    CAST(sum(CASE WHEN comp = 'u' THEN cnt*v END) AS DOUBLE)/64 AS mean_u,
-             |    CAST(sum(CASE WHEN comp = 'u' THEN cnt*v*v END) AS DOUBLE)/64 AS msq_u,
-             |    CAST(sum(CASE WHEN comp = 'v' THEN cnt*v END) AS DOUBLE)/64 AS mean_v,
-             |    CAST(sum(CASE WHEN comp = 'v' THEN cnt*v*v END) AS DOUBLE)/64 AS msq_v
-             |  FROM ccells GROUP BY doc_id)
-             |SELECT m.doc_id AS id, CAST(16 AS BIGINT) AS width,
-             |  CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray,
-             |  round(mean_u, 6) AS mean_u,
-             |  round(sqrt(msq_u - mean_u*mean_u), 6) AS std_u,
-             |  round(mean_v, 6) AS mean_v,
-             |  round(sqrt(msq_v - mean_v*mean_v), 6) AS std_v
-             |FROM m JOIN cm ON cm.doc_id = m.doc_id ORDER BY id""".stripMargin)),
-
-    // HEVC in-loop DEBLOCKING + SAO under the oracle gate (round 16,
-    // VERDICT r15 #4): a 32x16 two-CTU picture with a flat step of
-    // d = 1..5 across the CU edge, decoded three ways — no filter,
-    // deblock, and deblock + a band-offset SAO window at a's band
-    // (the luma samples still in that band after deblocking shift
-    // by +2, replayed generically in SQL by the band test). At qp 28 (beta 18, tc 2) d <= 4 takes the
-    // STRONG branch (3 samples a side, hand formulas), d = 5 the
-    // WEAK branch (delta clip 2, dEp1/dEq1 side taps); chroma rides
-    // the 16-grid edge with the p0/q0-only filter. DuckDB replays
-    // every branch in closed form over the per-column value counts.
-    Q("multimodal_hevc_deblock",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            val a = ((id * 7) % 160).toInt + 40
-            val d = (id % 5).toInt + 1
-            val b = a + d
-            def mk(deblock: Boolean) = graft.ext.Hevc.encodeIFrame(2, 1, {
-              case 0 => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => a, (_, _) => a, (_, _) => a))
-              case _ => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => b, (_, _) => b, (_, _) => b))
-            }, deblock = deblock)
-            // 'sao' = deblock + a one-band +2 window at a's band
-            // (8.7.3 over the deblocked picture)
-            def mkSao = graft.ext.Hevc.encodeIFrame(2, 1, {
-              case 0 => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => a, (_, _) => a, (_, _) => a))
-              case _ => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => b, (_, _) => b, (_, _) => b))
-            }, deblock = true,
-              sao = Some(graft.ext.Hevc.HSaoBand(Seq(2, 0, 0, 0), a >> 3)))
-            Seq(("off", mk(false)), ("on", mk(true)),
-              ("sao", mkSao)).map { case (vn, es) =>
-              val (w, h, luma, cbP, crP) =
-                graft.ext.Hevc.decodeFramesYuv(es, 1).head
-              def stats(p: Array[Int]): (Double, Double) = {
-                var sum = 0.0; var sq = 0.0
-                p.foreach { v => sum += v; sq += v.toDouble * v }
-                val n = math.max(1, p.length)
-                val mean = sum / n
-                (mean, math.sqrt(math.max(0.0, sq / n - mean * mean)))
-              }
-              val (my, sy) = stats(luma)
-              val (mu, _) = stats(cbP)
-              val (mvv, _) = stats(crP)
-              (id, vn, w.toLong, h.toLong, my, sy, mu, mvv)
-            }
-          })
-          .toDF("id", "filter", "width", "height", "m", "sd", "mu", "mv")
-          .select(col("id"), col("filter"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"),
-            round(col("sd"), 6).as("std_gray"),
-            round(col("mu"), 6).as("mean_u"),
-            round(col("mv"), 6).as("mean_v"))
-          .orderBy("id", "filter")
-      },
-      Some("""WITH p AS (SELECT doc_id,
-             |    (doc_id*7) % 160 + 40 AS a,
-             |    (doc_id % 5) + 1 AS d
-             |  FROM documents),
-             |-- per-row luma column values after the filter: 13x a,
-             |-- then (p2', p1', p0', q0', q1', q2'), then 13x b
-             |f AS (SELECT doc_id, a, d, a + d AS b,
-             |    CASE WHEN d <= 4 THEN (7*a + (a+d) + 4) // 8 ELSE a END AS p2f,
-             |    CASE WHEN d <= 4 THEN (3*a + (a+d) + 2) // 4
-             |         ELSE a + 1 END AS p1f,
-             |    CASE WHEN d <= 4 THEN (5*a + 3*(a+d) + 4) // 8
-             |         ELSE a + 2 END AS p0f,
-             |    CASE WHEN d <= 4 THEN (5*(a+d) + 3*a + 4) // 8
-             |         ELSE a + d - 2 END AS q0f,
-             |    CASE WHEN d <= 4 THEN (3*(a+d) + a + 2) // 4
-             |         ELSE a + d - 1 END AS q1f,
-             |    CASE WHEN d <= 4 THEN (7*(a+d) + a + 4) // 8
-             |         ELSE a + d END AS q2f,
-             |    -- chroma: delta = clip2(((d<<2) + 4) // 8)
-             |    least(2, (4*d + 4) // 8) AS dc
-             |  FROM p),
-             |onc(doc_id, a, cnt, v) AS (
-             |  SELECT doc_id, a, 13, a FROM f
-             |  UNION ALL SELECT doc_id, a, 1, p2f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, p1f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, p0f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, q0f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, q1f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, q2f FROM f
-             |  UNION ALL SELECT doc_id, a, 13, b FROM f),
-             |cells(doc_id, filter, cnt, v) AS (
-             |  SELECT doc_id, 'off', 16, a FROM f
-             |  UNION ALL SELECT doc_id, 'off', 16, b FROM f
-             |  UNION ALL SELECT doc_id, 'on', cnt, v FROM onc
-             |  UNION ALL SELECT doc_id, 'sao', cnt,
-             |    v + CASE WHEN v // 8 = a // 8 THEN 2 ELSE 0 END
-             |    FROM onc),
-             |m AS (SELECT doc_id, filter,
-             |    CAST(sum(cnt*v) AS DOUBLE)/32 AS mean_g,
-             |    CAST(sum(cnt*v*v) AS DOUBLE)/32 AS meansq_g
-             |  FROM cells GROUP BY doc_id, filter),
-             |cm AS (SELECT doc_id, 'off' AS filter,
-             |    (a + 0.0 + a + d)/2 AS mean_c FROM f
-             |  UNION ALL SELECT doc_id, 'on',
-             |    CAST(7*a + (a + dc) + ((a+d) - dc) + 7*(a+d)
-             |      AS DOUBLE)/16 FROM f
-             |  UNION ALL SELECT doc_id, 'sao', -- luma-only SAO
-             |    CAST(7*a + (a + dc) + ((a+d) - dc) + 7*(a+d)
-             |      AS DOUBLE)/16 FROM f)
-             |SELECT m.doc_id AS id, m.filter AS filter,
-             |  CAST(32 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray,
-             |  round(mean_c, 6) AS mean_u, round(mean_c, 6) AS mean_v
-             |FROM m JOIN cm ON cm.doc_id = m.doc_id
-             |  AND cm.filter = m.filter
-             |ORDER BY id, m.filter""".stripMargin)),
-
-    // HEVC P-SLICE decode under the oracle gate (round 16, VERDICT
-    // r15 #7): a 32x16 two-CTU I picture (flat PCM a | b) followed by
-    // two P slices over slice-header RPS references — P1: an explicit
-    // zero-MV CU with a 16x16-DC residual (+c1 at qp 28) beside a
-    // merge-skip CU (A1 inherits the zero motion -> copy); P2: a skip
-    // CU (copy of P1) beside an integer-MV +2-sample CU with +c2 on
-    // flat content (the shift is invisible on a flat quadrant, the
-    // residual is not). DuckDB replays all three frames closed-form;
-    // one wrong merge candidate, mvd bin, MC tap or dequant anywhere
-    // shifts a quadrant and breaks the hash.
-    Q("multimodal_hevc_inter",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            val a = ((id * 7) % 170).toInt + 30
-            val b = ((id * 13) % 170).toInt + 30
-            val c1 = (id % 9).toInt - 4
-            val c2 = ((id / 3) % 9).toInt - 4
-            val es = graft.ext.Hevc.encodeIPStream(2, 1,
-              i => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => if (i == 0) a else b)),
-              Seq(
-                i => if (i == 0) graft.ext.Hevc.HPMv(0, 0, dc = c1)
-                else graft.ext.Hevc.HPSkip(0),
-                i => if (i == 0) graft.ext.Hevc.HPSkip(0)
-                else graft.ext.Hevc.HPMv(8, 0, dc = c2)))
-            graft.ext.Hevc.decodeFramesYuv(es, 4).zipWithIndex.map {
-              case ((w, h, luma, _, _), fi) =>
-                var sum = 0.0
-                var sq = 0.0
-                luma.foreach { v => sum += v; sq += v.toDouble * v }
-                val n = math.max(1, luma.length)
-                val mean = sum / n
-                (id, (fi + 1).toLong, w.toLong, h.toLong, mean,
-                  math.sqrt(math.max(0.0, sq / n - mean * mean)))
-            }
-          })
-          .toDF("id", "frame", "width", "height", "m", "sd")
-          .select(col("id"), col("frame"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"),
-            round(col("sd"), 6).as("std_gray"))
-          .orderBy("id", "frame")
-      },
-      Some("""WITH p AS (SELECT doc_id,
-             |    (doc_id*7) % 170 + 30 AS a,
-             |    (doc_id*13) % 170 + 30 AS b,
-             |    (doc_id % 9) - 4 AS c1,
-             |    ((doc_id // 3) % 9) - 4 AS c2
-             |  FROM documents),
-             |v(doc_id, frame, va, vb) AS (
-             |  SELECT doc_id, 1, a, b FROM p
-             |  UNION ALL SELECT doc_id, 2, a + c1, b FROM p
-             |  UNION ALL SELECT doc_id, 3, a + c1, b + c2 FROM p),
-             |m AS (SELECT doc_id, frame,
-             |    (va + vb) / 2.0 AS mean_g,
-             |    CAST(va*va + vb*vb AS DOUBLE) / 2.0 AS meansq_g
-             |  FROM v)
-             |SELECT doc_id AS id, CAST(frame AS BIGINT) AS frame,
-             |  CAST(32 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id, frame""".stripMargin)),
-
     // H.264 CHROMA reconstruction under the oracle gate (round 14,
     // VERDICT r13 #3): a 2x1 picture — MB0 = I16Dc(z0, chroma DC +1
     // at tz): at QPc 28 the lone 2x2 DC coefficient adds exactly ±2
@@ -1519,54 +1221,6 @@ object MultimodalQueries {
              |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
              |FROM m ORDER BY id, frame""".stripMargin)),
 
-    // H.264 B-slice decode under the oracle gate (round 14, VERDICT
-    // r13 #2): I(PCM quadrants) -> P(zero-MV + per-4x4 DC residual
-    // z_blk) -> B(bipredictive average of both anchors, POC-built
-    // lists). P = I + 4*z per block (the r13 inter rule); the B's
-    // rounded average collapses exactly: (2*I + 4z + 1) >> 1 =
-    // I + 2z. DuckDB replays all three 16-block distributions with
-    // per-frame multiplier m in (0, 4, 2).
-    Q("multimodal_avc_bslice",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            def q(b: Int): Int = ((id * 11 + 4 * b + 60) % 180).toInt + 20
-            val es = graft.ext.H264.encodeIPBStream(1, 1,
-              _ => graft.ext.H264.Pcm((x, y) => q((y / 8) * 2 + x / 8)),
-              Seq(
-                graft.ext.H264.Pf(_ => graft.ext.H264.PMoveCoded(0, 0,
-                  blk => ((id + blk) % 5).toInt - 2)),
-                graft.ext.H264.Bf(_ => graft.ext.H264.BBi((0, 0), (0, 0)),
-                  pocLsb = 1)))
-            Multimodal.decodeAvcFramesTyped(es, 4).map {
-              case (f, t, w, h, m, sd) =>
-                (id, f.toLong, t.toString, w.toLong, h.toLong, m, sd)
-            }
-          })
-          .toDF("id", "frame", "frame_type", "width", "height", "m", "sd")
-          .select(col("id"), col("frame"), col("frame_type"),
-            col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"))
-          .orderBy("id", "frame")
-      },
-      Some("""WITH f(frame, ftype, mult) AS (VALUES (1, 'I', 0),
-             |  (2, 'P', 4), (3, 'B', 2)),
-             |blk AS (SELECT doc_id, frame, ftype, k,
-             |    (doc_id*11 + 4*(k // 4) + 60) % 180 + 20
-             |      + mult*((doc_id + k) % 5 - 2) AS v
-             |  FROM documents, f, (SELECT unnest(range(16)) AS k)),
-             |m AS (SELECT doc_id, frame, ftype,
-             |    CAST(sum(v) AS DOUBLE)/16 AS mean_g,
-             |    CAST(sum(v*v) AS DOUBLE)/16 AS meansq_g
-             |  FROM blk GROUP BY doc_id, frame, ftype)
-             |SELECT doc_id AS id, CAST(frame AS BIGINT) AS frame, ftype AS frame_type,
-             |  CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id, frame""".stripMargin)),
-
     // Chroma-aware scene cuts under the oracle gate (round 15,
     // VERDICT r14 #7): three single-MB I_PCM pictures whose LUMA is
     // constant while the chroma planes jump — frame 2 moves Cb by du,
@@ -1611,302 +1265,6 @@ object MultimodalQueries {
              |  round(delta_y, 6) AS delta_y, round(delta_u, 6) AS delta_u,
              |  round(delta_v, 6) AS delta_v, is_cut
              |FROM r ORDER BY id, frame""".stripMargin)),
-
-    // H.264 spatial-direct / B_Skip / B_8x8 decode under the oracle
-    // gate (round 15, VERDICT r14 #2): decode order I, P, B, B, B on
-    // a 1x1-MB picture. B1 = B_Direct_16x16 with a one-DC-per-4x4
-    // residual, B2 = B_8x8 with (L0, L1, Bi, Direct) quadrants, B3 =
-    // B_Skip. With no inter MB neighbors the spatial-direct
-    // derivation is directZeroPrediction -- both lists, refIdx 0,
-    // zero motion -- so every direct/skip block is the rounded
-    // average of the two anchors, per-block closed form in DuckDB:
-    // vi (PCM quadrant), vp = vi + 4*res (the r13 inter-residual
-    // rule at qp 28), direct = (vi + vp + 1) // 2 (+ 4c for B1).
-    Q("multimodal_avc_direct",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            def q(b: Int): Int = ((id * 11 + 4 * b + 60) % 180).toInt + 20
-            val es = graft.ext.H264.encodeIPBStream(1, 1,
-              _ => graft.ext.H264.Pcm((x, y) => q((y / 8) * 2 + x / 8)),
-              Seq(
-                graft.ext.H264.Pf(_ => graft.ext.H264.PMoveCoded(0, 0,
-                  blk => ((id + blk) % 5).toInt - 2)),
-                graft.ext.H264.Bf(_ => graft.ext.H264.BDirect(
-                  blk => ((id + blk) % 3).toInt - 1), pocLsb = 1),
-                graft.ext.H264.Bf(_ => graft.ext.H264.B8x8(Seq(
-                  graft.ext.H264.BSubL0(0, 0),
-                  graft.ext.H264.BSubL1(0, 0),
-                  graft.ext.H264.BSubBi((0, 0), (0, 0)),
-                  graft.ext.H264.BSubDirect)), pocLsb = 1),
-                graft.ext.H264.Bf(_ => graft.ext.H264.BSkip,
-                  pocLsb = 1)))
-            Multimodal.decodeAvcFramesTyped(es, 8).map {
-              case (f, t, w, h, m, sd) =>
-                (id, f.toLong, t.toString, w.toLong, h.toLong, m, sd)
-            }
-          })
-          .toDF("id", "frame", "frame_type", "width", "height", "m", "sd")
-          .select(col("id"), col("frame"), col("frame_type"),
-            col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"))
-          .orderBy("id", "frame")
-      },
-      Some("""WITH blk AS (SELECT doc_id, k,
-             |    (doc_id*11 + 4*(k // 4) + 60) % 180 + 20 AS vi,
-             |    (doc_id*11 + 4*(k // 4) + 60) % 180 + 20
-             |      + 4*((doc_id + k) % 5 - 2) AS vp
-             |  FROM documents, (SELECT unnest(range(16)) AS k)),
-             |v AS (
-             |  SELECT doc_id, k, 1 AS frame, 'I' AS ftype, vi AS v FROM blk
-             |  UNION ALL SELECT doc_id, k, 2, 'P', vp FROM blk
-             |  UNION ALL SELECT doc_id, k, 3, 'B',
-             |    (vi + vp + 1) // 2 + 4*((doc_id + k) % 3 - 1) FROM blk
-             |  UNION ALL SELECT doc_id, k, 4, 'B',
-             |    CASE WHEN k // 4 = 0 THEN vi WHEN k // 4 = 1 THEN vp
-             |         ELSE (vi + vp + 1) // 2 END FROM blk
-             |  UNION ALL SELECT doc_id, k, 5, 'B',
-             |    (vi + vp + 1) // 2 FROM blk),
-             |m AS (SELECT doc_id, frame, ftype,
-             |    CAST(sum(v) AS DOUBLE)/16 AS mean_g,
-             |    CAST(sum(v*v) AS DOUBLE)/16 AS meansq_g
-             |  FROM v GROUP BY doc_id, frame, ftype)
-             |SELECT doc_id AS id, CAST(frame AS BIGINT) AS frame,
-             |  ftype AS frame_type,
-             |  CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id, frame""".stripMargin)),
-
-    // H.264 CABAC P/B decode under the oracle gate (round 15, VERDICT
-    // r14 #1): the SAME I-P-B-B-B stream as multimodal_avc_direct but
-    // CABAC-entropy-coded (mb_skip_flag, the P/B mb_type trees,
-    // sub_mb_type, UEG3 mvds, inter cbp + cat-2 residual blocks,
-    // end_of_slice terminates), cabac_init_idc cycling 0/1/2 by
-    // doc_id. Pixel semantics are entropy-independent, so DuckDB
-    // replays the identical closed form — one bin decoded differently
-    // anywhere in any inter slice shifts every later bin and breaks
-    // the hash.
-    Q("multimodal_avc_cabac_pb",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            def q(b: Int): Int = ((id * 11 + 4 * b + 60) % 180).toInt + 20
-            val es = graft.ext.H264.encodeIPBStreamCabac(1, 1,
-              _ => graft.ext.H264.Pcm((x, y) => q((y / 8) * 2 + x / 8)),
-              Seq(
-                graft.ext.H264.Pf(_ => graft.ext.H264.PMoveCoded(0, 0,
-                  blk => ((id + blk) % 5).toInt - 2)),
-                graft.ext.H264.Bf(_ => graft.ext.H264.BDirect(
-                  blk => ((id + blk) % 3).toInt - 1), pocLsb = 1),
-                graft.ext.H264.Bf(_ => graft.ext.H264.B8x8(Seq(
-                  graft.ext.H264.BSubL0(0, 0),
-                  graft.ext.H264.BSubL1(0, 0),
-                  graft.ext.H264.BSubBi((0, 0), (0, 0)),
-                  graft.ext.H264.BSubDirect)), pocLsb = 1),
-                graft.ext.H264.Bf(_ => graft.ext.H264.BSkip,
-                  pocLsb = 1)),
-              initIdc = (id % 3).toInt)
-            Multimodal.decodeAvcFramesTyped(es, 8).map {
-              case (f, t, w, h, m, sd) =>
-                (id, f.toLong, t.toString, w.toLong, h.toLong, m, sd)
-            }
-          })
-          .toDF("id", "frame", "frame_type", "width", "height", "m", "sd")
-          .select(col("id"), col("frame"), col("frame_type"),
-            col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"))
-          .orderBy("id", "frame")
-      },
-      Some("""WITH blk AS (SELECT doc_id, k,
-             |    (doc_id*11 + 4*(k // 4) + 60) % 180 + 20 AS vi,
-             |    (doc_id*11 + 4*(k // 4) + 60) % 180 + 20
-             |      + 4*((doc_id + k) % 5 - 2) AS vp
-             |  FROM documents, (SELECT unnest(range(16)) AS k)),
-             |v AS (
-             |  SELECT doc_id, k, 1 AS frame, 'I' AS ftype, vi AS v FROM blk
-             |  UNION ALL SELECT doc_id, k, 2, 'P', vp FROM blk
-             |  UNION ALL SELECT doc_id, k, 3, 'B',
-             |    (vi + vp + 1) // 2 + 4*((doc_id + k) % 3 - 1) FROM blk
-             |  UNION ALL SELECT doc_id, k, 4, 'B',
-             |    CASE WHEN k // 4 = 0 THEN vi WHEN k // 4 = 1 THEN vp
-             |         ELSE (vi + vp + 1) // 2 END FROM blk
-             |  UNION ALL SELECT doc_id, k, 5, 'B',
-             |    (vi + vp + 1) // 2 FROM blk),
-             |m AS (SELECT doc_id, frame, ftype,
-             |    CAST(sum(v) AS DOUBLE)/16 AS mean_g,
-             |    CAST(sum(v*v) AS DOUBLE)/16 AS meansq_g
-             |  FROM v GROUP BY doc_id, frame, ftype)
-             |SELECT doc_id AS id, CAST(frame AS BIGINT) AS frame,
-             |  ftype AS frame_type,
-             |  CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id, frame""".stripMargin)),
-
-    // H.264 CABAC I-slice decode under the oracle gate (round 14,
-    // VERDICT r13 #1): a 1x2 picture whose slice is CABAC-entropy-
-    // coded through the 9.3 arithmetic engine (ctx-modeled mb_type,
-    // cbp-free I16 path, cat-0/1/3 residual blocks, end_of_slice
-    // terminate) and reconstructed by the SAME shared helpers as
-    // CAVLC. MB0 = I16Dc(z0, ac0 = a, chroma DC at tz): pixel math at
-    // qp 28 is unit-exact — block 0's four columns carry deltas
-    // floor((k*a + 32)/64) for k in (320, 160, -160, -320), i.e.
-    // (5, 3, -2, -5) at a = 1 but (-5, -2, 3, 5) at a = -1 (the
-    // floor is not odd-symmetric); the other 15 blocks are flat.
-    // MB1 = I16Dc(z1) DC-predicts from
-    // MB0's flat bottom edge -> 128 + z0 + z1. DuckDB replays the
-    // full 512-pixel distribution analytically; a single bin decoded
-    // differently anywhere in the slice shifts every later bin and
-    // breaks the hash.
-    Q("multimodal_avc_cabac",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            val z0 = (id % 10).toInt - 5
-            val a = (id % 3).toInt - 1
-            val z1 = ((id / 3) % 7).toInt - 3
-            val tz = (id % 4).toInt
-            val es = graft.ext.H264.encodeIFrameCabac(1, 2, {
-              case 0 => graft.ext.H264.I16Dc(z0, ac0 = a, chromaDcTz = tz)
-              case _ => graft.ext.H264.I16Dc(z1)
-            })
-            Multimodal.decodeAvcFrames(es, 1).map { case (_, w, h, m, sd) =>
-              (id, w.toLong, h.toLong, m, sd)
-            }
-          })
-          .toDF("id", "width", "height", "m", "sd")
-          .select(col("id"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"))
-          .orderBy("id")
-      },
-      Some("""WITH p AS (SELECT doc_id,
-             |    128 + (doc_id % 10) - 5 AS v0,
-             |    (doc_id % 3) - 1 AS a,
-             |    128 + (doc_id % 10) - 5 + ((doc_id // 3) % 7) - 3 AS v1
-             |  FROM documents),
-             |k(kc) AS (VALUES (320), (160), (-160), (-320)),
-             |m AS (SELECT doc_id,
-             |    CAST(240*v0 + 256*v1 + (SELECT sum(4*(v0 +
-             |        CAST(floor((kc*a + 32)/64.0) AS BIGINT))) FROM k)
-             |      AS DOUBLE)/512 AS mean_g,
-             |    CAST(240*v0*v0 + 256*v1*v1 + (SELECT sum(4*
-             |        (v0 + CAST(floor((kc*a + 32)/64.0) AS BIGINT))
-             |        * (v0 + CAST(floor((kc*a + 32)/64.0) AS BIGINT)))
-             |        FROM k)
-             |      AS DOUBLE)/512 AS meansq_g
-             |  FROM p)
-             |SELECT doc_id AS id, CAST(16 AS BIGINT) AS width,
-             |  CAST(32 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id""".stripMargin)),
-
-    // H.264 HIGH profile decode under the oracle gate (round 16,
-    // VERDICT r15 #2 + #5): a profile-100 stream per doc whose I
-    // macroblock is Intra_8x8 (transform_size_8x8_flag = 1) with one
-    // DC coefficient per 8x8 quadrant, in TWO variants — flat
-    // weights and a seq scaling matrix with a uniform-20 8x8 intra
-    // list. At qp 28 the 8x8 DC dequant is 128c (flat) or 160c
-    // (w=20), the 8x8 inverse transform of a lone DC is uniform
-    // (dq + 32) >> 6, and the 8.3.2 DC prediction chain composes the
-    // quadrants: q0 = 128+r0, q1 = q0+r1, q2 = q0+r2,
-    // q3 = ((q1+q2+1) >> 1) + r3. DuckDB replays the whole chain in
-    // closed form — a wrong scan, dequant weight, transform tap or
-    // prediction neighbor anywhere shifts a quadrant and breaks the
-    // hash.
-    Q("multimodal_avc_high",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            def c(k: Int): Int = ((id + 7 * k) % 11).toInt - 5
-            val mbs = (_: Int) => graft.ext.H264.I8x8(_ => 2, c)
-            val variants = Seq(
-              ("flat", graft.ext.H264.encodeIFrameHigh(1, 1, mbs,
-                transform8x8 = true)),
-              ("scaled", graft.ext.H264.encodeIFrameHigh(1, 1, mbs,
-                seqScal4 = Seq.fill(6)(Array.fill(16)(16)),
-                seqScal8 = Seq.fill(2)(Array.fill(64)(20)),
-                transform8x8 = true)),
-              // round 16: the same picture CABAC-entropy-coded (ctx
-              // 399-401 flag + cat-5 residuals) — pixel semantics are
-              // entropy-independent, so the oracle row equals 'flat'
-              ("cabac", graft.ext.H264.encodeIFrameHighCabac(1, 1, mbs)),
-              // round 16: INTER 8x8 transform — a P frame whose coded
-              // 16x16 adds one 8x8-DC per quadrant (2d each) onto the
-              // zero-MV copy of the I picture; the row reports the P
-              // frame's stats
-              ("inter", {
-                val sep = Array[Byte](0, 0, 0, 1)
-                sep ++ graft.ext.H264.spsNal(1, 1, high = true) ++
-                  sep ++ graft.ext.H264.ppsNal(28, transform8x8 = true) ++
-                  sep ++ graft.ext.H264.idrNal(1, 1, mbs, 28,
-                    t8Pps = true) ++
-                  sep ++ graft.ext.H264.pNal(1, 1,
-                    _ => graft.ext.H264.PMoveCoded8(0, 0,
-                      k => ((id + 3 * k) % 9).toInt - 4),
-                    28, frameNum = 1, t8Pps = true)
-              }))
-            variants.flatMap { case (vn, es) =>
-              Multimodal.decodeAvcFrames(es, 2).takeRight(1).map {
-                case (_, w, h, m, sd) =>
-                  (id, vn, w.toLong, h.toLong, m, sd)
-              }
-            }
-          })
-          .toDF("id", "variant", "width", "height", "m", "sd")
-          .select(col("id"), col("variant"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"))
-          .orderBy("id", "variant")
-      },
-      Some("""WITH base AS (SELECT doc_id,
-             |    (doc_id % 11) - 5 AS c0,
-             |    ((doc_id + 7) % 11) - 5 AS c1,
-             |    ((doc_id + 14) % 11) - 5 AS c2,
-             |    ((doc_id + 21) % 11) - 5 AS c3
-             |  FROM documents),
-             |v AS (
-             |  SELECT doc_id, 'flat' AS variant,
-             |    2*c0 AS r0, 2*c1 AS r1, 2*c2 AS r2, 2*c3 AS r3 FROM base
-             |  UNION ALL
-             |  SELECT doc_id, 'cabac',
-             |    2*c0, 2*c1, 2*c2, 2*c3 FROM base
-             |  UNION ALL
-             |  SELECT doc_id, 'scaled',
-             |    CAST(floor((160*c0 + 32)/64.0) AS BIGINT),
-             |    CAST(floor((160*c1 + 32)/64.0) AS BIGINT),
-             |    CAST(floor((160*c2 + 32)/64.0) AS BIGINT),
-             |    CAST(floor((160*c3 + 32)/64.0) AS BIGINT) FROM base),
-             |q0t AS (SELECT doc_id, variant,
-             |    128 + r0 AS q0, 128 + r0 + r1 AS q1, 128 + r0 + r2 AS q2,
-             |    (256 + 2*r0 + r1 + r2 + 1) // 2 + r3 AS q3
-             |  FROM v),
-             |-- 'inter': the P frame = the flat I picture + 2*d per
-             |-- quadrant (zero-MV copy + one 8x8-DC residual each)
-             |q AS (SELECT * FROM q0t
-             |  UNION ALL SELECT doc_id, 'inter',
-             |    q0 + 2*((doc_id % 9) - 4),
-             |    q1 + 2*(((doc_id + 3) % 9) - 4),
-             |    q2 + 2*(((doc_id + 6) % 9) - 4),
-             |    q3 + 2*(((doc_id + 9) % 9) - 4)
-             |  FROM q0t WHERE variant = 'flat'),
-             |m AS (SELECT doc_id, variant,
-             |    (q0 + q1 + q2 + q3) / 4.0 AS mean_g,
-             |    CAST(q0*q0 + q1*q1 + q2*q2 + q3*q3 AS DOUBLE) / 4.0 AS meansq
-             |  FROM q)
-             |SELECT doc_id AS id, variant, CAST(16 AS BIGINT) AS width,
-             |  CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id, variant""".stripMargin)),
 
     // Binary metadata: byte length + checksum — oracle-checked
     Q("multimodal_metadata",

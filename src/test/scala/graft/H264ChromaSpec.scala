@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.H264
-import graft.ext.H264.{Bf, BBi, I16Dc, Pcm, Pf, PMove}
+import graft.ext.H264.{I16Dc, Pcm, PMove}
 
 /** H.264 chroma reconstruction contracts (round 14). Expected values
   * are HAND-COMPUTED from the spec formulas:
@@ -22,42 +22,34 @@ class H264ChromaSpec extends AnyFunSuite {
 
   private def yuv(es: Array[Byte], n: Int = 4) = H264.decodeFramesYuv(es, n)
 
-  test("I_PCM chroma round-trips bit-exactly (CAVLC and CABAC)") {
+  test("I_PCM chroma round-trips bit-exactly") {
     def cbP(x: Int, y: Int) = (40 + 3 * x + 11 * y) % 256
     def crP(x: Int, y: Int) = (200 - 5 * x - 7 * y + 256) % 256
-    for (cabac <- Seq(false, true)) {
-      val es =
-        if (cabac) H264.encodeIFrameCabac(1, 1,
-          _ => Pcm((x, y) => 77, cbP, crP))
-        else H264.encodeIFrame(1, 1, _ => Pcm((x, y) => 77, cbP, crP))
-      val Seq((w, h, _, cb, cr, 'I')) = yuv(es)
-      assert(w == 16 && h == 16)
-      for (y <- 0 until 8; x <- 0 until 8) {
-        assert(cb(y * 8 + x) == cbP(x, y), s"cabac=$cabac cb($x,$y)")
-        assert(cr(y * 8 + x) == crP(x, y), s"cabac=$cabac cr($x,$y)")
-      }
+    val es = H264.encodeIFrame(1, 1, _ => Pcm((x, y) => 77, cbP, crP))
+    val Seq((w, h, _, cb, cr, 'I')) = yuv(es)
+    assert(w == 16 && h == 16)
+    for (y <- 0 until 8; x <- 0 until 8) {
+      assert(cb(y * 8 + x) == cbP(x, y), s"cb($x,$y)")
+      assert(cr(y * 8 + x) == crP(x, y), s"cr($x,$y)")
     }
   }
 
-  test("I16 chroma DC residual: the four tz quadrant sign patterns, " +
-      "CAVLC == CABAC == hand formula") {
+  test("I16 chroma DC residual: the four tz quadrant sign patterns " +
+      "match the hand formula") {
     val signs = Map(
       0 -> ((bx: Int, by: Int) => 1),
       1 -> ((bx: Int, by: Int) => 1 - 2 * bx),
       2 -> ((bx: Int, by: Int) => 1 - 2 * by),
       3 -> ((bx: Int, by: Int) => (1 - 2 * bx) * (1 - 2 * by)))
     for (tz <- 0 to 3) {
-      val cav = yuv(H264.encodeIFrame(1, 1, _ => I16Dc(3, chromaDcTz = tz)))
-      val cab = yuv(H264.encodeIFrameCabac(1, 1, _ => I16Dc(3, chromaDcTz = tz)))
-      assert(cav.nonEmpty && cab.nonEmpty, s"tz $tz")
-      for ((tag, fs) <- Seq(("cavlc", cav), ("cabac", cab))) {
-        val (_, _, luma, cb, cr, _) = fs.head
-        assert(luma.forall(_ == 131), s"$tag tz $tz luma flat 131")
-        for (y <- 0 until 8; x <- 0 until 8) {
-          val exp = 128 + 2 * signs(tz)(x / 4, y / 4)
-          assert(cb(y * 8 + x) == exp, s"$tag tz $tz cb($x,$y)")
-          assert(cr(y * 8 + x) == exp, s"$tag tz $tz cr($x,$y)")
-        }
+      val fs = yuv(H264.encodeIFrame(1, 1, _ => I16Dc(3, chromaDcTz = tz)))
+      assert(fs.nonEmpty, s"tz $tz")
+      val (_, _, luma, cb, cr, _) = fs.head
+      assert(luma.forall(_ == 131), s"tz $tz luma flat 131")
+      for (y <- 0 until 8; x <- 0 until 8) {
+        val exp = 128 + 2 * signs(tz)(x / 4, y / 4)
+        assert(cb(y * 8 + x) == exp, s"tz $tz cb($x,$y)")
+        assert(cr(y * 8 + x) == exp, s"tz $tz cr($x,$y)")
       }
     }
   }
@@ -104,22 +96,6 @@ class H264ChromaSpec extends AnyFunSuite {
       val b = cbP(math.min(x + 1, 7), 0)
       assert(cbB(y * 8 + x) == (48 * a + 16 * b + 32) >> 6,
         s"blend cb($x,$y)")
-    }
-  }
-
-  test("B chroma rides both lists: I-P-B with PCM chroma keeps the " +
-      "pattern through copy and bipred average") {
-    def cbP(x: Int, y: Int) = 60 + 9 * x + 2 * y
-    val es = H264.encodeIPBStream(1, 1,
-      _ => Pcm((_, _) => 90, cbP, (x, y) => 220 - 9 * x - 2 * y),
-      Seq(Pf(_ => PMove(0, 0)), Bf(_ => BBi((0, 0), (0, 0)), pocLsb = 1)))
-    val fs = yuv(es, 4)
-    assert(fs.map(_._6) == Seq('I', 'P', 'B'))
-    for (k <- 0 until 64) {
-      assert(fs(1)._4(k) == fs(0)._4(k), s"P cb $k")
-      // Bi of two identical planes is the plane itself
-      assert(fs(2)._4(k) == fs(0)._4(k), s"B cb $k")
-      assert(fs(2)._5(k) == fs(0)._5(k), s"B cr $k")
     }
   }
 

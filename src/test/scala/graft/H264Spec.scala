@@ -944,26 +944,8 @@ class H264Spec extends AnyFunSuite {
         case _ => H264.PMove(0, 0)
         // identity weights: a weighted PPS makes the table mandatory
       }, 28, frameNum = 2, numRef = 2, weight = Some((1, 2, 0))) ++
-      // round 14: a B picture (POC between the two Ps), an explicitly
-      // REORDERED P (op 0 swaps the older ref in front) and an MMCO
-      // op-1 P (evicts picNum 3) join the fuzz surface
-      sep ++ H264.bNal(2, 2, {
-        case 0 => graft.ext.H264.BBi((0, 0), (0, 0))
-        case 1 => graft.ext.H264.BFwd(0, 0)
-        case _ => graft.ext.H264.BBwd(0, 0)
-      }, 28, frameNum = 3, pocLsb = 3) ++
-      // round 15: direct / skip / B_8x8 / deblocked-B fuzz surface
-      sep ++ H264.bNal(2, 2, {
-        case 0 => graft.ext.H264.BDirect(blk => blk % 3 - 1)
-        case 1 => graft.ext.H264.BSkip
-        case 2 => graft.ext.H264.B8x8(Seq(graft.ext.H264.BSubDirect,
-          graft.ext.H264.BSubL0(0, 0), graft.ext.H264.BSubL1(0, 0),
-          graft.ext.H264.BSubBi((0, 0), (0, 0))))
-        case _ => graft.ext.H264.B8x8(Seq(
-          graft.ext.H264.BSubL04x4(Seq((0, 0), (0, 0), (0, 0), (0, 0))),
-          graft.ext.H264.BSubDirect, graft.ext.H264.BSubDirect,
-          graft.ext.H264.BSubDirect))
-      }, 28, frameNum = 3, pocLsb = 3, deblock = true) ++
+      // an explicitly REORDERED P (op 0 swaps the older ref in front)
+      // and an MMCO op-1 P (evicts picNum 3) join the fuzz surface
       sep ++ H264.pNal(2, 2, _ => H264.PMove(0, 0), 28, frameNum = 3,
         reorder = Seq((0, 1)), weight = Some((1, 2, 0))) ++
       sep ++ H264.pNal(2, 2, _ => H264.PMove(0, 0), 28, frameNum = 4,
@@ -977,7 +959,7 @@ class H264Spec extends AnyFunSuite {
         mmcoOps = Seq(Seq(2, 0)), weight = Some((1, 2, 0)))
     // sanity: the clean stream decodes fully
     assert(H264.decodeFramesLuma(base, 10).map(_._4) ==
-      Seq('I', 'P', 'P', 'B', 'B', 'P', 'P', 'P', 'P'))
+      Seq('I', 'P', 'P', 'P', 'P', 'P', 'P'))
     val rnd = new java.util.Random(20260816L)
     var trials = 0
     while (trials < 300) {
@@ -1029,5 +1011,62 @@ class H264Spec extends AnyFunSuite {
     val Some((_, _, p1)) = H264.decodeIFrameLuma(pcmOn): @unchecked
     val Some((_, _, p2)) = H264.decodeIFrameLuma(pcmOff): @unchecked
     assert(p1.sameElements(p2))
+  }
+
+  // ---- out-of-tier streams degrade ---------------------------------
+  // Each fixture below is the byte-exact output of an encoder this
+  // decoder's tier no longer carries (named per test), captured once
+  // from the commit that still had it. That commit decoded every one
+  // of them exactly, so each test proves a clean refusal of a
+  // well-formed stream, not a refusal of garbage.
+
+  private def unhex(h: String): Array[Byte] =
+    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+
+  test("out-of-tier: a CABAC I frame decodes to nothing and the " +
+      "dispatch falls back") {
+    // encodeIFrameCabac(1, 1, _ => I16Dc(5)): flat 133 when decoded
+    val es = unhex(
+      "000000016742000af4f20000000168ee09c8000000016588840afd09" +
+      "cc87")
+    assert(H264.decodeFramesLuma(es, 4).isEmpty)
+    assert(!graft.ext.Multimodal.decode(es)._4)
+  }
+
+  test("out-of-tier: an I-P-B-P CAVLC stream keeps exactly its I and " +
+      "P frames and nothing from the B onward") {
+    // encodeIPBStream(1, 1, _ => I16Dc(2), Seq(
+    //   Pf(_ => PMoveCoded(0, 0, blk => blk % 3 - 1)),
+    //   Bf(_ => BFwd(0, 0), pocLsb = 1), Pf(_ => PMove(0, 0))))
+    val es = unhex(
+      "000000016742000af6f20000000168ce09c8000000016588840a262f" +
+      "00000001419a242bc65eaf57abd5eaf000000001019e43155e000000" +
+      "01419a482bf0")
+    // the I and P luma planes that stream decoded to, byte for byte
+    val iLuma = Array.fill(256)(130)
+    val pLuma = unhex(
+      "7e7e7e7e8282828282828282868686867e7e7e7e8282828282828282" +
+      "868686867e7e7e7e8282828282828282868686867e7e7e7e82828282" +
+      "8282828286868686868686867e7e7e7e7e7e7e7e8282828286868686" +
+      "7e7e7e7e7e7e7e7e82828282868686867e7e7e7e7e7e7e7e82828282" +
+      "868686867e7e7e7e7e7e7e7e82828282868686867e7e7e7e7e7e7e7e" +
+      "82828282868686867e7e7e7e7e7e7e7e82828282868686867e7e7e7e" +
+      "7e7e7e7e82828282868686867e7e7e7e7e7e7e7e8282828282828282" +
+      "86868686868686867e7e7e7e8282828286868686868686867e7e7e7e" +
+      "8282828286868686868686867e7e7e7e828282828686868686868686" +
+      "7e7e7e7e").map(_ & 0xFF)
+    val fs = H264.decodeFramesLuma(es, 8)
+    assert(fs.map(_._4) == Seq('I', 'P'), s"${fs.map(_._4)}")
+    assert(fs(0)._3.sameElements(iLuma))
+    assert(fs(1)._3.sameElements(pLuma))
+  }
+
+  test("out-of-tier: a High-profile Intra_8x8 frame decodes to nothing") {
+    // encodeIFrameHigh(1, 1, _ => I8x8(_ => 2, b => b - 1),
+    //   transform8x8 = true)
+    val es = unhex(
+      "000000016764000aace9e40000000168ce09cb000000016588840afe" +
+      "2efd78bf80")
+    assert(H264.decodeFramesLuma(es, 4).isEmpty)
   }
 }

@@ -43,8 +43,10 @@ package graft.ext
   * The fence. Everything else degrades: the walk stops and keeps the
   * frames decoded so far, so a caller falls back to the byte-histogram
   * path and never sees a WRONG frame.
-  *  - A High-profile SPS (`HighProfiles`) is refused, as is any SPS
-  *    with field coding (frame_mbs_only_flag = 0).
+  *  - A High-profile SPS (`HighProfiles`) that turns on a High tool
+  *    (seq scaling matrices, non-4:2:0, >8-bit, lossless bypass) is
+  *    refused, as is any SPS with field coding (frame_mbs_only_flag
+  *    = 0). A High SPS that turns none on decodes like Main.
   *  - A PPS that selects CABAC (entropy_coding_mode_flag = 1), carries
   *    the High tail (transform_8x8_mode, scaling matrices, a second
   *    chroma QP offset) or uses slice groups is refused.
@@ -275,19 +277,26 @@ object H264 {
       chromaQpOff: Int)
 
   /** Profiles whose SPS carries the chroma/bit-depth/scaling block
-    * (High and above). Their tools (scaling matrices, the 8x8
-    * transform) are outside the decoded tier, so such an SPS is
-    * refused. */
+    * (High and above). The block's tools (scaling matrices, non-4:2:0,
+    * >8-bit, lossless bypass) are outside the decoded tier: an SPS
+    * that turns one on is refused, one that turns none on decodes
+    * like Main. */
   private val HighProfiles =
     Set(100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135)
 
   private def parseSps(rbsp: Array[Byte]): Sps = {
     val br = new BitReader(rbsp)
     val profile = br.bits(8)
-    if (HighProfiles.contains(profile)) throw ParseFail
     br.bits(8) // constraint flags + reserved
     br.bits(8) // level_idc
     val spsId = br.ue()
+    if (HighProfiles.contains(profile)) {
+      if (br.ue() != 1) throw ParseFail // chroma_format_idc: 4:2:0 only
+      if (br.ue() != 0) throw ParseFail // bit_depth_luma_minus8
+      if (br.ue() != 0) throw ParseFail // bit_depth_chroma_minus8
+      if (br.bit() == 1) throw ParseFail // qpprime_y_zero_transform_bypass
+      if (br.bit() == 1) throw ParseFail // seq_scaling_matrix_present
+    }
     val log2MaxFrameNum = br.ue() + 4
     if (log2MaxFrameNum > 16) throw ParseFail // spec bound (7.4.2.1)
     val pocType = br.ue()

@@ -12,8 +12,9 @@ package graft.ext
   * MC against both anchors with the rounded interpolated average,
   * Table-B.2c types, skip-inherits-previous-prediction semantics) —
   * all pure-JVM, every picture type of the codec. H.264 outside its
-  * CAVLC I/P tier (B slices, CABAC, High profile) and HEVC remain
-  * behind the byte-histogram fence — those need a native decoder.
+  * CAVLC I/P tier (B slices, CABAC, High profile tools) and HEVC
+  * beyond its starter remain behind the byte-histogram fence — those
+  * need a native decoder.
   *
   * Honesty bounds, all degrade-to-None (the caller falls back to the
   * fence, never a wrong decode):

@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   * recognize fall back to byte-histogram moments; that fallback is the
   * one remaining STUB, and only for what genuinely needs a native
   * decoder: H.264 outside the CAVLC I/P tier (CABAC, B slices, High
-  * profile) and HEVC (hev1/hvc1). MPEG-1 decodes FULLY — I, P and B
-  * pictures — and H.264 decodes I and P slices under CAVLC, all
-  * pure-JVM — swap the fence for an ffmpeg binding in production,
-  * nothing around it changes.
+  * profile tools) and HEVC beyond its intra/P starter. MPEG-1
+  * decodes FULLY — I, P and B pictures — H.264 decodes I and P
+  * slices under CAVLC, and HEVC (hev1/hvc1) decodes its intra and P
+  * starter, all pure-JVM — swap the fence for an ffmpeg binding in
+  * production, nothing around it changes.
   *
   * Scale notes: decode is mapPartitions (one codec init per partition,
   * not per row — the same shape a Pandas-UDF/mapInPandas batch has);
@@ -1160,6 +1161,136 @@ object Multimodal {
     }
   }
 
+  /** Extract the HEVCDecoderConfigurationRecord NALs from an MP4
+    * 'hev1'/'hvc1' track: (parameter-set NALs in array order, NAL
+    * length-prefix size). hvcC lives in the VisualSampleEntry like
+    * avcC; its fixed head is 22 bytes, then typed NAL arrays
+    * (ISO 14496-15). None on anything malformed — degrade. */
+  private[graft] def hevcConfig(bytes: Array[Byte]): Option[(Seq[Array[Byte]], Int)] = {
+    val bw = new BoxWalker(bytes)
+    import bw.{u32, walk, descend}
+    try {
+      var found: Option[(Seq[Array[Byte]], Int)] = None
+      walk(0, bytes.length) { (typ, off, end) =>
+        if (typ == "moov" && found.isEmpty) {
+          walk(off, end) { (t, o, e) =>
+            if (t == "trak" && found.isEmpty) {
+              descend(o, e, List("mdia", "minf", "stbl")) { (t4, o4, e4) =>
+                if (t4 == "stsd" && found.isEmpty && e4 - o4 >= 16 &&
+                    u32(o4 + 4) >= 1) {
+                  val entryOff = o4 + 8
+                  val entrySize = u32(entryOff).toInt
+                  val cc = if (entryOff + 8 <= e4)
+                    new String(bytes, entryOff + 4, 4, "US-ASCII") else ""
+                  if (entrySize >= 94 && entryOff + entrySize <= e4 &&
+                      (cc == "hev1" || cc == "hvc1")) {
+                    walk(entryOff + 86, entryOff + entrySize) { (t5, o5, e5) =>
+                      if (t5 == "hvcC" && found.isEmpty && e5 - o5 >= 23)
+                        found = parseHvcC(bytes, o5, e5)
+                    }
+                    ()
+                  }
+                }
+              }
+            }
+          }
+          ()
+        }
+      }
+      found
+    } catch { case _: Exception => None }
+  }
+
+  private def parseHvcC(bytes: Array[Byte], o5: Int,
+      e5: Int): Option[(Seq[Array[Byte]], Int)] = {
+    val lenSize = (bytes(o5 + 21) & 3) + 1
+    val nArrays = bytes(o5 + 22) & 0xFF
+    val nals = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    var p = o5 + 23
+    var a = 0
+    while (a < nArrays) {
+      if (p + 3 > e5) return None
+      val count = ((bytes(p + 1) & 0xFF) << 8) | (bytes(p + 2) & 0xFF)
+      p += 3
+      var i = 0
+      while (i < count) {
+        if (p + 2 > e5) return None
+        val n = ((bytes(p) & 0xFF) << 8) | (bytes(p + 1) & 0xFF)
+        if (p + 2 + n > e5) return None
+        nals += java.util.Arrays.copyOfRange(bytes, p + 2, p + 2 + n)
+        p += 2 + n
+        i += 1
+      }
+      a += 1
+    }
+    if (nals.nonEmpty) Some((nals.toSeq, lenSize)) else None
+  }
+
+  /** Bounded multi-frame HEVC intra walk (round 14): raw Annex-B
+    * streams AND MP4 'hev1'/'hvc1' tracks (hvcC parameter sets +
+    * length-prefixed samples), shaped like [[decodeAvcFrames]]. The
+    * stop-at-first-undecodable discipline applies; each IDR picture
+    * is independent (no inter in the starter subset, so there is no
+    * cross-sample reference hazard to guard). */
+  private[graft] def decodeHevcFrames(bytes: Array[Byte],
+      maxFrames: Int): Seq[(Int, Int, Int, Double, Double)] = {
+    def stat(fs: Seq[(Int, Int, Array[Int])]) =
+      fs.zipWithIndex.map { case ((w, h, l), i) =>
+        var s = 0.0; var sq = 0.0
+        l.foreach { v => s += v; sq += v.toDouble * v }
+        val n = math.max(1, l.length)
+        val m = s / n
+        (i + 1, w, h, m, math.sqrt(math.max(0.0, sq / n - m * m)))
+      }
+    def isAnnexB: Boolean = {
+      var p = 0
+      if (bytes.length >= 6 && bytes(0) == 0 && bytes(1) == 0) {
+        if (bytes(2) == 1) p = 3
+        else if (bytes(2) == 0 && bytes(3) == 1) p = 4
+      }
+      p > 0 && p + 1 < bytes.length && {
+        val t = (bytes(p) >> 1) & 0x3F
+        t == 32 || t == 33 || t == 34 || t == 35 || t == 39
+      }
+    }
+    if (isAnnexB) stat(Hevc.decodeFramesLuma(bytes, maxFrames))
+    else {
+      (for {
+        tracks <- trackSamples(bytes)
+        (off, sizes) <- tracks.collectFirst {
+          case (c, o, ss) if (c == "hev1" || c == "hvc1") && ss.nonEmpty =>
+            (o, ss)
+        }
+        (psNals, lenSize) <- hevcConfig(bytes)
+      } yield {
+        val bounded = sizes.take(maxFrames)
+        val starts = bounded.scanLeft(off)(_ + _)
+        val nals = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+        var ok = true
+        var i = 0
+        while (ok && i < bounded.length) {
+          val s = starts(i)
+          val len = bounded(i)
+          if (s < 0 || len <= 0 || s + len > bytes.length) ok = false
+          else splitLengthPrefixed(
+            java.util.Arrays.copyOfRange(bytes, s.toInt, (s + len).toInt),
+            lenSize) match {
+            case Some(ns) => nals ++= ns
+            case None => ok = false
+          }
+          i += 1
+        }
+        stat(Hevc.decodeFramesLumaNals(psNals ++ nals.toSeq, maxFrames))
+      }).getOrElse(Seq.empty)
+    }
+  }
+
+  /** First-frame convenience over [[decodeHevcFrames]] — the decode
+    * dispatch's hev1 hook (round 14). */
+  private[graft] def decodeHevcFirstFrame(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] =
+    decodeHevcFrames(bytes, 1).headOption
+      .map { case (_, w, h, mean, std) => (w, h, Array(mean, std)) }
+
   /** YUV stats decode (round 14, chroma reconstruction): per frame
     * (frame, type, w, h, mean_y, mean_u, std_u, mean_v, std_v) over
     * an Annex-B stream — the curation tier's color-statistics hook
@@ -1272,6 +1403,69 @@ object Multimodal {
     ftyp ++ mdat ++ box("moov", mvhd ++ trak)
   }
 
+  /** Deterministic HEVC-in-MP4 fixture (round 14): same container
+    * layout and the SAME quadrant values as [[syntheticAvcMp4]] —
+    * g_{q,f} = (id*(31+6q) + 11+5q + 29f) mod 256 — but each sample
+    * is one IDR slice whose single CTU quad-splits into four I_PCM
+    * 8x8 CUs (exact pixels), under a REAL 'hev1' sample entry with an
+    * hvcC record (VPS-less parameter arrays + 4-byte NAL length
+    * prefixes), so the decode exercises the genuine
+    * hvcC -> length-prefixed-NAL path a real hev1 file takes. */
+  def syntheticHevcMp4(id: Long, nFrames: Int = 1): Array[Byte] = {
+    require(nFrames >= 1, s"nFrames must be >= 1, got $nFrames")
+    def be32(v: Long) = Array[Byte](
+      ((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
+      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
+    def be16(v: Int) = Array[Byte](((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
+    def box(typ: String, payload: Array[Byte]): Array[Byte] =
+      be32(8L + payload.length) ++ typ.getBytes("US-ASCII") ++ payload
+    val sps = Hevc.spsNal(16, 16)
+    val pps = Hevc.ppsNal(28)
+    val samples = (0 until nFrames).map { f =>
+      val idr = Hevc.idrNal(1, 1, _ => Hevc.Quad((0 until 4).map { q =>
+        Hevc.HPcm((_, _) =>
+          ((id * (31 + 6 * q) + 11 + 5 * q + 29L * f) % 256).toInt)
+      }), qp = 28)
+      be32(idr.length.toLong) ++ idr
+    }
+    val hvcC = box("hvcC",
+      Array[Byte](1) ++ new Array[Byte](12) ++ // profile block
+        Array[Byte](0xF0.toByte, 0, 0xFC.toByte, 0xFD.toByte, 0xF8.toByte,
+          0xF8.toByte) ++ be16(0) ++ // reserved/chroma/depth/fps fields
+        Array[Byte](3) ++ // flags | lengthSizeMinusOne = 3
+        Array[Byte](2) ++ // numOfArrays: SPS + PPS
+        Array[Byte](33) ++ be16(1) ++ be16(sps.length) ++ sps ++
+        Array[Byte](34) ++ be16(1) ++ be16(pps.length) ++ pps)
+    val visual =
+      new Array[Byte](6) ++ be16(1) ++
+        new Array[Byte](16) ++
+        be16(16) ++ be16(16) ++
+        be32(0x00480000L) ++ be32(0x00480000L) ++ be32(0) ++
+        be16(1) ++ new Array[Byte](32) ++ be16(24) ++ be16(0xFFFF)
+    val ftyp = box("ftyp",
+      "isom".getBytes("US-ASCII") ++ be32(0) ++ "mp41".getBytes("US-ASCII"))
+    val mdat = box("mdat", samples.flatten.toArray)
+    val mdatPayloadOff = ftyp.length + 8L
+    val mvhd = box("mvhd",
+      be32(0) ++ be32(0) ++ be32(0) ++
+        be32(1000) ++ be32((id * 97 + 41) % 100000) ++
+        be32(0x00010000L) ++
+        Array[Byte](0x01, 0x00) ++ new Array[Byte](10) ++
+        new Array[Byte](36) ++ new Array[Byte](24) ++
+        be32(2))
+    val stsd = box("stsd", be32(0) ++ be32(1) ++ box("hev1", visual ++ hvcC))
+    val stsz = box("stsz", be32(0) ++ be32(0) ++ be32(nFrames.toLong) ++
+      samples.flatMap(j => be32(j.length.toLong)).toArray)
+    val stss = box("stss", be32(0) ++ be32(nFrames.toLong) ++
+      (1 to nFrames).flatMap(f => be32(f.toLong)).toArray)
+    val stco = box("stco", be32(0) ++ be32(1) ++ be32(mdatPayloadOff))
+    val stbl = box("stbl", stsd ++ stsz ++ stss ++ stco)
+    val trak = box("trak",
+      box("tkhd", be32(0) ++ be32(0) ++ be32(0) ++ be32(1)) ++
+        box("mdia", box("minf", stbl)))
+    ftyp ++ mdat ++ box("moov", mvhd ++ trak)
+  }
+
   /** Deterministic minimal-but-valid MP4 for id: ftyp(isom) +
     * moov(mvhd v0 + trak×k), each trak carrying a full
     * mdia/minf/stbl with an stsd sample entry and an stss sync-sample
@@ -1329,13 +1523,14 @@ object Multimodal {
     * STUB — and the fence keeps narrowing: [[parseMp4Metadata]] reads
     * real video CONTAINER metadata codec-free,
     * [[decodeMjpegFirstFrame]] decodes real PIXELS for Motion-JPEG
-    * tracks, and (round 12) [[decodeMpeg1FirstFrame]] +
-    * [[decodeAvcFirstFrame]] decode real pixels for MPEG-1 and
-    * H.264/avc1 streams via the pure-JVM [[Mpeg1]]/[[H264]] decoders.
-    * What remains stubbed is H.264 outside the CAVLC I/P tier (CABAC,
-    * B slices, High profile) and HEVC — which genuinely need ffmpeg;
-    * replace this body with that binding in production, nothing
-    * around it changes. */
+    * tracks, and [[decodeMpeg1FirstFrame]], [[decodeAvcFirstFrame]]
+    * and [[decodeHevcFirstFrame]] decode real pixels for MPEG-1,
+    * H.264/avc1 and HEVC streams via the pure-JVM
+    * [[Mpeg1]]/[[H264]]/[[Hevc]] decoders. What remains stubbed is
+    * H.264 outside the CAVLC I/P tier (CABAC, B slices, High profile
+    * tools) and HEVC beyond its starter — which genuinely need
+    * ffmpeg; replace this body with that binding in production,
+    * nothing around it changes. */
   private[ext] def byteHistogram(bytes: Array[Byte]): (Int, Int, Array[Double]) = {
     // >>> STUB: byte-histogram stand-in (video FRAME decode only) <<<
     val hist = new Array[Double](16)
@@ -1348,19 +1543,23 @@ object Multimodal {
   }
 
   /** Decode dispatch: real image decode first, then real MJPEG-track
-    * pixel decode for MP4 AND AVI payloads, then real MPEG-1 and
-    * H.264 pixel decode, byte-histogram fallback for everything else.
-    * What decodes:
+    * pixel decode for MP4 AND AVI payloads, then real MPEG-1, H.264
+    * and HEVC pixel decode, byte-histogram fallback for everything
+    * else. What decodes:
     *  - MJPEG in MP4 and AVI;
     *  - MPEG-1, all picture types (I/P/B/D);
-    *  - H.264 I and P slices under CAVLC (Baseline/Main/Extended
-    *    SPS): I_PCM, Intra_16x16, Intra_4x4, every P partition,
-    *    P_Skip, multi-reference lists with reordering, the full MMCO
-    *    set and long-term references, explicit weighted P,
-    *    multi-slice pictures, deblocking and 4:2:0 chroma.
-    * Everything else takes the fallback: non-media payloads, HEVC
-    * (hev1/hvc1), vp09/av01, and H.264 streams whose SPS is High
-    * profile, whose PPS selects CABAC or carries the High tail, or
+    *  - H.264 I and P slices under CAVLC (Baseline/Main/Extended SPS,
+    *    or a High SPS that turns on no High tool): I_PCM,
+    *    Intra_16x16, Intra_4x4, every P partition, P_Skip,
+    *    multi-reference lists with reordering, the full MMCO set and
+    *    long-term references, explicit weighted P, multi-slice
+    *    pictures, deblocking and 4:2:0 chroma;
+    *  - HEVC (raw Annex-B and hev1/hvc1 in MP4) within the [[Hevc]]
+    *    starter: the first frame's luma.
+    * Everything else takes the fallback: non-media payloads,
+    * vp09/av01, HEVC outside the [[Hevc]] starter, and H.264 streams
+    * whose SPS turns on a High tool (scaling matrices, non-4:2:0,
+    * >8-bit), whose PPS selects CABAC or carries the High tail, or
     * whose first slice is a B slice (a later out-of-tier slice keeps
     * the frames decoded before it). The boolean is the DEGRADE flag:
     * true for real pixels, false for the fallback — the
@@ -1370,6 +1569,7 @@ object Multimodal {
       .orElse(decodeMjpegFirstFrame(bytes))
       .orElse(decodeMpeg1FirstFrame(bytes))
       .orElse(decodeAvcFirstFrame(bytes))
+      .orElse(decodeHevcFirstFrame(bytes))
       .map { case (w, h, f) => (w, h, f, true) }
       .getOrElse {
         val (w, h, f) = byteHistogram(bytes)

@@ -1069,4 +1069,17 @@ class H264Spec extends AnyFunSuite {
       "2efd78bf80")
     assert(H264.decodeFramesLuma(es, 4).isEmpty)
   }
+
+  test("out-of-tier: a High SPS with seq scaling matrices is refused " +
+      "even under a plain CAVLC PPS") {
+    // encodeIFrameHigh(1, 1, _ => I4x4(_ => 2, b => if (b == 0) 3 else 0),
+    //   seqScal4 = 6 x flat 20, seqScal8 = 2 x flat 20): flat 143 when
+    // decoded; without the SPS matrices the same slice decodes to 140
+    val es = unhex(
+      "000000016764000aad863fffc31fffe18ffff0c7fff863fffc31fffe18" +
+      "ffffffffffffffff0c7fffffffffffffffe9e40000000168ce09c800" +
+      "0000016588840affffc3d14fc0")
+    assert(H264.decodeFramesLuma(es, 4).isEmpty)
+    assert(!graft.ext.Multimodal.decode(es)._4)
+  }
 }

@@ -708,68 +708,29 @@ class MultimodalSourcesSpec extends SparkSpec {
     assert(row.getDouble(1) == 3.5)   // and from the right sheet
   }
 
-  test("hev1-in-MP4 degrades: a well-formed HEVC track falls back to " +
-      "the byte histogram with decoded = false") {
+  test("hev1-in-MP4 route (round 14): hvcC parameter sets + length-" +
+      "prefixed samples reach the HEVC starter decoder; dispatch " +
+      "flags real pixels") {
     import graft.ext.Multimodal
-    // Multimodal.syntheticHevcMp4(2, 2), captured once from the commit
-    // that still decoded it (two 16x16 frames of I_PCM CUs): an 'hev1'
-    // sample entry with an hvcC record and two length-prefixed IDRs
-    val mp4 = (
-      "000000146674797069736f6d000000006d7034310000032a6d646174" +
-      "0000018d2601afc62049494949494949494949494949494949494949" +
-      "49494949494949494949494949494949494949494949494949494949" +
-      "49494949494949494949494949494949498080808080808080808080" +
-      "80808080808080808080808080808080808080808092805a5a5a5a5a" +
-      "5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a" +
-      "5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a5a" +
-      "5a5a5a80808080808080808080808080808080808080808080808080" +
-      "8080808080808097806b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b" +
-      "6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b" +
-      "6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b6b8080808080808080808080" +
-      "8080808080808080808080808080808080808080809c807c7c7c7c7c" +
-      "7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c" +
-      "7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c7c" +
-      "7c7c7c80808080808080808080808080808080808080808080808080" +
-      "80808080808080fe800000018d2601afc62066666666666666666666" +
-      "66666666666666666666666666666666666666666666666666666666" +
-      "66666666666666666666666666666666666666666666666666668080" +
-      "80808080808080808080808080808080808080808080808080808080" +
-      "80809280777777777777777777777777777777777777777777777777" +
-      "77777777777777777777777777777777777777777777777777777777" +
-      "77777777777777777777777780808080808080808080808080808080" +
-      "80808080808080808080808080808080978088888888888888888888" +
-      "88888888888888888888888888888888888888888888888888888888" +
-      "88888888888888888888888888888888888888888888888888888080" +
-      "80808080808080808080808080808080808080808080808080808080" +
-      "80809c80999999999999999999999999999999999999999999999999" +
-      "99999999999999999999999999999999999999999999999999999999" +
-      "99999999999999999999999980808080808080808080808080808080" +
-      "80808080808080808080808080808080fe80000001a66d6f6f760000" +
-      "006c6d766864000000000000000000000000000003e8000000eb0001" +
-      "00000100000000000000000000000000000000000000000000000000" +
-      "00000000000000000000000000000000000000000000000000000000" +
-      "00000000000000000000000000000000000000000002000001327472" +
-      "616b00000018746b6864000000000000000000000000000000010000" +
-      "01126d6469610000010a6d696e66000001027374626c000000b27374" +
-      "73640000000000000001000000a26865763100000000000000010000" +
-      "00000000000000000000000000000010001000480000004800000000" +
-      "00000001000000000000000000000000000000000000000000000000" +
-      "00000000000000000018ffff0000004c687663430100000000000000" +
-      "0000000000f000fcfdf8f800000302210001001c4201010100000300" +
-      "0003000003000003000078a08845ebabc5de904022000100074401c0" +
-      "64180a480000001c7374737a00000000000000000000000200000191" +
-      "00000191000000187374737300000000000000020000000100000002" +
-      "000000147374636f00000000000000010000001c")
-      .grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-    val (w, h, feat, decoded) = Multimodal.decode(mp4)
-    assert(!decoded, "HEVC is outside the decoded video tier")
-    val hist = new Array[Double](16)
-    mp4.foreach(b => hist((b & 0xFF) / 16) += 1.0)
-    assert(feat.toSeq == hist.map(_ / mp4.length).toSeq)
-    val side = math.sqrt(mp4.length.toDouble).toInt
-    assert(w == side && h == side)
-    // metadata-only containers (no samples) degrade the same way
-    assert(!Multimodal.decode(Multimodal.syntheticMp4(2L))._4)
+    for (id <- Seq(2L, 9L)) {
+      def g(q: Int, f: Int): Int =
+        ((id * (31 + 6 * q) + 11 + 5 * q + 29L * f) % 256).toInt
+      val mp4 = Multimodal.syntheticHevcMp4(id, nFrames = 2)
+      val fs = Multimodal.decodeHevcFrames(mp4, 4)
+      assert(fs.length == 2, s"id=$id got ${fs.length} frames")
+      for ((f0, k) <- fs.zipWithIndex) {
+        val vals = (0 until 4).map(q => g(q, k).toDouble)
+        val mean = vals.sum / 4
+        val std = math.sqrt(vals.map(v => v * v).sum / 4 - mean * mean)
+        assert(f0._2 == 16 && f0._3 == 16, s"id=$id f$k dims")
+        assert(math.abs(f0._4 - mean) < 1e-9, s"id=$id f$k mean")
+        assert(math.abs(f0._5 - std) < 1e-9, s"id=$id f$k std")
+      }
+      val d = Multimodal.decode(mp4)
+      assert(d._4, s"id=$id dispatch must flag decoded=true")
+      // metadata-only containers (no samples, no hvcC) keep degrading
+      assert(!Multimodal.decode(Multimodal.syntheticMp4(id))._4)
+    }
   }
 
   // ---- hand-built BIFF8 .xls fixture (MS-CFB + MS-XLS layouts) ----

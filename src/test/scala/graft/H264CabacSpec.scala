@@ -1,17 +1,19 @@
 package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ext.H264.{I16Dc, I4x4, Pcm}
 
-/** CABAC entropy layer contracts (round 14). The arithmetic engine
-  * round-trips arbitrary bin sequences; fixture streams decode to
-  * the SAME hand-computed pixels as their CAVLC twins (the
-  * reconstruction layer is shared, so equality pins the entropy
-  * layer alone); corruption degrades, never throws, never emits a
-  * frame built on fabricated bits. */
+/** CABAC arithmetic engine contracts: arbitrary bin sequences
+  * round-trip bit-exactly through [[H264Cabac.Enc]] and
+  * [[H264Cabac.Dec]], and the flush leaves encoder and decoder at the
+  * same bit position. [[Hevc]]'s slice data rides this engine. */
 class H264CabacSpec extends AnyFunSuite {
 
-  // ---------------------------------------------------------- engine
+  // Any int8 (m, n) table exercises the engine: 276 seeded random
+  // pairs, so every ctxIdx below has its own init state.
+  private val Init: Array[Int] = {
+    val rnd = new java.util.Random(276)
+    Array.fill(276 * 2)(rnd.nextInt(256) - 128)
+  }
 
   test("arithmetic engine: seeded random decision/bypass/terminate " +
       "sequences round-trip bit-exactly") {
@@ -25,7 +27,7 @@ class H264CabacSpec extends AnyFunSuite {
       val ops = Array.fill(n)(rnd.nextInt(10))
       val ctxs = Array.fill(n)(rnd.nextInt(276))
       val bins = Array.fill(n)(rnd.nextBoolean())
-      val encCtx = new H264Cabac.Ctx(qp)
+      val encCtx = new H264Cabac.Ctx(qp, Init)
       val enc = new H264Cabac.Enc
       var i = 0
       while (i < n) {
@@ -42,7 +44,7 @@ class H264CabacSpec extends AnyFunSuite {
       bits.zipWithIndex.foreach { case (b, k) =>
         if (b == 1) bytes(k >> 3) = (bytes(k >> 3) | (1 << (7 - (k & 7)))).toByte
       }
-      val decCtx = new H264Cabac.Ctx(qp)
+      val decCtx = new H264Cabac.Ctx(qp, Init)
       val dec = new H264Cabac.Dec(bytes, 0)
       assert(dec.valid, s"trial $trial: invalid init")
       i = 0
@@ -68,7 +70,7 @@ class H264CabacSpec extends AnyFunSuite {
       "(the I_PCM alignment contract)") {
     val rnd = new java.util.Random(99)
     for (n <- Seq(0, 1, 7, 64, 257)) {
-      val cx = new H264Cabac.Ctx(28)
+      val cx = new H264Cabac.Ctx(28, Init)
       val enc = new H264Cabac.Enc
       val bins = Array.fill(n)(rnd.nextBoolean())
       bins.foreach(b => enc.decision(cx, 3 + (n % 270), b))
@@ -79,503 +81,12 @@ class H264CabacSpec extends AnyFunSuite {
       bits.zipWithIndex.foreach { case (b, k) =>
         if (b == 1) bytes(k >> 3) = (bytes(k >> 3) | (1 << (7 - (k & 7)))).toByte
       }
-      val cx2 = new H264Cabac.Ctx(28)
+      val cx2 = new H264Cabac.Ctx(28, Init)
       val dec = new H264Cabac.Dec(bytes, 0)
       bins.foreach(b => assert(dec.decision(cx2, 3 + (n % 270)) == b))
       assert(dec.terminate())
       assert(dec.bitPos == bits.length,
         s"n=$n: E=${bits.length} D=${dec.bitPos}")
-    }
-  }
-
-  // -------------------------------------------------------- fixtures
-
-  private def decode(es: Array[Byte]) = H264.decodeIFrameLuma(es)
-
-  private def assertSamePixels(cavlc: Array[Byte], cabac: Array[Byte],
-      tag: String): Unit = {
-    val a = decode(cavlc)
-    val b = decode(cabac)
-    assert(a.isDefined, s"$tag: CAVLC twin failed to decode")
-    assert(b.isDefined, s"$tag: CABAC stream failed to decode")
-    val (w1, h1, l1) = a.get
-    val (w2, h2, l2) = b.get
-    assert(w1 == w2 && h1 == h2, tag)
-    assert(l1.sameElements(l2), s"$tag: pixel mismatch")
-  }
-
-  test("CABAC == CAVLC: mixed I16/I4x4/PCM picture decodes to " +
-      "identical pixels (shared reconstruction pins the entropy layer)") {
-    // mode placement honors neighbor availability: directional modes
-    // only where the needed edge was decoded earlier in the slice
-    def mbs(i: Int): H264.Mb = i match {
-      case 0 => I16Dc(3, ac0 = 1, chromaDcTz = 2)
-      case 1 => Pcm((x, y) => (60 + x * 3 + y * 5) % 256)
-      case 2 => I4x4(_ => 2, blk => if (blk % 5 == 0) 2 else 0)
-      case 3 => I16Dc(-4) // col 0: DC only
-      case 4 => I16Dc(0, ac0 = -1, pred = 0) // top = PCM MB1
-      case _ => I4x4(blk => Seq(2, 0, 1, 2)(blk % 4),
-        blk => blk % 3 - 1) // (2,1): top MB2 + left MB4 exist
-    }
-    assertSamePixels(
-      H264.encodeIFrame(3, 2, mbs),
-      H264.encodeIFrameCabac(3, 2, mbs), "mixed 3x2")
-  }
-
-  test("residual layer: arbitrary coefficient vectors round-trip per " +
-      "category, including UEG0 escape levels far past the TU prefix") {
-    val rnd = new java.util.Random(271828)
-    var trial = 0
-    while (trial < 40) {
-      val cat = trial % 5
-      val maxC = Seq(16, 15, 16, 4, 15)(cat)
-      val coeffs = new Array[Int](maxC)
-      var k = 0
-      while (k < maxC) {
-        coeffs(k) = rnd.nextInt(7) match {
-          case 0 => rnd.nextInt(29) - 14 // small, both signs
-          case 1 => 14 + rnd.nextInt(4) // TU boundary 14..17
-          case 2 => 15 + rnd.nextInt(2000) // deep escape
-          case _ => 0
-        }
-        k += 1
-      }
-      val inc = rnd.nextInt(4)
-      val encCx = new H264Cabac.Ctx(28)
-      val enc = new H264Cabac.Enc
-      val nzIn = H264.putResidualCabac(enc, encCx, cat, inc, coeffs)
-      enc.terminate(bin = true)
-      val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      enc.drain(bits += _)
-      val bytes = new Array[Byte]((bits.length + 7) / 8)
-      bits.zipWithIndex.foreach { case (b, j) =>
-        if (b == 1) bytes(j >> 3) = (bytes(j >> 3) | (1 << (7 - (j & 7)))).toByte
-      }
-      val decCx = new H264Cabac.Ctx(28)
-      val dec = new H264Cabac.Dec(bytes, 0)
-      val out = H264.residualCabac(dec, decCx, cat, inc)
-      assert(out != null, s"trial $trial cat $cat degraded")
-      assert(out._1.sameElements(coeffs),
-        s"trial $trial cat $cat: ${out._1.toSeq} != ${coeffs.toSeq}")
-      assert(out._2 == nzIn)
-      assert(dec.terminate() && dec.overrun == 0)
-      trial += 1
-    }
-  }
-
-  test("residual layer under the per-idc P/B init columns (round 16): " +
-      "arbitrary coefficient vectors round-trip through each " +
-      "transcribed residual column, escapes included") {
-    // Same contract as the I-column residual round-trip above, but
-    // the context pool initializes from InitPB(idc) — exercising the
-    // round-16 transcription of the P/B residual ranges (the former
-    // stand-in shared these states with I by construction, so this
-    // only became a distinct path this round).
-    val rnd = new java.util.Random(314159)
-    for (idc <- 0 to 2; trial <- 0 until 30) {
-      val cat = trial % 5
-      val maxC = Seq(16, 15, 16, 4, 15)(cat)
-      val coeffs = new Array[Int](maxC)
-      var k = 0
-      while (k < maxC) {
-        coeffs(k) = rnd.nextInt(7) match {
-          case 0 => rnd.nextInt(29) - 14
-          case 1 => 14 + rnd.nextInt(4)
-          case 2 => 15 + rnd.nextInt(2000)
-          case _ => 0
-        }
-        k += 1
-      }
-      val inc = rnd.nextInt(4)
-      val qp = 10 + rnd.nextInt(35)
-      val encCx = new H264Cabac.Ctx(qp, H264Cabac.InitPB(idc))
-      val enc = new H264Cabac.Enc
-      val nzIn = H264.putResidualCabac(enc, encCx, cat, inc, coeffs)
-      enc.terminate(bin = true)
-      val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      enc.drain(bits += _)
-      val bytes = new Array[Byte]((bits.length + 7) / 8)
-      bits.zipWithIndex.foreach { case (b, j) =>
-        if (b == 1) bytes(j >> 3) = (bytes(j >> 3) | (1 << (7 - (j & 7)))).toByte
-      }
-      val decCx = new H264Cabac.Ctx(qp, H264Cabac.InitPB(idc))
-      val dec = new H264Cabac.Dec(bytes, 0)
-      val out = H264.residualCabac(dec, decCx, cat, inc)
-      assert(out != null, s"idc $idc trial $trial cat $cat degraded")
-      assert(out._1.sameElements(coeffs),
-        s"idc $idc trial $trial cat $cat: ${out._1.toSeq} != ${coeffs.toSeq}")
-      assert(out._2 == nzIn)
-      assert(dec.terminate() && dec.overrun == 0)
-    }
-  }
-
-  test("residual-heavy CABAC P/B == CAVLC P/B: coded inter blocks in " +
-      "every P/B macroblock under all three init columns") {
-    import graft.ext.H264._
-    // Every P/B macroblock carries residuals in every 4x4 block —
-    // the syntax classes whose init values the round-16 transcription
-    // replaced. (Escape-range levels per idc are pinned by the
-    // residual-layer round-trip above; the CAVLC fixture twin's
-    // single-coefficient writer caps |level| at 8, so the stream
-    // fixture stays inside that.) One level decoded through a wrong
-    // context state would shift every later bin; pixel equality with
-    // the CAVLC twin pins the whole entropy layer per idc.
-    def iMb(i: Int): Mb = Pcm((x, y) => 60 + 3 * (i % 2) + x + 2 * y)
-    def pHeavy(i: Int): MbP =
-      PMoveCoded(0, 0, blk => Seq(7, -8, 0, 6, -5, 2, 8, -7,
-        0, 5, -6, 1, 4, -3, 7, -8)((blk + i) % 16))
-    def bHeavy(i: Int): MbB = i match {
-      case 0 => BFwdCoded(0, 0, blk => Seq(-7, 8, 0, -6)(blk % 4))
-      case 1 => BDirect(blk => Seq(5, -6, 8, 0)(blk % 4))
-      case 2 => BFwdCoded(-4, 0, blk => if (blk % 2 == 0) 6 else -8)
-      case _ => BDirect(blk => (blk % 8) - 4)
-    }
-    val frames = Seq(Pf(pHeavy), Bf(bHeavy, pocLsb = 1))
-    val cavlc = H264.encodeIPBStream(2, 2, iMb, frames)
-    val ref = H264.decodeFramesYuv(cavlc, 6)
-    assert(ref.map(_._6) == Seq('I', 'P', 'B'), s"CAVLC: ${ref.map(_._6)}")
-    for (idc <- 0 to 2) {
-      val cabac = H264.encodeIPBStreamCabac(2, 2, iMb, frames,
-        initIdc = idc)
-      val got = H264.decodeFramesYuv(cabac, 6)
-      assert(got.map(_._6) == ref.map(_._6), s"idc $idc types")
-      ref.zip(got).zipWithIndex.foreach { case ((r, g), fi) =>
-        assert(g._3.sameElements(r._3), s"idc $idc frame $fi luma")
-        assert(g._4.sameElements(r._4), s"idc $idc frame $fi cb")
-        assert(g._5.sameElements(r._5), s"idc $idc frame $fi cr")
-      }
-    }
-  }
-
-  test("CABAC cat-5 residual layer: arbitrary 64-coefficient vectors " +
-      "round-trip through the Table 9-43 maps, escapes included") {
-    val rnd = new java.util.Random(1693)
-    for (trial <- 0 until 25) {
-      val coeffs = new Array[Int](64)
-      var k = 0
-      while (k < 64) {
-        coeffs(k) = rnd.nextInt(6) match {
-          case 0 => rnd.nextInt(29) - 14
-          case 1 => 14 + rnd.nextInt(4)
-          case 2 => 15 + rnd.nextInt(3000)
-          case _ => 0
-        }
-        k += 1
-      }
-      if (coeffs.forall(_ == 0)) coeffs(rnd.nextInt(64)) = 1
-      val qp = 10 + rnd.nextInt(35)
-      val encCx = new H264Cabac.Ctx(qp)
-      val enc = new H264Cabac.Enc
-      val nzIn = H264.putResidualCabac(enc, encCx, 5, 0, coeffs)
-      enc.terminate(bin = true)
-      val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      enc.drain(bits += _)
-      val bytes = new Array[Byte]((bits.length + 7) / 8)
-      bits.zipWithIndex.foreach { case (b, j) =>
-        if (b == 1) bytes(j >> 3) = (bytes(j >> 3) | (1 << (7 - (j & 7)))).toByte
-      }
-      val decCx = new H264Cabac.Ctx(qp)
-      val dec = new H264Cabac.Dec(bytes, 0)
-      val out = H264.residualCabac(dec, decCx, 5, 0)
-      assert(out != null && out._1.sameElements(coeffs) && out._2 == nzIn,
-        s"trial $trial: ${out._1.toSeq.take(8)} vs ${coeffs.toSeq.take(8)}")
-      assert(dec.terminate() && dec.overrun == 0)
-    }
-  }
-
-  test("CABAC == CAVLC across qp values (init states differ per qp)") {
-    for (qp <- Seq(20, 28, 36, 44)) {
-      def mbs(i: Int): H264.Mb =
-        if (i % 2 == 0) I16Dc(2, ac0 = 1) else I4x4(_ => 2, b => b % 2)
-      assertSamePixels(
-        H264.encodeIFrame(2, 2, mbs, qp),
-        H264.encodeIFrameCabac(2, 2, mbs, qp), s"qp $qp")
-    }
-  }
-
-  test("CABAC == CAVLC with deblocking on (nz/qp bookkeeping feeds " +
-      "the same loop filter)") {
-    def mbs(i: Int): H264.Mb =
-      if (i == 0) I16Dc(7) else if (i == 3) I16Dc(-7) else I4x4(_ => 2)
-    assertSamePixels(
-      H264.encodeIFrame(2, 2, mbs, deblock = true),
-      H264.encodeIFrameCabac(2, 2, mbs, deblock = true), "deblock")
-  }
-
-  test("CABAC escape levels (UEG0 suffix): |coeff| >= 15 decodes " +
-      "closed-form, beyond the CAVLC fixture vocabulary") {
-    // qp 28: a lone level c at scan 0 of a 4x4 block adds exactly 4c
-    // to every sample of the block (LevelScale 256, (256c+32)>>6).
-    // dc 20 -> +80, dc -18 -> -72 on the DC-predicted 128.
-    // only block 0 carries a coefficient: its prediction is the
-    // neighbor-free DC (128), so the corner block is EXACTLY
-    // 128 + 4*20 = 208 (later blocks DC-chain off reconstructed
-    // neighbors — not asserted; the residual-layer test above pins
-    // arbitrary escape levels coefficient-exactly)
-    val es = H264.encodeIFrameCabac(1, 1, _ =>
-      I4x4(_ => 2, blk => if (blk == 0) 20 else 0))
-    val Some((w, h, luma)) = decode(es)
-    assert(w == 16 && h == 16)
-    for (y <- 0 until 4; x <- 0 until 4)
-      assert(luma(y * 16 + x) == 208, s"($x,$y) = ${luma(y * 16 + x)}")
-  }
-
-  test("multi-slice CABAC == multi-slice CAVLC (per-slice engine and " +
-      "context re-init; slice-gated prediction identical)") {
-    // a slice boundary CHANGES pixels (neighbors become unavailable,
-    // the r13 CAVLC test pins that) — the entropy-layer invariant is
-    // CAVLC-vs-CABAC equality at the SAME slicing, both ways
-    def mbs(i: Int): H264.Mb =
-      if (i < 2) I16Dc(3) else I4x4(_ => 2, b => if (b == 0) 1 else 0)
-    val sep = Array[Byte](0, 0, 0, 1)
-    def stream(cabac: Boolean, split: Boolean): Array[Byte] = {
-      val head = sep ++ H264.spsNal(2, 2) ++ sep ++
-        H264.ppsNal(28, cabac = cabac)
-      def slice(f: Int, n: Int) =
-        if (cabac) H264.idrNalCabac(2, 2, mbs, 28, firstMb = f, mbCount = n)
-        else H264.idrNal(2, 2, mbs, 28, firstMb = f, mbCount = n)
-      if (split) head ++ sep ++ slice(0, 2) ++ sep ++ slice(2, 2)
-      else head ++ sep ++ slice(0, 4)
-    }
-    for (split <- Seq(false, true)) {
-      val a = H264.decodeFramesLuma(stream(cabac = false, split), 2)
-      val b = H264.decodeFramesLuma(stream(cabac = true, split), 2)
-      assert(a.nonEmpty, s"split=$split CAVLC")
-      assert(b.nonEmpty, s"split=$split CABAC")
-      assert(a.head._3.sameElements(b.head._3), s"split=$split pixels")
-    }
-    // and the boundary effect itself reproduces under CABAC: split
-    // vs unsplit differ (MB2's top neighbor crosses the boundary)
-    val u = H264.decodeFramesLuma(stream(cabac = true, split = false), 2)
-    val s2 = H264.decodeFramesLuma(stream(cabac = true, split = true), 2)
-    assert(!u.head._3.sameElements(s2.head._3),
-      "slice gating should change prediction")
-  }
-
-  // ---- round 15: CABAC P/B slices -----------------------------------
-
-  test("CABAC P/B == CAVLC P/B: a mixed I-P-B stream with every inter " +
-      "feature decodes pixel-identical under all three cabac_init_idc " +
-      "columns") {
-    import graft.ext.H264._
-    // anchors: PCM quadrants; P1 = every P partition shape incl. a
-    // UEG3-escape vector (|mvd| > 9); P2 = static coded anchor (the
-    // B's colocated picture -> colZero all-true); B1 = direct / skip /
-    // B_8x8 / Bi / intra refresh at poc 3; B2 = two-list shapes at
-    // poc 5 (no direct MBs: its colocated picture is the fancy P1)
-    def iMb(i: Int): Mb = i match {
-      case 0 => Pcm((x, y) => 40 + 2 * x + 3 * y)
-      case 1 => I16Dc(3, ac0 = 1, chromaDcTz = 1)
-      case 2 => I4x4(_ => 2, blk => if (blk == 5) 1 else 0)
-      case _ => I16Dc(-2, pred = 2)
-    }
-    def p1(i: Int): MbP = i match {
-      case 0 => P16x8((0, 0), (4, 0))
-      case 1 => P8x8(Seq((0, 0), (-4, 0), (0, -4), (0, 0)))
-      case 2 => PMoveCoded(-52, 12, blk => blk % 3 - 1) // UEG3 escape
-      case _ => PSkip
-    }
-    def p2(i: Int): MbP = PMoveCoded(0, 0, blk => (i + blk) % 5 - 2)
-    def b1(i: Int): MbB = i match {
-      case 0 => BDirect(blk => blk % 3 - 1)
-      case 1 => B8x8(Seq(BSubDirect, BSubL0(0, 0), BSubL1(0, 0),
-        BSubBi((0, 0), (0, 0))))
-      case 2 => BIntra(I16Dc(2, chromaDcTz = 0))
-      case _ => BSkip
-    }
-    def b2(i: Int): MbB = i match {
-      case 0 => BBi((0, 0), (4, 0))
-      case 1 => B16x8(0, (0, 0), 1, (0, 0))
-      case 2 => BFwdCoded(0, 0, blk => if (blk == 7) -1 else 0)
-      case _ => BBwd(0, 0)
-    }
-    val frames = Seq(Pf(p1), Pf(p2), Bf(b1, pocLsb = 3),
-      Bf(b2, pocLsb = 5))
-    val czAll = (_: Int, _: Int) => true // P2 is static refIdx-0
-    val cavlc = H264.encodeIPBStream(2, 2, iMb, frames,
-      colZeroAt = czAll)
-    val ref = H264.decodeFramesYuv(cavlc, 8)
-    assert(ref.map(_._6) == Seq('I', 'P', 'P', 'B', 'B'),
-      s"CAVLC baseline: ${ref.map(_._6)}")
-    for (idc <- 0 to 2) {
-      val cabac = H264.encodeIPBStreamCabac(2, 2, iMb, frames,
-        initIdc = idc, colZeroAt = czAll)
-      val got = H264.decodeFramesYuv(cabac, 8)
-      assert(got.map(_._6) == ref.map(_._6), s"idc $idc types")
-      ref.zip(got).zipWithIndex.foreach { case ((r, g), fi) =>
-        assert(g._3.sameElements(r._3), s"idc $idc frame $fi luma")
-        assert(g._4.sameElements(r._4), s"idc $idc frame $fi cb")
-        assert(g._5.sameElements(r._5), s"idc $idc frame $fi cr")
-      }
-    }
-  }
-
-  test("CABAC P multi-reference: unary ref_idx with neighbor context " +
-      "matches the CAVLC te(v) twin") {
-    import graft.ext.H264._
-    val sep = Array[Byte](0, 0, 0, 1)
-    def iMb(i: Int): Mb = Pcm((x, y) => 30 + 5 * i + x + y)
-    def pA(i: Int): MbP = PMoveCoded(0, 0, blk => (i + blk) % 3 - 1)
-    // refIdx 1 reaches PAST pA back to the IDR; mixed with refIdx 0
-    def pB(i: Int): MbP = i match {
-      case 0 => PMove(0, 0, refIdx = 1)
-      case 1 => PMove(0, 0, refIdx = 0)
-      case 2 => PMove(-8, 4, refIdx = 1)
-      case _ => PMove(0, 0, refIdx = 1)
-    }
-    val cavlc = sep ++ H264.spsNal(2, 2, maxRef = 2) ++
-      sep ++ H264.ppsNal(28) ++
-      sep ++ H264.idrNal(2, 2, iMb, 28) ++
-      sep ++ H264.pNal(2, 2, pA, 28, frameNum = 1) ++
-      sep ++ H264.pNal(2, 2, pB, 28, frameNum = 2, numRef = 2)
-    val ref = H264.decodeFramesLuma(cavlc, 6)
-    assert(ref.map(_._4) == Seq('I', 'P', 'P'))
-    for (idc <- 0 to 2) {
-      val cabac = sep ++ H264.spsNal(2, 2, maxRef = 2) ++
-        sep ++ H264.ppsNal(28, cabac = true) ++
-        sep ++ H264.idrNalCabac(2, 2, iMb, 28) ++
-        sep ++ H264.pNalCabac(2, 2, pA, 28, frameNum = 1,
-          initIdc = idc) ++
-        sep ++ H264.pNalCabac(2, 2, pB, 28, frameNum = 2, numRef = 2,
-          initIdc = idc)
-      val got = H264.decodeFramesLuma(cabac, 6)
-      assert(got.map(_._4) == Seq('I', 'P', 'P'), s"idc $idc")
-      ref.zip(got).zipWithIndex.foreach { case ((r, g), fi) =>
-        assert(g._3.sameElements(r._3), s"idc $idc frame $fi")
-      }
-    }
-  }
-
-  test("CABAC B deblocking == CAVLC B deblocking (bS over both lists " +
-      "with the CABAC nz bookkeeping)") {
-    import graft.ext.H264._
-    val sep = Array[Byte](0, 0, 0, 1)
-    def iMb(i: Int): Mb = Pcm((_, _) => 120)
-    def pMbF(i: Int): MbP = PMoveCoded(0, 0,
-      blk => if (i == 0 && blk == 0) 1 else 0)
-    def bMbF(i: Int): MbB = if (i == 0) BFwd(0, 0) else BBwd(-64, 0)
-    def stream(cabac: Boolean) = {
-      val head = sep ++ H264.spsNal(2, 1, maxRef = 2) ++
-        sep ++ H264.ppsNal(28, cabac = cabac) ++ sep ++
-        (if (cabac) H264.idrNalCabac(2, 1, iMb, 28)
-        else H264.idrNal(2, 1, iMb, 28))
-      val p = if (cabac) H264.pNalCabac(2, 1, pMbF, 28, frameNum = 1)
-        else H264.pNal(2, 1, pMbF, 28, frameNum = 1)
-      val b = if (cabac) H264.bNalCabac(2, 1, bMbF, 28, frameNum = 2,
-        pocLsb = 1, deblock = true)
-        else H264.bNal(2, 1, bMbF, 28, frameNum = 2, pocLsb = 1,
-          deblock = true)
-      head ++ sep ++ p ++ sep ++ b
-    }
-    val ref = H264.decodeFramesLuma(stream(cabac = false), 4)
-    val got = H264.decodeFramesLuma(stream(cabac = true), 4)
-    assert(ref.map(_._4) == Seq('I', 'P', 'B'))
-    assert(got.map(_._4) == Seq('I', 'P', 'B'))
-    // the hand-computed bS-1 weak filter profile from H264BSpec
-    val b3 = got(2)._3
-    for (y <- 0 until 4) {
-      assert(b3(y * 32 + 14) == 121 && b3(y * 32 + 15) == 122 &&
-        b3(y * 32 + 16) == 122 && b3(y * 32 + 17) == 123,
-        s"filtered profile row $y")
-    }
-    assert(got(2)._3.sameElements(ref(2)._3), "deblocked B equality")
-  }
-
-  test("corruption fuzz: 240 mutations of a CABAC I-P-B stream " +
-      "degrade or truncate, never throw") {
-    import graft.ext.H264._
-    def iMb(i: Int): Mb = i match {
-      case 0 => Pcm((x, y) => 40 + 2 * x + 3 * y)
-      case _ => I16Dc(3, ac0 = 1, chromaDcTz = 1)
-    }
-    val base = H264.encodeIPBStreamCabac(2, 2, iMb, Seq(
-      Pf(i => if (i == 0) P8x8(Seq((0, 0), (-4, 0), (0, -4), (0, 0)))
-        else PMoveCoded(0, 0, blk => blk % 3 - 1)),
-      Pf(_ => PMoveCoded(0, 0, _ => 1)),
-      Bf(i => if (i == 0) BDirect(blk => blk % 3 - 1)
-        else if (i == 1) B8x8(Seq(BSubDirect, BSubL0(0, 0),
-          BSubL1(0, 0), BSubBi((0, 0), (0, 0))))
-        else BSkip, pocLsb = 3)),
-      initIdc = 1, colZeroAt = (_, _) => true)
-    assert(H264.decodeFramesLuma(base, 8).map(_._4) ==
-      Seq('I', 'P', 'P', 'B'))
-    val rnd = new java.util.Random(0x15CABAC)
-    var trials = 0
-    while (trials < 240) {
-      val mutated = base.clone()
-      val kind = trials % 3
-      if (kind == 0) {
-        var f = 0
-        val nf = 1 + rnd.nextInt(4)
-        while (f < nf) {
-          val i = rnd.nextInt(mutated.length)
-          mutated(i) = (mutated(i) ^ (1 << rnd.nextInt(8))).toByte
-          f += 1
-        }
-        assert(H264.decodeFramesLuma(mutated, 8).length <= 8)
-      } else if (kind == 1) {
-        val cut = 1 + rnd.nextInt(mutated.length - 1)
-        assert(H264.decodeFramesLuma(mutated.take(cut), 8).length <= 8)
-      } else {
-        val at = rnd.nextInt(mutated.length)
-        val len = math.min(1 + rnd.nextInt(12), mutated.length - at)
-        var i = 0
-        while (i < len) { mutated(at + i) = rnd.nextInt(256).toByte; i += 1 }
-        assert(H264.decodeFramesLuma(mutated, 8).length <= 8)
-      }
-      trials += 1
-    }
-  }
-
-  test("corruption fuzz: 300 byte-level mutations of a CABAC stream " +
-      "degrade or truncate, never throw, never exceed the frame budget") {
-    def mbs(i: Int): H264.Mb = i match {
-      case 0 => I16Dc(3, ac0 = 1, chromaDcTz = 1)
-      case 1 => Pcm((x, y) => (x * 7 + y) % 256)
-      case _ => I4x4(_ => 2, b => if (b % 4 == 0) 3 else 0)
-    }
-    val base = H264.encodeIFrameCabac(2, 2, mbs)
-    assert(decode(base).isDefined)
-    val rnd = new java.util.Random(0xF14)
-    var trials = 0
-    while (trials < 300) {
-      val mutated = base.clone()
-      val kind = trials % 3
-      if (kind == 0) {
-        var f = 0
-        val nf = 1 + rnd.nextInt(4)
-        while (f < nf) {
-          val i = rnd.nextInt(mutated.length)
-          mutated(i) = (mutated(i) ^ (1 << rnd.nextInt(8))).toByte
-          f += 1
-        }
-        assert(H264.decodeFramesLuma(mutated, 4).length <= 4)
-      } else if (kind == 1) {
-        val cut = 1 + rnd.nextInt(mutated.length - 1)
-        assert(H264.decodeFramesLuma(mutated.take(cut), 4).length <= 4)
-      } else {
-        val at = rnd.nextInt(mutated.length)
-        val len = math.min(1 + rnd.nextInt(12), mutated.length - at)
-        var i = 0
-        while (i < len) { mutated(at + i) = rnd.nextInt(256).toByte; i += 1 }
-        assert(H264.decodeFramesLuma(mutated, 4).length <= 4)
-      }
-      trials += 1
-    }
-  }
-
-  test("truncated CABAC slice never emits a frame built on phantom " +
-      "zero bits (overrun guard)") {
-    val base = H264.encodeIFrameCabac(2, 2, _ => I4x4(_ => 2, b => b % 3))
-    val full = decode(base).get._3
-    // cut anywhere inside the slice NAL: either the whole decode
-    // degrades (None) or — impossible here, single slice — matches
-    var cut = base.length - 1
-    while (cut > base.length - 24 && cut > 1) {
-      val out = decode(base.take(cut))
-      assert(out.isEmpty || out.get._3.sameElements(full),
-        s"cut $cut produced a WRONG frame")
-      cut -= 1
     }
   }
 }

@@ -1014,14 +1014,13 @@ class H264Spec extends AnyFunSuite {
   }
 
   // ---- out-of-tier streams degrade ---------------------------------
-  // Each fixture below is the byte-exact output of an encoder this
+  // (the High-profile cases are in H264HighSpec) Each fixture below is the byte-exact output of an encoder this
   // decoder's tier no longer carries (named per test), captured once
   // from the commit that still had it. That commit decoded every one
   // of them exactly, so each test proves a clean refusal of a
   // well-formed stream, not a refusal of garbage.
 
-  private def unhex(h: String): Array[Byte] =
-    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+  import H264Spec.unhex
 
   test("out-of-tier: a CABAC I frame decodes to nothing and the " +
       "dispatch falls back") {
@@ -1060,26 +1059,10 @@ class H264Spec extends AnyFunSuite {
     assert(fs(0)._3.sameElements(iLuma))
     assert(fs(1)._3.sameElements(pLuma))
   }
+}
 
-  test("out-of-tier: a High-profile Intra_8x8 frame decodes to nothing") {
-    // encodeIFrameHigh(1, 1, _ => I8x8(_ => 2, b => b - 1),
-    //   transform8x8 = true)
-    val es = unhex(
-      "000000016764000aace9e40000000168ce09cb000000016588840afe" +
-      "2efd78bf80")
-    assert(H264.decodeFramesLuma(es, 4).isEmpty)
-  }
-
-  test("out-of-tier: a High SPS with seq scaling matrices is refused " +
-      "even under a plain CAVLC PPS") {
-    // encodeIFrameHigh(1, 1, _ => I4x4(_ => 2, b => if (b == 0) 3 else 0),
-    //   seqScal4 = 6 x flat 20, seqScal8 = 2 x flat 20): flat 143 when
-    // decoded; without the SPS matrices the same slice decodes to 140
-    val es = unhex(
-      "000000016764000aad863fffc31fffe18ffff0c7fff863fffc31fffe18" +
-      "ffffffffffffffff0c7fffffffffffffffe9e40000000168ce09c800" +
-      "0000016588840affffc3d14fc0")
-    assert(H264.decodeFramesLuma(es, 4).isEmpty)
-    assert(!graft.ext.Multimodal.decode(es)._4)
-  }
+object H264Spec {
+  /** Bytes of a hex literal: the out-of-tier stream fixtures. */
+  def unhex(h: String): Array[Byte] =
+    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 }
